@@ -28,9 +28,13 @@ window and the harness had no fallback):
   3. Every attempt is wrapped: executor-registration timeout, a dead
      SparkContext ("Master removed our application"), or any mid-suite
      error tears the session down and RERUNS the whole suite on the next
-     master in the plan (last resort: ``local[8]``). The JSON line records
-     which master actually ran (``master``) and whether it was a fallback
-     (``fallback``).
+     master in the plan (last resort: ``local[8]``). Ctrl-C and SystemExit
+     are not errors of the master: they abort the bench. The JSON line
+     records which master actually ran (``master``), whether it was a
+     fallback (``fallback``) and the driver heap the running JVM really
+     has (``driver_heap_mb``, its Runtime.maxMemory). A fallback master
+     runs in the SAME driver JVM, so the ``spark.driver.memory`` it sets
+     is not the heap it gets.
 
 Test knobs (exercised by tests/test_bench_fallback.py):
   SPARK_GRAFT_MEM_TOTAL_MB   override detected RAM (preflight squeeze path)
@@ -162,7 +166,7 @@ def run_suite(spark, sf_dir: str, sf: float, cpus: int) -> tuple[dict, dict]:
 
     # ---- index build (cold, checkpointed)
     out = tempfile.mkdtemp(prefix="ivfadc_bench_idx_")
-    cfg = EngineConfig(block_size=256, salt_df_threshold=100_000, max_salts=16)
+    cfg = EngineConfig(block_size=256)
     # warm-up: tiny end-to-end build so python-worker pool spawn and JIT are
     # excluded from the measured window — per-process costs, not per-byte
     # costs; identical to the scaling protocol's warm-up (bench_scaling.py)
@@ -243,7 +247,7 @@ def main() -> None:
 
     avail_mb = detect_avail_mb()
     attempts = plan_masters(cpus, avail_mb)
-    last_err: BaseException | None = None
+    last_err: Exception | None = None
     for i, (master, conf, width) in enumerate(attempts):
         conf = dict(conf or {})
         driver_mb = conf.pop("__driver_mem_mb", None)
@@ -260,6 +264,9 @@ def main() -> None:
             extra["master"] = master
             extra["fallback"] = i > 0
             extra["avail_mb"] = avail_mb
+            extra["driver_heap_mb"] = int(
+                spark.sparkContext._jvm.java.lang.Runtime.getRuntime().maxMemory()
+            ) // (1 << 20)
             total = round(sum(timings.values()), 3)
             print(
                 json.dumps(
@@ -274,7 +281,7 @@ def main() -> None:
                 )
             )
             return
-        except BaseException as e:  # noqa: BLE001 — anything means "next master"
+        except Exception as e:  # noqa: BLE001 — any error means "next master"
             last_err = e
             print(
                 f"bench: master {master} failed ({type(e).__name__}: {e}); "

@@ -46,19 +46,16 @@ class EngineConfig:
     # /root/reference/entry.cpp:60-72 — ours is delta+varint, variable width)
     block_size: int = 128
 
-    # skew handling (analog of the spin-locked hot-centroid files,
-    # /root/reference/IO.h:503-522): a term with df > salt_df_threshold is
-    # split across up to max_salts sub-lists keyed by hash(doc_id).
-    salt_df_threshold: int = 50_000
-    max_salts: int = 16
-
-    # doc-sharding for the batch query path: when > 0, EVERY posting list is
-    # split into doc_shards sub-lists keyed by hash(doc_id) % doc_shards
-    # (uniform — subsumes df-driven salting; head-term skew splits maximally
-    # by construction). Each shard is a complete sub-index over its doc
-    # subset, so a batch of queries fans out to shards once instead of
-    # copying posting blocks per query (the reference's process-level
-    # scatter, /root/reference/vk_word_complete/startup.py:31-42, X4).
+    # doc-sharding: the id-assign step range-partitions the corpus into
+    # doc_shards partitions, each holding one CONTIGUOUS doc_id range, and
+    # the combiner encodes each partition in place. Every posting list is
+    # thereby split per partition (salt = pid * SALT_CHUNK_SPAN + chunk, so
+    # salt // SALT_CHUNK_SPAN is the partition-level shard). The split is
+    # uniform and per-doc consistent, so head-term skew (the reference's
+    # spin-locked hot-centroid files, IO.h:503-522) splits maximally and
+    # each shard is a complete sub-index over its doc range: a batch of
+    # queries fans out to shards once instead of copying posting blocks per
+    # query (the reference's process-level scatter, X4). Must be >= 1.
     doc_shards: int = 32
 
     # combiner-encode flush budget (tokens): each flush becomes its own
@@ -78,6 +75,13 @@ class EngineConfig:
     term_buckets: int = 64  # postings dataset partition key = hash(term) % buckets
 
     extra: dict = field(default_factory=dict)
+
+    def __post_init__(self):
+        if int(self.doc_shards) < 1:
+            raise ValueError(
+                f"doc_shards must be >= 1 (got {self.doc_shards}): every "
+                "build is doc-sharded"
+            )
 
     def stop_set(self) -> frozenset:
         """The stop list as a frozenset ('' -> empty)."""

@@ -11,9 +11,9 @@ wrong BM25 results (the failure mode ADVICE r3 flagged for the dl gather).
 Checks, and what breaks if they lie:
 
 per block (one vectorized mapInArrow pass over payloads):
-- varint stream shape: doc_ids/tfs carry exactly ``n`` values and dls
-  carries ``n`` (v2) or 0 (v3) — a short stream would misalign the
-  whole-batch decode every reader uses;
+- varint stream shape: doc_ids/tfs carry exactly ``n`` values and dls is
+  empty (format v3 keeps dl in the doc_lens sidecar) — a short stream
+  would misalign the whole-batch decode every reader uses;
 - docIDs strictly increasing — the binary-search candidate stores and
   the block-skip logic require sorted postings;
 - ``first_doc``/``last_doc`` match the decoded ends — block-level
@@ -117,16 +117,15 @@ def _block_findings(blocks: DataFrame) -> DataFrame:
                         [keys[i] for i in idx],
                         [f"decoded {got[i]} values, n={n[i]}" for i in idx],
                     )
-            # dls: exactly n (v2) or 0 (v3) values
-            dl_cnt = vcounts(*buf_and_lens("dls"))
-            bad = (l_len > 0) & (dl_cnt != n)
+            # dls: format v3 posting blocks carry no per-posting dl stream
+            bad = l_len > 0
             if bad.any():
                 ok &= ~bad
                 idx = np.flatnonzero(bad)
                 yield emit(
-                    "varint_count_dls",
+                    "dls_not_empty",
                     [keys[i] for i in idx],
-                    [f"decoded {dl_cnt[i]} values, n={n[i]}" for i in idx],
+                    [f"{l_len[i]} dl stream bytes, want 0" for i in idx],
                 )
 
             stated = tbl.column("bytes").to_numpy(zero_copy_only=False).astype(np.int64)

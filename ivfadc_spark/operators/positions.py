@@ -66,10 +66,9 @@ def doc_term_positions(
     id_col: str = "doc_id",
     cfg: EngineConfig = DEFAULT,
 ) -> DataFrame:
-    """(doc_id, term, positions) with 0-based token offsets — the positional
-    analog of stats.term_frequencies_mapside: one Arrow pass, no shuffle,
-    no Python string objects (RE2 split + dictionary-encode + lexsort).
-    Honors the cfg analyzer (stop_terms/min_token_len) so sidecar offsets
+    """(doc_id, term, positions) with 0-based token offsets — one Arrow
+    pass, no shuffle, no Python string objects (RE2 split +
+    dictionary-encode + lexsort). Honors the cfg analyzer (stop_terms/min_token_len) so sidecar offsets
     match a filtered build's fused twin rows: offsets index the KEPT
     token stream, exactly like the combiner kernel."""
     pattern = cfg.token_pattern
@@ -134,11 +133,11 @@ def build_positions(
 ) -> str:
     """Build the positions sidecar next to an existing segment. Re-derives
     doc ids with the same deterministic assignment the segment used (ids are
-    data-derived, sources/transcripts.assign_doc_ids), so no coordination
+    data-derived, sources/transcripts.plan_doc_ids), so no coordination
     with the block build is needed."""
-    from ivfadc_spark.sources.transcripts import assign_doc_ids, release_doc_ids
+    from ivfadc_spark.sources.transcripts import plan_doc_ids
 
-    with_ids = assign_doc_ids(transcripts)
+    with_ids, _ = plan_doc_ids(transcripts, cfg.doc_shards)
     out = os.path.join(segment_path, "positions")
     (
         doc_term_positions(with_ids.select("doc_id", "text"), cfg=cfg)
@@ -151,7 +150,6 @@ def build_positions(
         .partitionBy("term_bucket")
         .parquet(out)
     )
-    release_doc_ids(with_ids)
     return out
 
 

@@ -2,20 +2,21 @@
 
 Reference pipeline (/root/reference/Index.cpp:5-155): quantize each doc to a
 cell, append ``[cell, codes...]`` to a doc-ordered log behind a mutex, then
-pivot to cell-ordered posting lists (``gen_idx_sz_file``). Ours:
-
-    tokenize -> explode -> groupBy(doc_id, term) tf        (A6)
-             -> salted repartition by (term, salt)          (X1/X2 shuffle)
-             -> applyInPandas: docID-sort, chunk into blocks of B,
-                delta+varint encode, per-block max-impact   (O2/O3)
+pivot to cell-ordered posting lists (``gen_idx_sz_file``). Ours is a
+combiner (:func:`build_blocks_inplace`): each range partition of the corpus
+(one contiguous doc_id range) is tokenized, tf-aggregated, docID-sorted and
+delta+varint block-encoded in ONE map pass, with per-block max-impact
+ingredients (O2/O3). No posting row crosses the network; only the encoded
+blocks move, in the term_bucket layout write.
 
 Skew: the reference serializes hot-centroid file writes behind a spin lock
-(/root/reference/IO.h:503-522) — the same Zipfian pathology that makes one
-Spark task build the "the" posting list at 10^12 turns. A term with
-``df > salt_df_threshold`` is split across ``n_salts`` sub-lists keyed by
-``hash(doc_id) % n_salts``; each sub-list is independently docID-sorted and
-block-encoded, and the query scan treats sub-lists as independent cursors
-(scores are additive across disjoint doc sets, so correctness is unaffected).
+(reference IO.h:503-522) — the Zipfian pathology that would make one Spark
+task build the "the" posting list at 10^12 turns. Here every posting list
+is split by doc range instead: a block's ``salt`` is its source partition
+and encode chunk (``pid * SALT_CHUNK_SPAN + chunk``), so a head term is
+split across every partition by construction, each (term, salt) sub-list
+is independently docID-sorted, and the query scan treats sub-lists as
+independent cursors (scores are additive across disjoint doc sets).
 
 Block-max metadata: per block we store ``(max_tf, min_dl)`` plus the docID
 range; the query side computes the bound idf * impact(max_tf, min_dl, avgdl)
@@ -23,17 +24,18 @@ range; the query side computes the bound idf * impact(max_tf, min_dl, avgdl)
 (SURVEY.md §4 O3). idf AND avgdl apply at query time, so block bounds
 survive segment merges that change either, and the encoder needs no corpus
 statistics at all.
+
+Format v3 (the only format): posting blocks carry NO per-posting dl stream;
+dl lives once per doc in the sentinel rows / doc_lens sidecar.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ivfadc_spark.config import DEFAULT, EngineConfig
-from ivfadc_spark.functions.codecs import delta_encode, varint_encode
 
 BLOCKS_SCHEMA = (
     "term string, salt int, block_id int, n int, first_doc long, last_doc long, "
@@ -78,51 +80,9 @@ def _ranges(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
     return rel + np.repeat(starts, lens)
 
 
-def salted_tf(
-    tf: DataFrame,
-    dl: DataFrame | None,
-    dictionary: DataFrame,
-    cfg: EngineConfig = DEFAULT,
-) -> DataFrame:
-    """Attach doc length + a df-driven salt to the tf fact table.
-
-    n_salts(term) = min(max_salts, ceil(df / salt_df_threshold)) — 1 for the
-    long tail (no extra shuffle fan-out), up to max_salts for head terms.
-
-    If ``tf`` already carries a ``dl`` column (the map-side fast path,
-    :func:`ivfadc_spark.operators.stats.term_frequencies_mapside`), pass
-    ``dl=None`` and the per-doc shuffle join is skipped entirely — the only
-    exchange left in the whole build is the repartition by (term, salt).
-    """
-    if cfg.doc_shards > 0:
-        # uniform doc-hash sharding: every posting list splits doc_shards
-        # ways. Subsumes df-driven head-term salting (a head term is split
-        # maximally) and gives the batch query path complete per-shard
-        # sub-indexes. No dictionary join needed.
-        joined = tf
-        if dl is not None and "dl" not in tf.columns:
-            joined = joined.join(dl, "doc_id")
-        return joined.withColumn(
-            "salt", F.pmod(F.xxhash64("doc_id"), F.lit(cfg.doc_shards)).cast("int")
-        ).select("term", "salt", "doc_id", "tf", "dl")
-    n_salts = F.least(
-        F.lit(cfg.max_salts),
-        F.ceil(F.col("df") / F.lit(cfg.salt_df_threshold)).cast("int"),
-    )
-    d = dictionary.select("term", F.greatest(n_salts, F.lit(1)).alias("n_salts"))
-    joined = tf.join(F.broadcast(d), "term")
-    if dl is not None and "dl" not in tf.columns:
-        joined = joined.join(dl, "doc_id")
-    return (
-        joined.withColumn("salt", F.pmod(F.xxhash64("doc_id"), F.col("n_salts")).cast("int"))
-        .select("term", "salt", "doc_id", "tf", "dl")
-    )
-
-
-def _encode_sorted(vocab, codes, ids, tfs, dls, salts, bsz, with_dls=True,
-                   positions=None):
+def _encode_sorted(vocab, codes, ids, tfs, dls, salts, bsz, positions=None):
     """Encode postings ALREADY sorted by (code, salt, doc_id) into block
-    RecordBatches — the shared tail of both encode paths.
+    RecordBatches.
 
     Blocks tile whole-column varint streams contiguously, so each
     per-block binary column is a ZERO-COPY Arrow BinaryArray over
@@ -131,11 +91,11 @@ def _encode_sorted(vocab, codes, ids, tfs, dls, salts, bsz, with_dls=True,
     partition whose concatenated streams exceed 2^31 bytes would otherwise
     wrap silently — plausible at large-corpus scale).
 
-    ``with_dls=False`` (format v3, combiner builds): the per-posting dl
-    stream is NOT written — dl is per-DOC data and already lives once per
-    doc in the sentinel sidecar; repeating it per posting made the dls
-    stream ~1/3 of every block's bytes. min_dl block bounds are still
-    computed (dls is still required as an input).
+    Format v3: the per-posting dl stream is NOT written (the ``dls``
+    column is empty) — dl is per-DOC data and already lives once per doc in
+    the sentinel sidecar; repeating it per posting made the dls stream ~1/3
+    of every block's bytes. ``dls`` is still an input: min_dl block bounds
+    are computed from it.
 
     ``positions``: optional (stream, per_posting_nbytes) pair of the
     delta-varint token-offset streams (fused positional build). Each block
@@ -173,12 +133,11 @@ def _encode_sorted(vocab, codes, ids, tfs, dls, salts, bsz, with_dls=True,
     max_tf = np.maximum.reduceat(tfs, bstart)
     min_dl = np.minimum.reduceat(dls, bstart)
     sum_tf = np.add.reduceat(tfs, bstart)
-    col_names = ("doc_ids", "tfs", "dls") if with_dls else ("doc_ids", "tfs")
-    col_vals = {"doc_ids": deltas, "tfs": tfs.astype(np.uint64), "dls": dls.astype(np.uint64)}
+    col_vals = {"doc_ids": deltas, "tfs": tfs.astype(np.uint64)}
     streams, col_lo, col_hi = {}, {}, {}
     tot_bytes = np.zeros(bstart.size, dtype=np.int64)
-    for name in col_names:
-        stream, nb = varint_encode_with_lengths(col_vals[name])
+    for name, vals in col_vals.items():
+        stream, nb = varint_encode_with_lengths(vals)
         ends = np.cumsum(nb)
         lo = (ends - nb)[bstart]
         hi = ends[bend - 1]
@@ -198,7 +157,7 @@ def _encode_sorted(vocab, codes, ids, tfs, dls, salts, bsz, with_dls=True,
         edges.append(max(j, edges[-1] + 1))
     for a, z in zip(edges[:-1], edges[1:]):
         enc = {}
-        for name in col_names:
+        for name in col_vals:
             clo, chi = int(col_lo[name][a]), int(col_hi[name][z - 1])
             offsets = np.empty(z - a + 1, dtype=np.int32)
             offsets[:-1] = col_lo[name][a:z] - clo
@@ -209,12 +168,11 @@ def _encode_sorted(vocab, codes, ids, tfs, dls, salts, bsz, with_dls=True,
                 [None, pa.py_buffer(offsets.tobytes()),
                  pa.py_buffer(memoryview(streams[name])[clo:chi])],
             )
-        if not with_dls:
-            enc["dls"] = pa.Array.from_buffers(
-                pa.binary(), z - a,
-                [None, pa.py_buffer(np.zeros(z - a + 1, dtype=np.int32).tobytes()),
-                 pa.py_buffer(b"")],
-            )
+        enc["dls"] = pa.Array.from_buffers(
+            pa.binary(), z - a,
+            [None, pa.py_buffer(np.zeros(z - a + 1, dtype=np.int32).tobytes()),
+             pa.py_buffer(b"")],
+        )
         shared = [
             vocab.take(pa.array(codes[bstart[a:z]])),
             pa.array(salts[bstart[a:z]], type=pa.int32()),
@@ -264,7 +222,7 @@ def build_blocks_inplace(
     combiner-style index build. NO exchange of posting rows, ever.
 
     Requires ``docs(doc_id, text)`` range-partitioned so each partition owns
-    a CONTIGUOUS doc_id range (what assign_doc_ids produces). The doc-shard
+    a CONTIGUOUS doc_id range (what plan_doc_ids produces). The doc-shard
     ``salt`` is then simply the partition ordinal: a doc's postings land in
     one salt for EVERY term (per-doc consistent, disjoint, complete
     sub-indexes — all the batch scan needs), head terms split across all
@@ -417,7 +375,7 @@ def build_blocks_inplace(
             # already carries this chunk's (doc_id -> dl) table once
             yield from _encode_sorted(
                 vocab, code_p, ids_p, tf.astype(np.int64), dls_p, salts, bsz,
-                with_dls=False, positions=positions,
+                positions=positions,
             )
 
         from ivfadc_spark.functions.tokenize import arrow_flat_tokens, filter_tokens
@@ -443,121 +401,19 @@ def build_blocks_inplace(
     return docs.mapInArrow(encode, BLOCKS_SCHEMA)
 
 
-def build_blocks(
-    salted: DataFrame,
-    cfg: EngineConfig = DEFAULT,
-    num_partitions: int | None = None,
-    dictionary: DataFrame | None = None,
-) -> DataFrame:
-    """(term, salt) groups -> docID-sorted, delta+varint-encoded blocks.
-
-    One hash repartition on (term, salt) then mapInArrow: each task encodes
-    EVERY group in its partition inside one vectorized pass. (groupBy +
-    applyInPandas here pays per-group Arrow/invocation overhead — with
-    doc-sharding the group count is ~vocab x shards, and that overhead
-    dominates the encode itself.)
-
-    With ``dictionary`` given, the term STRING column never enters the big
-    exchange at all: a broadcast join replaces it with a dense int
-    ``term_id`` before the repartition (JVM-side), the shuffle moves
-    all-int rows, and the encoder maps ids back to strings only at block
-    granularity via a broadcast vocab array. Cuts shuffle bytes ~20% and
-    removes 77M-row string Arrow serialization to the python workers.
-    (Scale bound: the vocab must fit a Spark broadcast, ~tens of millions
-    of terms; pass dictionary=None beyond that.)
-    """
-    bsz = int(cfg.block_size)
-
-    spark = salted.sparkSession
-    bvocab = None
-    if dictionary is not None:
-        terms_pdf = dictionary.select("term").orderBy("term").toPandas()
-        term_arr = terms_pdf["term"].to_numpy()
-        bvocab = spark.sparkContext.broadcast(term_arr)
-        map_df = spark.createDataFrame(
-            pd.DataFrame({"term": term_arr, "term_id": np.arange(term_arr.size, dtype=np.int32)})
-        )
-        salted = (
-            salted.join(F.broadcast(map_df), "term")
-            .select("term_id", "salt", "doc_id", "tf", "dl")
-        )
-
-    def encode_partition(batches):
-        """Encode EVERY (term, salt) group of the partition in one
-        vectorized pass — no per-group python, and (mapInArrow) no Python
-        string objects: terms stay in Arrow buffers, get dictionary-encoded
-        to int codes, and the partition sort is a numpy lexsort on
-        (code, salt, doc_id) ints — the inter-group order is arbitrary but
-        grouping + within-group docID order (all any reader needs) are
-        exact. Block boundaries and per-block stats via reduceat, one
-        varint_encode per column with per-block byte-range slicing (the
-        only per-block python: three bytes[a:b] slices). The old
-        mapInPandas form materialized every term as a Python str and
-        mergesorted on objects — at 32-way parallelism the allocation storm
-        spent more CPU in the kernel (page faults) than in the encode."""
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        from ivfadc_spark.functions.arrow_pool import use_scalable_pool
-        from ivfadc_spark.functions.codecs import varint_encode_with_lengths
-
-        use_scalable_pool()
-        bl = [rb for rb in batches if rb.num_rows]
-        if not bl:
-            return
-        tbl = pa.Table.from_batches(bl)
-        if bvocab is not None:
-            codes = tbl.column("term_id").to_numpy(zero_copy_only=False).astype(np.int64)
-            vocab = pa.array(bvocab.value)
-        else:
-            enc_t = pc.dictionary_encode(tbl.column("term").combine_chunks())
-            enc_t = enc_t.combine_chunks() if isinstance(enc_t, pa.ChunkedArray) else enc_t
-            codes = enc_t.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-            vocab = enc_t.dictionary
-        ids = tbl.column("doc_id").to_numpy(zero_copy_only=False).astype(np.int64)
-        tfs = tbl.column("tf").to_numpy(zero_copy_only=False).astype(np.int64)
-        dls = tbl.column("dl").to_numpy(zero_copy_only=False).astype(np.int64)
-        salts = tbl.column("salt").to_numpy(zero_copy_only=False).astype(np.int32)
-        # single-key argsort on a packed (code, salt, doc) int64 beats a
-        # 3-pass lexsort ~5x; falls back to lexsort if the bit budget
-        # (63) ever overflows (gigantic per-partition vocab x doc space)
-        sb = max(int(salts.max()), 0).bit_length()
-        db = max(int(ids.max()), 1).bit_length()
-        cb = max(int(codes.max()), 1).bit_length()
-        if sb + db + cb <= 63:
-            order = np.argsort(
-                (codes << (sb + db)) | (salts.astype(np.int64) << db) | ids,
-                kind="stable",
-            )
-        else:
-            order = np.lexsort((ids, salts, codes))
-        codes, ids, tfs, dls, salts = (
-            codes[order], ids[order], tfs[order], dls[order], salts[order]
-        )
-        yield from _encode_sorted(vocab, codes, ids, tfs, dls, salts, bsz)
-
-    # 4 waves: encode task sizes vary ~2x (Zipf vocab), so finer tasks keep
-    # the last wave from stalling cores (measured: the 2-wave tail cost ~30%
-    # of stage wall at 16 cores)
-    n = num_partitions or salted.sparkSession.sparkContext.defaultParallelism * 4
-    key = "term_id" if bvocab is not None else "term"
-    return salted.repartition(n, key, "salt").mapInArrow(encode_partition, BLOCKS_SCHEMA)
-
-
 def decode_blocks(blocks: DataFrame) -> DataFrame:
     """Inverse of the block encoders: blocks -> (term, doc_id, tf, dl) rows.
 
-    Used by round-trip tests, the conjunctive query path, and the df-salted
-    doc-length fallback. Whole-batch vectorized (the wand.py trick): varint
+    Used by round-trip tests, the conjunctive query path and compaction.
+    Whole-batch vectorized (the wand.py trick): varint
     streams are self-delimiting, so ALL blocks of a batch decode in a few
     codec calls; absolute docIDs come from a segmented cumsum reset at
     block starts; the term column expands by repeat on the ARROW array
     (no Python string objects).
 
     Format v3 blocks carry no per-posting dl stream (dl lives once per doc
-    in the sentinel / doc_lens sidecar): their rows decode with ``dl`` NULL
-    — join :attr:`Segment.doc_lengths` if dl is needed. Mixed batches
-    (a merge of v2 and v3 segments) are handled per block.
+    in the sentinel / doc_lens sidecar): rows decode with ``dl`` NULL —
+    join :attr:`Segment.doc_lengths` if dl is needed.
     """
     from ivfadc_spark.functions.codecs import varint_decode
 
@@ -578,13 +434,6 @@ def decode_blocks(blocks: DataFrame) -> DataFrame:
             if total == 0:
                 continue
 
-            def arr_and_lens(col):
-                a = tbl.column(col).combine_chunks()
-                offs = np.frombuffer(a.buffers()[1], dtype=np.int32)
-                lo = offs[a.offset : a.offset + len(a)].astype(np.int64)
-                hi = offs[a.offset + 1 : a.offset + len(a) + 1].astype(np.int64)
-                return a, hi - lo
-
             def cat(col):
                 # a BinaryArray's data buffer IS the in-order concatenation
                 # of its values — slice it once, zero per-block objects
@@ -596,22 +445,7 @@ def decode_blocks(blocks: DataFrame) -> DataFrame:
 
             deltas = varint_decode(cat("doc_ids"), total).astype(np.int64)
             tfs = varint_decode(cat("tfs"), total).astype(np.int64)
-            dls_arr, dls_lens = arr_and_lens("dls")
-            has_dl = dls_lens > 0
             bstarts = np.cumsum(counts) - counts
-            if has_dl.all():
-                dl_col = pa.array(varint_decode(cat("dls"), total).astype(np.int64))
-            elif not has_dl.any():
-                dl_col = pa.nulls(total, pa.int64())
-            else:  # mixed v2/v3 batch: decode only blocks that carry dls
-                n_with = int(counts[has_dl].sum())
-                vals = varint_decode(cat("dls"), n_with).astype(np.int64)
-                out = np.zeros(total, dtype=np.int64)
-                mask = np.zeros(total, dtype=bool)
-                idx = _ranges(bstarts[has_dl], counts[has_dl])
-                out[idx] = vals
-                mask[idx] = True
-                dl_col = pa.array(out, type=pa.int64(), mask=~mask)
             c = np.cumsum(deltas)
             base = np.where(bstarts > 0, c[bstarts - 1], 0)
             ids = c - np.repeat(base, counts)
@@ -623,7 +457,7 @@ def decode_blocks(blocks: DataFrame) -> DataFrame:
                     term_rep,
                     pa.array(ids, type=pa.int64()),
                     pa.array(tfs),
-                    dl_col,
+                    pa.nulls(total, pa.int64()),
                 ],
                 names=["term", "doc_id", "tf", "dl"],
             )

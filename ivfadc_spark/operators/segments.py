@@ -10,10 +10,12 @@ Ours: one segment = a parquet dataset directory::
 
     <path>/blocks/      posting blocks, partitioned by term_bucket
     <path>/doc_map/     (doc_id, conv_id, turn_idx)           [nl analog]
-    <path>/doc_lens/    (doc_id, dl) doc-length sidecar (combiner builds)
+    <path>/doc_lens/    (doc_id, dl) doc-length sidecar
     <path>/dict/        (term, df, cf, idf)                   [voc_sz analog]
     <path>/metrics/     per-term build metrics
-    <path>/meta.json    n_docs, avgdl, doc_space, lineage, config
+    <path>/meta.json    n_docs, avgdl, doc_space, n_shards, lineage, config,
+                        format_version (3: dl-free posting blocks + sentinel
+                        doc-stat rows; the only format readers accept)
 
 docIDs are data-derived within a segment (dense rank over the segment's own
 rows); cross-segment remap adds each segment's ``doc_base`` offset — the
@@ -46,6 +48,8 @@ from pyspark.sql import functions as F
 from ivfadc_spark.config import DEFAULT, EngineConfig
 from ivfadc_spark.operators.postings import remap_blocks
 
+FORMAT_VERSION = 3
+
 
 def _idf_col(n_docs: int):
     return F.log(
@@ -59,6 +63,17 @@ class Segment:
         self.path = path
         with open(os.path.join(path, "meta.json")) as f:
             self.meta = json.load(f)
+        if (
+            self.meta.get("format_version") != FORMAT_VERSION
+            or int(self.meta.get("n_shards") or 0) <= 0
+        ):
+            raise ValueError(
+                f"segment {path}: format_version="
+                f"{self.meta.get('format_version')}, n_shards="
+                f"{self.meta.get('n_shards')}; readers need format_version "
+                f"{FORMAT_VERSION} with n_shards > 0 (a doc-sharded combiner "
+                "build) — rebuild it with build_index"
+            )
 
     @property
     def blocks(self) -> DataFrame:
@@ -77,22 +92,13 @@ class Segment:
     @property
     def doc_lengths(self) -> DataFrame:
         """(doc_id, dl) sidecar: the materialized dataset if stage 02 wrote
-        one, else decoded from the sentinel rows. A segment with NEITHER
-        (df-salted builds: n_shards == 0, no sentinels) falls back to a
-        posting decode — zero-token docs are absent there (they carry no
-        postings), which matches BM25 semantics (dl only ever multiplies a
-        nonzero tf)."""
+        one, else decoded from the sentinel rows."""
         p = os.path.join(self.path, "doc_lens")
         if os.path.exists(p):
             return self.spark.read.parquet(p)
-        from ivfadc_spark.operators.postings import decode_blocks, decode_doc_stats
+        from ivfadc_spark.operators.postings import decode_doc_stats
 
-        if int(self.meta.get("n_shards", 0) or 0) > 0:
-            return decode_doc_stats(self.raw_blocks)
-        # df-salted segment: no doc_lens dataset and no sentinel rows —
-        # derive dl from the postings themselves (each posting carries its
-        # doc's dl; distinct collapses the per-term duplication)
-        return decode_blocks(self.raw_blocks).select("doc_id", "dl").distinct()
+        return decode_doc_stats(self.raw_blocks)
 
     @property
     def doc_map(self) -> DataFrame:
@@ -111,10 +117,7 @@ class Segment:
         """Total doc_id space (max id + 1; ids are dense over ALL transcript
         rows, including zero-token docs — so this can exceed the BM25
         ``n_docs``). Key stride / offset base for batch scans and merges."""
-        ds = self.meta.get("doc_space")
-        if ds is None:  # v1 segment: derive once and cache
-            ds = self.meta["doc_space"] = self.doc_map.count()
-        return int(ds)
+        return int(self.meta["doc_space"])
 
     @property
     def dict_pdf(self):
@@ -190,7 +193,6 @@ class SegmentSet:
                     )
         self.offsets = []
         acc, n_docs, tokens = 0, 0, 0.0
-        shard_counts = []
         self.salt_offsets = []
         salt_acc = 0
         for s in self.segments:
@@ -198,8 +200,6 @@ class SegmentSet:
             acc += s.doc_space
             n_docs += s.meta["n_docs"]
             tokens += s.meta["avgdl"] * s.meta["n_docs"]
-            n_sh = int(s.meta.get("n_shards", s.meta.get("config", {}).get("doc_shards", 0)) or 0)
-            shard_counts.append(n_sh)
             # segments keep DISJOINT salt ranges in the union: member salts
             # are rebased by the cumulative shard count, so a (term, salt)
             # group never mixes two segments' blocks. The batch kernel needs
@@ -209,7 +209,7 @@ class SegmentSet:
             # its per-shard sentinel dl table must span one segment's doc
             # range, not the whole union's.
             self.salt_offsets.append(salt_acc)
-            salt_acc += max(n_sh, 1)
+            salt_acc += int(s.meta["n_shards"])
         # rebased salts live in an int32 column: the build guards pid < 2^19
         # to keep one segment's salts inside int32, but cumulative rebasing
         # across members must re-check — a silent wrap would collide shards
@@ -231,7 +231,7 @@ class SegmentSet:
             # every member is per-doc-consistently sharded, so the union is
             # too; rebased salts make shard ids disjoint, so the union has
             # the SUM of the members' shards
-            "n_shards": sum(shard_counts) if min(shard_counts) > 0 else 0,
+            "n_shards": salt_acc,
             "doc_base": 0,
             "config": c0,
             "lineage": {
@@ -326,68 +326,6 @@ class SegmentSet:
         return self._dl_bc
 
 
-def write_segment(
-    path: str,
-    blocks: DataFrame,
-    doc_map: DataFrame,
-    dictionary: DataFrame,
-    metrics: DataFrame | None,
-    n_docs: int,
-    avgdl: float,
-    doc_space: int | None = None,
-    doc_base: int = 0,
-    lineage: dict | None = None,
-    cfg: EngineConfig = DEFAULT,
-    blocks_prepartitioned: bool = False,
-    n_shards: int = 0,
-) -> None:
-    """Write a complete segment. term_bucket partitioning gives the query
-    side partition pruning on probed terms (O1 inverted-file pruning: only
-    buckets containing query terms are scanned). With
-    ``blocks_prepartitioned`` the blocks already carry a ``term_bucket``
-    column from their source layout and are written WITHOUT a shuffle."""
-    os.makedirs(path, exist_ok=True)
-    if not blocks_prepartitioned:
-        blocks = blocks.withColumn(
-            "term_bucket",
-            F.when(F.col("term").isNull(), F.lit(-1))
-            .otherwise(F.pmod(F.xxhash64("term"), F.lit(cfg.term_buckets)))
-            .cast("int"),
-        ).repartition("term_bucket")
-    (
-        blocks.write.mode("overwrite")
-        .partitionBy("term_bucket")
-        .parquet(os.path.join(path, "blocks"))
-    )
-    doc_map.write.mode("overwrite").parquet(os.path.join(path, "doc_map"))
-    dictionary.write.mode("overwrite").parquet(os.path.join(path, "dict"))
-    if metrics is None:
-        # compute from the just-written blocks, not the unmaterialized plan —
-        # avoids running the whole encode stage a second time
-        from ivfadc_spark.operators.postings import block_metrics
-
-        metrics = block_metrics(
-            blocks.sparkSession.read.parquet(os.path.join(path, "blocks"))
-        )
-    metrics.write.mode("overwrite").parquet(os.path.join(path, "metrics"))
-    if doc_space is None:
-        doc_space = int(n_docs)
-    meta = {
-        "n_docs": int(n_docs),
-        "avgdl": float(avgdl),
-        "doc_space": int(doc_space),
-        # 0 = not per-doc-consistently sharded (bm25_topk_batch will refuse)
-        "n_shards": int(n_shards),
-        "doc_base": int(doc_base),
-        "created_at": time.time(),
-        "lineage": lineage or {},
-        "config": json.loads(cfg.to_json()),
-        "format_version": 2,
-    }
-    with open(os.path.join(path, "meta.json"), "w") as f:
-        json.dump(meta, f, indent=2)
-
-
 def merge_segments(
     spark: SparkSession,
     paths: list[str],
@@ -430,8 +368,7 @@ def merge_segments(
         ).partitionBy("term_bucket").parquet(p_blocks)
     ss.doc_map.write.mode("overwrite").parquet(os.path.join(out_path, "doc_map"))
     # materialize the doc-length sidecar from the inputs' (offset-shifted)
-    # doc_lengths: the merged segment then serves dl regardless of whether
-    # its members carried sentinels, a doc_lens dataset, or neither
+    # doc_lengths, so the merged segment never decodes sentinels for dl
     ss.doc_lengths.write.mode("overwrite").parquet(os.path.join(out_path, "doc_lens"))
     ss.dictionary.write.mode("overwrite").parquet(os.path.join(out_path, "dict"))
     ss.metrics.write.mode("overwrite").parquet(os.path.join(out_path, "metrics"))
@@ -446,13 +383,9 @@ def merge_segments(
         # the layout contract (doc_shards, term_buckets, k1, b) comes from
         # the INPUT segments — SegmentSet enforced their consistency
         "config": ss.meta["config"] or json.loads(cfg.to_json()),
-        # versioned from the members: 3 as soon as ANY member's blocks are
-        # dl-free (v3) — merged output carries those blocks verbatim, so the
-        # label must describe the block layout actually present. Consumers
-        # key off n_shards / doc_lens, but the stamp should not lie.
-        "format_version": max(
-            int(s.meta.get("format_version", 2)) for s in ss.segments
-        ),
+        # members all opened as v3 (Segment refuses anything else) and
+        # their blocks are carried verbatim
+        "format_version": FORMAT_VERSION,
     }
     with open(os.path.join(out_path, "meta.json"), "w") as f:
         json.dump(meta, f, indent=2)

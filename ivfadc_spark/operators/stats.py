@@ -19,7 +19,6 @@ coarse codebook (/root/reference/Vocab.h:25-45).
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -42,68 +41,6 @@ def term_frequencies(docs: DataFrame, text_col: str = "text", id_col: str = "doc
         .groupBy("doc_id", "term")
         .agg(F.count("*").alias("tf"))
     )
-
-
-def term_frequencies_mapside(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """(doc_id, term, tf, dl) computed WITHOUT a shuffle.
-
-    tf is doc-local — every ``(doc_id, term)`` group lives inside the single
-    input row that carries the doc — so the explode+groupBy shuffle of
-    :func:`term_frequencies` is pure overhead (at 10^12 turns it is the
-    single largest exchange in the build: ~20T exploded token rows). This
-    variant runs on raw Arrow batches (``mapInArrow``): the text never
-    becomes Python string objects — the numpy byte tokenizer (or RE2 for
-    non-default patterns; functions.tokenize.arrow_flat_tokens), then
-    dictionary-encode and a single numpy key-count ((row, code) keys) per
-    batch. Output rows are identical to ``term_frequencies(docs)`` joined
-    with ``doc_lengths(docs)``.
-    """
-    import numpy as np
-
-    from ivfadc_spark.config import DEFAULT
-
-    pattern = DEFAULT.token_pattern
-
-    def gen(batches):
-        from ivfadc_spark.functions.arrow_pool import use_scalable_pool
-
-        use_scalable_pool()
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        from ivfadc_spark.functions.tokenize import arrow_flat_tokens
-
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            tbl = pa.Table.from_batches([rb])
-            flat, par = arrow_flat_tokens(tbl.column(text_col), pattern)
-            if len(flat) == 0:
-                continue
-            enc = pc.dictionary_encode(flat)
-            enc = enc.combine_chunks() if isinstance(enc, pa.ChunkedArray) else enc
-            codes = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-            vocab = enc.dictionary
-            v = len(vocab)
-            keys = par * v + codes
-            uk, tf = np.unique(keys, return_counts=True)
-            row_idx = uk // v
-            code = uk % v
-            dl = np.bincount(par, minlength=rb.num_rows)
-            doc_ids = tbl.column(id_col).to_numpy(zero_copy_only=False)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(doc_ids[row_idx], type=pa.int64()),
-                    vocab.take(pa.array(code)),
-                    pa.array(tf.astype(np.int64)),
-                    pa.array(dl[row_idx].astype(np.int64)),
-                ],
-                names=["doc_id", "term", "tf", "dl"],
-            )
-
-    return docs.mapInArrow(gen, "doc_id long, term string, tf long, dl long")
 
 
 def doc_lengths(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -136,8 +73,8 @@ def dictionary_from_metrics(metrics: DataFrame, n_docs: int) -> DataFrame:
 
     In the fused build the dictionary is a BY-PRODUCT of the encoded segment:
     df = postings-per-term (each posting is one (doc, term) pair) and cf is
-    summed from per-block tf totals, so the only full-corpus passes the build
-    makes are the tokenize map and the one (term, salt) exchange. Output is
+    summed from per-block tf totals, so the only full-corpus pass the build
+    makes is the combiner's tokenize-and-encode map. Output is
     row-identical to :func:`dictionary` on the same corpus.
     """
     return metrics.select(
@@ -154,16 +91,3 @@ def corpus_stats(dl: DataFrame) -> dict:
     """N and avgdl as plain Python (two scalars; one tiny job)."""
     row = dl.agg(F.count("*").alias("n"), F.avg("dl").alias("avgdl")).collect()[0]
     return {"n_docs": int(row["n"]), "avgdl": float(row["avgdl"] or 0.0)}
-
-
-def corpus_stats_from_tf(tf: DataFrame) -> dict:
-    """Same two scalars derived from the (doc_id, term, tf) fact table —
-    saves the build a second tokenize pass. ``n_docs`` counts docs with at
-    least one token (the dl>0 convention) and ``avgdl`` = total tokens /
-    n_docs, both identical to :func:`corpus_stats` on ``doc_lengths``."""
-    row = tf.agg(
-        F.countDistinct("doc_id").alias("n"),
-        F.sum("tf").alias("tokens"),
-    ).collect()[0]
-    n = int(row["n"] or 0)
-    return {"n_docs": n, "avgdl": (float(row["tokens"]) / n) if n else 0.0}

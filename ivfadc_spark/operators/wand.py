@@ -54,8 +54,7 @@ def _decode_block_rows(rows: pd.DataFrame, dl_arr: np.ndarray):
     """Decode ALL given block rows in two codec calls (varint streams are
     self-delimiting and concatenable); absolute docIDs via segmented cumsum
     reset at block starts. dl is GATHERED from the resident per-doc lookup
-    (format v3 blocks carry no dl stream; for v2 blocks the dead stream is
-    simply never read). Returns (ids, tf, dl) arrays."""
+    (format v3 blocks carry no dl stream). Returns (ids, tf, dl) arrays."""
     counts = rows["n"].to_numpy(np.int64)
     total = int(counts.sum())
     deltas = varint_decode(b"".join(bytes(x) for x in rows["doc_ids"]), total).astype(np.int64)
@@ -177,9 +176,10 @@ def bm25_topk_batch(
 
     The term-partitioned path (:func:`bm25_topk_indexed`) copies every
     candidate posting block to every query that probes its term: shuffle
-    volume grows with n_queries x posting bytes. Here the segment's uniform
-    doc shards (cfg.doc_shards; salt = hash(doc_id) % S) are exploited
-    instead: each shard is a complete sub-index over its doc subset, so
+    volume grows with n_queries x posting bytes. Here the segment's doc
+    shards (one contiguous doc range per build partition; shard =
+    salt // SALT_CHUNK_SPAN, S = meta n_shards) are exploited instead: each
+    shard is a complete sub-index over its doc range, so
 
       1. ship each shard's (query-term-filtered) blocks ONCE to one task —
          duplication factor is S, independent of batch size (the reference's
@@ -251,25 +251,9 @@ def bm25_topk_batch(
         "term", "salt", "block_id", "n", "doc_ids", "tfs", "dls",
         "max_tf", "min_dl",
     )
-    # the shard contract comes STRICTLY from the segment's own build meta:
-    # a df-salted segment (n_shards <= 0) splits one doc's postings across
-    # DIFFERENT salts per term, which would silently double-count scores here
-    meta = segment.meta
-    if "n_shards" in meta:
-        n_shards = int(meta["n_shards"] or 0)
-        chunk_salted = True  # salt = pid * SALT_CHUNK_SPAN + chunk
-    else:
-        # pre-n_shards doc-sharded segment (format v1): salt IS the shard
-        # (0..doc_shards-1) — salt // SALT_CHUNK_SPAN would collapse every
-        # shard into one straggler task
-        n_shards = int(meta.get("config", {}).get("doc_shards", 0) or 0)
-        chunk_salted = False
-    if n_shards <= 0:
-        raise ValueError(
-            "bm25_topk_batch requires a segment built with uniform doc "
-            "sharding (cfg.doc_shards > 0); this segment was df-salted — "
-            "use bm25_topk_indexed instead"
-        )
+    # the shard count comes from the segment's own build meta (Segment
+    # refuses to open anything but a doc-sharded v3 build)
+    n_shards = int(segment.meta["n_shards"])
     # scan granularity = the PARTITION-level doc shard (salt // span): the
     # fine chunk salts only bounded the encoder's working set — grouping by
     # them would pay per-group fixed costs hundreds of times per task.
@@ -279,11 +263,8 @@ def bm25_topk_batch(
     from ivfadc_spark.operators.postings import SALT_CHUNK_SPAN, _ranges
 
     par = spark.sparkContext.defaultParallelism
-    shard_col = (
-        (F.col("salt") / F.lit(SALT_CHUNK_SPAN)).cast("int")
-        if chunk_salted
-        else F.col("salt")
-    )
+    # salt = pid * SALT_CHUNK_SPAN + chunk
+    shard_col = (F.col("salt") / F.lit(SALT_CHUNK_SPAN)).cast("int")
     # salt is KEPT: within a term, chunk salts are consecutive doc ranges of
     # the source partition, so (salt, block_id) order makes the concatenated
     # term slice globally doc-sorted — the restricted path binary-searches it
@@ -334,13 +315,12 @@ def bm25_topk_batch(
             t_start: dict = {}
             t_len: dict = {}
             t_maximp: dict = {}
-            id_bufs, tf_bufs, dl_bufs, counts_l = [], [], [], []
+            id_bufs, tf_bufs, counts_l = [], [], []
             pos = 0
             for term, tg in sg.groupby("term", sort=False):
                 tg = tg.sort_values(["salt", "block_id"], kind="mergesort")
                 id_bufs.extend(bytes(x) for x in tg["doc_ids"])
                 tf_bufs.extend(bytes(x) for x in tg["tfs"])
-                dl_bufs.extend(bytes(x) for x in tg["dls"])
                 counts_l.extend(int(x) for x in tg["n"])
                 tl = int(tg["n"].sum())
                 t_start[term] = pos
@@ -358,58 +338,52 @@ def bm25_topk_batch(
             counts = np.asarray(counts_l, dtype=np.int64)
             deltas = varint_decode(b"".join(id_bufs), pos).astype(np.int64)
             tf = varint_decode(b"".join(tf_bufs), pos).astype(np.float64)
-            dl_stream = b"".join(dl_bufs)
-            stream_dl = len(dl_stream) > 0
             # segmented cumsum: absolute ids = cumsum(deltas) minus the
             # running total at each block's start
             c = np.cumsum(deltas)
             bstarts = np.cumsum(counts) - counts
             base = np.where(bstarts > 0, c[bstarts - 1], 0)
             all_ids = c - np.repeat(base, counts)
-            if stream_dl:  # format v2 blocks: per-posting dl stream
-                dl = varint_decode(dl_stream, pos).astype(np.float64)
-                denom = k1 * (1.0 - b + b * dl / avgdl)
-            else:
-                # format v3: per-doc norm from this shard's SENTINEL rows —
-                # each chunk's (doc_id -> dl) table, decoded once per shard
-                sent = sent_by_shard.get(_shard)
-                if sent is None or not len(sent):
-                    raise ValueError(
-                        "bm25_topk_batch: shard has dl-free (v3) blocks but "
-                        "no sentinel doc-stats rows — segment is corrupt or "
-                        "was filtered without term IS NULL"
-                    )
-                s_counts = sent["n"].to_numpy(np.int64)
-                s_tot = int(s_counts.sum())
-                s_deltas = varint_decode(
-                    b"".join(bytes(x) for x in sent["doc_ids"]), s_tot
-                ).astype(np.int64)
-                s_dl = varint_decode(
-                    b"".join(bytes(x) for x in sent["dls"]), s_tot
-                ).astype(np.float64)
-                sc = np.cumsum(s_deltas)
-                s_starts = np.cumsum(s_counts) - s_counts
-                s_base = np.where(s_starts > 0, sc[s_starts - 1], 0)
-                s_ids = sc - np.repeat(s_base, s_counts)
-                lo_id = int(s_ids.min())
-                # NaN-initialized so a posting doc id NOT covered by the
-                # sentinel table (corrupt / partially-filtered segment)
-                # raises instead of gathering uninitialized garbage; ids
-                # below lo_id would index negatively — checked explicitly.
-                norm = np.full(int(s_ids.max()) - lo_id + 1, np.nan, dtype=np.float64)
-                norm[s_ids - lo_id] = k1 * (1.0 - b + b * s_dl / avgdl)
-                gidx = all_ids - lo_id
-                if gidx.size and (int(gidx.min()) < 0 or int(gidx.max()) >= norm.size):
-                    raise ValueError(
-                        "bm25_topk_batch: posting doc_id outside the shard's "
-                        "sentinel doc-stats range — segment is corrupt"
-                    )
-                denom = norm[gidx]
-                if np.isnan(denom).any():
-                    raise ValueError(
-                        "bm25_topk_batch: posting doc_id missing from the "
-                        "sentinel doc-stats table — segment is corrupt"
-                    )
+            # per-doc norm from this shard's SENTINEL rows — each chunk's
+            # (doc_id -> dl) table, decoded once per shard
+            sent = sent_by_shard.get(_shard)
+            if sent is None or not len(sent):
+                raise ValueError(
+                    "bm25_topk_batch: shard has posting blocks but "
+                    "no sentinel doc-stats rows — segment is corrupt or "
+                    "was filtered without term IS NULL"
+                )
+            s_counts = sent["n"].to_numpy(np.int64)
+            s_tot = int(s_counts.sum())
+            s_deltas = varint_decode(
+                b"".join(bytes(x) for x in sent["doc_ids"]), s_tot
+            ).astype(np.int64)
+            s_dl = varint_decode(
+                b"".join(bytes(x) for x in sent["dls"]), s_tot
+            ).astype(np.float64)
+            sc = np.cumsum(s_deltas)
+            s_starts = np.cumsum(s_counts) - s_counts
+            s_base = np.where(s_starts > 0, sc[s_starts - 1], 0)
+            s_ids = sc - np.repeat(s_base, s_counts)
+            lo_id = int(s_ids.min())
+            # NaN-initialized so a posting doc id NOT covered by the
+            # sentinel table (corrupt / partially-filtered segment)
+            # raises instead of gathering uninitialized garbage; ids
+            # below lo_id would index negatively — checked explicitly.
+            norm = np.full(int(s_ids.max()) - lo_id + 1, np.nan, dtype=np.float64)
+            norm[s_ids - lo_id] = k1 * (1.0 - b + b * s_dl / avgdl)
+            gidx = all_ids - lo_id
+            if gidx.size and (int(gidx.min()) < 0 or int(gidx.max()) >= norm.size):
+                raise ValueError(
+                    "bm25_topk_batch: posting doc_id outside the shard's "
+                    "sentinel doc-stats range — segment is corrupt"
+                )
+            denom = norm[gidx]
+            if np.isnan(denom).any():
+                raise ValueError(
+                    "bm25_topk_batch: posting doc_id missing from the "
+                    "sentinel doc-stats table — segment is corrupt"
+                )
             all_imp = (tf * (k1 + 1.0)) / (tf + denom)
             if bmask is not None:
                 # drop masked-out (deleted / out-of-scope) postings and

@@ -6,24 +6,28 @@ Ours checkpoints every stage as a parquet dataset plus a manifest entry with
 lineage and metrics; ``resume=True`` re-enters a half-built index at the
 first incomplete stage (north_rule requirement).
 
-Stages (layout v2 — FUSED: the corpus is tokenized in the map stage and
-flows STRAIGHT into the (term, salt) exchange and the block encoder; there
-is no tf fact-table round-trip and no dictionary pre-pass)::
+Stages (segment format v3 — a COMBINER build: each range partition of the
+corpus is tokenized, tf-aggregated and block-encoded in one map pass; no
+posting row ever crosses the network, there is no tf fact-table round-trip
+and no dictionary pre-pass)::
 
-    00_doc_map   doc_id assignment                             [nl analog]
-                 -> segment/doc_map (doc_id, conv_id, turn_idx)
+    00_doc_map   doc_id assignment (plan_doc_ids)              [nl analog]
+                 -> segment/doc_map (doc_id, conv_id, turn_idx, role, tool)
                  (doc lengths live in doc_lens / sentinel rows, not here)
-    01_blocks    tokenize -> salt -> exchange -> encode        [idx analog]
-                 -> segment/blocks
+    01_blocks    tokenize -> tf -> sort -> encode, per          [idx analog]
+                 doc-range partition -> segment/blocks
+                 (overlapped with 00's write: both read pruned executions
+                 of the same lazy id frame)
     02_dict      dictionary DERIVED from block metrics         [voc_sz analog]
-                 -> segment/dict + segment/metrics + meta.json
+                 + doc_lens decoded from the sentinel rows
+                 -> segment/dict + segment/metrics + segment/doc_lens
+                    + meta.json
 
 Deriving df/cf from the encoded blocks (block_metrics: postings == df,
-summed block tf == cf) is what makes the fusion legal: the v1 layout needed
-a tf pre-pass only to learn the vocabulary before encoding. n_docs/avgdl
-come from stage 00's doc_map aggregate (dl is a JVM-codegen'd token count,
-semantically identical to the Arrow tokenizer), so the encoder has avgdl
-before any posting exists.
+summed block tf == cf) is what makes the fusion legal: no tf pre-pass is
+needed to learn the vocabulary before encoding. Block bounds are
+avgdl-free, and n_docs/avgdl ride stage 01's write as an observation over
+the encoder's sentinel rows, so no stage waits on corpus statistics.
 
 Each manifest entry records wall seconds and row counts — the scaled-up
 version of the reference's stage-boundary debug dumps (SURVEY.md §5.2).
@@ -38,7 +42,6 @@ import json
 import os
 import time
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -46,18 +49,11 @@ from ivfadc_spark.config import DEFAULT, EngineConfig
 from ivfadc_spark.operators import stats as S
 from ivfadc_spark.operators.postings import (
     block_metrics,
-    build_blocks,
     build_blocks_inplace,
     decode_doc_stats,
-    salted_tf,
 )
-from ivfadc_spark.operators.segments import Segment
-from ivfadc_spark.sources.transcripts import (
-    _tokens_for_partitions,
-    assign_doc_ids,
-    plan_doc_ids,
-    release_doc_ids,
-)
+from ivfadc_spark.operators.segments import FORMAT_VERSION, Segment
+from ivfadc_spark.sources.transcripts import _tokens_for_partitions, plan_doc_ids
 
 LAYOUT_VERSION = 3  # 3: doc_map carries the input's role/tool attributes
 
@@ -119,6 +115,12 @@ def build_index(
             f"cannot resume: checkpoint at {out} has layout_version="
             f"{m.get('layout_version', 1)}, engine writes {LAYOUT_VERSION}; rebuild"
         )
+    st1 = done.get("01_blocks", {})
+    if st1.get("complete") and not (st1.get("n_shards", 0) > 0 and "n_docs" in st1):
+        raise ValueError(
+            f"cannot resume: stage 01_blocks at {out} predates the doc-sharded "
+            "combiner layout (no n_shards / n_docs); rebuild"
+        )
     m["layout_version"] = LAYOUT_VERSION
 
     def stage(name: str):
@@ -142,49 +144,45 @@ def build_index(
     # happened to run the build — identical input must yield an identical
     # index at any cluster size. doc ids themselves are partitioning-
     # independent either way (global range order).
-    n_parts = cfg.doc_shards if cfg.doc_shards > 0 else None
+    n_parts = int(cfg.doc_shards)
     with_ids = None
     dm_fut = dm_pool = dm_obs = None
     dm_t0 = 0.0
     # the build touches every transcript column EXCEPT ts — dropping it here
-    # keeps its bytes out of the id-assign shuffle and the materialized cache
-    # (the serial head of the build)
+    # keeps its bytes out of the id-assign shuffle (the serial head of the
+    # build)
     tx_cols = [c for c in ("conv_id", "turn_idx", "role", "text", "tool") if c in transcripts.columns]
     transcripts = transcripts.select(*tx_cols)
     id_rows = None
     head_timings: dict = {}
     if not stage("00_doc_map"):
         dm_t0 = time.time()
-        if cfg.doc_shards > 0:
-            # CACHELESS id assignment: boundaries + exact per-bucket counts
-            # come from two cheap key-only jobs, so the expensive full-row
-            # shuffle is never materialized into a cache — each downstream
-            # job consumes its own COLUMN-PRUNED execution of this lazy
-            # frame (doc_map: meta columns; blocks: keys + text). Profiling
-            # showed the cache materialization was the single worst-scaling
-            # span of the build (a serial head before any overlapped job
-            # could start, BENCH/NARRATIVE.md); these pruned jobs are ~5%
-            # of its wall.
-            with_ids, id_counts = plan_doc_ids(transcripts, n_parts)
-            id_rows = sum(id_counts)
-            head_timings = getattr(with_ids, "_ivfadc_timings", {})
-        else:
-            with_ids = assign_doc_ids(transcripts, num_partitions=n_parts)
-        # serial head of the build: sample + count jobs (cacheless path) or
-        # the id-assign shuffle+sort+cache materialization (legacy path) —
-        # recorded so scaling runs attribute wall-time to it
+        # CACHELESS id assignment: boundaries + exact per-bucket counts
+        # come from two cheap key-only jobs, so the expensive full-row
+        # shuffle is never materialized into a cache — each downstream
+        # job consumes its own COLUMN-PRUNED execution of this lazy
+        # frame (doc_map: meta columns; blocks: keys + text). Profiling
+        # showed the cache materialization was the single worst-scaling
+        # span of the build (a serial head before any overlapped job
+        # could start, BENCH/NARRATIVE.md); these pruned jobs are ~5%
+        # of its wall.
+        with_ids, id_counts = plan_doc_ids(transcripts, n_parts)
+        id_rows = sum(id_counts)
+        head_timings = getattr(with_ids, "_ivfadc_timings", {})
+        # serial head of the build: the sample + count jobs — recorded so
+        # scaling runs attribute wall-time to it
         assign_s = round(time.time() - dm_t0, 3)
         # the row count rides on the write job via an Observation (no second
-        # pass); on the cacheless path it cross-checks the pruned bucket
-        # counts the ids were derived from. n_docs/avgdl are NOT needed yet:
-        # the encoder's block bounds are avgdl-free, and stage 02 recovers
-        # the per-doc token counts from the encoder's sentinel rows.
+        # pass) and cross-checks the pruned bucket counts the ids were
+        # derived from. n_docs/avgdl are NOT needed yet: the encoder's block
+        # bounds are avgdl-free, and stage 02 recovers the per-doc token
+        # counts from the encoder's sentinel rows.
         dm_obs = Observation("doc_map")
         dm_df = (
             with_ids.select("doc_id", "conv_id", "turn_idx", "role", "tool")
             .observe(dm_obs, F.count(F.lit(1)).alias("rows"))
         )
-        if not stage("01_blocks") and cfg.doc_shards > 0:
+        if not stage("01_blocks"):
             # OVERLAP stages 00 and 01: the two jobs run pruned executions
             # of the same lazy id frame and write disjoint outputs, so
             # nothing orders them. The doc_map write is JVM-bound (meta
@@ -208,7 +206,7 @@ def build_index(
         else:
             dm_df.write.mode("overwrite").parquet(p_docs)
             rows = int(dm_obs.get["rows"])
-            if id_rows is not None and rows != id_rows:
+            if rows != id_rows:
                 raise RuntimeError(
                     f"doc_map wrote {rows} rows but bucket counts said {id_rows}"
                 )
@@ -223,10 +221,7 @@ def build_index(
             # resuming past a completed 00 in a fresh session: re-derive ids
             # and PROVE the recompute reproduces the checkpointed doc_map
             # (duplicate keys or a changed input layout could permute ties)
-            if cfg.doc_shards > 0:
-                with_ids, _ = plan_doc_ids(transcripts, n_parts)
-            else:
-                with_ids = assign_doc_ids(transcripts, num_partitions=n_parts)
+            with_ids, _ = plan_doc_ids(transcripts, n_parts)
             got = _doc_map_fingerprint(with_ids.select("doc_id", "conv_id", "turn_idx"))
             want = _doc_map_fingerprint(
                 spark.read.parquet(p_docs).select("doc_id", "conv_id", "turn_idx")
@@ -237,52 +232,28 @@ def build_index(
                     f"(rows/hash {got} != {want}); input changed or keys are not "
                     "unique — rebuild without resume"
                 )
-        extra = {}
-        if cfg.doc_shards > 0:
-            # combiner path: tokenize -> tf -> sort -> encode in ONE map
-            # pass over the range-partitioned cache; the doc shard is a
-            # bounded doc-range chunk of the partition, so NO posting row
-            # ever crosses the network — only encoded blocks move, in the
-            # term_bucket layout repartition below. Sentinel rows land in
-            # the term_bucket=-1 partition.
-            docs = with_ids.select("doc_id", "text")
-            n_shards = int(n_parts)
-            blocks = build_blocks_inplace(docs, cfg)
-            # corpus stats ride the write: sentinel rows carry the chunk's
-            # positive-doc count (max_tf) and token total (sum_tf) as plain
-            # columns, so n_docs/avgdl land in the manifest with ZERO extra
-            # jobs — stage 02's dictionary job can then overlap the
-            # doc_lens decode instead of waiting for its observation
-            sobs = Observation("corpus_stats")
-            blocks = blocks.observe(
-                sobs,
-                F.sum(
-                    F.when(F.col("block_id") == -1, F.col("max_tf"))
-                ).alias("n_docs"),
-                F.sum(
-                    F.when(F.col("block_id") == -1, F.col("sum_tf"))
-                ).alias("tokens"),
-            )
-            tf_cached = None
-        else:
-            n_shards = 0  # df-salted: not doc-sharded
-            # legacy df-salted layout: needs the full tf fact table + a
-            # dictionary pre-pass before the (term, salt) exchange; stats
-            # come from the persisted tf (no sentinels on this path)
-            tf = S.term_frequencies_mapside(with_ids.select("doc_id", "text"))
-            tf_cached = tf.persist(StorageLevel.DISK_ONLY)
-            cs = S.corpus_stats_from_tf(tf_cached)
-            extra.update(n_docs=cs["n_docs"], avgdl=cs["avgdl"])
-            S.dictionary(tf_cached, cs["n_docs"]).write.mode("overwrite").parquet(p_dict)
-            # materialize the doc-length sidecar while tf is still persisted
-            # (this path emits no sentinel rows; without this, every dl
-            # consumer would pay a posting decode)
-            tf_cached.select("doc_id", "dl").distinct().write.mode("overwrite").parquet(
-                os.path.join(p_seg, "doc_lens")
-            )
-            d = spark.read.parquet(p_dict)
-            salted = salted_tf(tf_cached, None, d, cfg)
-            blocks = build_blocks(salted, cfg, dictionary=d)
+        # combiner: tokenize -> tf -> sort -> encode in ONE map pass over
+        # the range-partitioned frame; the doc shard is a bounded doc-range
+        # chunk of the partition, so NO posting row ever crosses the
+        # network — only encoded blocks move, in the term_bucket layout
+        # repartition below. Sentinel rows land in the term_bucket=-1
+        # partition.
+        blocks = build_blocks_inplace(with_ids.select("doc_id", "text"), cfg)
+        # corpus stats ride the write: sentinel rows carry the chunk's
+        # positive-doc count (max_tf) and token total (sum_tf) as plain
+        # columns, so n_docs/avgdl land in the manifest with ZERO extra
+        # jobs — stage 02's dictionary job can then overlap the doc_lens
+        # decode instead of waiting for its observation
+        sobs = Observation("corpus_stats")
+        blocks = blocks.observe(
+            sobs,
+            F.sum(
+                F.when(F.col("block_id") == -1, F.col("max_tf"))
+            ).alias("n_docs"),
+            F.sum(
+                F.when(F.col("block_id") == -1, F.col("sum_tf"))
+            ).alias("tokens"),
+        )
         if dm_fut is not None:
             spark.sparkContext.setLocalProperty("spark.scheduler.pool", "build_blocks")
         try:
@@ -340,7 +311,7 @@ def build_index(
             # 00 (its wall is the real span of the write, not the overlap
             # window)
             rows = int(dm_obs.get["rows"])
-            if id_rows is not None and rows != id_rows:
+            if rows != id_rows:
                 raise RuntimeError(
                     f"doc_map wrote {rows} rows but bucket counts said {id_rows}"
                 )
@@ -349,21 +320,15 @@ def build_index(
                 wall_s=round(t_dm - dm_t0, 3), overlapped=True, assign_s=assign_s,
                 **head_timings,
             )
-            dm_fut = None
-        if tf_cached is not None:
-            tf_cached.unpersist()
-        else:
-            sn = int(sobs.get["n_docs"] or 0)
-            extra.update(
-                n_docs=sn,
-                avgdl=(float(sobs.get["tokens"]) / sn) if sn else 0.0,
-            )
-        extra["n_shards"] = n_shards
+        sn = int(sobs.get["n_docs"] or 0)
+        extra = {
+            "n_docs": sn,
+            "avgdl": (float(sobs.get["tokens"]) / sn) if sn else 0.0,
+            "n_shards": n_parts,
+        }
         if measure_skew:
             extra["skew_ratio"] = _skew_ratio(spark.read.parquet(p_blocks))
         record("01_blocks", t0, **extra)
-    if with_ids is not None:
-        release_doc_ids(with_ids)
     doc_space = done["00_doc_map"]["doc_space"]
 
     if not stage("02_dict"):
@@ -376,121 +341,102 @@ def build_index(
             F.sum("bytes").alias("bytes"),
             F.max("postings").alias("max_term_postings"),
         )
-        if cfg.doc_shards > 0:
-            # corpus stats + doc-length sidecar from the encoder's sentinel
-            # rows (term_bucket=-1 partition — a pruned scan): one tiny
-            # decode instead of a corpus tokenize. n_docs keeps the BM25
-            # convention (docs with >= 1 token). Two scale details:
-            # (a) the pre-write repartition("term_bucket") put ALL sentinel
-            #     rows in one file (usually one row group), so the pruned
-            #     scan is ONE task — repartition the still-encoded rows
-            #     (tiny: ~3 span-compressed bytes/doc) across the cluster so
-            #     decode + write parallelize (each sentinel row is a
-            #     self-contained chunk; decode is row-independent);
-            # (b) run the doc_lens job CONCURRENTLY with the metrics scan
-            #     below (separate thread; they read disjoint partitions) —
-            #     stage 02 was the build's worst-scaling stage precisely
-            #     because it serialized three small jobs that each
-            #     underfill a big cluster.
-            obs = Observation("doc_lens")
-            sent = raw.filter(F.col("term_bucket") == -1).repartition(
-                spark.sparkContext.defaultParallelism
+        # corpus stats + doc-length sidecar from the encoder's sentinel
+        # rows (term_bucket=-1 partition — a pruned scan): one tiny
+        # decode instead of a corpus tokenize. n_docs keeps the BM25
+        # convention (docs with >= 1 token). Two scale details:
+        # (a) the pre-write repartition("term_bucket") put ALL sentinel
+        #     rows in one file (usually one row group), so the pruned
+        #     scan is ONE task — repartition the still-encoded rows
+        #     (tiny: ~3 span-compressed bytes/doc) across the cluster so
+        #     decode + write parallelize (each sentinel row is a
+        #     self-contained chunk; decode is row-independent);
+        # (b) run the doc_lens job CONCURRENTLY with the metrics scan
+        #     below (separate thread; they read disjoint partitions) —
+        #     stage 02 was the build's worst-scaling stage precisely
+        #     because it serialized three small jobs that each
+        #     underfill a big cluster.
+        obs = Observation("doc_lens")
+        sent = raw.filter(F.col("term_bucket") == -1).repartition(
+            spark.sparkContext.defaultParallelism
+        )
+        lens_out = decode_doc_stats(sent).observe(
+            obs,
+            F.sum((F.col("dl") > 0).cast("long")).alias("n_docs"),
+            F.sum("dl").alias("tokens"),
+        )
+        # n_docs/avgdl arrive from stage 01's write observation over the
+        # sentinel stat columns
+        st1 = done["01_blocks"]
+        n_docs, avgdl = int(st1["n_docs"]), float(st1["avgdl"])
+        from concurrent.futures import ThreadPoolExecutor
+
+        metrics_cached = metrics_out.persist()
+
+        def _write_lens():
+            # own FAIR pool (session.py): the python-decode lane really
+            # runs beside the JVM metrics/dict lane instead of queueing
+            spark.sparkContext.setLocalProperty(
+                "spark.scheduler.pool", "build_doclens"
             )
-            lens_out = decode_doc_stats(sent).observe(
-                obs,
-                F.sum((F.col("dl") > 0).cast("long")).alias("n_docs"),
-                F.sum("dl").alias("tokens"),
+            lens_out.write.mode("overwrite").parquet(
+                os.path.join(p_seg, "doc_lens")
             )
-            st1 = done["01_blocks"]
-            # n_docs/avgdl normally arrive from stage 01's write observation
-            # over the sentinel stat columns; a checkpoint written by an
-            # older build lacks them, and then the doc_lens decode's own
-            # observation supplies the stats (serializing the dict job
-            # behind it — the pre-round-4 shape)
-            have_stats = "n_docs" in st1
-            n_docs = int(st1["n_docs"]) if have_stats else 0
-            avgdl = float(st1["avgdl"]) if have_stats else 0.0
-            from concurrent.futures import ThreadPoolExecutor
 
-            metrics_cached = metrics_out.persist()
+        def _write_dict():
+            spark.sparkContext.setLocalProperty(
+                "spark.scheduler.pool", "build_dict"
+            )
+            S.dictionary_from_metrics(
+                metrics_cached.select("term", "postings", "cf"), n_docs
+            ).write.mode("overwrite").parquet(p_dict)
 
-            def _write_lens():
-                # own FAIR pool (session.py): the python-decode lane really
-                # runs beside the JVM metrics/dict lane instead of queueing
-                spark.sparkContext.setLocalProperty(
-                    "spark.scheduler.pool", "build_doclens"
-                )
-                lens_out.write.mode("overwrite").parquet(
-                    os.path.join(p_seg, "doc_lens")
-                )
-
-            def _write_dict():
-                spark.sparkContext.setLocalProperty(
-                    "spark.scheduler.pool", "build_dict"
-                )
-                S.dictionary_from_metrics(
-                    metrics_cached.select("term", "postings", "cf"), n_docs
-                ).write.mode("overwrite").parquet(p_dict)
-
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                lens_fut = pool.submit(_write_lens)
-                # materialize the per-term agg cache with ONE count job
-                # (overlapping the doc_lens lane), then the metrics write
-                # and the dictionary write both read the CACHE and run as
-                # two further concurrent lanes — stage 02 is three
-                # concurrent cache-fed lanes instead of (two lanes with the
-                # dict serialized behind the metrics write). The agg is
-                # computed exactly once either way; this only moves the
-                # cheap cache-read writes off the critical path.
-                spark.sparkContext.setLocalProperty(
-                    "spark.scheduler.pool", "build_dict"
-                )
-                try:
-                    metrics_cached.count()  # fires mobs; materializes cache
-                    dict_fut = pool.submit(_write_dict) if have_stats else None
-                    metrics_cached.write.mode("overwrite").parquet(p_metrics)
-                    if dict_fut is not None:
-                        dict_fut.result()
-                finally:
-                    spark.sparkContext.setLocalProperty("spark.scheduler.pool", None)
-                lens_fut.result()
-            obs_n = int(obs.get["n_docs"] or 0)
-            obs_avg = (float(obs.get["tokens"]) / obs_n) if obs_n else 0.0
-            if have_stats:
-                # decoded sidecar must agree with the stage-01 column stats —
-                # a free integrity check on the sentinel encode/decode pair
-                if (obs_n, round(obs_avg, 9)) != (n_docs, round(avgdl, 9)):
-                    raise ValueError(
-                        f"stage 02: doc_lens decode stats ({obs_n}, {obs_avg}) "
-                        f"disagree with stage-01 sentinel stats ({n_docs}, "
-                        f"{avgdl}) — sentinel corruption; rebuild"
-                    )
-            else:
-                n_docs, avgdl = obs_n, obs_avg
-                S.dictionary_from_metrics(
-                    metrics_cached.select("term", "postings", "cf"), n_docs
-                ).write.mode("overwrite").parquet(p_dict)
-            metrics_cached.unpersist()
-        else:
-            st1 = done["01_blocks"]
-            n_docs, avgdl = st1["n_docs"], st1["avgdl"]
-            metrics_out.write.mode("overwrite").parquet(p_metrics)
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            lens_fut = pool.submit(_write_lens)
+            # materialize the per-term agg cache with ONE count job
+            # (overlapping the doc_lens lane), then the metrics write
+            # and the dictionary write both read the CACHE and run as
+            # two further concurrent lanes — stage 02 is three
+            # concurrent cache-fed lanes instead of (two lanes with the
+            # dict serialized behind the metrics write). The agg is
+            # computed exactly once either way; this only moves the
+            # cheap cache-read writes off the critical path.
+            spark.sparkContext.setLocalProperty(
+                "spark.scheduler.pool", "build_dict"
+            )
+            try:
+                metrics_cached.count()  # fires mobs; materializes cache
+                dict_fut = pool.submit(_write_dict)
+                metrics_cached.write.mode("overwrite").parquet(p_metrics)
+                dict_fut.result()
+            finally:
+                spark.sparkContext.setLocalProperty("spark.scheduler.pool", None)
+            lens_fut.result()
+        obs_n = int(obs.get["n_docs"] or 0)
+        obs_avg = (float(obs.get["tokens"]) / obs_n) if obs_n else 0.0
+        # decoded sidecar must agree with the stage-01 column stats — a
+        # free integrity check on the sentinel encode/decode pair
+        if (obs_n, round(obs_avg, 9)) != (n_docs, round(avgdl, 9)):
+            raise ValueError(
+                f"stage 02: doc_lens decode stats ({obs_n}, {obs_avg}) "
+                f"disagree with stage-01 sentinel stats ({n_docs}, "
+                f"{avgdl}) — sentinel corruption; rebuild"
+            )
+        metrics_cached.unpersist()
         met = mobs.get
         meta = {
             "n_docs": int(n_docs),
             "avgdl": float(avgdl),
             "doc_space": int(doc_space),
-            # actual doc-shard count (combiner path: the number of source
-            # partitions); 0 = legacy df-salted layout
-            "n_shards": int(done["01_blocks"].get("n_shards", 0)),
+            # doc-shard count = the number of id-assign partitions
+            "n_shards": int(st1["n_shards"]),
             "doc_base": 0,
             "created_at": time.time(),
             "lineage": lineage or {},
             "config": json.loads(cfg.to_json()),
-            # v3 (combiner): posting blocks carry NO per-posting dl stream —
-            # dl lives once per doc in the sentinel/doc_lens sidecar.
-            # v2 (df-salted): dls still encoded per posting (no sentinels).
-            "format_version": 3 if cfg.doc_shards > 0 else 2,
+            # v3: posting blocks carry NO per-posting dl stream — dl lives
+            # once per doc in the sentinel/doc_lens sidecar
+            "format_version": FORMAT_VERSION,
         }
         with open(os.path.join(p_seg, "meta.json"), "w") as f:
             json.dump(meta, f, indent=2)

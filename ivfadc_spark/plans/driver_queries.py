@@ -901,10 +901,9 @@ def _get_segment(spark, sf_dir, cfg: EngineConfig, doc_filter=None, tag: str = "
     return _SEGMENT_CACHE[key]
 
 
-_ENGINE_CFG = EngineConfig(block_size=64, salt_df_threshold=200, max_salts=4)
+_ENGINE_CFG = EngineConfig(block_size=64)
 _STOP_CFG = EngineConfig(
-    block_size=64, salt_df_threshold=200, max_salts=4,
-    stop_terms=",".join(STOPWORDS), min_token_len=2,
+    block_size=64, stop_terms=",".join(STOPWORDS), min_token_len=2,
 )
 
 
@@ -1367,8 +1366,7 @@ PHRASESET = [
 ]
 
 
-_POS_CFG = EngineConfig(block_size=64, salt_df_threshold=200, max_salts=4,
-                        with_positions=1)
+_POS_CFG = EngineConfig(block_size=64, with_positions=1)
 
 
 def q_phrase_topk(spark, sf_dir):

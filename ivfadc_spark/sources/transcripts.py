@@ -201,8 +201,8 @@ def _range_bounds(df: DataFrame, n: int) -> list[tuple]:
     return [sampled[min(i * len(sampled) // n, len(sampled) - 1)] for i in range(1, n)]
 
 
-def _bucket_expr(bounds: list[tuple], leaves: list[int] | None = None):
-    """searchsorted((conv_id, turn_idx)) over the sorted boundaries as a
+def _bucket_expr(bounds: list[str], leaves: list[int] | None = None):
+    """searchsorted(conv_id) over the sorted conv_id boundaries as a
     BINARY ``when`` tree: each row evaluates only its log2(n) path of string
     comparisons, not all n-1 (a linear indicator chain measured 12.5s for the
     pruned count job at 16.6M rows; the tree is ~0.5s). ``leaves[b]`` is the
@@ -214,23 +214,12 @@ def _bucket_expr(bounds: list[tuple], leaves: list[int] | None = None):
     n = len(bounds) + 1
     vals = leaves if leaves is not None else list(range(n))
 
-    def ge(b):
-        bc, bt = b
-        if bt is None:
-            # conversation-start boundary: ONE string compare per tree level
-            # instead of two-plus-an-int (plan_doc_ids truncates boundaries
-            # to conv starts — the counts job and both consumer shuffles
-            # evaluate this tree once per row, so halving it is a measured
-            # win on three jobs; boundary granularity moves only ~one
-            # conversation of rows per bucket, never any doc_id)
-            return F.col("conv_id") >= F.lit(bc)
-        return (F.col("conv_id") > F.lit(bc)) | (
-            (F.col("conv_id") == F.lit(bc))
-            & (
-                F.coalesce(F.col("turn_idx"), F.lit(-(2**31)))
-                >= F.lit(int(bt))
-            )
-        )
+    def ge(bc):
+        # conversation-start boundaries: ONE string compare per tree level
+        # (the counts job and every consumer shuffle evaluate this tree once
+        # per row; boundary granularity moves only ~one conversation of rows
+        # per bucket, never any doc_id)
+        return F.col("conv_id") >= F.lit(bc)
 
     def build(lo, hi):
         if hi - lo == 1:
@@ -244,20 +233,40 @@ def _bucket_expr(bounds: list[tuple], leaves: list[int] | None = None):
 def plan_doc_ids(df: DataFrame, num_partitions: int) -> tuple[DataFrame, list[int]]:
     """CACHELESS doc_id assignment: ``(with_ids, per-bucket counts)``.
 
-    Same id semantics as :func:`assign_doc_ids` (dense global
-    ``(conv_id, turn_idx)`` rank), but the prefix-sum offsets come from an
-    EXACT pruned-column count per range bucket — two cheap key-only jobs —
-    instead of materializing a full-row cache and counting it. The returned
-    frame is lazy and UNPERSISTED: every consumer pays one shuffle+sort of
-    exactly the columns IT selects (column pruning pushes through the
-    exchange), which lets the index build run its doc_map job (meta columns)
-    and its blocks job (keys + text) as two concurrently-scheduled pruned
-    pipelines with no serial cache-materialization span at all — the span
-    that profiling showed was the worst-scaling part of the whole build
-    (BENCH/NARRATIVE.md). Determinism: partition content is fixed by the
-    boundaries (seeded sample), row order inside a partition is fixed by the
-    sort over the unique key, so every execution of the frame computes
-    identical ids.
+    doc_id = dense 0-based global rank over ``(conv_id, turn_idx)``. A naive
+    ``row_number() OVER (ORDER BY ...)`` is a single-partition sort — a
+    non-starter at 10^12 turns — so this is a distributed dense rank:
+
+    1. range boundaries from a seeded sample of the two pruned KEY columns
+       (Spark's own range exchange samples the whole child plan, text
+       included), cut at conversation starts;
+    2. an EXACT pruned-column row count per range bucket gives each
+       partition's prefix-sum offset — two cheap key-only jobs, no
+       materialized cache;
+    3. bucket -> partition placement goes through
+       :func:`_tokens_for_partitions`, so partition ``p`` holds exactly the
+       ``p``-th key range, sorted within the partition;
+    4. doc_id = partition offset + in-partition rank. The rank is the low 33
+       bits of ``monotonically_increasing_id()`` — a narrow, shuffle-free
+       projection (a ``row_number()`` window over the partition id would
+       hash-reshuffle and re-sort).
+
+    Boundary choice moves only partition SIZES, never ids, so ids do not
+    depend on the partition count or the input layout (the property
+    positions.py and segment resume rely on), and each partition holds one
+    contiguous id range (the combiner's doc shard). The returned frame is
+    lazy and UNPERSISTED: every consumer pays one shuffle+sort of exactly
+    the columns IT selects (column pruning pushes through the exchange),
+    which lets the index build run its doc_map job (meta columns) and its
+    blocks job (keys + text) as two concurrently-scheduled pruned pipelines
+    with no serial cache-materialization span — the span profiling showed
+    was the worst-scaling part of the build (BENCH/NARRATIVE.md).
+    Determinism: partition content is fixed by the boundaries (seeded
+    sample), row order inside a partition by the sort over the unique key,
+    so every execution of the frame computes identical ids. Unlike the
+    reference's load-order positional ids
+    (reference SearchEngine.cpp:275-287), the result depends only on
+    the data.
     """
     import time as _time
 
@@ -268,14 +277,14 @@ def plan_doc_ids(df: DataFrame, num_partitions: int) -> tuple[DataFrame, list[in
     if n <= 1:
         shaped = df.coalesce(1)
         counts = [df.count()]
-        bounds: list[tuple] = []
+        bounds: list[str] = []
     else:
         # boundaries truncated to conversation STARTS (turn component
         # dropped): the bucket tree then costs one string compare per level
         # (see _bucket_expr.ge) in the counts job and in every consumer's
         # shuffle. Balance cost: a boundary moves by at most one
         # conversation (~tens of rows); ids are global ranks and never move.
-        bounds = [(bc, None) for bc, _bt in _range_bounds(df, n)]
+        bounds = [bc for bc, _bt in _range_bounds(df, n)]
         timings["bounds_s"] = round(_time.time() - _t0, 3)
         _t1 = _time.time()
         bucket = _bucket_expr(bounds)
@@ -311,97 +320,3 @@ def plan_doc_ids(df: DataFrame, num_partitions: int) -> tuple[DataFrame, list[in
     )
     out._ivfadc_timings = timings  # head-phase walls, surfaced in the manifest
     return out, counts
-
-
-def assign_doc_ids(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
-    """Dense 0-based doc_id over stable ``(conv_id, turn_idx)`` order — scalably.
-
-    A naive ``row_number() OVER (ORDER BY ...)`` is a single-partition sort:
-    a non-starter at 10^12 turns. Instead (classic distributed dense-rank):
-
-    1. range-partition + sort within partitions on the key,
-    2. count rows per partition (tiny driver-side collect, one row per
-       partition — NOT per row),
-    3. doc_id = prefix-sum offset of the partition + local row_number.
-
-    The range partitioning is hand-rolled rather than ``repartitionByRange``:
-    Spark's range exchange runs a SAMPLING JOB that evaluates the full child
-    plan (every column, text included — a whole extra corpus decode billed to
-    the build's serial head, measured ~20% of stage-00 wall). Here the
-    boundaries come from a seeded sample of the two pruned KEY columns only,
-    bucket assignment is a codegen'd comparison chain, and bucket->partition
-    placement goes through :func:`_tokens_for_partitions` so partition ``p``
-    holds exactly the ``p``-th key range. doc_id stays the exact global key
-    rank — boundary choice moves only partition SIZES, never ids, so the
-    assignment remains independent of partition count and layout (the
-    property positions.py and segment resume rely on).
-
-    The result depends only on the data (key order), not on load order —
-    unlike the reference's load-order positional IDs
-    (/root/reference/SearchEngine.cpp:275-287).
-    """
-    from pyspark import StorageLevel
-
-    spark = df.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism * 2
-    if n > 1:
-        toks = _tokens_for_partitions(spark, n)
-        token = _bucket_expr(_range_bounds(df, n), leaves=toks)
-        shaped = df.withColumn("_tok", token).repartition(n, "_tok").drop("_tok")
-    else:
-        shaped = df.coalesce(1)
-    # DISK_ONLY, not the MEMORY_AND_DISK default: the cache is read exactly
-    # once more (the write pass) and spark.local.dir is tmpfs, so "disk" is
-    # RAM-speed serialized storage — while a deserialized in-heap cache of
-    # millions of row objects turns the whole downstream build into a GC
-    # storm on a large driver heap.
-    parted = (
-        shaped.sortWithinPartitions("conv_id", "turn_idx")
-        .withColumn("_pid", F.spark_partition_id())
-        .persist(StorageLevel.DISK_ONLY)
-    )
-    sizes = {r["_pid"]: r["cnt"] for r in parted.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()}
-    offsets, acc = {}, 0
-    for pid in sorted(sizes):
-        offsets[pid] = acc
-        acc += sizes[pid]
-    # offsets via broadcast join on _pid: O(1) per row. (A create_map literal
-    # here is O(n_partitions) per row — it silently cancels the parallelism
-    # win of adding partitions.)
-    off_df = df.sparkSession.createDataFrame(
-        [(int(p), int(o)) for p, o in offsets.items()], "_pid int, _off long"
-    )
-    # Within-partition ordinal WITHOUT a window: a row_number() window over
-    # _pid hash-reshuffles the range partitioning into few uneven tasks and
-    # re-sorts (measured 2.7x slower at local[32] than local[8]).
-    # monotonically_increasing_id() = (partition << 33) + in-partition row
-    # position, and the partitions are already sorted, so the low 33 bits ARE
-    # the within-partition rank — a narrow, shuffle-free projection.
-    out = (
-        parted.withColumn("_mid", F.monotonically_increasing_id())
-        .join(F.broadcast(off_df), "_pid")
-        .withColumn(
-            "doc_id",
-            (F.col("_off") + F.col("_mid").bitwiseAND(F.lit((1 << 33) - 1))).cast("long"),
-        )
-        .drop("_pid", "_off", "_mid")
-    )
-    out._ivfadc_cached = parted  # callers unpersist via release_doc_ids(out)
-    return out
-
-
-def release_doc_ids(df_with_ids: DataFrame) -> None:
-    """Unpersist the cache :func:`assign_doc_ids` left behind. Calling
-    ``.unpersist()`` on the *returned* (derived) frame is a silent no-op —
-    the persisted frame is the internal range-partitioned one."""
-    cached = getattr(df_with_ids, "_ivfadc_cached", None)
-    if cached is not None:
-        cached.unpersist()
-
-
-def doc_map(df_with_ids: DataFrame) -> DataFrame:
-    """doc_map(doc_id, conv_id, turn_idx, role, tool) — analog of the
-    reference ``nl`` name list (/root/reference/Index.cpp:10,35,97), plus
-    the input's per-turn attributes so attribute-scoped search (query-time
-    ``WHERE role = ...``) never re-reads the source table."""
-    return df_with_ids.select("doc_id", "conv_id", "turn_idx", "role", "tool")

@@ -25,8 +25,6 @@ def main() -> None:
     ap.add_argument("--out", required=True)
     ap.add_argument("--resume", action="store_true")
     ap.add_argument("--block-size", type=int, default=EngineConfig.block_size)
-    ap.add_argument("--salt-df-threshold", type=int, default=EngineConfig.salt_df_threshold)
-    ap.add_argument("--max-salts", type=int, default=EngineConfig.max_salts)
     ap.add_argument(
         "--no-fsck", action="store_true",
         help="skip the post-build integrity gate (fsck + segment_stats)",
@@ -42,11 +40,7 @@ def main() -> None:
         tx = spark.read.parquet(args.input)
     else:
         ap.error("one of --input / --from-documents is required")
-    cfg = EngineConfig(
-        block_size=args.block_size,
-        salt_df_threshold=args.salt_df_threshold,
-        max_salts=args.max_salts,
-    )
+    cfg = EngineConfig(block_size=args.block_size)
     seg = build_index(
         spark, tx, args.out, cfg=cfg, resume=args.resume,
         lineage={"input": args.input or args.from_documents},

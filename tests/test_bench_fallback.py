@@ -73,3 +73,27 @@ def test_detect_avail_mb_env_override(monkeypatch):
     assert bench.detect_avail_mb() == 12345
     monkeypatch.delenv("SPARK_GRAFT_MEM_TOTAL_MB")
     assert bench.detect_avail_mb() > 0  # /proc/meminfo path
+
+
+def test_interrupt_aborts_instead_of_falling_back(monkeypatch):
+    """Ctrl-C is not a master failure: it must propagate after ONE attempt
+    instead of rerunning the suite on the next master in the plan."""
+    import ivfadc_spark.session as session
+
+    monkeypatch.delenv("SPARK_GRAFT_BENCH_ONEJVM", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_BENCH_BAD_CLUSTER", raising=False)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")
+    monkeypatch.setenv("SPARK_GRAFT_MEM_TOTAL_MB", str(20 * 1024))
+    # main() sets the driver heap per attempt; restored at teardown
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "1g")
+    assert [m for m, _, _ in bench.plan_masters(32, 20 * 1024)] == ["local[16]", "local[8]"]
+    attempts = []
+
+    def interrupted(*args, **kwargs):
+        attempts.append(kwargs.get("master"))
+        raise KeyboardInterrupt
+
+    monkeypatch.setattr(session, "get_spark", interrupted)
+    with pytest.raises(KeyboardInterrupt):
+        bench.main()
+    assert attempts == ["local[16]"]

@@ -167,16 +167,32 @@ def test_batch_stride_with_zero_token_docs(spark, tmp_path):
     np.testing.assert_allclose(got["score"], want["score"], rtol=1e-12)
 
 
-def test_batch_refuses_df_salted_segment(spark, tmp_path):
-    cfg = EngineConfig(block_size=16, doc_shards=0, salt_df_threshold=100, max_salts=4)
-    tx = synth_transcripts(spark, n_conversations=10)
-    seg = build_index(spark, tx, str(tmp_path / "lg"), cfg=cfg)
-    queries = spark.createDataFrame(
-        pd.DataFrame({"query_id": [0], "text": ["headterm"]}),
-        schema="query_id long, text string",
-    )
+def test_config_refuses_unsharded_build():
+    """doc_shards selects no code path: every build is doc-sharded, so an
+    unsharded config is rejected where it is made."""
     with pytest.raises(ValueError, match="doc_shards"):
-        bm25_topk_batch(queries, seg, k=5, cfg=cfg)
+        EngineConfig(doc_shards=0)
+
+
+@pytest.mark.parametrize(
+    "layout",
+    [
+        {"format_version": 2, "n_shards": 0},  # df-salted build
+        {"n_shards": 32},  # no format stamp (pre-v2)
+        {"format_version": 3, "n_shards": 0},
+    ],
+)
+def test_segment_open_refuses_pre_v3_layout(spark, tmp_path, layout):
+    """Readers only know format v3; any other layout must fail at open with
+    a rebuild instruction instead of reaching a scan kernel."""
+    import json
+
+    from ivfadc_spark.operators.segments import Segment
+
+    meta = {"n_docs": 1, "avgdl": 1.0, "doc_space": 1, "config": {}, **layout}
+    (tmp_path / "meta.json").write_text(json.dumps(meta))
+    with pytest.raises(ValueError, match="rebuild"):
+        Segment(spark, str(tmp_path))
 
 
 def test_phrase_topk_matches_bruteforce(spark, tmp_path):

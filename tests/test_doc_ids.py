@@ -6,25 +6,19 @@ load-order positional ids (/root/reference/SearchEngine.cpp:275-287), made
 deterministic. Everything downstream leans on specific properties of the
 assignment, so they get their own tests:
 
-- ids are dense 0..N-1 in global key order, at ANY partition count
-  (positions.py recomputes ids with a different count than the build);
-- each partition holds one contiguous id range (the combiner's doc-shard
-  salt = partition ordinal requires it);
-- the cacheless plan (plan_doc_ids: pruned-key bounds + exact bucket
-  counts, no materialized cache) is bit-identical to the cached
-  assign_doc_ids — the build switched to it for scaling (BENCH/NARRATIVE);
+- ids are dense 0..N-1 in global key order, at ANY partition count, and
+  equal the rank of a plain pandas sort (resume and every re-derivation
+  of ids rely on the count not mattering);
+- each partition holds one contiguous id range (the combiner's doc shard,
+  salt = partition ordinal * SALT_CHUNK_SPAN + chunk, requires it), and
+  the returned bucket counts are the real partition sizes;
 - re-planning the same input reproduces the same ids (resume fingerprint).
 """
 
 import pytest
 from pyspark.sql import functions as F
 
-from ivfadc_spark.sources.transcripts import (
-    assign_doc_ids,
-    plan_doc_ids,
-    release_doc_ids,
-    synth_transcripts,
-)
+from ivfadc_spark.sources.transcripts import plan_doc_ids, synth_transcripts
 
 
 @pytest.fixture(scope="module")
@@ -50,17 +44,6 @@ def test_plan_ids_are_global_rank_dense(spark, tx, n):
     assert list(got["doc_id"]) == list(range(len(got)))
     assert list(got["conv_id"]) == list(want["conv_id"])
     assert list(got["turn_idx"]) == list(want["turn_idx"])
-
-
-@pytest.mark.parametrize("n", [5, 32])
-def test_plan_equals_cached_assign(spark, tx, n):
-    wi = assign_doc_ids(tx, num_partitions=n)
-    a = wi.select("doc_id", "conv_id", "turn_idx").orderBy("doc_id").toPandas()
-    release_doc_ids(wi)
-    pdf, counts = plan_doc_ids(tx, n)
-    b = pdf.select("doc_id", "conv_id", "turn_idx").orderBy("doc_id").toPandas()
-    assert sum(counts) == len(b) == len(a)
-    assert a.equals(b)
 
 
 def test_partition_ranges_contiguous(spark, tx):

@@ -1,6 +1,6 @@
 """Compressed segment path: codec round-trip through Spark, WAND
-rank-identity vs the pure-DataFrame path, salted == unsalted postings,
-segment merge equivalence (U1), and checkpoint resume."""
+rank-identity vs the pure-DataFrame path, doc-shard salting, segment merge
+equivalence (U1), and checkpoint resume."""
 
 import os
 
@@ -9,17 +9,12 @@ import pytest
 
 from ivfadc_spark.config import EngineConfig
 from ivfadc_spark.operators import stats as S
-from ivfadc_spark.operators.postings import (
-    block_metrics,
-    build_blocks,
-    decode_blocks,
-    salted_tf,
-)
+from ivfadc_spark.operators.postings import decode_blocks
 from ivfadc_spark.operators.query import bm25_topk
-from ivfadc_spark.operators.segments import Segment, merge_segments, write_segment
+from ivfadc_spark.operators.segments import merge_segments
 from ivfadc_spark.operators.wand import bm25_topk_indexed
 from ivfadc_spark.plans.build_index import build_index
-from ivfadc_spark.sources.transcripts import synth_transcripts
+from ivfadc_spark.sources.transcripts import plan_doc_ids, synth_transcripts
 
 QUERIES = [
     (0, "term000 term003 term017"),
@@ -30,8 +25,8 @@ QUERIES = [
     (5, "headterm term000"),  # head term + head term: stress pruning
 ]
 
-# tiny thresholds so the salting path actually runs on the fixture
-CFG = EngineConfig(block_size=16, salt_df_threshold=100, max_salts=4)
+# tiny blocks so multi-block posting lists occur on the fixture
+CFG = EngineConfig(block_size=16)
 
 
 @pytest.fixture(scope="module")
@@ -63,35 +58,9 @@ def _df_path_topk(spark, seg, k=10):
     )
 
 
-def test_mapside_tf_identical_to_explode_groupby(spark):
-    """term_frequencies_mapside (no shuffle) ≡ term_frequencies ⋈ doc_lengths."""
-    from ivfadc_spark.sources.transcripts import assign_doc_ids, synth_transcripts
-
-    docs = assign_doc_ids(synth_transcripts(spark, n_conversations=40)).select(
-        "doc_id", "text"
-    )
-    fast = (
-        S.term_frequencies_mapside(docs)
-        .toPandas()
-        .sort_values(["doc_id", "term"])
-        .reset_index(drop=True)
-    )
-    slow = (
-        S.term_frequencies(docs)
-        .join(S.doc_lengths(docs), "doc_id")
-        .select("doc_id", "term", "tf", "dl")
-        .toPandas()
-        .sort_values(["doc_id", "term"])
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(fast, slow)
-
-
 def test_block_roundtrip(spark, corpus):
-    from ivfadc_spark.sources.transcripts import assign_doc_ids
-
     tx, seg, out = corpus
-    docs = assign_doc_ids(tx).select("doc_id", "text")
+    docs = plan_doc_ids(tx, CFG.doc_shards)[0].select("doc_id", "text")
     tf = S.term_frequencies(docs).select("term", "doc_id", "tf")
     dec = decode_blocks(seg.blocks).select("term", "doc_id", "tf")
     a = tf.orderBy("term", "doc_id").toPandas()
@@ -105,21 +74,10 @@ def test_salting_applied_and_equivalent(spark, corpus):
     met = seg.metrics.toPandas().set_index("term")
     assert met.loc["headterm", "n_salts"] > 1
     assert (met[met["postings"] == 1]["n_salts"] == 1).all()
-    # unsalted rebuild produces identical decoded postings
-    from ivfadc_spark.sources.transcripts import assign_doc_ids
-
-    docs = assign_doc_ids(tx).select("doc_id", "text")
-    tf, dl = S.term_frequencies(docs), S.doc_lengths(docs)
-    cs = S.corpus_stats(dl)
-    d = S.dictionary(tf, cs["n_docs"])
-    no_salt = EngineConfig(block_size=16, salt_df_threshold=10**9)
-    blocks2 = build_blocks(salted_tf(tf, dl, d, no_salt), no_salt)
-    # postings identical; dl compared via the sidecar (combiner blocks are
-    # v3 = no per-posting dl stream, build_blocks keeps the v2 stream)
-    cols = ["term", "doc_id", "tf"]
-    a = decode_blocks(seg.blocks).select(*cols).orderBy(*cols).toPandas()
-    b = decode_blocks(blocks2).select(*cols).orderBy(*cols).toPandas()
-    pd.testing.assert_frame_equal(a.reset_index(drop=True), b.reset_index(drop=True))
+    # the doc-length sidecar equals the per-doc token counts (postings are
+    # checked against term_frequencies by test_block_roundtrip)
+    docs = plan_doc_ids(tx, CFG.doc_shards)[0].select("doc_id", "text")
+    dl = S.doc_lengths(docs)
     side = seg.doc_lengths.orderBy("doc_id").toPandas()
     want_dl = dl.orderBy("doc_id").toPandas()
     pd.testing.assert_frame_equal(side.reset_index(drop=True), want_dl.reset_index(drop=True))
@@ -196,6 +154,21 @@ def test_resume_skips_completed_stages(spark, corpus):
     assert seg2.meta["n_docs"] == seg.meta["n_docs"]
 
 
+def test_resume_refuses_df_salted_checkpoint(spark, corpus, tmp_path):
+    """A checkpoint whose stage 01 wrote the removed df-salted layout
+    (n_shards 0) cannot be finished into a v3 segment: resume must refuse
+    before running any stage."""
+    import json
+
+    tx, seg, out = corpus
+    man = json.load(open(os.path.join(out, "_manifest.json")))
+    man["stages"]["01_blocks"]["n_shards"] = 0
+    del man["stages"]["02_dict"]
+    (tmp_path / "_manifest.json").write_text(json.dumps(man))
+    with pytest.raises(ValueError, match="rebuild"):
+        build_index(spark, tx, str(tmp_path), cfg=CFG, resume=True)
+
+
 def test_doc_map_and_text_invariant(spark, corpus):
     """Per-turn text equality under stable (conv_id, turn_idx) ordering —
     the input_hint invariant."""
@@ -207,10 +180,9 @@ def test_doc_map_and_text_invariant(spark, corpus):
     # doc ids dense 0..N-1
     assert list(dm["doc_id"]) == list(range(len(dm)))
     # re-deriving ids is deterministic: same (doc_id -> text) mapping as the
-    # original build (the checkpoint holds no text; resume relies on this)
-    from ivfadc_spark.sources.transcripts import assign_doc_ids
-
-    docs = assign_doc_ids(tx).select("doc_id", "text").orderBy("doc_id").toPandas()
+    # original build, at a partition count other than the build's (the
+    # checkpoint holds no text; resume relies on this)
+    docs = plan_doc_ids(tx, 8)[0].select("doc_id", "text").orderBy("doc_id").toPandas()
     assert list(docs["text"]) == list(src["text"])
 
 
@@ -356,7 +328,7 @@ def test_mlt_topk_equals_manual_expansion(spark, corpus):
     from ivfadc_spark.operators.wand import mlt_topk
 
     tx, seg, out = corpus
-    # source docs in doc_id order (assign_doc_ids is (conv_id, turn_idx))
+    # source docs in doc_id order (plan_doc_ids is (conv_id, turn_idx))
     src = tx.orderBy("conv_id", "turn_idx").toPandas()
     src["doc_id"] = range(len(src))
     docs = spark.createDataFrame(src[["doc_id", "text"]])
@@ -499,19 +471,14 @@ def test_analyzer_stopwords_rescope_index(spark, tmp_path):
     from ivfadc_spark.functions.tokenize import tokens_col
 
     tx = synth_transcripts(spark, n_conversations=40)
-    cfg = EngineConfig(
-        block_size=16, salt_df_threshold=100, max_salts=4,
-        stop_terms="headterm", min_token_len=5,
-    )
+    cfg = EngineConfig(block_size=16, stop_terms="headterm", min_token_len=5)
     seg = build_index(spark, tx, str(tmp_path / "stopseg"), cfg=cfg)
     terms = {r.term for r in seg.dictionary.select("term").collect()}
     assert "headterm" not in terms
     assert all(len(t) >= 5 for t in terms)
 
     # dl rescopes: segment doc_lens == filtered token counts of the source
-    from ivfadc_spark.sources.transcripts import assign_doc_ids, release_doc_ids
-
-    with_ids = assign_doc_ids(tx)
+    with_ids = plan_doc_ids(tx, cfg.doc_shards)[0]
     filt = tokens_col("text", stop=frozenset(["headterm"]), min_len=5)
     want = {
         r.doc_id: r.dl
@@ -521,7 +488,6 @@ def test_analyzer_stopwords_rescope_index(spark, tmp_path):
         if r.dl > 0
     }
     got = {r.doc_id: r.dl for r in seg.doc_lengths.collect()}
-    release_doc_ids(with_ids)
     assert {k: v for k, v in got.items() if v > 0} == want
 
     # indexed search == DataFrame path over the pre-filtered text

@@ -13,7 +13,7 @@ from ivfadc_spark.operators.queryparse import MUST, NOT, SHOULD, parse_query, se
 from ivfadc_spark.plans.build_index import build_index
 from ivfadc_spark.sources.transcripts import synth_transcripts
 
-CFG = EngineConfig(block_size=16, salt_df_threshold=100, max_salts=4, with_positions=1)
+CFG = EngineConfig(block_size=16, with_positions=1)
 
 
 @pytest.fixture(scope="module")

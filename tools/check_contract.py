@@ -3,6 +3,9 @@ entry on Spark and its oracle_sql() on DuckDB at sf0.01, compare row count,
 column names, and order-insensitive values. Usage:
 
     python tools/check_contract.py [sf_dir] [name ...]
+
+With names, only those entries run; a name that is not a contract entry
+is an error (exit 1). The summary counts the entries that ran.
 """
 
 from __future__ import annotations
@@ -41,6 +44,10 @@ def main() -> int:
     import __spark_entry__ as E
 
     qs, os_ = E.queries(), E.oracle_sql()
+    unknown = sorted(only - set(qs))
+    if unknown:
+        print(f"not contract entries: {', '.join(unknown)}")
+        return 1
     spark = get_spark("contract-check", master="local[8]", shuffle_partitions=16)
     con = duckdb.connect()
     for t in TABLES:
@@ -49,9 +56,11 @@ def main() -> int:
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
     failures = []
+    ran = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        ran += 1
         t0 = time.time()
         try:
             got = fn(spark, sf_dir).toPandas()
@@ -84,7 +93,7 @@ def main() -> int:
             failures.append(name)
             continue
         print(f"PASS {name}: rows={len(g)} {time.time()-t0:.1f}s")
-    print(f"\n{len(qs) - len(failures)}/{len(qs) if not only else len(only)} passed")
+    print(f"\n{ran - len(failures)}/{ran} passed")
     return 1 if failures else 0
 
 
