@@ -262,10 +262,10 @@ def facet_counts(
     search UI (beyond the reference: it has no document attributes,
     /root/reference/SearchEngine.cpp:221-297 returns ranked ids only).
 
-    Scale shape: candidates come from the same pruned blocks scan as
-    ``bm25_topk_indexed``'s no-collect path (broadcast semi-join on the
-    query terms -> term_bucket partition pruning + term min/max row-group
-    pruning — postings of non-query terms are never read). The facet
+    Scale shape: candidates come from a pruned blocks scan (broadcast
+    semi-join on the query terms -> term_bucket partition pruning + term
+    min/max row-group pruning — postings of non-query terms are never
+    read). The facet
     aggregation shuffles only distinct (query_id, doc_id) pairs, and the
     attribute join touches the candidate set, not the corpus. Tombstones
     are dropped via a broadcast anti-join (deletes are small by

@@ -58,6 +58,17 @@ def _idf_col(n_docs: int):
 
 
 class Segment:
+    """One segment directory, opened once.
+
+    A segment directory is immutable once ``build_index``,
+    ``merge_segments`` or ``compact_segment`` has written it, so the blocks
+    and dictionary datasets are read (file listing + schema inference) at
+    their first use and the same DataFrames serve every later query — the
+    reference's load-once index (/root/reference/SearchEngine.cpp:94-102).
+    A ``Segment`` is therefore a snapshot: after rewriting a path in place,
+    open a new ``Segment`` on it. Tombstones live in their own directory
+    and are re-read on every query (``deletes.live_mask``)."""
+
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
@@ -86,8 +97,11 @@ class Segment:
     @property
     def raw_blocks(self) -> DataFrame:
         """Blocks INCLUDING the sentinel doc-stats rows (term IS NULL,
-        partition term_bucket=-1) — what merge/federation must carry."""
-        return self.spark.read.parquet(os.path.join(self.path, "blocks"))
+        partition term_bucket=-1) — what merge/federation must carry. Read
+        once per Segment."""
+        if not hasattr(self, "_raw_blocks"):
+            self._raw_blocks = self.spark.read.parquet(os.path.join(self.path, "blocks"))
+        return self._raw_blocks
 
     @property
     def doc_lengths(self) -> DataFrame:
@@ -106,7 +120,10 @@ class Segment:
 
     @property
     def dictionary(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.path, "dict"))
+        """(term, df, cf, idf). Read once per Segment."""
+        if not hasattr(self, "_dictionary"):
+            self._dictionary = self.spark.read.parquet(os.path.join(self.path, "dict"))
+        return self._dictionary
 
     @property
     def metrics(self) -> DataFrame:
@@ -118,19 +135,6 @@ class Segment:
         rows, including zero-token docs — so this can exceed the BM25
         ``n_docs``). Key stride / offset base for batch scans and merges."""
         return int(self.meta["doc_space"])
-
-    @property
-    def dict_pdf(self):
-        """Driver-cached pandas dictionary (term, df, cf, idf) — the resident
-        coarse-codebook analog (/root/reference/Vocab.cpp:152-166: codebooks
-        are always fully loaded). VOCABULARY-SIZED: an explicit OPT-IN cache
-        for small segments (``bm25_topk_batch(use_dict_cache=True)``) where
-        the resident frame amortizes across many batches; the default query
-        path resolves idf via a term-pruned dictionary scan instead, so the
-        driver never materializes a 100x-scale vocabulary."""
-        if not hasattr(self, "_dict_pdf"):
-            self._dict_pdf = self.dictionary.toPandas()
-        return self._dict_pdf
 
     @property
     def dl_broadcast(self):
@@ -163,7 +167,7 @@ class SegmentSet:
     query time, /root/reference/SearchEngine.cpp:94-102,221-297).
 
     Presents the same surface as :class:`Segment` (blocks / dictionary /
-    doc_map / meta / dict_pdf), so ``bm25_topk_indexed`` and
+    doc_map / meta), so ``bm25_topk_indexed`` and
     ``bm25_topk_batch`` run against it unchanged:
 
     - ``blocks``: per-segment blocks with docIDs shifted by the segment's
@@ -174,7 +178,8 @@ class SegmentSet:
     - ``meta``: n_docs summed, avgdl token-weighted, doc_space summed.
 
     All segments must share doc_shards / term_buckets / k1 / b (the score
-    and layout contract); enforced at construction.
+    and layout contract); enforced at construction. Each view is a new plan
+    over the members' once-read datasets, so a set re-lists no files.
     """
 
     def __init__(self, spark: SparkSession, paths: list[str]):
@@ -312,12 +317,6 @@ class SegmentSet:
     @property
     def doc_space(self) -> int:
         return int(self.meta["doc_space"])
-
-    @property
-    def dict_pdf(self):
-        if not hasattr(self, "_dict_pdf"):
-            self._dict_pdf = self.dictionary.toPandas()
-        return self._dict_pdf
 
     @property
     def dl_broadcast(self):

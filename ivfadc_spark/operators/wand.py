@@ -43,11 +43,42 @@ from ivfadc_spark.operators.segments import Segment
 
 RESULT_SCHEMA = "query_id long, rank int, doc_id long, score double"
 
-# auto collect_prune threshold: a queries x terms set at or under this many
-# rows is collected to the driver for static scan pruning (cheap — it is
-# query metadata, never postings); above it the no-collect broadcast
-# semi-join path keeps the pipeline fully distributed
-_COLLECT_PRUNE_MAX_ROWS = 20_000
+# block columns the indexed scan kernel reads (_scan_one_query)
+_SCAN_COLS = ("term", "n", "doc_ids", "tfs", "max_tf", "min_dl", "first_doc", "last_doc")
+
+
+def _no_results(spark) -> DataFrame:
+    """Empty RESULT_SCHEMA frame; the optimizer folds ``limit(0)`` into an
+    empty local relation, so collecting it runs no Spark job."""
+    return spark.createDataFrame([], RESULT_SCHEMA).limit(0)
+
+
+def _term_bucket_col(n_buckets: int):
+    """The build's term -> term_bucket partition function."""
+    return F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")
+
+
+def _idf_lookup(segment, terms: list[str], cfg: EngineConfig) -> DataFrame:
+    """(term, idf, term_bucket) of the in-vocabulary ``terms``: a
+    TERM-PRUNED dictionary scan — ``term IN (...)`` pushes down to the dict
+    parquet (row-group stats / dictionary pages), so only matching slices
+    are read and nothing vocabulary-sized is collected or broadcast."""
+    n_buckets = int(segment.meta["config"].get("term_buckets", cfg.term_buckets))
+    return segment.dictionary.filter(F.col("term").isin(terms)).select(
+        "term", "idf", _term_bucket_col(n_buckets).alias("term_bucket")
+    )
+
+
+def _resolve_query_terms(queries: DataFrame, segment, cfg: EngineConfig) -> pd.DataFrame:
+    """(query_id, term, idf, term_bucket) rows of ``queries`` on the driver,
+    OOV terms dropped — the idf resolver of both top-k kernels. Two jobs:
+    the QUERY-sized term frame is collected (the broker role: n_queries x
+    terms rows, bounded by the batch), then one :func:`_idf_lookup`."""
+    qt = query_terms(queries).toPandas()
+    if qt.empty:
+        return qt
+    found = _idf_lookup(segment, sorted(set(qt["term"])), cfg).toPandas()
+    return qt.merge(found, on="term")  # drops OOV
 
 
 def _decode_block_rows(rows: pd.DataFrame, dl_arr: np.ndarray):
@@ -170,7 +201,6 @@ def bm25_topk_batch(
     k: int | None = None,
     cfg: EngineConfig = DEFAULT,
     doc_mask: "np.ndarray | None" = None,
-    use_dict_cache: bool = False,
 ) -> DataFrame:
     """Doc-sharded batch top-k BM25 — the throughput path.
 
@@ -211,30 +241,12 @@ def bm25_topk_batch(
     _lm = combine_masks(live_mask(segment), doc_mask)
     bmask = spark.sparkContext.broadcast(_lm) if _lm is not None else None
 
-    # query prep: tokenize distributed (JVM explode) and collect the
-    # QUERY-sized term frame (the broker role: n_queries x terms rows,
-    # bounded by the batch — documented broker bound). idf then comes from
-    # a TERM-PRUNED dictionary scan: ``term IN (...)`` pushes down to the
-    # dict parquet (row-group stats / dictionary pages), so only matching
-    # slices are read and the driver never materializes the vocabulary —
-    # at 100x (hundreds of millions of terms) the old full-dictionary
-    # ``dict_pdf`` merge was the first OOM. ``use_dict_cache=True`` keeps
-    # the resident merge as an explicit opt-in for small segments where
-    # the cached frame amortizes across many batches.
-    qt_pdf = query_terms(queries).toPandas()
+    # query prep: the shared term-pruned idf resolver (the driver holds the
+    # batch's query terms, never the vocabulary)
+    qt_pdf = _resolve_query_terms(queries, segment, cfg)
     if qt_pdf.empty:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    if use_dict_cache:
-        qt_pdf = qt_pdf.merge(segment.dict_pdf[["term", "idf"]], on="term")  # drops OOV
-    else:
-        idf_pdf = (
-            segment.dictionary.select("term", "idf")
-            .filter(F.col("term").isin(sorted(set(qt_pdf["term"]))))
-            .toPandas()
-        )
-        qt_pdf = qt_pdf.merge(idf_pdf, on="term")  # drops OOV
-    if qt_pdf.empty:
-        return spark.createDataFrame([], RESULT_SCHEMA)
+        return _no_results(spark)
+    qt_pdf = qt_pdf[["query_id", "term", "idf"]]
     bq = spark.sparkContext.broadcast(qt_pdf)
     terms = sorted(set(qt_pdf["term"]))
 
@@ -641,16 +653,18 @@ def bm25_topk_indexed(
     segment: Segment,
     k: int | None = None,
     cfg: EngineConfig = DEFAULT,
-    collect_prune: bool | None = None,
     doc_mask: "np.ndarray | None" = None,
 ) -> DataFrame:
     """Top-k BM25 from a compressed segment, rank-identical to the
     DataFrame path. queries: (query_id, text).
 
-    ``collect_prune=None`` (default) auto-switches on the query-terms batch
-    size: small batches take the driver-side static-prune path, large ones
-    the no-collect broadcast semi-join path — the caller no longer has to
-    know which regime they are in.
+    The low-latency path: the query terms are collected and their idf and
+    term_bucket resolved by one term-pruned dictionary lookup (no
+    dictionary broadcast), then only the probed terms' blocks are read
+    (term_bucket partition prune + term row-group prune). A 1-query call
+    runs three Spark jobs on a reused ``Segment`` — term collect, idf
+    lookup, and one scan stage with no exchange; a batch hash-partitions
+    its blocks by query.
 
     ``doc_mask``: optional doc_space-sized boolean keep-mask (attribute
     scoping, boolean NOT, ...). Tombstones recorded by ``delete_docs`` are
@@ -662,74 +676,51 @@ def bm25_topk_indexed(
     k1, b = float(cfg.k1), float(cfg.b)
     avgdl = float(segment.meta["avgdl"])
     _lm = combine_masks(live_mask(segment), doc_mask)
-
-    n_buckets = int(segment.meta["config"].get("term_buckets", cfg.term_buckets))
-    qt = (
-        query_terms(queries)
-        .join(F.broadcast(segment.dictionary.select("term", "idf")), "term")  # drops OOV
-        .withColumn("term_bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int"))
-    )
-    return _topk_scan_from_qt(segment, qt, k, k1, b, avgdl, _lm, collect_prune)
+    qt = _resolve_query_terms(queries, segment, cfg)
+    return _topk_scan_from_qt(segment, qt, k, k1, b, avgdl, _lm)
 
 
 def _topk_scan_from_qt(
     segment: Segment,
-    qt: DataFrame,
+    qt: pd.DataFrame,
     k: int,
     k1: float,
     b: float,
     avgdl: float,
     _lm: "np.ndarray | None",
-    collect_prune: bool | None,
 ) -> DataFrame:
-    """Shared pruned-scan core of the indexed top-k paths: takes a resolved
-    (query_id, term, idf, term_bucket) frame (however the caller produced
-    it — exact dictionary join, prefix expansion, ...) and runs the
-    block-pruned MaxScore scan."""
+    """Shared pruned-scan core of the indexed top-k paths: takes resolved
+    (query_id, term, idf, term_bucket) rows on the driver (however the
+    caller produced them — exact dictionary lookup, prefix expansion, ...)
+    and runs the block-pruned MaxScore scan. The scan reads only the
+    probed terms' blocks: term_bucket partition prune + term row-group
+    min/max prune (O1 inverted-file pruning)."""
     spark = segment.spark
-    qt_rows = None
-    if collect_prune is None:
-        probe = qt.limit(_COLLECT_PRUNE_MAX_ROWS + 1).collect()
-        if len(probe) <= _COLLECT_PRUNE_MAX_ROWS:
-            collect_prune, qt_rows = True, probe  # limit() returned everything
-        else:
-            collect_prune = False
-    if collect_prune:
-        # small-batch / low-latency path: collect the (tiny) query-terms set
-        # and prune the blocks scan STATICALLY — term_bucket partition prune
-        # + term row-group min/max prune (O1 inverted-file pruning).
-        if qt_rows is None:
-            qt_rows = qt.collect()
-        if not qt_rows:
-            return spark.createDataFrame([], RESULT_SCHEMA)
-        terms = sorted({r["term"] for r in qt_rows})
-        buckets = sorted({r["term_bucket"] for r in qt_rows})
-        qt_df = F.broadcast(
-            spark.createDataFrame(qt_rows).select("term", "query_id", "idf")
-        )
-        blocks = segment.blocks.filter(
-            F.col("term_bucket").isin(buckets) & F.col("term").isin(terms)
-        )
+    if qt.empty:
+        return _no_results(spark)
+    blocks = segment.blocks.filter(
+        F.col("term_bucket").isin(sorted({int(x) for x in qt["term_bucket"]}))
+        & F.col("term").isin(sorted(set(qt["term"])))
+    ).select(*_SCAN_COLS)
+    n_queries = int(qt["query_id"].nunique())
+    qid = int(qt["query_id"].iloc[0])
+    if n_queries == 1:
+        # one query: no exchange — its blocks are read into ONE task and
+        # its (term -> idf) rows ride in the task closure
+        idf_of = dict(zip(qt["term"], qt["idf"].astype(float)))
+        cand = blocks.coalesce(1)
     else:
-        # large-batch / throughput path: no driver round-trip — the query
-        # term set is broadcast JVM-side and prunes the scan via a broadcast
-        # semi-join (partition pruning via DPP on term_bucket where
-        # applicable). Use for batches where a Python collect of
-        # queries x terms would serialize the pipeline.
-        qt_df = F.broadcast(qt.select("term", "query_id", "idf"))
-        blocks = segment.blocks.join(
-            F.broadcast(qt.select("term").distinct()), "term", "leftsemi"
-        )
-    cand = blocks.join(qt_df, "term")
-
-    # hash-partition by query, then scan MANY queries per task inside one
-    # mapInPandas pass. groupBy().applyInPandas here pays per-GROUP Arrow +
-    # invocation overhead (~10ms x n_queries — it dominates the batch);
-    # mapInPandas pays it per PARTITION. A query's rows may span Arrow
-    # batches, so each task concatenates its partition (bounded: one
-    # partition holds ~n_queries/par query working sets) before grouping.
-    par = spark.sparkContext.defaultParallelism
-    cand = cand.repartition(par, "query_id")
+        idf_of = None
+        # hash-partition by query, then scan MANY queries per task inside
+        # one mapInPandas pass. groupBy().applyInPandas here pays per-GROUP
+        # Arrow + invocation overhead (~10ms x n_queries — it dominates the
+        # batch); mapInPandas pays it per PARTITION. A query's rows may span
+        # Arrow batches, so each task concatenates its partition (bounded:
+        # one partition holds ~n_queries/par query working sets) before
+        # grouping.
+        par = spark.sparkContext.defaultParallelism
+        rows = F.broadcast(spark.createDataFrame(qt[["term", "query_id", "idf"]]))
+        cand = blocks.join(rows, "term").repartition(min(par, n_queries), "query_id")
     bdl = segment.dl_broadcast  # resident per-doc dl (v3: blocks carry no dl)
     bmask = spark.sparkContext.broadcast(_lm) if _lm is not None else None
 
@@ -738,6 +729,8 @@ def _topk_scan_from_qt(
         if not pdfs:
             return
         whole = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
+        if idf_of is not None:
+            whole = whole.assign(query_id=qid, idf=whole["term"].map(idf_of))
         dl_arr = bdl.value
         lv = bmask.value if bmask is not None else None
         for _, g in whole.groupby("query_id", sort=False):
@@ -819,10 +812,8 @@ def prefix_topk(
         qt = exact.unionByName(expanded).distinct()
     else:
         qt = exact.distinct()
-    qt = qt.withColumn(
-        "term_bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")
-    )
-    return _topk_scan_from_qt(segment, qt, k, k1, b, avgdl, _lm, None)
+    qt = qt.withColumn("term_bucket", _term_bucket_col(n_buckets))
+    return _topk_scan_from_qt(segment, qt.toPandas(), k, k1, b, avgdl, _lm)
 
 
 def fuzzy_topk(
@@ -903,9 +894,9 @@ def fuzzy_topk(
         & (F.levenshtein(F.col("term"), F.col("s")) <= F.col("dist")),
     ).select("query_id", "term", "idf")
     qt = exact.unionByName(expanded).distinct().withColumn(
-        "term_bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")
+        "term_bucket", _term_bucket_col(n_buckets)
     )
-    return _topk_scan_from_qt(segment, qt, k, k1, b, avgdl, _lm, None)
+    return _topk_scan_from_qt(segment, qt.toPandas(), k, k1, b, avgdl, _lm)
 
 
 def mlt_topk(
@@ -958,11 +949,9 @@ def mlt_topk(
         w.withColumn("rn", F.row_number().over(sel))
         .filter(F.col("rn") <= int(max_terms))
         .select("query_id", "term", "idf")
-        .withColumn(
-            "term_bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")
-        )
+        .withColumn("term_bucket", _term_bucket_col(n_buckets))
     )
-    res = _topk_scan_from_qt(segment, qt, k + 1, k1, b, avgdl, _lm, None)
+    res = _topk_scan_from_qt(segment, qt.toPandas(), k + 1, k1, b, avgdl, _lm)
     rerank = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (
         res.filter(F.col("doc_id") != F.col("query_id"))  # k+1 absorbs the self-hit
@@ -1131,6 +1120,6 @@ def regex_topk(
         F.broadcast(pats), F.regexp_like(F.col("term"), F.col("pat"))
     ).select("query_id", "term", "idf")
     qt = exact.unionByName(expanded).distinct().withColumn(
-        "term_bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")
+        "term_bucket", _term_bucket_col(n_buckets)
     )
-    return _topk_scan_from_qt(segment, qt, k, k1, b, avgdl, _lm, None)
+    return _topk_scan_from_qt(segment, qt.toPandas(), k, k1, b, avgdl, _lm)

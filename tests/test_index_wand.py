@@ -542,35 +542,19 @@ def test_filter_tokens_matches_tokens_col(spark):
     assert got == want
 
 
-def test_batch_dict_cache_optin_identical_and_pruned_scan(spark, corpus):
-    """The batch broker's default idf resolution is a TERM-PRUNED dictionary
-    scan (no vocabulary-sized driver materialization — round-4 verdict
-    item 5); use_dict_cache=True opts back into the resident dict_pdf merge
-    for small segments. Both must be rank-identical, and the pruned scan
-    must push the term IN filter down to the dict parquet scan."""
-    from ivfadc_spark.operators.wand import bm25_topk_batch
+def test_idf_lookup_is_term_pruned(spark, corpus):
+    """Both top-k kernels resolve idf through ONE term-pruned dictionary
+    scan (no vocabulary-sized driver frame, no dictionary broadcast): the
+    term IN filter must push down to the dict parquet scan, and OOV terms
+    must drop out."""
+    from ivfadc_spark.operators.wand import _idf_lookup
 
     tx, seg, out = corpus
-    got = (
-        bm25_topk_batch(_queries_df(spark), seg, k=10, cfg=CFG)
-        .orderBy("query_id", "rank")
-        .toPandas()
-    )
-    cached = (
-        bm25_topk_batch(_queries_df(spark), seg, k=10, cfg=CFG, use_dict_cache=True)
-        .orderBy("query_id", "rank")
-        .toPandas()
-    )
-    assert list(got["query_id"]) == list(cached["query_id"])
-    assert list(got["doc_id"]) == list(cached["doc_id"])
-    import numpy as np
-
-    np.testing.assert_allclose(got["score"], cached["score"], rtol=1e-12)
-
-    import pyspark.sql.functions as F
-
-    pruned = seg.dictionary.select("term", "idf").filter(
-        F.col("term").isin(["term000", "term001"])
-    )
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
+    lookup = _idf_lookup(seg, ["headterm", "no-such-term", "term000"], CFG)
+    plan = lookup._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters: [In(term" in plan, plan
+    assert "Exchange" not in plan, plan
+    got = lookup.toPandas().set_index("term")
+    want = seg.dictionary.toPandas().set_index("term")
+    assert sorted(got.index) == ["headterm", "term000"]
+    assert (got["idf"] == want.loc[got.index, "idf"]).all()

@@ -8,7 +8,15 @@ plan: NO Exchange may appear below the assignment kernel — n rows in,
 n (or n*nprobe) rows out, zero shuffle. If someone reintroduces a join
 or window into the assignment path, the plan string grows an Exchange
 and these fail.
+
+The indexed BM25 path is pinned the same way: a 1-query call on a reused
+``Segment`` runs at most 4 Spark jobs, re-reads no dataset, broadcasts no
+dictionary and scans in one stage with no exchange; a batch still
+hash-partitions its blocks by query.
 """
+
+import itertools
+import os
 
 import pandas as pd
 import pytest
@@ -92,3 +100,100 @@ def test_coarse_assign_l2_passthrough_roundtrip(spark, vecs, cent_pdf):
     )
     assert (out["nl"] == 1).all()
     assert (out["n"] == 3).all()
+
+
+# ---- indexed BM25: the single-query floor ----------------------------------
+
+_groups = itertools.count()
+
+
+def _run_in_group(spark, fn):
+    """(fn(), job ids, stage names) of the Spark jobs ``fn`` ran."""
+    sc = spark.sparkContext
+    group = f"plan-shape-{next(_groups)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events land async
+    st = sc.statusTracker()
+    jobs = sorted(st.getJobIdsForGroup(group))
+    stages = [st.getStageInfo(s).name for j in jobs for s in st.getJobInfo(j).stageIds]
+    return out, jobs, stages
+
+
+@pytest.fixture(scope="module")
+def bm25_seg(spark, tmp_path_factory):
+    from ivfadc_spark.config import EngineConfig
+    from ivfadc_spark.plans.build_index import build_index
+    from ivfadc_spark.sources.transcripts import synth_transcripts
+
+    cfg = EngineConfig(block_size=16)
+    out = str(tmp_path_factory.mktemp("plan_seg"))
+    seg = build_index(spark, synth_transcripts(spark, n_conversations=40), out, cfg=cfg)
+    return seg, cfg
+
+
+def _topk(spark, seg, cfg, texts):
+    from ivfadc_spark.operators.wand import bm25_topk_indexed
+
+    q = spark.createDataFrame(
+        pd.DataFrame({"query_id": range(len(texts)), "text": texts}),
+        schema="query_id long, text string",
+    )
+    return bm25_topk_indexed(q, seg, k=5, cfg=cfg)
+
+
+def test_indexed_one_query_floor(spark, bm25_seg):
+    """One query on a reused Segment: <= 4 jobs, no dataset re-read, and
+    an executed plan with no Exchange — neither a shuffle nor a broadcast
+    of the dictionary."""
+    seg, cfg = bm25_seg
+    _topk(spark, seg, cfg, ["term001 headterm"]).collect()  # opens the segment
+
+    def call():
+        df = _topk(spark, seg, cfg, ["term000 headterm term017"])
+        return df, df.collect()
+
+    (df, rows), jobs, stages = _run_in_group(spark, call)
+    assert rows
+    assert len(jobs) <= 4, stages
+    assert not [n for n in stages if n.startswith("parquet at")], stages
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+    assert os.path.join(seg.path, "dict") not in plan, plan
+
+
+def test_indexed_batch_partitions_by_query(spark, bm25_seg):
+    seg, cfg = bm25_seg
+    df = _topk(spark, seg, cfg, ["term000 headterm", "term017"])
+    assert set(r["query_id"] for r in df.collect()) == {0, 1}
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange hashpartitioning(query_id" in plan, plan
+
+
+def test_indexed_all_oov_runs_no_scan(spark, bm25_seg):
+    """An all-OOV query costs the term collect and the idf lookup only."""
+    seg, cfg = bm25_seg
+    rows, jobs, stages = _run_in_group(
+        spark, lambda: _topk(spark, seg, cfg, ["no-such-term zzzq"]).collect()
+    )
+    assert rows == []
+    assert len(jobs) <= 2, stages
+
+
+def test_segment_opens_once(spark, bm25_seg):
+    """raw_blocks / dictionary read their dataset once per Segment; later
+    accesses (and so later queries) list no files."""
+    from ivfadc_spark.operators.segments import Segment
+
+    seg, cfg = bm25_seg
+    fresh = Segment(spark, seg.path)
+    _, jobs, _ = _run_in_group(spark, lambda: (fresh.raw_blocks, fresh.dictionary))
+    assert jobs  # the first open lists and infers the schema
+    assert fresh.raw_blocks is fresh.raw_blocks
+    assert fresh.dictionary is fresh.dictionary
+    _, jobs, stages = _run_in_group(spark, lambda: (fresh.raw_blocks, fresh.dictionary))
+    assert jobs == [], stages
