@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ivfadc_spark.functions.codecs import varint_decode, varint_encode
-from ivfadc_spark.operators.segments import Segment, SegmentSet, _idf_col
+from ivfadc_spark.operators.segments import Segment, SegmentSet, _idf_col, read_dataset
 
 TOMBSTONES = "tombstones"
 
@@ -62,8 +62,6 @@ def delete_docs(segment: Segment, doc_ids: "Iterable[int] | DataFrame") -> int:
     path = os.path.join(segment.path, TOMBSTONES)
     n = df.count()
     df.write.mode("append").parquet(path)
-    if hasattr(segment, "_live_bc"):  # invalidate the cached broadcast mask
-        del segment._live_bc
     return int(n)
 
 
@@ -72,7 +70,7 @@ def tombstone_ids(segment: Segment) -> np.ndarray:
     path = os.path.join(segment.path, TOMBSTONES)
     if not os.path.exists(path):
         return np.empty(0, dtype=np.int64)
-    tbl = segment.spark.read.parquet(path).toArrow()
+    tbl = read_dataset(segment.spark, segment.path, TOMBSTONES).toArrow()
     ids = tbl.column("doc_id").to_numpy(zero_copy_only=False).astype(np.int64)
     return np.unique(ids)
 
@@ -236,7 +234,7 @@ def compact_segment(
     # survivor posting count IS the live df; cf = summed live tf
     from ivfadc_spark.operators.postings import decode_blocks
 
-    written = spark.read.parquet(p_blocks)
+    written = read_dataset(spark, out_path, "blocks")
     live_posts = decode_blocks(
         written.filter(F.col("term").isNotNull() & (F.col("block_id") >= 0))
     )

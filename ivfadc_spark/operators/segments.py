@@ -9,13 +9,23 @@ docIDs into one global space by positional offset
 Ours: one segment = a parquet dataset directory::
 
     <path>/blocks/      posting blocks, partitioned by term_bucket
-    <path>/doc_map/     (doc_id, conv_id, turn_idx)           [nl analog]
+    <path>/doc_map/     (doc_id, conv_id, turn_idx, role, tool) [nl analog]
     <path>/doc_lens/    (doc_id, dl) doc-length sidecar
     <path>/dict/        (term, df, cf, idf)                   [voc_sz analog]
     <path>/metrics/     per-term build metrics
+    <path>/tombstones/  (doc_id) deleted docs (deletes.delete_docs)
     <path>/meta.json    n_docs, avgdl, doc_space, n_shards, lineage, config,
                         format_version (3: dl-free posting blocks + sentinel
                         doc-stat rows; the only format readers accept)
+
+Every dataset's schema is declared in :data:`DATASETS` and every engine read
+goes through :func:`read_dataset`, so opening a segment runs NO Spark job:
+no schema inference, and the ``term_buckets + 1`` partition directories are
+listed on the driver (``session.get_spark`` raises Spark's parallel-listing
+threshold above that count). The format check stays strict: opening a
+segment compares one parquet footer per dataset against the declaration on
+the driver (``pyarrow.parquet.read_schema``) and refuses a missing column or
+a different type instead of reading nulls.
 
 docIDs are data-derived within a segment (dense rank over the segment's own
 rows); cross-segment remap adds each segment's ``doc_base`` offset — the
@@ -31,24 +41,97 @@ Two ways to see many segments as one corpus:
   reference's query-time union (/root/reference/SearchEngine.cpp:94-102).
 - :func:`merge_segments` — LSM compaction: the SAME remapped blocks written
   back once. O(bytes) concat+splice; postings are never decoded, sorted, or
-  re-encoded. The merged dictionary recomputes idf from the summed df and
-  merged scoring uses the union's avgdl — both legal because block bounds
-  store idf- and avgdl-free (max_tf, min_dl).
+  re-encoded. The first member sits at doc and salt offset 0, so its
+  blocks, doc_map and doc_lens files are hard-linked into the output, not
+  rewritten; tombstones are carried, offset like the doc ids. The merged
+  dictionary recomputes idf from the summed df and merged scoring uses the
+  union's avgdl — both legal because block bounds store idf- and avgdl-free
+  (max_tf, min_dl).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ivfadc_spark.config import DEFAULT, EngineConfig
-from ivfadc_spark.operators.postings import remap_blocks
+from ivfadc_spark.operators.postings import BLOCKS_SCHEMA, SALT_CHUNK_SPAN, remap_blocks
 
 FORMAT_VERSION = 3
+
+# format-v3 dataset schemas (Spark DDL), the one declaration every reader
+# passes. blocks' term_bucket is the partition column: it lives in the
+# directory names, not in the files.
+DATASETS = {
+    "blocks": BLOCKS_SCHEMA + ", term_bucket int",
+    "dict": "term string, df long, cf long, idf double",
+    "metrics": (
+        "term string, postings long, bytes long, n_salts long, n_blocks long, "
+        "max_tf long, cf long"
+    ),
+    "doc_map": "doc_id long, conv_id string, turn_idx int, role string, tool string",
+    "doc_lens": "doc_id long, dl long",
+    "tombstones": "doc_id long",
+}
+_PARTITION_COLUMN = "term_bucket"
+# the parquet footer type (as pyarrow reads it) Spark writes for each type
+_ARROW_TYPES = {
+    "string": "string", "binary": "binary", "int": "int32", "long": "int64", "double": "double",
+}
+
+
+def dataset_fields(name: str) -> list[tuple[str, str]]:
+    """(column, Spark type) pairs of a declared dataset schema."""
+    return [tuple(f.split()) for f in DATASETS[name].split(",")]
+
+
+def _first_data_file(path: str) -> str | None:
+    """One parquet data file under ``path`` (hidden ``_``/``.`` names are
+    Spark's markers, not data), or None for an empty dataset."""
+    for d, dirs, files in os.walk(path):
+        dirs[:] = sorted(x for x in dirs if not x.startswith(("_", ".")))
+        for f in sorted(files):
+            if not f.startswith(("_", ".")):
+                return os.path.join(d, f)
+    return None
+
+
+def check_dataset(seg_path: str, name: str) -> None:
+    """Compare one footer of ``<seg_path>/<name>`` with the declared schema
+    on the driver (no Spark job); raise ``ValueError`` naming the dataset on
+    a missing column or a different type. A declared read would otherwise
+    return nulls for a missing column."""
+    import pyarrow.parquet as pq
+
+    f = _first_data_file(os.path.join(seg_path, name))
+    if f is None:
+        return
+    got = {fld.name: str(fld.type) for fld in pq.read_schema(f)}
+    for col, typ in dataset_fields(name):
+        if col == _PARTITION_COLUMN:
+            continue
+        if col not in got:
+            raise ValueError(
+                f"segment {seg_path}: dataset {name} lacks declared column "
+                f"{col} {typ} ({f})"
+            )
+        if got[col] != _ARROW_TYPES[typ]:
+            raise ValueError(
+                f"segment {seg_path}: dataset {name} column {col} is "
+                f"{got[col]}, declared {typ} ({f})"
+            )
+
+
+def read_dataset(spark: SparkSession, seg_path: str, name: str) -> DataFrame:
+    """Read a segment dataset with its declared schema: no schema-inference
+    job, and the footer is checked against the declaration first."""
+    check_dataset(seg_path, name)
+    return spark.read.schema(DATASETS[name]).parquet(os.path.join(seg_path, name))
 
 
 def _idf_col(n_docs: int):
@@ -60,14 +143,16 @@ def _idf_col(n_docs: int):
 class Segment:
     """One segment directory, opened once.
 
-    A segment directory is immutable once ``build_index``,
-    ``merge_segments`` or ``compact_segment`` has written it, so the blocks
-    and dictionary datasets are read (file listing + schema inference) at
-    their first use and the same DataFrames serve every later query — the
-    reference's load-once index (/root/reference/SearchEngine.cpp:94-102).
-    A ``Segment`` is therefore a snapshot: after rewriting a path in place,
-    open a new ``Segment`` on it. Tombstones live in their own directory
-    and are re-read on every query (``deletes.live_mask``)."""
+    Opening runs no Spark job: ``meta.json`` and one footer per dataset
+    are checked on the driver (:func:`check_dataset`), and every dataset is
+    read with its declared schema. A segment directory is immutable once
+    ``build_index``, ``merge_segments`` or ``compact_segment`` has written
+    it, so the blocks and dictionary DataFrames are made at their first use
+    and serve every later query — the reference's load-once index
+    (reference SearchEngine.cpp:94-102). A ``Segment`` is therefore a
+    snapshot: after rewriting a path in place, open a new ``Segment`` on
+    it. Tombstones live in their own directory and are re-read on every
+    query (``deletes.live_mask``)."""
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
@@ -85,6 +170,8 @@ class Segment:
                 f"{FORMAT_VERSION} with n_shards > 0 (a doc-sharded combiner "
                 "build) — rebuild it with build_index"
             )
+        for name in DATASETS:
+            check_dataset(path, name)
 
     @property
     def blocks(self) -> DataFrame:
@@ -100,34 +187,33 @@ class Segment:
         partition term_bucket=-1) — what merge/federation must carry. Read
         once per Segment."""
         if not hasattr(self, "_raw_blocks"):
-            self._raw_blocks = self.spark.read.parquet(os.path.join(self.path, "blocks"))
+            self._raw_blocks = read_dataset(self.spark, self.path, "blocks")
         return self._raw_blocks
 
     @property
     def doc_lengths(self) -> DataFrame:
         """(doc_id, dl) sidecar: the materialized dataset if stage 02 wrote
         one, else decoded from the sentinel rows."""
-        p = os.path.join(self.path, "doc_lens")
-        if os.path.exists(p):
-            return self.spark.read.parquet(p)
+        if os.path.exists(os.path.join(self.path, "doc_lens")):
+            return read_dataset(self.spark, self.path, "doc_lens")
         from ivfadc_spark.operators.postings import decode_doc_stats
 
         return decode_doc_stats(self.raw_blocks)
 
     @property
     def doc_map(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.path, "doc_map"))
+        return read_dataset(self.spark, self.path, "doc_map")
 
     @property
     def dictionary(self) -> DataFrame:
         """(term, df, cf, idf). Read once per Segment."""
         if not hasattr(self, "_dictionary"):
-            self._dictionary = self.spark.read.parquet(os.path.join(self.path, "dict"))
+            self._dictionary = read_dataset(self.spark, self.path, "dict")
         return self._dictionary
 
     @property
     def metrics(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.path, "metrics"))
+        return read_dataset(self.spark, self.path, "metrics")
 
     @property
     def doc_space(self) -> int:
@@ -160,6 +246,37 @@ def _dl_array(seg) -> "np.ndarray":
     arr = np.zeros(int(seg.doc_space), dtype=np.int32)
     arr[ids] = dls  # zero-token / postings-absent docs stay dl=0
     return arr
+
+
+def _shift_doc_ids(df: DataFrame, offset: int) -> DataFrame:
+    return df.withColumn("doc_id", (F.col("doc_id") + F.lit(offset)).cast("long"))
+
+
+def _member_blocks(s: Segment, offset: int, salt_offset: int) -> DataFrame:
+    """A member's raw blocks in the union's id space: doc ids shifted by an
+    O(bytes) leading-varint splice, salts rebased by the member's
+    cumulative shard offset."""
+    b = remap_blocks(s.raw_blocks, offset)
+    if salt_offset:
+        b = b.withColumn(
+            "salt",
+            (F.col("salt") + F.lit(int(salt_offset) * SALT_CHUNK_SPAN)).cast("int"),
+        )
+    return b
+
+
+def _member_doc_map(s: Segment, offset: int, _salt_offset: int) -> DataFrame:
+    return _shift_doc_ids(s.doc_map, offset)
+
+
+def _member_doc_lens(s: Segment, offset: int, _salt_offset: int) -> DataFrame:
+    return _shift_doc_ids(s.doc_lengths, offset)
+
+
+def _member_tombstones(s: Segment, offset: int, _salt_offset: int) -> DataFrame | None:
+    if not os.path.isdir(os.path.join(s.path, "tombstones")):
+        return None
+    return _shift_doc_ids(read_dataset(s.spark, s.path, "tombstones"), offset)
 
 
 class SegmentSet:
@@ -221,8 +338,6 @@ class SegmentSet:
         # and break the batch kernel's doc-sorted binary-search invariant.
         # (merge_segments goes through this constructor, so one guard covers
         # both the federation and the compaction rebase.)
-        from ivfadc_spark.operators.postings import SALT_CHUNK_SPAN
-
         if salt_acc * SALT_CHUNK_SPAN > 2**31:
             raise ValueError(
                 f"SegmentSet: {salt_acc} cumulative shards x span "
@@ -253,38 +368,29 @@ class SegmentSet:
             F.col("term").isNotNull() & (F.col("block_id") >= 0)
         )
 
+    def _union(self, frame, start: int = 0) -> DataFrame | None:
+        """Union of ``frame(segment, doc offset, salt offset)`` over the
+        members from index ``start`` on; a frame may be None (nothing to
+        add), and so is the union of none."""
+        out = None
+        members = zip(self.segments, self.offsets, self.salt_offsets)
+        for s, off, soff in list(members)[start:]:
+            d = frame(s, off, soff)
+            if d is not None:
+                out = d if out is None else out.unionByName(d)
+        return out
+
     @property
     def raw_blocks(self) -> DataFrame:
-        from ivfadc_spark.operators.postings import SALT_CHUNK_SPAN
-
-        out = None
-        for s, off, soff in zip(self.segments, self.offsets, self.salt_offsets):
-            b = remap_blocks(s.raw_blocks, off)
-            if soff:
-                b = b.withColumn(
-                    "salt",
-                    (F.col("salt") + F.lit(int(soff) * SALT_CHUNK_SPAN)).cast("int"),
-                )
-            out = b if out is None else out.unionByName(b)
-        return out
+        return self._union(_member_blocks)
 
     @property
     def doc_lengths(self) -> DataFrame:
-        out = None
-        for s, off in zip(self.segments, self.offsets):
-            d = s.doc_lengths.withColumn(
-                "doc_id", (F.col("doc_id") + F.lit(off)).cast("long")
-            )
-            out = d if out is None else out.unionByName(d)
-        return out
+        return self._union(_member_doc_lens)
 
     @property
     def doc_map(self) -> DataFrame:
-        out = None
-        for s, off in zip(self.segments, self.offsets):
-            d = s.doc_map.withColumn("doc_id", (F.col("doc_id") + F.lit(off)).cast("long"))
-            out = d if out is None else out.unionByName(d)
-        return out
+        return self._union(_member_doc_map)
 
     @property
     def dictionary(self) -> DataFrame:
@@ -325,6 +431,25 @@ class SegmentSet:
         return self._dl_bc
 
 
+def _link_files(src: str, dst: str) -> None:
+    """Hard-link every data file under ``src`` to the same relative path
+    under ``dst``, copying where linking fails (another filesystem, or one
+    without hard links). Spark's ``_``/``.`` marker files are left out.
+    Spark never edits a written file in place (an overwrite deletes and
+    writes new files), so a later rewrite of ``src`` leaves ``dst`` intact."""
+    for d, dirs, files in os.walk(src):
+        dirs[:] = [x for x in dirs if not x.startswith(("_", "."))]
+        out = os.path.join(dst, os.path.relpath(d, src))
+        os.makedirs(out, exist_ok=True)
+        for f in files:
+            if f.startswith(("_", ".")):
+                continue
+            try:
+                os.link(os.path.join(d, f), os.path.join(out, f))
+            except OSError:
+                shutil.copy2(os.path.join(d, f), os.path.join(out, f))
+
+
 def merge_segments(
     spark: SparkSession,
     paths: list[str],
@@ -334,41 +459,45 @@ def merge_segments(
     """LSM compaction by O(bytes) splice — the reference's merge cost model
     (/root/reference/SearchEngine.cpp:250-287: concat entry logs + offset).
 
-    Postings are NEVER decoded: each input block's docID stream is remapped
-    by rewriting only its leading varint (remap_blocks), and blocks keep
-    their source term_bucket layout, so the write is shuffle-free (each
-    segment appends its bucket-aligned files). Only the vocabulary-sized
-    dictionary (summed df/cf, recomputed idf) and the doc_map offsets are
-    recomputed. Cost is proportional to the BYTES of the inputs — compare
-    the v1 merge, which decoded, re-sorted, and re-encoded every posting.
+    Postings are NEVER decoded. The first member sits at doc offset 0 and
+    salt offset 0, so its ``blocks/``, ``doc_map/`` and ``doc_lens/`` files
+    are already in merged form: they are hard-linked into ``out_path`` (a
+    copy where linking fails), not rewritten. Each later member's blocks
+    are remapped by rewriting only each block's leading varint
+    (remap_blocks) with salts rebased by its cumulative shard offset, as the
+    query-time SegmentSet does, and appended in their source term_bucket
+    layout — no exchange. Its doc_map and doc_lens rows are appended with
+    shifted ids. Only the vocabulary-sized dictionary (summed df/cf,
+    recomputed idf) and metrics are recomputed. Tombstones are carried,
+    each member's ids shifted by its doc offset, so a deleted doc stays
+    deleted until ``compact_segment``. Cost is proportional to the BYTES of
+    the members after the first; the merge runs no job that reads the first
+    member's blocks.
     """
     ss = SegmentSet(spark, paths)
+    if any(os.path.realpath(s.path) == os.path.realpath(out_path) for s in ss.segments):
+        # the output's datasets are cleared before the members are read
+        raise ValueError(f"merge_segments: out_path {out_path} is one of its inputs")
     os.makedirs(out_path, exist_ok=True)
-    p_blocks = os.path.join(out_path, "blocks")
-    # per-segment append: inputs are already term_bucket-partitioned, so each
-    # write task streams its own buckets — no exchange, no wide dependency.
-    # Salts are rebased per source (cumulative shard offsets) exactly as the
-    # query-time SegmentSet does: the merged segment's (term, salt) groups
-    # stay doc-sorted and its shard ids disjoint — the batch kernel's
-    # invariants hold on merged output too.
-    from ivfadc_spark.operators.postings import SALT_CHUNK_SPAN
-
-    for i, (s, off, soff) in enumerate(
-        zip(ss.segments, ss.offsets, ss.salt_offsets)
-    ):
-        b = remap_blocks(s.raw_blocks, off)
-        if soff:
-            b = b.withColumn(
-                "salt",
-                (F.col("salt") + F.lit(int(soff) * SALT_CHUNK_SPAN)).cast("int"),
-            )
-        b.write.mode(
-            "overwrite" if i == 0 else "append"
-        ).partitionBy("term_bucket").parquet(p_blocks)
-    ss.doc_map.write.mode("overwrite").parquet(os.path.join(out_path, "doc_map"))
-    # materialize the doc-length sidecar from the inputs' (offset-shifted)
-    # doc_lengths, so the merged segment never decodes sentinels for dl
-    ss.doc_lengths.write.mode("overwrite").parquet(os.path.join(out_path, "doc_lens"))
+    for name in DATASETS:
+        shutil.rmtree(os.path.join(out_path, name), ignore_errors=True)
+    first = ss.segments[0].path
+    # doc_lens may be absent: Segment.doc_lengths then decodes sentinels
+    linked = [n for n in ("blocks", "doc_map", "doc_lens") if os.path.isdir(os.path.join(first, n))]
+    for name in linked:
+        _link_files(os.path.join(first, name), os.path.join(out_path, name))
+    writes = {"blocks": _member_blocks, "doc_map": _member_doc_map, "doc_lens": _member_doc_lens}
+    for name, frame in writes.items():
+        rows = ss._union(frame, start=1 if name in linked else 0)
+        if rows is None:
+            continue
+        w = rows.write.mode("append")
+        if name == "blocks":  # append in the source term_bucket layout
+            w = w.partitionBy("term_bucket")
+        w.parquet(os.path.join(out_path, name))
+    dead = ss._union(_member_tombstones)
+    if dead is not None:
+        dead.write.mode("append").parquet(os.path.join(out_path, "tombstones"))
     ss.dictionary.write.mode("overwrite").parquet(os.path.join(out_path, "dict"))
     ss.metrics.write.mode("overwrite").parquet(os.path.join(out_path, "metrics"))
     meta = {

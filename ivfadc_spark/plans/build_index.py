@@ -52,7 +52,12 @@ from ivfadc_spark.operators.postings import (
     build_blocks_inplace,
     decode_doc_stats,
 )
-from ivfadc_spark.operators.segments import FORMAT_VERSION, Segment
+from ivfadc_spark.operators.segments import (
+    FORMAT_VERSION,
+    Segment,
+    dataset_fields,
+    read_dataset,
+)
 from ivfadc_spark.sources.transcripts import _tokens_for_partitions, plan_doc_ids
 
 LAYOUT_VERSION = 3  # 3: doc_map carries the input's role/tool attributes
@@ -137,6 +142,9 @@ def build_index(
     p_blocks = os.path.join(p_seg, "blocks")
     p_dict = os.path.join(p_seg, "dict")
     p_metrics = os.path.join(p_seg, "metrics")
+    # doc_map in its declared types, so every written doc_map reads back
+    # under the declared schema whatever key types the input carried
+    dm_cols = [F.col(c).cast(t) for c, t in dataset_fields("doc_map")]
 
     # Partition count = cfg.doc_shards, NOT a multiple of the session's
     # parallelism: the segment layout (and therefore the per-query work of
@@ -179,7 +187,7 @@ def build_index(
         # counts from the encoder's sentinel rows.
         dm_obs = Observation("doc_map")
         dm_df = (
-            with_ids.select("doc_id", "conv_id", "turn_idx", "role", "tool")
+            with_ids.select(*dm_cols)
             .observe(dm_obs, F.count(F.lit(1)).alias("rows"))
         )
         if not stage("01_blocks"):
@@ -222,10 +230,8 @@ def build_index(
             # and PROVE the recompute reproduces the checkpointed doc_map
             # (duplicate keys or a changed input layout could permute ties)
             with_ids, _ = plan_doc_ids(transcripts, n_parts)
-            got = _doc_map_fingerprint(with_ids.select("doc_id", "conv_id", "turn_idx"))
-            want = _doc_map_fingerprint(
-                spark.read.parquet(p_docs).select("doc_id", "conv_id", "turn_idx")
-            )
+            got = _doc_map_fingerprint(with_ids.select(*dm_cols))
+            want = _doc_map_fingerprint(read_dataset(spark, p_seg, "doc_map"))
             if got != want:
                 raise ValueError(
                     f"resume: recomputed doc ids disagree with checkpoint at {p_docs} "
@@ -327,13 +333,13 @@ def build_index(
             "n_shards": n_parts,
         }
         if measure_skew:
-            extra["skew_ratio"] = _skew_ratio(spark.read.parquet(p_blocks))
+            extra["skew_ratio"] = _skew_ratio(read_dataset(spark, p_seg, "blocks"))
         record("01_blocks", t0, **extra)
     doc_space = done["00_doc_map"]["doc_space"]
 
     if not stage("02_dict"):
         t0 = time.time()
-        raw = spark.read.parquet(p_blocks)
+        raw = read_dataset(spark, p_seg, "blocks")
         mobs = Observation("metrics")
         metrics_out = block_metrics(raw).observe(
             mobs,

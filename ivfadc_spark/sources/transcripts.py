@@ -230,6 +230,20 @@ def _bucket_expr(bounds: list[str], leaves: list[int] | None = None):
     return build(0, n)
 
 
+RANK_BITS = 33  # in-partition rank = low bits of monotonically_increasing_id
+
+
+def check_rank_bits(counts: list[int]) -> None:
+    """Refuse a partition of ``2**RANK_BITS`` rows or more: its in-partition
+    rank would wrap into another row's doc_id instead of failing."""
+    if counts and max(counts) >= 2**RANK_BITS:
+        b = max(range(len(counts)), key=counts.__getitem__)
+        raise ValueError(
+            f"plan_doc_ids: bucket {b} holds {counts[b]} rows, over the "
+            f"2^{RANK_BITS} in-partition rank limit — use more partitions"
+        )
+
+
 def plan_doc_ids(df: DataFrame, num_partitions: int) -> tuple[DataFrame, list[int]]:
     """CACHELESS doc_id assignment: ``(with_ids, per-bucket counts)``.
 
@@ -249,7 +263,8 @@ def plan_doc_ids(df: DataFrame, num_partitions: int) -> tuple[DataFrame, list[in
     4. doc_id = partition offset + in-partition rank. The rank is the low 33
        bits of ``monotonically_increasing_id()`` — a narrow, shuffle-free
        projection (a ``row_number()`` window over the partition id would
-       hash-reshuffle and re-sort).
+       hash-reshuffle and re-sort). A partition of 2^33 rows or more raises
+       (:func:`check_rank_bits`) before the id frame is built.
 
     Boundary choice moves only partition SIZES, never ids, so ids do not
     depend on the partition count or the input layout (the property
@@ -300,6 +315,7 @@ def plan_doc_ids(df: DataFrame, num_partitions: int) -> tuple[DataFrame, list[in
         toks = _tokens_for_partitions(spark, n)
         token = _bucket_expr(bounds, leaves=toks)
         shaped = df.withColumn("_tok", token).repartition(n, "_tok").drop("_tok")
+    check_rank_bits(counts)
     offsets, acc = [], 0
     for c in counts:
         offsets.append(acc)
@@ -314,7 +330,7 @@ def plan_doc_ids(df: DataFrame, num_partitions: int) -> tuple[DataFrame, list[in
         .join(F.broadcast(off_df), "_pid")
         .withColumn(
             "doc_id",
-            (F.col("_off") + F.col("_mid").bitwiseAND(F.lit((1 << 33) - 1))).cast("long"),
+            (F.col("_off") + F.col("_mid").bitwiseAND(F.lit((1 << RANK_BITS) - 1))).cast("long"),
         )
         .drop("_pid", "_off", "_mid")
     )

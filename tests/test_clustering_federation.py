@@ -1,6 +1,8 @@
 """k-means training loop, SegmentSet federation, O(bytes) block remap, and
 the zero-token-doc stride regression (batch path vs dense id space)."""
 
+import os
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -193,6 +195,34 @@ def test_segment_open_refuses_pre_v3_layout(spark, tmp_path, layout):
     (tmp_path / "meta.json").write_text(json.dumps(meta))
     with pytest.raises(ValueError, match="rebuild"):
         Segment(spark, str(tmp_path))
+
+
+@pytest.mark.parametrize("change", ["drop idf", "df as int"])
+def test_segment_open_refuses_undeclared_footer(spark, tmp_path, change):
+    """Datasets are read with declared schemas; a footer that lacks a
+    declared column or has a different type must fail at open, naming the
+    dataset, instead of reading nulls or casting."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ivfadc_spark.operators.segments import Segment
+
+    seg = build_index(spark, synth_transcripts(spark, n_conversations=10), str(tmp_path / "s"), cfg=CFG)
+    bad = str(tmp_path / "bad")
+    shutil.copytree(seg.path, bad)
+    t = pq.read_table(os.path.join(bad, "dict"))
+    if change == "drop idf":
+        t = t.drop(["idf"])
+    else:
+        t = t.set_column(t.schema.get_field_index("df"), "df", t["df"].cast(pa.int32()))
+    shutil.rmtree(os.path.join(bad, "dict"))
+    os.makedirs(os.path.join(bad, "dict"))
+    pq.write_table(t, os.path.join(bad, "dict", "part-00000.parquet"))
+    Segment(spark, seg.path)  # the untouched original still opens
+    with pytest.raises(ValueError, match="dataset dict"):
+        Segment(spark, bad)
 
 
 def test_phrase_topk_matches_bruteforce(spark, tmp_path):

@@ -20,7 +20,7 @@ from ivfadc_spark.operators.deletes import (
 )
 from ivfadc_spark.operators.postings import decode_blocks
 from ivfadc_spark.operators.query import bm25_topk
-from ivfadc_spark.operators.segments import Segment
+from ivfadc_spark.operators.segments import Segment, merge_segments
 from ivfadc_spark.operators.wand import bm25_topk_batch, bm25_topk_indexed
 from ivfadc_spark.plans.build_index import build_index
 from ivfadc_spark.sources.transcripts import synth_transcripts
@@ -195,3 +195,26 @@ def test_facet_counts_matches_brute(spark, seg):
         (int(r.query_id), r.role): int(r.n_docs) for r in got.itertuples()
     }
     assert got_map == expect
+
+
+def test_merge_carries_tombstones(spark, tmp_path):
+    """A doc deleted in a member stays deleted in the merged segment (until
+    compact_segment): its id, shifted by the member's doc offset, is in the
+    merged tombstones and no kernel returns it."""
+    tx = synth_transcripts(spark, n_conversations=30)
+    half = F.col("conv_id") < "conv-000015"
+    a = build_index(spark, tx.filter(half), str(tmp_path / "a"), cfg=CFG)
+    b = build_index(spark, tx.filter(~half), str(tmp_path / "b"), cfg=CFG)
+    q = _queries_df(spark)
+    victim = int(
+        bm25_topk_indexed(q, b, k=1, cfg=CFG).filter(F.col("query_id") == 1).collect()[0]["doc_id"]
+    )
+    delete_docs(b, [victim])
+    merged = merge_segments(spark, [a.path, b.path], str(tmp_path / "m"), cfg=CFG)
+    dead = int(a.doc_space) + victim
+    assert dead in set(tombstone_ids(merged).tolist())
+    k = int(merged.doc_space)
+    for kernel in (bm25_topk_indexed, bm25_topk_batch):
+        got = kernel(q, merged, k=k, cfg=CFG).toPandas()
+        assert len(got[got["query_id"] == 1]) > 0
+        assert dead not in set(got["doc_id"]), kernel.__name__

@@ -12,13 +12,15 @@ assignment, so they get their own tests:
 - each partition holds one contiguous id range (the combiner's doc shard,
   salt = partition ordinal * SALT_CHUNK_SPAN + chunk, requires it), and
   the returned bucket counts are the real partition sizes;
-- re-planning the same input reproduces the same ids (resume fingerprint).
+- re-planning the same input reproduces the same ids (resume fingerprint);
+- a partition too large for the 33-bit in-partition rank raises instead of
+  wrapping into duplicate ids.
 """
 
 import pytest
 from pyspark.sql import functions as F
 
-from ivfadc_spark.sources.transcripts import plan_doc_ids, synth_transcripts
+from ivfadc_spark.sources.transcripts import check_rank_bits, plan_doc_ids, synth_transcripts
 
 
 @pytest.fixture(scope="module")
@@ -67,3 +69,12 @@ def test_replan_reproduces_ids(spark, tx):
     a = plan_doc_ids(tx, 8)[0].select("doc_id", "conv_id").orderBy("doc_id").toPandas()
     b = plan_doc_ids(tx, 8)[0].select("doc_id", "conv_id").orderBy("doc_id").toPandas()
     assert a.equals(b)
+
+
+def test_rank_guard_refuses_wrapping_partition():
+    """The in-partition rank is the low 33 bits of a monotonic id: a bucket
+    of 2^33 rows would wrap into another row's doc_id, so it must raise,
+    naming the bucket and its count."""
+    check_rank_bits([5, 2**33 - 1, 0])
+    with pytest.raises(ValueError, match=f"bucket 1 holds {2**33} rows"):
+        check_rank_bits([5, 2**33, 7])

@@ -12,7 +12,9 @@ and these fail.
 The indexed BM25 path is pinned the same way: a 1-query call on a reused
 ``Segment`` runs at most 4 Spark jobs, re-reads no dataset, broadcasts no
 dictionary and scans in one stage with no exchange; a batch still
-hash-partitions its blocks by query.
+hash-partitions its blocks by query. Opening a ``Segment`` or a
+``SegmentSet`` runs no job at all, and a merge carries its first member's
+files instead of reading them.
 """
 
 import itertools
@@ -191,9 +193,79 @@ def test_segment_opens_once(spark, bm25_seg):
 
     seg, cfg = bm25_seg
     fresh = Segment(spark, seg.path)
-    _, jobs, _ = _run_in_group(spark, lambda: (fresh.raw_blocks, fresh.dictionary))
-    assert jobs  # the first open lists and infers the schema
     assert fresh.raw_blocks is fresh.raw_blocks
     assert fresh.dictionary is fresh.dictionary
     _, jobs, stages = _run_in_group(spark, lambda: (fresh.raw_blocks, fresh.dictionary))
     assert jobs == [], stages
+
+
+@pytest.fixture(scope="module")
+def two_segs(spark, tmp_path_factory):
+    """Two segments over disjoint halves of one synthetic corpus."""
+    from ivfadc_spark.config import EngineConfig
+    from ivfadc_spark.plans.build_index import build_index
+    from ivfadc_spark.sources.transcripts import synth_transcripts
+
+    cfg = EngineConfig(block_size=16)
+    tx = synth_transcripts(spark, n_conversations=40)
+    out = tmp_path_factory.mktemp("plan_halves")
+    half = F.col("conv_id") < "conv-000020"
+    a = build_index(spark, tx.filter(half), str(out / "a"), cfg=cfg)
+    b = build_index(spark, tx.filter(~half), str(out / "b"), cfg=cfg)
+    return a, b, cfg
+
+
+def test_segment_open_runs_no_job(spark, bm25_seg, two_segs):
+    """Declared schemas and driver-side listing: opening a fresh Segment or
+    SegmentSet and touching its datasets runs no ``parquet at`` listing or
+    schema-inference job; only the idf lookup itself runs."""
+    from ivfadc_spark.operators.segments import Segment, SegmentSet
+    from ivfadc_spark.operators.wand import _idf_lookup
+
+    seg, cfg = bm25_seg
+    a, b, _ = two_segs
+
+    def open_fresh():
+        ss = SegmentSet(spark, [a.path, b.path])
+        for s in (Segment(spark, seg.path), ss):
+            s.raw_blocks, s.dictionary, s.doc_lengths
+        return _idf_lookup(ss, ["term000", "headterm", "no-such-term"], cfg).collect()
+
+    rows, jobs, stages = _run_in_group(spark, open_fresh)
+    assert {r["term"] for r in rows} == {"term000", "headterm"}
+    assert not [n for n in stages if n.startswith("parquet at")], stages
+
+
+def test_merge_carries_first_member(spark, two_segs, tmp_path):
+    """The first member's blocks are carried byte-for-byte, and the merge
+    runs no job over them: its raw_blocks may not even be planned."""
+    from ivfadc_spark.operators.segments import Segment, SegmentSet, merge_segments
+
+    a, b, cfg = two_segs
+
+    class Carried(Segment):
+        @property
+        def raw_blocks(self):
+            raise AssertionError("merge_segments read the first member's blocks")
+
+    merged = merge_segments(spark, [Carried(spark, a.path), b.path], str(tmp_path / "m"), cfg=cfg)
+    src = os.path.join(a.path, "blocks")
+    files = [
+        os.path.relpath(os.path.join(d, f), src)
+        for d, _, fs in os.walk(src)
+        for f in fs
+        if not f.startswith(("_", "."))
+    ]
+    assert files
+    for rel in files:
+        with open(os.path.join(src, rel), "rb") as x, open(
+            os.path.join(merged.path, "blocks", rel), "rb"
+        ) as y:
+            assert x.read() == y.read(), rel
+    union = SegmentSet(spark, [a.path, b.path])
+    assert merged.raw_blocks.count() == union.raw_blocks.count()
+    assert merged.doc_map.count() == union.doc_map.count()
+    # the output's datasets are cleared first, so an input may not be it
+    with pytest.raises(ValueError, match="one of its inputs"):
+        merge_segments(spark, [a.path, b.path], b.path, cfg=cfg)
+    assert Segment(spark, b.path).raw_blocks.count() > 0
