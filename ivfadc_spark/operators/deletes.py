@@ -257,8 +257,7 @@ def compact_segment(
     )
     live_dl.write.mode("overwrite").parquet(os.path.join(out_path, "doc_lens"))
     dm.write.mode("overwrite").parquet(os.path.join(out_path, "doc_map"))
-    if os.path.exists(os.path.join(segment.path, "metrics")):
-        segment.metrics.write.mode("overwrite").parquet(os.path.join(out_path, "metrics"))
+    segment.metrics.write.mode("overwrite").parquet(os.path.join(out_path, "metrics"))
 
     meta["n_docs"] = n_docs
     meta["avgdl"] = avgdl

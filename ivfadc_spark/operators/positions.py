@@ -1,156 +1,74 @@
-"""Positional postings sidecar + phrase search.
+"""Positional search over fused positional twin rows: phrase, proximity,
+span-first and highlighting.
 
 The reference stores no positions (its queries are bag-of-cells,
 /root/reference/SearchEngine.cpp:112-212); phrase/proximity search is the
-biggest user-facing gap of that design, so we add it as an OPTIONAL sidecar
-dataset — built separately, never touching the default build path or its
-throughput::
+biggest user-facing gap of that design. A ``with_positions=1`` build writes
+each posting's sorted token offsets as a positional TWIN row (block_id <=
+-10) beside the posting blocks, in the same ``blocks/`` dataset and
+term_bucket layout, from the same tokenize pass. That is the one positions
+layout: ``merge_segments``, ``compact_segment`` and ``SegmentSet`` carry the
+twin rows with the blocks, and a segment built without them must be rebuilt
+with ``with_positions=1`` to answer positional queries.
 
-    <segment>/positions/   (term, doc_id, positions array<long>),
-                           partitioned by term_bucket
-
-Positions parquet-encodes per-(doc, term) sorted token offsets; term_bucket
-partitioning gives phrase queries the same partition pruning as posting
-blocks. The phrase scan is conjunctive-prefiltered JVM-side (docs containing
-every phrase term), then a vectorized kernel intersects offset lists
-(occurrence i of phrase w0..wn-1 <=> i in ∩_j (P_j - j)).
+:func:`_positions` reads ``(term, doc_id, positions)`` for the probed terms
+with the posting scan's pruning (term IN + term_bucket partition prune).
+The phrase scan is conjunctive-prefiltered JVM-side (docs containing every
+phrase term), then a vectorized kernel intersects offset lists (occurrence
+i of phrase w0..wn-1 <=> i in ∩_j (P_j - j)).
 """
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ivfadc_spark.config import DEFAULT, EngineConfig
-from ivfadc_spark.operators.segments import Segment, SegmentSet
+from ivfadc_spark.operators.segments import (
+    Segment,
+    SegmentSet,
+    _shift_doc_ids,
+    term_bucket_col,
+)
 
 PHRASE_RESULT_SCHEMA = "query_id long, rank int, doc_id long, n_occ long"
 
 
-def _member_positions(segment: Segment, buckets, terms) -> DataFrame:
-    """One segment's (term, doc_id, positions) for the probed terms, from
-    its sidecar if present else its fused positional twin rows; doc ids are
-    SEGMENT-LOCAL (callers shift by doc_base for federation)."""
-    spark = segment.spark
-    pos_path = os.path.join(segment.path, "positions")
-    if os.path.exists(pos_path):
-        return spark.read.parquet(pos_path).filter(
-            F.col("term_bucket").isin(buckets) & F.col("term").isin(terms)
-        ).select("term", "doc_id", "positions")
-    if bool(int(segment.meta["config"].get("with_positions", 0) or 0)):
-        # fused build: positional twin rows (block_id <= -10) live in the
-        # blocks dataset under the same term_bucket layout — identical
-        # partition pruning, zero extra corpus passes at build time
-        from ivfadc_spark.operators.postings import decode_position_rows
+def _positions(segment: Segment | SegmentSet, terms: list[str]) -> DataFrame:
+    """(term, doc_id, positions) of ``terms`` from the fused positional twin
+    rows of a Segment or a SegmentSet; a set's doc ids are shifted into the
+    union's space by each member's doc offset, as federation does for
+    posting blocks. Raises when a segment has no twin rows."""
+    from ivfadc_spark.operators.postings import decode_position_rows
 
-        twin = segment.raw_blocks.filter(
+    # bucket ids of the probed terms: xxhash64 is a JVM expression, so one
+    # small job over the local term list
+    buckets = sorted({
+        r[0]
+        for r in segment.spark.createDataFrame([(t,) for t in terms], "term string")
+        .select(term_bucket_col(segment.term_buckets))
+        .collect()
+    })
+
+    def member(s: Segment, offset: int, _salt_offset: int = 0) -> DataFrame:
+        if not int(s.meta["config"].get("with_positions") or 0):
+            raise ValueError(
+                f"segment {s.path} has no positional rows — rebuild it with "
+                "with_positions=1 for phrase, proximity and highlight search"
+            )
+        twin = s.raw_blocks.filter(
             (F.col("block_id") <= -10)
             & F.col("term_bucket").isin(buckets)
             & F.col("term").isin(terms)
         )
-        return decode_position_rows(twin).select("term", "doc_id", "positions")
-    raise ValueError(
-        f"phrase_topk: segment {segment.path} has neither a positions "
-        "sidecar (build_positions) nor fused positional rows "
-        "(cfg.with_positions=1 at build time)"
-    )
+        rows = decode_position_rows(twin).select("term", "doc_id", "positions")
+        return _shift_doc_ids(rows, offset)
 
-
-def doc_term_positions(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    cfg: EngineConfig = DEFAULT,
-) -> DataFrame:
-    """(doc_id, term, positions) with 0-based token offsets — one Arrow
-    pass, no shuffle, no Python string objects (RE2 split +
-    dictionary-encode + lexsort). Honors the cfg analyzer (stop_terms/min_token_len) so sidecar offsets
-    match a filtered build's fused twin rows: offsets index the KEPT
-    token stream, exactly like the combiner kernel."""
-    pattern = cfg.token_pattern
-    stop, min_len = cfg.stop_set(), int(cfg.min_token_len)
-
-    def gen(batches):
-        from ivfadc_spark.functions.arrow_pool import use_scalable_pool
-
-        use_scalable_pool()
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        from ivfadc_spark.functions.tokenize import arrow_flat_tokens, filter_tokens
-
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            tbl = pa.Table.from_batches([rb])
-            flat, par = filter_tokens(
-                *arrow_flat_tokens(tbl.column(text_col), pattern), stop, min_len
-            )
-            if len(flat) == 0:
-                continue
-            # 0-based offset within each doc's kept-token stream
-            starts = np.flatnonzero(np.r_[True, par[1:] != par[:-1]])
-            counts = np.diff(np.r_[starts, par.size])
-            pos = np.arange(par.size, dtype=np.int64) - np.repeat(starts, counts)
-            enc = pc.dictionary_encode(flat)
-            enc = enc.combine_chunks() if isinstance(enc, pa.ChunkedArray) else enc
-            codes = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-            vocab = enc.dictionary
-            # group tokens by (doc, term); stable sort keeps offsets ascending
-            order = np.lexsort((pos, codes, par))
-            par, codes, pos = par[order], codes[order], pos[order]
-            gs = np.r_[True, (par[1:] != par[:-1]) | (codes[1:] != codes[:-1])]
-            gstart = np.flatnonzero(gs)
-            glen = np.diff(np.r_[gstart, par.size])
-            offsets = np.empty(gstart.size + 1, dtype=np.int32)
-            offsets[:-1] = gstart
-            offsets[-1] = par.size
-            pos_list = pa.ListArray.from_arrays(
-                pa.array(offsets, type=pa.int32()), pa.array(pos, type=pa.int64())
-            )
-            doc_ids = tbl.column(id_col).to_numpy(zero_copy_only=False)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(doc_ids[par[gstart]], type=pa.int64()),
-                    vocab.take(pa.array(codes[gstart])),
-                    pos_list,
-                ],
-                names=["doc_id", "term", "positions"],
-            )
-
-    return docs.mapInArrow(gen, "doc_id long, term string, positions array<long>")
-
-
-def build_positions(
-    spark: SparkSession,
-    transcripts: DataFrame,
-    segment_path: str,
-    cfg: EngineConfig = DEFAULT,
-) -> str:
-    """Build the positions sidecar next to an existing segment. Re-derives
-    doc ids with the same deterministic assignment the segment used (ids are
-    data-derived, sources/transcripts.plan_doc_ids), so no coordination
-    with the block build is needed."""
-    from ivfadc_spark.sources.transcripts import plan_doc_ids
-
-    with_ids, _ = plan_doc_ids(transcripts, cfg.doc_shards)
-    out = os.path.join(segment_path, "positions")
-    (
-        doc_term_positions(with_ids.select("doc_id", "text"), cfg=cfg)
-        .withColumn(
-            "term_bucket",
-            F.pmod(F.xxhash64("term"), F.lit(cfg.term_buckets)).cast("int"),
-        )
-        .repartition("term_bucket")
-        .write.mode("overwrite")
-        .partitionBy("term_bucket")
-        .parquet(out)
-    )
-    return out
+    if isinstance(segment, SegmentSet):
+        return segment._union(member)
+    return member(segment, 0)
 
 
 def phrase_topk(
@@ -162,15 +80,15 @@ def phrase_topk(
     """Exact phrase top-k: (query_id, rank, doc_id, n_occ), ranked by
     occurrence count desc then doc_id; docs with zero occurrences drop out.
 
-    Plan: tokenize phrases (ORDER KEPT) -> probe the positions sidecar with
-    an IN-filter + term_bucket prune -> conjunctive prefilter JVM-side (a
-    doc must contain every distinct phrase term) -> vectorized offset-list
-    intersection per (query, doc): occurrence starts = ∩_j (P_j - j).
+    Plan: tokenize phrases (ORDER KEPT) -> probe the positional twin rows
+    with an IN-filter + term_bucket prune -> conjunctive prefilter JVM-side
+    (a doc must contain every distinct phrase term) -> vectorized
+    offset-list intersection per (query, doc): occurrence starts =
+    ∩_j (P_j - j).
 
     ``segment`` may be a :class:`SegmentSet`: each member contributes its
-    own positions source (sidecar or fused twin rows, independently per
-    member), doc ids shifted by the member's cumulative doc_base — the same
-    U1 offset remap federation applies to posting blocks. Phrases never
+    own twin rows, doc ids shifted by the member's cumulative doc_base —
+    the same U1 offset remap federation applies to posting blocks. Phrases never
     span documents, so the union of per-member matches IS the corpus
     answer; only the final occurrence-count top-k sees all members.
     """
@@ -178,7 +96,6 @@ def phrase_topk(
 
     k = k or cfg.top_k
     spark = segment.spark
-    n_buckets = int(segment.meta["config"].get("term_buckets", cfg.term_buckets))
 
     # phrase terms with their in-phrase offsets (duplicates kept: "a b a")
     qt = queries.select(
@@ -188,30 +105,12 @@ def phrase_topk(
     if not qt_rows:
         return spark.createDataFrame([], PHRASE_RESULT_SCHEMA)
     terms = sorted({r["term"] for r in qt_rows})
-    # bucket ids of the probed terms (xxhash64 is a JVM expression; one
-    # driver-local job over the tiny term list)
-    buckets = sorted({
-        r["b"]
-        for r in spark.createDataFrame([(t,) for t in terms], "term string")
-        .select(F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int").alias("b"))
-        .collect()
-    })
     need = {}
     for r in qt_rows:
         need.setdefault(r["query_id"], []).append((r["j"], r["term"]))
     n_distinct = {q: len({t for _, t in js}) for q, js in need.items()}
 
-    if isinstance(segment, SegmentSet):
-        positions = None
-        for s, off in zip(segment.segments, segment.offsets):
-            p = _member_positions(s, buckets, terms)
-            if off:
-                p = p.withColumn(
-                    "doc_id", (F.col("doc_id") + F.lit(int(off))).cast("long")
-                )
-            positions = p if positions is None else positions.unionByName(p)
-    else:
-        positions = _member_positions(segment, buckets, terms)
+    positions = _positions(segment, terms)
 
     qt_df = F.broadcast(spark.createDataFrame(qt_rows))
     cand = positions.join(qt_df, "term")
@@ -307,24 +206,23 @@ def highlight_topk(
     """Search-result highlighting: for each query's BM25 top-k docs, every
     matched query term's FIRST token offset (0-based) and occurrence count
     — the Lucene unified-highlighter analog, read from the positional
-    sidecar / fused twin rows (the reference returns bare ranked ids,
+    twin rows (the reference returns bare ranked ids,
     /root/reference/SearchEngine.cpp:221-297; offsets are what a UI needs
     to render snippets without re-tokenizing documents).
 
     Plan: the normal block-pruned indexed top-k ranks docs; the winner set
     (queries x k rows — tiny) and the query terms broadcast against the
-    positions source, probed with the same term IN + term_bucket partition
+    positional twin rows, probed with the same term IN + term_bucket partition
     prune as phrase search. Positions of non-query terms or non-winner
     docs are never read; per-doc work is two array expressions
     (element_at, size), no Python. ``segment`` may be a SegmentSet (each
-    member contributes its positions source, doc ids shifted by doc_base).
+    member contributes its twin rows, doc ids shifted by doc_base).
     """
     from ivfadc_spark.functions.tokenize import tokens_col
     from ivfadc_spark.operators.wand import bm25_topk_indexed
 
     k = k or cfg.top_k
     spark = segment.spark
-    n_buckets = int(segment.meta["config"].get("term_buckets", cfg.term_buckets))
 
     top = bm25_topk_indexed(queries, segment, k=k, cfg=cfg).select(
         "query_id", "rank", "doc_id"
@@ -336,23 +234,7 @@ def highlight_topk(
     terms = sorted({r["term"] for r in qt_rows})
     if not terms:
         return spark.createDataFrame([], HIGHLIGHT_RESULT_SCHEMA)
-    buckets = sorted({
-        r["b"]
-        for r in spark.createDataFrame([(t,) for t in terms], "term string")
-        .select(F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int").alias("b"))
-        .collect()
-    })
-    if isinstance(segment, SegmentSet):
-        positions = None
-        for s, off in zip(segment.segments, segment.offsets):
-            p = _member_positions(s, buckets, terms)
-            if off:
-                p = p.withColumn(
-                    "doc_id", (F.col("doc_id") + F.lit(int(off))).cast("long")
-                )
-            positions = p if positions is None else positions.unionByName(p)
-    else:
-        positions = _member_positions(segment, buckets, terms)
+    positions = _positions(segment, terms)
 
     qt_df = F.broadcast(spark.createDataFrame(qt_rows))
     return (
@@ -385,7 +267,7 @@ def span_first_topk(
     tiebreak; ``n_occ_within`` counts occurrences inside the window.
 
     Scale shape: identical to phrase/proximity — term IN + term_bucket
-    partition pruning on the positions source, the position test is a
+    partition pruning on the twin rows, the position test is a
     codegen'd array expression on in-doc occurrence lists (positions are
     stored ascending, so the first element decides the match). SegmentSet
     members probe independently with doc_base shifts."""
@@ -393,7 +275,6 @@ def span_first_topk(
 
     k = k or cfg.top_k
     spark = segment.spark
-    n_buckets = int(segment.meta["config"].get("term_buckets", cfg.term_buckets))
 
     qrows = queries.select(
         "query_id", tokens_col("text").alias("toks")
@@ -408,23 +289,7 @@ def span_first_topk(
             [], "query_id long, rank int, doc_id long, first_pos long, n_occ_within long"
         )
     terms = sorted({r["toks"][0] for r in qrows})
-    buckets = sorted({
-        r["b"]
-        for r in spark.createDataFrame([(t,) for t in terms], "term string")
-        .select(F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int").alias("b"))
-        .collect()
-    })
-    if isinstance(segment, SegmentSet):
-        positions = None
-        for s, off in zip(segment.segments, segment.offsets):
-            p = _member_positions(s, buckets, terms)
-            if off:
-                p = p.withColumn(
-                    "doc_id", (F.col("doc_id") + F.lit(int(off))).cast("long")
-                )
-            positions = p if positions is None else positions.unionByName(p)
-    else:
-        positions = _member_positions(segment, buckets, terms)
+    positions = _positions(segment, terms)
 
     pairs = spark.createDataFrame(
         [(r["query_id"], r["toks"][0]) for r in qrows], "query_id long, term string"
@@ -479,7 +344,6 @@ def near_topk(
 
     k = k or cfg.top_k
     spark = segment.spark
-    n_buckets = int(segment.meta["config"].get("term_buckets", cfg.term_buckets))
 
     qrows = queries.select(
         "query_id", tokens_col("text").alias("toks")
@@ -490,23 +354,7 @@ def near_topk(
     if not qrows:
         return spark.createDataFrame([], PHRASE_RESULT_SCHEMA)
     terms = sorted({t for r in qrows for t in r["toks"]})
-    buckets = sorted({
-        r["b"]
-        for r in spark.createDataFrame([(t,) for t in terms], "term string")
-        .select(F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int").alias("b"))
-        .collect()
-    })
-    if isinstance(segment, SegmentSet):
-        positions = None
-        for s, off in zip(segment.segments, segment.offsets):
-            p = _member_positions(s, buckets, terms)
-            if off:
-                p = p.withColumn(
-                    "doc_id", (F.col("doc_id") + F.lit(int(off))).cast("long")
-                )
-            positions = p if positions is None else positions.unionByName(p)
-    else:
-        positions = _member_positions(segment, buckets, terms)
+    positions = _positions(segment, terms)
 
     pairs = spark.createDataFrame(
         [(r["query_id"], r["toks"][0], r["toks"][1]) for r in qrows],

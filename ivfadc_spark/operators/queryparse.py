@@ -26,7 +26,7 @@ their own oracles):
    returns nothing (the conjunctive-path convention).
 4. MUST_NOT excludes docs matching any expansion (or the phrase).
 5. Phrase membership = at least one exact adjacent occurrence
-   (:mod:`positions` twin rows / sidecar required only when phrases occur).
+   (:mod:`positions` twin rows, required only when phrases occur).
 
 Scale shape: parsing is driver-side over the tiny query set (the
 documented broker pattern); expansions are ONE broadcast nested-loop pass

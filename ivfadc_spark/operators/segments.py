@@ -8,12 +8,15 @@ docIDs into one global space by positional offset
 
 Ours: one segment = a parquet dataset directory::
 
-    <path>/blocks/      posting blocks, partitioned by term_bucket
+    <path>/blocks/      posting blocks, partitioned by term_bucket; a
+                        with_positions=1 build adds positional twin rows
+                        (block_id <= -10) under the same layout
     <path>/doc_map/     (doc_id, conv_id, turn_idx, role, tool) [nl analog]
     <path>/doc_lens/    (doc_id, dl) doc-length sidecar
     <path>/dict/        (term, df, cf, idf)                   [voc_sz analog]
     <path>/metrics/     per-term build metrics
-    <path>/tombstones/  (doc_id) deleted docs (deletes.delete_docs)
+    <path>/tombstones/  (doc_id) deleted docs (deletes.delete_docs); the one
+                        dataset a segment may lack
     <path>/meta.json    n_docs, avgdl, doc_space, n_shards, lineage, config,
                         format_version (3: dl-free posting blocks + sentinel
                         doc-stat rows; the only format readers accept)
@@ -24,8 +27,11 @@ no schema inference, and the ``term_buckets + 1`` partition directories are
 listed on the driver (``session.get_spark`` raises Spark's parallel-listing
 threshold above that count). The format check stays strict: opening a
 segment compares one parquet footer per dataset against the declaration on
-the driver (``pyarrow.parquet.read_schema``) and refuses a missing column or
-a different type instead of reading nulls.
+the driver (``pyarrow.parquet.read_schema``) and refuses a missing dataset,
+a missing column or a different type instead of reading nulls. Readers take
+the layout from the segment, never from the caller's config: a term's
+partition is :func:`term_bucket_col` of the segment's own ``term_buckets``,
+which ``meta.json`` must record.
 
 docIDs are data-derived within a segment (dense rank over the segment's own
 rows); cross-segment remap adds each segment's ``doc_base`` offset — the
@@ -56,7 +62,7 @@ import os
 import shutil
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ivfadc_spark.config import DEFAULT, EngineConfig
@@ -79,10 +85,18 @@ DATASETS = {
     "tombstones": "doc_id long",
 }
 _PARTITION_COLUMN = "term_bucket"
+# the one dataset a segment may lack: delete_docs writes it on first use
+_OPTIONAL_DATASETS = ("tombstones",)
 # the parquet footer type (as pyarrow reads it) Spark writes for each type
 _ARROW_TYPES = {
     "string": "string", "binary": "binary", "int": "int32", "long": "int64", "double": "double",
 }
+
+
+def term_bucket_col(n_buckets: int) -> Column:
+    """The term -> term_bucket partition of a segment with ``n_buckets``
+    term buckets, as the build writes it and every reader probes it."""
+    return F.pmod(F.xxhash64("term"), F.lit(int(n_buckets))).cast("int")
 
 
 def dataset_fields(name: str) -> list[tuple[str, str]]:
@@ -170,8 +184,26 @@ class Segment:
                 f"{FORMAT_VERSION} with n_shards > 0 (a doc-sharded combiner "
                 "build) — rebuild it with build_index"
             )
+        if "term_buckets" not in self.meta.get("config", {}):
+            raise ValueError(
+                f"segment {path}: meta.json config lacks term_buckets, the "
+                "term -> partition layout readers probe — rebuild it with "
+                "build_index"
+            )
         for name in DATASETS:
+            if name not in _OPTIONAL_DATASETS and not os.path.isdir(
+                os.path.join(path, name)
+            ):
+                raise ValueError(
+                    f"segment {path}: dataset {name} is missing — rebuild it "
+                    "with build_index"
+                )
             check_dataset(path, name)
+
+    @property
+    def term_buckets(self) -> int:
+        """The segment's own term -> partition bucket count."""
+        return int(self.meta["config"]["term_buckets"])
 
     @property
     def blocks(self) -> DataFrame:
@@ -192,13 +224,8 @@ class Segment:
 
     @property
     def doc_lengths(self) -> DataFrame:
-        """(doc_id, dl) sidecar: the materialized dataset if stage 02 wrote
-        one, else decoded from the sentinel rows."""
-        if os.path.exists(os.path.join(self.path, "doc_lens")):
-            return read_dataset(self.spark, self.path, "doc_lens")
-        from ivfadc_spark.operators.postings import decode_doc_stats
-
-        return decode_doc_stats(self.raw_blocks)
+        """(doc_id, dl) sidecar."""
+        return read_dataset(self.spark, self.path, "doc_lens")
 
     @property
     def doc_map(self) -> DataFrame:
@@ -304,9 +331,9 @@ class SegmentSet:
         self.segments = [p if isinstance(p, Segment) else Segment(spark, p) for p in paths]
         if not self.segments:
             raise ValueError("SegmentSet needs at least one segment")
-        c0 = self.segments[0].meta.get("config", {})
+        c0 = self.segments[0].meta["config"]
         for s in self.segments[1:]:
-            c = s.meta.get("config", {})
+            c = s.meta["config"]
             for key in ("doc_shards", "term_buckets", "k1", "b"):
                 if c.get(key) != c0.get(key):
                     raise ValueError(
@@ -425,6 +452,10 @@ class SegmentSet:
         return int(self.meta["doc_space"])
 
     @property
+    def term_buckets(self) -> int:
+        return int(self.meta["config"]["term_buckets"])
+
+    @property
     def dl_broadcast(self):
         if not hasattr(self, "_dl_bc"):
             self._dl_bc = self.spark.sparkContext.broadcast(_dl_array(self))
@@ -472,7 +503,8 @@ def merge_segments(
     each member's ids shifted by its doc offset, so a deleted doc stays
     deleted until ``compact_segment``. Cost is proportional to the BYTES of
     the members after the first; the merge runs no job that reads the first
-    member's blocks.
+    member's blocks. The layout and config come from the members; ``cfg``
+    is not read.
     """
     ss = SegmentSet(spark, paths)
     if any(os.path.realpath(s.path) == os.path.realpath(out_path) for s in ss.segments):
@@ -482,13 +514,10 @@ def merge_segments(
     for name in DATASETS:
         shutil.rmtree(os.path.join(out_path, name), ignore_errors=True)
     first = ss.segments[0].path
-    # doc_lens may be absent: Segment.doc_lengths then decodes sentinels
-    linked = [n for n in ("blocks", "doc_map", "doc_lens") if os.path.isdir(os.path.join(first, n))]
-    for name in linked:
-        _link_files(os.path.join(first, name), os.path.join(out_path, name))
     writes = {"blocks": _member_blocks, "doc_map": _member_doc_map, "doc_lens": _member_doc_lens}
     for name, frame in writes.items():
-        rows = ss._union(frame, start=1 if name in linked else 0)
+        _link_files(os.path.join(first, name), os.path.join(out_path, name))
+        rows = ss._union(frame, start=1)
         if rows is None:
             continue
         w = rows.write.mode("append")
@@ -510,7 +539,7 @@ def merge_segments(
         "lineage": {"merged_from": ss.meta["lineage"]["segments"]},
         # the layout contract (doc_shards, term_buckets, k1, b) comes from
         # the INPUT segments — SegmentSet enforced their consistency
-        "config": ss.meta["config"] or json.loads(cfg.to_json()),
+        "config": ss.meta["config"],
         # members all opened as v3 (Segment refuses anything else) and
         # their blocks are carried verbatim
         "format_version": FORMAT_VERSION,

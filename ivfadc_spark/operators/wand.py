@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 from ivfadc_spark.config import DEFAULT, EngineConfig
 from ivfadc_spark.functions.codecs import varint_decode
 from ivfadc_spark.operators.query import query_terms
-from ivfadc_spark.operators.segments import Segment
+from ivfadc_spark.operators.segments import Segment, term_bucket_col
 
 RESULT_SCHEMA = "query_id long, rank int, doc_id long, score double"
 
@@ -53,23 +53,17 @@ def _no_results(spark) -> DataFrame:
     return spark.createDataFrame([], RESULT_SCHEMA).limit(0)
 
 
-def _term_bucket_col(n_buckets: int):
-    """The build's term -> term_bucket partition function."""
-    return F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")
-
-
-def _idf_lookup(segment, terms: list[str], cfg: EngineConfig) -> DataFrame:
+def _idf_lookup(segment, terms: list[str]) -> DataFrame:
     """(term, idf, term_bucket) of the in-vocabulary ``terms``: a
     TERM-PRUNED dictionary scan — ``term IN (...)`` pushes down to the dict
     parquet (row-group stats / dictionary pages), so only matching slices
     are read and nothing vocabulary-sized is collected or broadcast."""
-    n_buckets = int(segment.meta["config"].get("term_buckets", cfg.term_buckets))
     return segment.dictionary.filter(F.col("term").isin(terms)).select(
-        "term", "idf", _term_bucket_col(n_buckets).alias("term_bucket")
+        "term", "idf", term_bucket_col(segment.term_buckets).alias("term_bucket")
     )
 
 
-def _resolve_query_terms(queries: DataFrame, segment, cfg: EngineConfig) -> pd.DataFrame:
+def _resolve_query_terms(queries: DataFrame, segment) -> pd.DataFrame:
     """(query_id, term, idf, term_bucket) rows of ``queries`` on the driver,
     OOV terms dropped — the idf resolver of both top-k kernels. Two jobs:
     the QUERY-sized term frame is collected (the broker role: n_queries x
@@ -77,7 +71,7 @@ def _resolve_query_terms(queries: DataFrame, segment, cfg: EngineConfig) -> pd.D
     qt = query_terms(queries).toPandas()
     if qt.empty:
         return qt
-    found = _idf_lookup(segment, sorted(set(qt["term"])), cfg).toPandas()
+    found = _idf_lookup(segment, sorted(set(qt["term"]))).toPandas()
     return qt.merge(found, on="term")  # drops OOV
 
 
@@ -243,7 +237,7 @@ def bm25_topk_batch(
 
     # query prep: the shared term-pruned idf resolver (the driver holds the
     # batch's query terms, never the vocabulary)
-    qt_pdf = _resolve_query_terms(queries, segment, cfg)
+    qt_pdf = _resolve_query_terms(queries, segment)
     if qt_pdf.empty:
         return _no_results(spark)
     qt_pdf = qt_pdf[["query_id", "term", "idf"]]
@@ -676,7 +670,7 @@ def bm25_topk_indexed(
     k1, b = float(cfg.k1), float(cfg.b)
     avgdl = float(segment.meta["avgdl"])
     _lm = combine_masks(live_mask(segment), doc_mask)
-    qt = _resolve_query_terms(queries, segment, cfg)
+    qt = _resolve_query_terms(queries, segment)
     return _topk_scan_from_qt(segment, qt, k, k1, b, avgdl, _lm)
 
 
@@ -739,6 +733,21 @@ def _topk_scan_from_qt(
     return cand.mapInPandas(scan, RESULT_SCHEMA)
 
 
+def _plain_terms(toks: DataFrame, marked: str, d: DataFrame) -> DataFrame:
+    """(query_id, term, idf) of a multi-term rewrite's unmarked ``tok``
+    rows (whitespace tokens whose ``marked`` column is false), analyzed by
+    ``tokens_col`` exactly as :func:`bm25_topk_indexed` analyzes a query,
+    OOV terms dropped."""
+    from ivfadc_spark.functions.tokenize import tokens_col
+
+    return (
+        toks.filter(~F.col(marked))
+        .select("query_id", F.explode(tokens_col("tok")).alias("term"))
+        .join(F.broadcast(d), "term")
+        .select("query_id", "term", "idf")
+    )
+
+
 def prefix_topk(
     queries: DataFrame,
     segment: Segment,
@@ -768,8 +777,6 @@ def prefix_topk(
     k1, b = float(cfg.k1), float(cfg.b)
     avgdl = float(segment.meta["avgdl"])
     _lm = combine_masks(live_mask(segment), doc_mask)
-    n_buckets = int(segment.meta["config"].get("term_buckets", cfg.term_buckets))
-    spark = segment.spark
 
     toks = (
         queries.select(
@@ -781,29 +788,19 @@ def prefix_topk(
         # must not demote it to an exact term
         .withColumn("is_prefix", F.col("tok").rlike(r"\*[^a-z0-9]*$"))
         .withColumn("stem", F.regexp_replace("tok", "[^a-z0-9]", ""))
-        .filter(F.length("stem") > 0)
-        .select("query_id", "stem", "is_prefix")
+        .select("query_id", "tok", "stem", "is_prefix")
         .distinct()
     )
     d = segment.dictionary.select("term", "idf")
-    exact = (
-        toks.filter(~F.col("is_prefix"))
-        .select("query_id", F.col("stem").alias("term"))
-        .join(F.broadcast(d), "term")
-        .select("query_id", "term", "idf")
-    )
-    prefixes = [
-        r["stem"]
-        for r in toks.filter("is_prefix").select("stem").distinct().collect()
-    ]
+    exact = _plain_terms(toks, "is_prefix", d)
+    pref = toks.filter(F.col("is_prefix") & (F.length("stem") > 0))
+    prefixes = [r["stem"] for r in pref.select("stem").distinct().collect()]
     if prefixes:
         pred = None
         for p in prefixes:
             c = F.col("term").startswith(p)
             pred = c if pred is None else (pred | c)
-        pref_df = toks.filter("is_prefix").select(
-            "query_id", F.col("stem").alias("p")
-        )
+        pref_df = pref.select("query_id", F.col("stem").alias("p"))
         expanded = (
             d.filter(pred)  # one dictionary pass, predicate pushed to scan
             .join(F.broadcast(pref_df), F.col("term").startswith(F.col("p")))
@@ -812,7 +809,7 @@ def prefix_topk(
         qt = exact.unionByName(expanded).distinct()
     else:
         qt = exact.distinct()
-    qt = qt.withColumn("term_bucket", _term_bucket_col(n_buckets))
+    qt = qt.withColumn("term_bucket", term_bucket_col(segment.term_buckets))
     return _topk_scan_from_qt(segment, qt.toPandas(), k, k1, b, avgdl, _lm)
 
 
@@ -847,7 +844,6 @@ def fuzzy_topk(
     k1, b = float(cfg.k1), float(cfg.b)
     avgdl = float(segment.meta["avgdl"])
     _lm = combine_masks(live_mask(segment), doc_mask)
-    n_buckets = int(segment.meta["config"].get("term_buckets", cfg.term_buckets))
 
     toks = (
         queries.select(
@@ -876,25 +872,21 @@ def fuzzy_topk(
                 F.regexp_replace("tok", r"~[0-9]?[^a-z0-9]*$", ""), "[^a-z0-9]", ""
             ),
         )
-        .filter(F.length("stem") > 0)
-        .select("query_id", "stem", "is_fuzzy", "dist")
+        .select("query_id", "tok", "stem", "is_fuzzy", "dist")
         .distinct()
     )
     d = segment.dictionary.select("term", "idf")
-    exact = (
-        toks.filter(~F.col("is_fuzzy"))
-        .select("query_id", F.col("stem").alias("term"))
-        .join(F.broadcast(d), "term")
-        .select("query_id", "term", "idf")
+    exact = _plain_terms(toks, "is_fuzzy", d)
+    fz = toks.filter(F.col("is_fuzzy") & (F.length("stem") > 0)).select(
+        "query_id", F.col("stem").alias("s"), "dist"
     )
-    fz = toks.filter("is_fuzzy").select("query_id", F.col("stem").alias("s"), "dist")
     expanded = d.join(
         F.broadcast(fz),
         (F.abs(F.length("term") - F.length("s")) <= F.col("dist"))
         & (F.levenshtein(F.col("term"), F.col("s")) <= F.col("dist")),
     ).select("query_id", "term", "idf")
     qt = exact.unionByName(expanded).distinct().withColumn(
-        "term_bucket", _term_bucket_col(n_buckets)
+        "term_bucket", term_bucket_col(segment.term_buckets)
     )
     return _topk_scan_from_qt(segment, qt.toPandas(), k, k1, b, avgdl, _lm)
 
@@ -931,7 +923,6 @@ def mlt_topk(
     k1, b = float(cfg.k1), float(cfg.b)
     avgdl = float(segment.meta["avgdl"])
     _lm = combine_masks(live_mask(segment), doc_mask)
-    n_buckets = int(segment.meta["config"].get("term_buckets", cfg.term_buckets))
 
     seeds = docs.filter(
         F.col("doc_id").isin([int(x) for x in seed_ids])
@@ -949,7 +940,7 @@ def mlt_topk(
         w.withColumn("rn", F.row_number().over(sel))
         .filter(F.col("rn") <= int(max_terms))
         .select("query_id", "term", "idf")
-        .withColumn("term_bucket", _term_bucket_col(n_buckets))
+        .withColumn("term_bucket", term_bucket_col(segment.term_buckets))
     )
     res = _topk_scan_from_qt(segment, qt.toPandas(), k + 1, k1, b, avgdl, _lm)
     rerank = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
@@ -1086,7 +1077,6 @@ def regex_topk(
     k1, b = float(cfg.k1), float(cfg.b)
     avgdl = float(segment.meta["avgdl"])
     _lm = combine_masks(live_mask(segment), doc_mask)
-    n_buckets = int(segment.meta["config"].get("term_buckets", cfg.term_buckets))
 
     toks = (
         queries.select(
@@ -1104,22 +1094,16 @@ def regex_topk(
                 F.lit("$"),
             ),
         )
-        .withColumn("stem", F.regexp_replace("tok", "[^a-z0-9]", ""))
-        .select("query_id", "tok", "is_re", "pat", "stem")
+        .select("query_id", "tok", "is_re", "pat")
         .distinct()
     )
     d = segment.dictionary.select("term", "idf")
-    exact = (
-        toks.filter(~F.col("is_re") & (F.length("stem") > 0))
-        .select("query_id", F.col("stem").alias("term"))
-        .join(F.broadcast(d), "term")
-        .select("query_id", "term", "idf")
-    )
+    exact = _plain_terms(toks, "is_re", d)
     pats = toks.filter("is_re").select("query_id", "pat")
     expanded = d.join(
         F.broadcast(pats), F.regexp_like(F.col("term"), F.col("pat"))
     ).select("query_id", "term", "idf")
     qt = exact.unionByName(expanded).distinct().withColumn(
-        "term_bucket", _term_bucket_col(n_buckets)
+        "term_bucket", term_bucket_col(segment.term_buckets)
     )
     return _topk_scan_from_qt(segment, qt.toPandas(), k, k1, b, avgdl, _lm)

@@ -57,6 +57,7 @@ from ivfadc_spark.operators.segments import (
     Segment,
     dataset_fields,
     read_dataset,
+    term_bucket_col,
 )
 from ivfadc_spark.sources.transcripts import _tokens_for_partitions, plan_doc_ids
 
@@ -268,9 +269,9 @@ def build_index(
                     "term_bucket",
                     # xxhash64(NULL) is the seed hash, not NULL — route the
                     # sentinel rows explicitly
-                    F.when(F.col("term").isNull(), F.lit(-1))
-                    .otherwise(F.pmod(F.xxhash64("term"), F.lit(cfg.term_buckets)))
-                    .cast("int"),
+                    F.when(F.col("term").isNull(), F.lit(-1)).otherwise(
+                        term_bucket_col(cfg.term_buckets)
+                    ),
                 )
                 # Repartition on term_bucket before the partitioned write:
                 # the write cost is FILE OPERATIONS, not bytes — without it

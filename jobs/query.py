@@ -28,11 +28,6 @@ def main() -> None:
         help="or = rank any doc matching any term (reference semantics); "
         "and = conjunctive, doc must contain every query term",
     )
-    ap.add_argument(
-        "--path", choices=["indexed", "batch"], default="indexed",
-        help="indexed = block-max MaxScore (low latency); batch = doc-sharded "
-        "TAAT (large query batches). or-mode only",
-    )
     ap.add_argument("--out", help="optional parquet output path")
     args = ap.parse_args()
 
@@ -53,7 +48,7 @@ def main() -> None:
 
         terms = [r["term"] for r in query_terms(queries).distinct().collect()]
         # term-pruned decode for tf; dl comes from the doc-length sidecar
-        # (materialized or sentinel-decoded) — no distinct() over postings
+        # — no distinct() over postings
         dec = decode_blocks(seg.blocks.filter(F.col("term").isin(terms)))
         dl = seg.doc_lengths
         out = bm25_topk_conjunctive(
@@ -64,10 +59,6 @@ def main() -> None:
             seg.meta["avgdl"],
             k=args.k,
         )
-    elif args.path == "batch":
-        from ivfadc_spark.operators.wand import bm25_topk_batch
-
-        out = bm25_topk_batch(queries, seg, k=args.k)
     else:
         out = bm25_topk_indexed(queries, seg, k=args.k)
     res = out.join(seg.doc_map, "doc_id")

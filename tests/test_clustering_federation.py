@@ -21,6 +21,7 @@ from ivfadc_spark.plans.build_index import build_index
 from ivfadc_spark.sources.transcripts import synth_transcripts
 
 CFG = EngineConfig(block_size=16)
+POS_CFG = EngineConfig(block_size=16, with_positions=1)
 
 
 @pytest.fixture(scope="module")
@@ -225,15 +226,42 @@ def test_segment_open_refuses_undeclared_footer(spark, tmp_path, change):
         Segment(spark, bad)
 
 
+@pytest.mark.parametrize("missing", ["term_buckets", "doc_lens"])
+def test_segment_open_refuses_missing_layout(spark, tmp_path, missing):
+    """Readers take the layout from the segment: a meta.json config without
+    term_buckets, or a segment without its doc_lens dataset, fails at open
+    naming what is missing instead of falling back to the caller's config
+    or decoding the sentinel rows."""
+    import json
+    import shutil
+
+    from ivfadc_spark.operators.segments import Segment
+
+    seg = build_index(spark, synth_transcripts(spark, n_conversations=10), str(tmp_path / "s"), cfg=CFG)
+    bad = str(tmp_path / "bad")
+    shutil.copytree(seg.path, bad)
+    if missing == "term_buckets":
+        meta_path = tmp_path / "bad" / "meta.json"
+        meta = json.loads(meta_path.read_text())
+        del meta["config"]["term_buckets"]
+        meta_path.write_text(json.dumps(meta))
+        match = "term_buckets"
+    else:
+        shutil.rmtree(os.path.join(bad, "doc_lens"))
+        match = "dataset doc_lens"
+    with pytest.raises(ValueError, match=match):
+        Segment(spark, bad)
+
+
 def test_phrase_topk_matches_bruteforce(spark, tmp_path):
-    """Positional sidecar phrase counts == a per-doc brute scan in pandas."""
+    """Phrase counts from fused positional rows == a per-doc brute scan in
+    pandas."""
     import re
 
-    from ivfadc_spark.operators.positions import build_positions, phrase_topk
+    from ivfadc_spark.operators.positions import phrase_topk
 
     tx = synth_transcripts(spark, n_conversations=30)
-    seg = build_index(spark, tx, str(tmp_path / "ph"), cfg=CFG)
-    build_positions(spark, tx, seg.path, CFG)
+    seg = build_index(spark, tx, str(tmp_path / "ph"), cfg=POS_CFG)
     phrases = [(0, "headterm term000"), (1, "term001 term000"), (2, "nosuch phrase")]
     pq = spark.createDataFrame(
         pd.DataFrame(phrases, columns=["query_id", "text"]),
@@ -337,42 +365,31 @@ def test_pq_adc_equals_reconstruction(spark):
     assert np.allclose(got["adc"], want["adc"], atol=1e-8)
 
 
-def test_fused_positions_equal_sidecar_and_leave_scoring_unchanged(spark, tmp_path):
-    """A with_positions=1 build answers phrase queries identically to the
-    two-pass sidecar, from ONE tokenize pass; the positional twin rows must
-    be invisible to every scoring path and to the dictionary."""
-    import dataclasses
-
-    from ivfadc_spark.operators.positions import build_positions, phrase_topk
+def test_fused_positions_leave_scoring_unchanged(spark, tmp_path):
+    """The positional twin rows of a with_positions=1 build are invisible
+    to both top-k kernels and to the dictionary: a plain build of the same
+    corpus ranks the same docs and holds the same dictionary. The plain
+    build has no positions, and phrase search on it says to rebuild."""
+    from ivfadc_spark.operators.positions import phrase_topk
     from ivfadc_spark.operators.wand import bm25_topk_batch, bm25_topk_indexed
 
-    cfg_f = dataclasses.replace(CFG, with_positions=1)
     tx = synth_transcripts(spark, n_conversations=30)
-    seg_f = build_index(spark, tx, str(tmp_path / "pf"), cfg=cfg_f)
+    seg_f = build_index(spark, tx, str(tmp_path / "pf"), cfg=POS_CFG)
     seg_p = build_index(spark, tx, str(tmp_path / "pp"), cfg=CFG)
-    build_positions(spark, tx, seg_p.path, CFG)
-
-    phrases = [(0, "headterm term000"), (1, "term001 term000"), (2, "nosuch phrase")]
-    pq = spark.createDataFrame(
-        pd.DataFrame(phrases, columns=["query_id", "text"]),
-        schema="query_id long, text string",
-    )
-    a = phrase_topk(pq, seg_f, k=10, cfg=cfg_f).orderBy("query_id", "rank").toPandas()
-    b = phrase_topk(pq, seg_p, k=10, cfg=CFG).orderBy("query_id", "rank").toPandas()
-    pd.testing.assert_frame_equal(a, b)
-    assert len(a) > 0
 
     qs = spark.createDataFrame(
         pd.DataFrame({"query_id": [0, 1], "text": ["headterm term003", "term001 term002"]}),
         schema="query_id long, text string",
     )
     for fn in (bm25_topk_indexed, bm25_topk_batch):
-        x = fn(qs, seg_f, k=10, cfg=cfg_f).orderBy("query_id", "rank").toPandas()
+        x = fn(qs, seg_f, k=10, cfg=POS_CFG).orderBy("query_id", "rank").toPandas()
         y = fn(qs, seg_p, k=10, cfg=CFG).orderBy("query_id", "rank").toPandas()
         assert list(x["doc_id"]) == list(y["doc_id"])
     da = seg_f.dictionary.orderBy("term").toPandas().reset_index(drop=True)
     db = seg_p.dictionary.orderBy("term").toPandas().reset_index(drop=True)
     pd.testing.assert_frame_equal(da, db)
+    with pytest.raises(ValueError, match="with_positions=1"):
+        phrase_topk(qs, seg_p, k=10, cfg=CFG)
 
 
 def test_pq_index_roundtrip(spark, tmp_path):
@@ -531,35 +548,57 @@ def test_recompute_centroids_half_up_rounding(spark):
     assert list(ca["b"][0]) == [1e-06, 2e-06, 3e-06]
 
 
-def test_phrase_topk_over_segment_set(spark, tmp_path):
-    """Phrase search through a SegmentSet == over one whole-corpus segment,
-    with MIXED members: one fused-positional build, one positions sidecar —
-    each member serves its own source, doc ids shifted by doc_base."""
-    import dataclasses
-
-    from ivfadc_spark.operators.positions import build_positions, phrase_topk
-
-    cfg_f = dataclasses.replace(CFG, with_positions=1)
+@pytest.fixture(scope="module")
+def pos_halves(spark, tmp_path_factory):
+    """A with_positions=1 build of 40 conversations, and one of each half."""
+    out = tmp_path_factory.mktemp("pos")
     tx = synth_transcripts(spark, n_conversations=40)
-    whole = build_index(spark, tx, str(tmp_path / "pw"), cfg=cfg_f)
-    a = build_index(
-        spark, tx.filter("conv_id < 'conv-000020'"), str(tmp_path / "pa"), cfg=cfg_f
-    )
-    # member b: plain build + positions sidecar (no fused rows)
-    b = build_index(
-        spark, tx.filter("conv_id >= 'conv-000020'"), str(tmp_path / "pb"), cfg=cfg_f
-    )
-    build_positions(spark, tx.filter("conv_id >= 'conv-000020'"), b.path, cfg_f)
-    ss = SegmentSet(spark, [a.path, b.path])
+    whole = build_index(spark, tx, str(out / "pw"), cfg=POS_CFG)
+    a = build_index(spark, tx.filter("conv_id < 'conv-000020'"), str(out / "pa"), cfg=POS_CFG)
+    b = build_index(spark, tx.filter("conv_id >= 'conv-000020'"), str(out / "pb"), cfg=POS_CFG)
+    return whole, a, b
+
+
+def _phrase_results(spark, segment):
     phrases = [(0, "headterm term000"), (1, "term001 term000"), (2, "nosuch phrase")]
     pqs = spark.createDataFrame(
         pd.DataFrame(phrases, columns=["query_id", "text"]),
         schema="query_id long, text string",
     )
-    want = phrase_topk(pqs, whole, k=10, cfg=cfg_f).orderBy("query_id", "rank").toPandas()
-    got = phrase_topk(pqs, ss, k=10, cfg=cfg_f).orderBy("query_id", "rank").toPandas()
+    from ivfadc_spark.operators.positions import phrase_topk
+
+    return phrase_topk(pqs, segment, k=10, cfg=POS_CFG).orderBy("query_id", "rank").toPandas()
+
+
+def test_phrase_topk_over_segment_set(spark, pos_halves):
+    """Phrase search through a SegmentSet == over one whole-corpus segment:
+    each fused-positional member serves its own twin rows, doc ids shifted
+    by doc_base."""
+    whole, a, b = pos_halves
+    want = _phrase_results(spark, whole)
+    got = _phrase_results(spark, SegmentSet(spark, [a.path, b.path]))
     pd.testing.assert_frame_equal(got, want)
     assert len(got) > 0
+
+
+def test_phrase_topk_after_merge_equals_whole_build(spark, pos_halves, tmp_path):
+    """merge_segments carries the positional twin rows: on the merge of two
+    fused halves, every (term, doc_id, positions) row the positional
+    queries read, and the phrase top-k, == the whole-corpus fused build's."""
+    from ivfadc_spark.operators.positions import _positions
+    from ivfadc_spark.operators.segments import merge_segments
+
+    whole, a, b = pos_halves
+    merged = merge_segments(spark, [a.path, b.path], str(tmp_path / "pm"), cfg=POS_CFG)
+
+    def rows(segment):
+        got = _positions(segment, ["headterm", "term000", "term001"]).collect()
+        return sorted((r.term, r.doc_id, tuple(r.positions)) for r in got)
+
+    assert rows(merged) == rows(whole)
+    want = _phrase_results(spark, whole)
+    pd.testing.assert_frame_equal(_phrase_results(spark, merged), want)
+    assert len(want) > 0
 
 
 def test_highlight_topk_matches_bruteforce(spark, tmp_path):
@@ -569,12 +608,11 @@ def test_highlight_topk_matches_bruteforce(spark, tmp_path):
     non-winner docs contribute no rows."""
     import re
 
-    from ivfadc_spark.operators.positions import build_positions, highlight_topk
+    from ivfadc_spark.operators.positions import highlight_topk
     from ivfadc_spark.operators.wand import bm25_topk_indexed
 
     tx = synth_transcripts(spark, n_conversations=30)
-    seg = build_index(spark, tx, str(tmp_path / "hl"), cfg=CFG)
-    build_positions(spark, tx, seg.path, CFG)
+    seg = build_index(spark, tx, str(tmp_path / "hl"), cfg=POS_CFG)
     queries = [(0, "headterm term000"), (1, "term001"), (2, "zzznope")]
     qdf = spark.createDataFrame(
         pd.DataFrame(queries, columns=["query_id", "text"]),
@@ -613,11 +651,10 @@ def test_near_topk_matches_bruteforce_and_slop0_is_phrase(spark, tmp_path):
     reduces to exact bigram adjacency == phrase_topk on the same bigram."""
     import re
 
-    from ivfadc_spark.operators.positions import build_positions, near_topk, phrase_topk
+    from ivfadc_spark.operators.positions import near_topk, phrase_topk
 
     tx = synth_transcripts(spark, n_conversations=30)
-    seg = build_index(spark, tx, str(tmp_path / "nr"), cfg=CFG)
-    build_positions(spark, tx, seg.path, CFG)
+    seg = build_index(spark, tx, str(tmp_path / "nr"), cfg=POS_CFG)
     queries = [(0, "headterm term000"), (1, "term001 term000")]
     qdf = spark.createDataFrame(
         pd.DataFrame(queries, columns=["query_id", "text"]),
@@ -658,7 +695,7 @@ def test_near_topk_matches_bruteforce_and_slop0_is_phrase(spark, tmp_path):
 
     # slop=0 == exact phrase occurrence counts for the bigram
     near0 = near_topk(qdf, seg, slop=0, k=50).toPandas()
-    ph = phrase_topk(qdf, seg, k=50, cfg=CFG).toPandas()
+    ph = phrase_topk(qdf, seg, k=50, cfg=POS_CFG).toPandas()
     a = near0[["query_id", "doc_id", "n_occ"]].sort_values(
         ["query_id", "doc_id"]).reset_index(drop=True)
     b = ph[["query_id", "doc_id", "n_occ"]].sort_values(
@@ -759,11 +796,10 @@ def test_near_unordered_matches_bruteforce_and_supersets_ordered(spark, tmp_path
     matches ONLY unordered."""
     import re
 
-    from ivfadc_spark.operators.positions import build_positions, near_topk
+    from ivfadc_spark.operators.positions import near_topk
 
     tx = synth_transcripts(spark, n_conversations=30)
-    seg = build_index(spark, tx, str(tmp_path / "nru"), cfg=CFG)
-    build_positions(spark, tx, seg.path, CFG)
+    seg = build_index(spark, tx, str(tmp_path / "nru"), cfg=POS_CFG)
     queries = [(0, "headterm term000"), (1, "term000 headterm")]
     qdf = spark.createDataFrame(
         pd.DataFrame(queries, columns=["query_id", "text"]),
@@ -799,11 +835,10 @@ def test_span_first_matches_bruteforce(spark, tmp_path):
     position and in-window occurrence count, ranked first_pos asc."""
     import re
 
-    from ivfadc_spark.operators.positions import build_positions, span_first_topk
+    from ivfadc_spark.operators.positions import span_first_topk
 
     tx = synth_transcripts(spark, n_conversations=30)
-    seg = build_index(spark, tx, str(tmp_path / "sf"), cfg=CFG)
-    build_positions(spark, tx, seg.path, CFG)
+    seg = build_index(spark, tx, str(tmp_path / "sf"), cfg=POS_CFG)
     end = 3
     queries = [(0, "headterm"), (1, "term000"), (2, "zzznope")]
     qdf = spark.createDataFrame(

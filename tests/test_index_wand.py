@@ -550,7 +550,7 @@ def test_idf_lookup_is_term_pruned(spark, corpus):
     from ivfadc_spark.operators.wand import _idf_lookup
 
     tx, seg, out = corpus
-    lookup = _idf_lookup(seg, ["headterm", "no-such-term", "term000"], CFG)
+    lookup = _idf_lookup(seg, ["headterm", "no-such-term", "term000"])
     plan = lookup._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters: [In(term" in plan, plan
     assert "Exchange" not in plan, plan
@@ -558,3 +558,27 @@ def test_idf_lookup_is_term_pruned(spark, corpus):
     want = seg.dictionary.toPandas().set_index("term")
     assert sorted(got.index) == ["headterm", "term000"]
     assert (got["idf"] == want.loc[got.index, "idf"]).all()
+
+
+@pytest.mark.parametrize("rewrite", ["prefix_topk", "fuzzy_topk", "regex_topk"])
+def test_rewrite_plain_tokens_analyze_like_indexed(spark, corpus, rewrite):
+    """A multi-term rewrite's unmarked tokens go through the query analyzer
+    of bm25_topk_indexed: a hyphen-joined plain query splits into its terms
+    instead of collapsing into one out-of-vocabulary token."""
+    import numpy as np
+
+    from ivfadc_spark.operators import wand
+
+    tx, seg, out = corpus
+    qdf = spark.createDataFrame(
+        pd.DataFrame(
+            [(0, "headterm-term003"), (1, "Term001,term002")], columns=["query_id", "text"]
+        ),
+        schema="query_id long, text string",
+    )
+    want = bm25_topk_indexed(qdf, seg, k=10, cfg=CFG).orderBy("query_id", "rank").toPandas()
+    got = getattr(wand, rewrite)(qdf, seg, k=10, cfg=CFG).orderBy("query_id", "rank").toPandas()
+    assert len(want) > 0
+    assert list(got["query_id"]) == list(want["query_id"])
+    assert list(got["doc_id"]) == list(want["doc_id"])
+    np.testing.assert_allclose(got["score"], want["score"], rtol=1e-12)

@@ -229,7 +229,7 @@ def test_segment_open_runs_no_job(spark, bm25_seg, two_segs):
         ss = SegmentSet(spark, [a.path, b.path])
         for s in (Segment(spark, seg.path), ss):
             s.raw_blocks, s.dictionary, s.doc_lengths
-        return _idf_lookup(ss, ["term000", "headterm", "no-such-term"], cfg).collect()
+        return _idf_lookup(ss, ["term000", "headterm", "no-such-term"]).collect()
 
     rows, jobs, stages = _run_in_group(spark, open_fresh)
     assert {r["term"] for r in rows} == {"term000", "headterm"}
