@@ -18,4 +18,9 @@ pandas UDFs (codecs, WAND scan).
 __version__ = "0.1.0"
 
 from ivfadc_spark.config import EngineConfig  # noqa: F401
+from ivfadc_spark.functions.arrow_pool import use_cached_zip_directories
 from ivfadc_spark.session import get_spark  # noqa: F401
+
+# a reused Spark worker imports the package when it unpickles its first
+# engine UDF: from then on its tasks stop re-reading pyspark.zip
+use_cached_zip_directories()

@@ -43,11 +43,13 @@ def _positions(segment: Segment | SegmentSet, terms: list[str]) -> DataFrame:
     posting blocks. Raises when a segment has no twin rows."""
     from ivfadc_spark.operators.postings import decode_position_rows
 
-    # bucket ids of the probed terms: xxhash64 is a JVM expression, so one
-    # small job over the local term list
+    # bucket ids of the probed terms: xxhash64 is a JVM expression, so it is
+    # evaluated over an inline table, which Spark folds into a local relation
+    # (no job); the terms ride as parameters, never in the SQL text
+    values = ",".join(["(?)"] * len(terms))
     buckets = sorted({
         r[0]
-        for r in segment.spark.createDataFrame([(t,) for t in terms], "term string")
+        for r in segment.spark.sql(f"SELECT col1 AS term FROM VALUES {values}", args=terms)
         .select(term_bucket_col(segment.term_buckets))
         .collect()
     })

@@ -19,6 +19,7 @@ files instead of reading them.
 
 import itertools
 import os
+import re
 
 import pandas as pd
 import pytest
@@ -269,3 +270,48 @@ def test_merge_carries_first_member(spark, two_segs, tmp_path):
     with pytest.raises(ValueError, match="one of its inputs"):
         merge_segments(spark, [a.path, b.path], b.path, cfg=cfg)
     assert Segment(spark, b.path).raw_blocks.count() > 0
+
+
+def test_positional_term_buckets_run_no_job(spark, tmp_path):
+    """The probed terms' buckets are computed with no Spark job, prune
+    nothing the build wrote for those terms, and phrase counts match the
+    positions read without the bucket prune."""
+    from ivfadc_spark.config import EngineConfig
+    from ivfadc_spark.operators.positions import _positions, phrase_topk
+    from ivfadc_spark.operators.postings import decode_position_rows
+    from ivfadc_spark.plans.build_index import build_index
+    from ivfadc_spark.sources.transcripts import synth_transcripts
+
+    cfg = EngineConfig(block_size=16, with_positions=1)
+    tx = synth_transcripts(spark, n_conversations=20)
+    seg = build_index(spark, tx, str(tmp_path / "pos"), cfg=cfg)
+    # a phrase that occurs: the first two tokens of one turn
+    text = tx.filter("conv_id = 'conv-000003' AND turn_idx = 0").first()["text"]
+    w0, w1 = [t for t in re.split(r"[^a-z0-9]+", text.lower()) if t][:2]
+    terms = sorted({w0, w1, "no-such-term"})
+    seg.raw_blocks  # open the segment outside the timed call
+
+    positions, jobs, stages = _run_in_group(spark, lambda: _positions(seg, terms))
+    assert jobs == [], stages
+
+    got = sorted((r.term, r.doc_id, tuple(r.positions)) for r in positions.collect())
+    unpruned = decode_position_rows(
+        seg.raw_blocks.filter((F.col("block_id") <= -10) & F.col("term").isin(terms))
+    ).collect()
+    assert got == sorted((r.term, r.doc_id, tuple(r.positions)) for r in unpruned)
+    assert {t for t, _, _ in got} == {w0, w1}
+
+    pos = {(t, d): set(p) for t, d, p in got}
+    want = {}
+    for (t, d), p in pos.items():
+        if t == w0:
+            n = len({i + 1 for i in p} & pos.get((w1, d), set()))
+            if n:
+                want[d] = n
+    q = spark.createDataFrame(
+        pd.DataFrame({"query_id": [0], "text": [f"{w0} {w1}"]}),
+        schema="query_id long, text string",
+    )
+    rows = phrase_topk(q, seg, k=1000, cfg=cfg).collect()
+    assert want
+    assert {r.doc_id: r.n_occ for r in rows} == want
