@@ -5,22 +5,15 @@ The reference's tokenizer is ``Util::strtok`` + L2 normalize
 whitespace splitting applied per row before quantization. Ours: lowercase,
 split on runs of non-[a-z0-9], drop empties.
 
-Two implementations with identical output:
-
-- :func:`tokens_col` — pure Catalyst expression (JVM-side, whole-stage
-  codegen; the default — faster than any UDF and oracle-parity with
-  DuckDB's ``regexp_split_to_array``).
-- :func:`tokenize_arrow` — Arrow-batched ``pandas_udf`` (the north-star's
-  "vectorized Arrow UDF" form; kept for API parity and as the template for
-  tokenizers Catalyst can't express, e.g. BPE).
+:func:`tokens_col` is a pure Catalyst expression (JVM-side, whole-stage
+codegen; faster than any UDF and oracle-parity with DuckDB's
+``regexp_split_to_array`` through :func:`duckdb_tokens_sql`).
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ivfadc_spark.config import DEFAULT
 
@@ -50,17 +43,6 @@ def tokens_col(
     return F.filter(
         arr,
         lambda t: conds[0](t) if len(conds) == 1 else conds[0](t) & conds[1](t),
-    )
-
-
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def tokenize_arrow(text: pd.Series) -> pd.Series:
-    """Arrow-batched tokenizer; output identical to :func:`tokens_col`."""
-    import re
-
-    pat = re.compile(TOKEN_PATTERN)
-    return text.fillna("").map(
-        lambda s: [t for t in pat.split(s.lower()) if t]
     )
 
 

@@ -141,11 +141,8 @@ def bm25_topk_conjunctive(
     """
     qt = query_terms(queries)
     need = qt.groupBy("query_id").agg(F.count("*").alias("n_need"))  # qt is deduped
-    cand = tf.join(F.broadcast(qt), "term")
-    cand = cand.join(F.broadcast(dictionary.select("term", "idf")), "term")
-    cand = cand.join(dl, "doc_id").withColumn("avgdl", F.lit(float(avgdl)))
     scored = (
-        cand.withColumn("partial", bm25_partial_score(cfg))
+        bm25_partials(qt, tf, dictionary, dl, avgdl, cfg)
         .groupBy("query_id", "doc_id")
         .agg(F.sum("partial").alias("score"), F.count("*").alias("n_match"))
         .join(F.broadcast(need), "query_id")
@@ -172,12 +169,8 @@ def bm25_topk_msm(
     than ``m`` in-vocabulary terms returns nothing (Lucene's unsatisfiable
     rewrite). Same broadcast probe join as the base path plus one COUNT in
     the existing aggregate — no new shuffle."""
-    qt = query_terms(queries)
-    cand = tf.join(F.broadcast(qt), "term")
-    cand = cand.join(F.broadcast(dictionary.select("term", "idf")), "term")
-    cand = cand.join(dl, "doc_id").withColumn("avgdl", F.lit(float(avgdl)))
     scored = (
-        cand.withColumn("partial", bm25_partial_score(cfg))
+        bm25_partials(query_terms(queries), tf, dictionary, dl, avgdl, cfg)
         .groupBy("query_id", "doc_id")
         .agg(F.sum("partial").alias("score"), F.count("*").alias("n_match"))
         .filter(F.col("n_match") >= int(min_should_match))

@@ -11,7 +11,8 @@ Grammar (whitespace-separated clauses, quoted segments first):
 - bare         SHOULD    — matching raises the score
 - ``"a b"``    phrase clause — exact adjacent occurrence (positions index)
 - ``t*``       prefix expansion, ``t~``/``t~N`` fuzzy (Levenshtein <= N<=2),
-  ``/re/``     whole-term-anchored regexp, else exact term
+  ``/re/``     whole-term-anchored regexp, else exact term; one token is
+  classified by :func:`parse_token` (regex > prefix > fuzzy > exact)
 
 Semantics (each rule mirrors the standalone operators, which pin it with
 their own oracles):
@@ -29,17 +30,22 @@ their own oracles):
    (:mod:`positions` twin rows, required only when phrases occur).
 
 Scale shape: parsing is driver-side over the tiny query set (the
-documented broker pattern); expansions are ONE broadcast nested-loop pass
-over the dictionary; candidate postings come from a term-pruned blocks
-decode (only expanded terms' blocks are read); filtering joins touch only
-the candidate set. The reference has none of this (bag-of-cells OR
+documented broker pattern); expansions are ONE dictionary pass
+(:func:`expand_terms`, pushed-down pre-filter when no clause is fuzzy or
+regex); candidate postings come from a term-pruned blocks decode (only
+expanded terms' blocks are read); phrase membership is one
+``phrase_topk`` call per batch; filtering joins touch only the candidate
+set. The reference has none of this (bag-of-cells OR
 queries, /root/reference/SearchEngine.cpp:112-212).
 """
 
 from __future__ import annotations
 
+import functools
+import operator
 import re
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -50,6 +56,31 @@ NOT, MUST, SHOULD = 0, 1, 2
 
 _PHRASE_RE = re.compile(r'([+-]?)"([^"]*)"')
 _CLEAN = re.compile(r"[^a-z0-9]")
+
+
+def parse_token(tok: str) -> dict | None:
+    """Classify one lowercased whitespace token as a clause dict
+    ``{"op", "kind", "p0", "p1"}`` (see :func:`parse_query`), or None for a
+    bare sign. Precedence: ``/re/`` regex > ``t*`` prefix > ``t~N`` fuzzy >
+    exact, so ``ab*~`` is a prefix. A marked token whose stem holds nothing
+    alphanumeric keeps its kind with an empty ``p0``, which matches nothing.
+
+    The one token grammar of the engine: :func:`parse_query` and the
+    multi-term rewrites of :mod:`wand` both classify tokens with it."""
+    sign = tok[:1] if tok[:1] in ("+", "-") else ""
+    body = tok[len(sign):]
+    if not body:
+        return None
+    op = MUST if sign == "+" else NOT if sign == "-" else SHOULD
+    if re.fullmatch(r"/.+/", body):
+        return {"op": op, "kind": "regex", "p0": body[1:-1], "p1": 0}
+    if re.search(r"\*[^a-z0-9]*$", body):
+        return {"op": op, "kind": "prefix", "p0": _CLEAN.sub("", body), "p1": 0}
+    m = re.search(r"~([0-9])?[^a-z0-9]*$", body)
+    if m:
+        dist = min(int(m.group(1) or 1), 2)
+        return {"op": op, "kind": "fuzzy", "p0": _CLEAN.sub("", body[: m.start()]), "p1": dist}
+    return {"op": op, "kind": "exact", "p0": _CLEAN.sub("", body), "p1": 0}
 
 
 def parse_query(text: str) -> list[dict]:
@@ -77,28 +108,9 @@ def parse_query(text: str) -> list[dict]:
 
     rest = _PHRASE_RE.sub(_phrase, text)
     for tok in rest.split():
-        sign = tok[0] if tok[0] in "+-" else ""
-        body = tok[1:] if sign else tok
-        if not body:
-            continue
-        if re.fullmatch(r"/.+/", body):
-            clauses.append({"op": _op(sign), "kind": "regex", "p0": body[1:-1], "p1": 0})
-            continue
-        if re.search(r"\*[^a-z0-9]*$", body):
-            stem = _CLEAN.sub("", body)
-            if stem:
-                clauses.append({"op": _op(sign), "kind": "prefix", "p0": stem, "p1": 0})
-            continue
-        m = re.search(r"~([0-9])?[^a-z0-9]*$", body)
-        if m:
-            stem = _CLEAN.sub("", re.sub(r"~[0-9]?[^a-z0-9]*$", "", body))
-            if stem:
-                dist = min(int(m.group(1) or 1), 2)
-                clauses.append({"op": _op(sign), "kind": "fuzzy", "p0": stem, "p1": dist})
-            continue
-        stem = _CLEAN.sub("", body)
-        if stem:
-            clauses.append({"op": _op(sign), "kind": "exact", "p0": stem, "p1": 0})
+        c = parse_token(tok)
+        if c and c["p0"]:
+            clauses.append(c)
     return clauses
 
 
@@ -110,6 +122,55 @@ def parse_queries(rows: list[tuple[int, str]]) -> list[tuple[int, int, int, str,
         for cid, c in enumerate(parse_query(text)):
             out.append((int(qid), cid, c["op"], c["kind"], c["p0"], c["p1"]))
     return out
+
+
+def expand_terms(segment, clauses: list[tuple]) -> DataFrame:
+    """(query_id, clause_id, op, term, idf, term_bucket): every dictionary
+    term that each (query_id, clause_id, op, kind, p0, p1) exact / prefix /
+    fuzzy / regex clause matches, as :func:`parse_queries` rows — the one
+    multi-term expansion of the engine (Lucene's rewrite: a multi-term
+    clause stands for ANY of its expansions).
+
+    ONE dictionary pass against the broadcast clause rows. When every clause
+    is exact or prefix, the pass is pre-filtered by ``term IN (...) OR
+    startswith(...)``, which pushes down to the dictionary parquet scan
+    (In / StringStartsWith: row-group pruning on the term-sorted
+    dictionary); a fuzzy or regex clause has no such bound, so its pass
+    reads the whole dictionary. Postings are never touched."""
+    from ivfadc_spark.operators.segments import term_bucket_col
+
+    d = segment.dictionary
+    if {c[3] for c in clauses} <= {"exact", "prefix"}:
+        exact = sorted({c[4] for c in clauses if c[3] == "exact"})
+        prefixes = sorted({c[4] for c in clauses if c[3] == "prefix"})
+        preds = [F.col("term").isin(exact)] if exact else []
+        preds += [F.col("term").startswith(p) for p in prefixes]
+        d = d.filter(functools.reduce(operator.or_, preds, F.lit(False)))
+    # a pandas frame goes to the JVM through Arrow in one partition; a list
+    # of tuples would run Python worker tasks to unpickle its rows
+    cl = segment.spark.createDataFrame(
+        pd.DataFrame(list(clauses), columns=["query_id", "clause_id", "op", "kind", "p0", "p1"]),
+        schema="query_id long, clause_id int, op int, kind string, p0 string, p1 int",
+    )
+    cond = (
+        ((F.col("kind") == "exact") & (F.col("term") == F.col("p0")))
+        | ((F.col("kind") == "prefix") & F.col("term").startswith(F.col("p0")))
+        | (
+            (F.col("kind") == "fuzzy")
+            & (F.abs(F.length("term") - F.length("p0")) <= F.col("p1"))
+            & (F.levenshtein(F.col("term"), F.col("p0")) <= F.col("p1"))
+        )
+        | (
+            (F.col("kind") == "regex")
+            & F.regexp_like(
+                F.col("term"), F.concat(F.lit("^"), F.col("p0"), F.lit("$"))
+            )
+        )
+    )
+    return d.join(F.broadcast(cl), cond).select(
+        "query_id", "clause_id", "op", "term", "idf",
+        term_bucket_col(segment.term_buckets).alias("term_bucket"),
+    )
 
 
 def search_topk(
@@ -134,55 +195,24 @@ def search_topk(
         return spark.createDataFrame(
             [], "query_id long, rank int, doc_id long, score double"
         )
-    clauses = spark.createDataFrame(
-        clause_rows, "query_id long, clause_id int, op int, kind string, p0 string, p1 int"
-    )
-    d = segment.dictionary.select("term", "idf")
 
-    # --- per-clause dictionary expansions (one broadcast NL pass; phrase
-    # clauses expand to their constituent terms so membership AND scoring
-    # can reuse the same frame)
-    term_clauses = clauses.filter(F.col("kind") != "phrase")
-    cond = (
-        ((F.col("kind") == "exact") & (F.col("term") == F.col("p0")))
-        | ((F.col("kind") == "prefix") & F.col("term").startswith(F.col("p0")))
-        | (
-            (F.col("kind") == "fuzzy")
-            & (F.abs(F.length("term") - F.length("p0")) <= F.col("p1"))
-            & (F.levenshtein(F.col("term"), F.col("p0")) <= F.col("p1"))
-        )
-        | (
-            (F.col("kind") == "regex")
-            & F.regexp_like(
-                F.col("term"), F.concat(F.lit("^"), F.col("p0"), F.lit("$"))
-            )
-        )
-    )
-    exp = d.join(F.broadcast(term_clauses), cond).select(
-        "query_id", "clause_id", "op", "term", "idf"
-    )
+    # --- expansions of the term clauses, plus the constituent terms of
+    # positive phrases as clause -1 / SHOULD: they score like any positive
+    # term (phrase membership is filtered separately below)
+    phrase_rows = [r for r in clause_rows if r[3] == "phrase"]
+    exp_all = expand_terms(
+        segment,
+        [r for r in clause_rows if r[3] != "phrase"]
+        + [
+            (qid, -1, SHOULD, "exact", t, 0)
+            for qid, cid, op, kind, p0, p1 in phrase_rows
+            if op != NOT
+            for t in p0.split()
+        ],
+    ).select("query_id", "clause_id", "op", "term", "idf")
+    exp = exp_all.filter(F.col("clause_id") >= 0)
 
     # --- candidate postings: ONLY expanded terms' blocks are decoded
-    # (phrase terms ride along for scoring)
-    phrase_rows = [r for r in clause_rows if r[3] == "phrase"]
-    pterms = [
-        (qid, cid, op, t)
-        for qid, cid, op, kind, p0, p1 in phrase_rows
-        for t in p0.split()
-    ]
-    if pterms:
-        pterm_df = spark.createDataFrame(
-            pterms, "query_id long, clause_id int, op int, term string"
-        ).join(F.broadcast(d), "term")
-        # positive phrases contribute their terms to SCORING (op SHOULD);
-        # membership is handled separately below
-        exp_score_extra = (
-            pterm_df.filter(F.col("op") != NOT)
-            .select("query_id", F.lit(-1).alias("clause_id"), F.lit(SHOULD).alias("op"), "term", "idf")
-        )
-        exp_all = exp.unionByName(exp_score_extra)
-    else:
-        exp_all = exp
     probe_terms = exp_all.select("term").distinct()
     tf = (
         decode_blocks(
@@ -218,26 +248,33 @@ def search_topk(
         .agg(F.countDistinct("clause_id").alias("n_must_have"))
     )
 
-    # --- phrase membership (exact adjacency, the phrase_topk kernel)
-    ph_have = None  # membership of MUST phrases only (SHOULD phrases
-    ph_not = None   # score via their terms and never filter)
-    if phrase_rows:
+    # --- phrase membership (exact adjacency, the phrase_topk kernel): ONE
+    # call over every MUST / MUST_NOT phrase of the batch, keyed by clause
+    # index; SHOULD phrases score via their terms and never filter
+    filt = [r for r in phrase_rows if r[2] != SHOULD]
+    if filt:
         from ivfadc_spark.operators.positions import phrase_topk
 
-        for qid, cid, op, kind, p0, p1 in phrase_rows:
-            if op == SHOULD:
-                continue
-            pq = spark.createDataFrame(
-                [(int(qid), p0)], "query_id long, text string"
+        pq = spark.createDataFrame(
+            pd.DataFrame({"query_id": range(len(filt)), "text": [r[4] for r in filt]}),
+            schema="query_id long, text string",
+        )
+        # clause index -> (query_id, clause_id, op): a literal map, no join
+        clause_of = F.create_map(*[
+            x
+            for i, (qid, cid, op, *_) in enumerate(filt)
+            for x in (
+                F.lit(i),
+                F.struct(
+                    F.lit(int(qid)).cast("long").alias("query_id"),
+                    F.lit(cid).alias("clause_id"),
+                    F.lit(op).alias("op"),
+                ),
             )
-            hits = phrase_topk(pq, segment, k=1 << 30, cfg=cfg).select(
-                "query_id", "doc_id"
-            )
-            if op == NOT:
-                ph_not = hits if ph_not is None else ph_not.unionByName(hits)
-            else:
-                h = hits.withColumn("clause_id", F.lit(int(cid)))
-                ph_have = h if ph_have is None else ph_have.unionByName(h)
+        ])
+        ph_hits = phrase_topk(pq, segment, k=1 << 30, cfg=cfg).select(
+            "doc_id", clause_of[F.col("query_id").cast("int")].alias("c")
+        ).select("c.*", "doc_id")
 
     # must totals per query: EVERY must clause counts, even ones with an
     # empty expansion (unmatchable -> the query returns nothing)
@@ -258,8 +295,8 @@ def search_topk(
     out = out.join(have_must, ["query_id", "doc_id"], "left").fillna(
         0, subset=["n_must_have"]
     )
-    if ph_have is not None:
-        pm = ph_have.groupBy("query_id", "doc_id").agg(
+    if n_pmust:
+        pm = ph_hits.filter(F.col("op") == MUST).groupBy("query_id", "doc_id").agg(
             F.countDistinct("clause_id").alias("n_pmust_have")
         )
         out = out.join(pm, ["query_id", "doc_id"], "left").fillna(
@@ -275,8 +312,9 @@ def search_topk(
     # --- exclusions: any NOT term expansion or NOT phrase occurrence
     not_exp = exp.filter(F.col("op") == NOT).select("query_id", "term")
     excl = tf.join(F.broadcast(not_exp), "term").select("query_id", "doc_id").distinct()
-    if ph_not is not None:
-        excl = excl.unionByName(ph_not.select("query_id", "doc_id")).distinct()
+    if any(r[2] == NOT for r in filt):
+        ph_not = ph_hits.filter(F.col("op") == NOT).select("query_id", "doc_id")
+        excl = excl.unionByName(ph_not).distinct()
     out = out.join(excl, ["query_id", "doc_id"], "left_anti")
 
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))

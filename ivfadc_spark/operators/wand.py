@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from ivfadc_spark.config import DEFAULT, EngineConfig
 from ivfadc_spark.functions.codecs import varint_decode
 from ivfadc_spark.operators.query import query_terms
+from ivfadc_spark.operators.queryparse import SHOULD, expand_terms, parse_token
 from ivfadc_spark.operators.segments import Segment, term_bucket_col
 
 RESULT_SCHEMA = "query_id long, rank int, doc_id long, score double"
@@ -733,19 +734,49 @@ def _topk_scan_from_qt(
     return cand.mapInPandas(scan, RESULT_SCHEMA)
 
 
-def _plain_terms(toks: DataFrame, marked: str, d: DataFrame) -> DataFrame:
-    """(query_id, term, idf) of a multi-term rewrite's unmarked ``tok``
-    rows (whitespace tokens whose ``marked`` column is false), analyzed by
-    ``tokens_col`` exactly as :func:`bm25_topk_indexed` analyzes a query,
-    OOV terms dropped."""
-    from ivfadc_spark.functions.tokenize import tokens_col
+def _rewrite_topk(
+    queries: DataFrame,
+    segment: Segment,
+    kind: str,
+    k: int | None,
+    cfg: EngineConfig,
+    doc_mask: "np.ndarray | None",
+) -> DataFrame:
+    """Shared body of the multi-term rewrites (Lucene's scoring rewrite):
+    the query-sized (query_id, text) rows are collected on the driver and
+    each lowercased whitespace token is classified by
+    :func:`queryparse.parse_token`. Tokens of ``kind`` expand through
+    :func:`queryparse.expand_terms`; every other token is plain text,
+    analyzed and idf-resolved exactly as in :func:`bm25_topk_indexed`
+    (term-pruned lookup, no dictionary join). Every expanded term scores
+    with its OWN idf, deduped per query, so a term never counts twice even
+    when several tokens match it; the (query_id, term) set then drives the
+    shared block-pruned MaxScore scan."""
+    from ivfadc_spark.operators.deletes import combine_masks, live_mask
 
-    return (
-        toks.filter(~F.col(marked))
-        .select("query_id", F.explode(tokens_col("tok")).alias("term"))
-        .join(F.broadcast(d), "term")
-        .select("query_id", "term", "idf")
-    )
+    k = k or cfg.top_k
+    _lm = combine_masks(live_mask(segment), doc_mask)
+    clauses, plain = [], []
+    for r in queries.select("query_id", "text").collect():
+        for tok in (r["text"] or "").lower().split():
+            c = parse_token(tok)
+            if c is None or c["kind"] != kind:
+                plain.append((r["query_id"], tok))
+            elif c["p0"]:
+                clauses.append((r["query_id"], len(clauses), SHOULD, kind, c["p0"], c["p1"]))
+    parts = []
+    if plain:
+        plain_df = segment.spark.createDataFrame(
+            pd.DataFrame(plain, columns=["query_id", "text"]), schema="query_id long, text string"
+        )
+        parts.append(_resolve_query_terms(plain_df, segment))
+    if clauses:
+        exp = expand_terms(segment, clauses).select("query_id", "term", "idf", "term_bucket")
+        parts.append(exp.toPandas())
+    parts = [p for p in parts if len(p)]
+    qt = pd.concat(parts).drop_duplicates(["query_id", "term"]) if parts else pd.DataFrame()
+    avgdl = float(segment.meta["avgdl"])
+    return _topk_scan_from_qt(segment, qt, k, float(cfg.k1), float(cfg.b), avgdl, _lm)
 
 
 def prefix_topk(
@@ -755,62 +786,12 @@ def prefix_topk(
     cfg: EngineConfig = DEFAULT,
     doc_mask: "np.ndarray | None" = None,
 ) -> DataFrame:
-    """Top-k BM25 with Lucene-style trailing-wildcard terms (``quer*``).
-
-    Query text is whitespace-split; a token ending in ``*`` is a PREFIX and
-    expands against the term dictionary (Lucene's scoring multi-term
-    rewrite: every expanded term scores with its OWN idf, deduped per query
-    so a term never counts twice even when several prefixes or an exact
-    token also match it). Plain tokens behave exactly as in
-    :func:`bm25_topk_indexed`.
-
-    Scale shape: expansion never touches postings — the prefix set is query
-    metadata (collected driver-side, the documented broker pattern) and
-    becomes ONE filtered pass over the dictionary; ``startswith`` pushes to
-    the parquet scan as StringStartsWith, so a term-sorted dictionary gets
-    row-group range pruning for free. The expanded (query_id, term) set
-    then drives the same block-pruned MaxScore scan as exact search.
-    """
-    from ivfadc_spark.operators.deletes import combine_masks, live_mask
-
-    k = k or cfg.top_k
-    k1, b = float(cfg.k1), float(cfg.b)
-    avgdl = float(segment.meta["avgdl"])
-    _lm = combine_masks(live_mask(segment), doc_mask)
-
-    toks = (
-        queries.select(
-            "query_id",
-            F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("tok"),
-        )
-        # a token is a prefix when a star ends its alphanumeric part —
-        # trailing punctuation after the star ("quer*," at a clause end)
-        # must not demote it to an exact term
-        .withColumn("is_prefix", F.col("tok").rlike(r"\*[^a-z0-9]*$"))
-        .withColumn("stem", F.regexp_replace("tok", "[^a-z0-9]", ""))
-        .select("query_id", "tok", "stem", "is_prefix")
-        .distinct()
-    )
-    d = segment.dictionary.select("term", "idf")
-    exact = _plain_terms(toks, "is_prefix", d)
-    pref = toks.filter(F.col("is_prefix") & (F.length("stem") > 0))
-    prefixes = [r["stem"] for r in pref.select("stem").distinct().collect()]
-    if prefixes:
-        pred = None
-        for p in prefixes:
-            c = F.col("term").startswith(p)
-            pred = c if pred is None else (pred | c)
-        pref_df = pref.select("query_id", F.col("stem").alias("p"))
-        expanded = (
-            d.filter(pred)  # one dictionary pass, predicate pushed to scan
-            .join(F.broadcast(pref_df), F.col("term").startswith(F.col("p")))
-            .select("query_id", "term", "idf")
-        )
-        qt = exact.unionByName(expanded).distinct()
-    else:
-        qt = exact.distinct()
-    qt = qt.withColumn("term_bucket", term_bucket_col(segment.term_buckets))
-    return _topk_scan_from_qt(segment, qt.toPandas(), k, k1, b, avgdl, _lm)
+    """Top-k BM25 with Lucene-style trailing-wildcard terms (``quer*``,
+    trailing punctuation after the star tolerated): each expands to every
+    dictionary term it starts, through :func:`_rewrite_topk`. The prefixes
+    push down to the dictionary scan as StringStartsWith, so a term-sorted
+    dictionary gets row-group range pruning."""
+    return _rewrite_topk(queries, segment, "prefix", k, cfg, doc_mask)
 
 
 def fuzzy_topk(
@@ -820,75 +801,13 @@ def fuzzy_topk(
     cfg: EngineConfig = DEFAULT,
     doc_mask: "np.ndarray | None" = None,
 ) -> DataFrame:
-    """Top-k BM25 with Lucene fuzzy terms (``spakr~`` or ``spakr~2``).
-
-    Query text is whitespace-split; a token ending in ``~`` (optionally
-    ``~N``, N capped at 2, default 1) is FUZZY and expands to every
-    dictionary term within plain Levenshtein distance N — Lucene's scoring
-    multi-term rewrite, same as :func:`prefix_topk`: each expanded term
-    scores with its OWN idf, deduped per query (the stem itself matches at
-    distance 0). Plain tokens behave exactly as in ``bm25_topk_indexed``.
-
-    Scale shape: fully declarative — the tiny fuzzy stem set broadcasts
-    against ONE dictionary pass (a broadcast nested-loop join with a
-    length-band prune ahead of the levenshtein evaluation; the postings
-    are never touched by expansion). Lucene walks its term FST with a
-    Levenshtein automaton to the same effect — here the O(vocabulary)
-    columnar scan is the Spark-native equivalent, and the vocabulary is
-    corpus-bounded, not corpus-sized. The expanded (query_id, term) set
-    then drives the shared block-pruned MaxScore scan.
-    """
-    from ivfadc_spark.operators.deletes import combine_masks, live_mask
-
-    k = k or cfg.top_k
-    k1, b = float(cfg.k1), float(cfg.b)
-    avgdl = float(segment.meta["avgdl"])
-    _lm = combine_masks(live_mask(segment), doc_mask)
-
-    toks = (
-        queries.select(
-            "query_id",
-            F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("tok"),
-        )
-        # the ~[N] marker ends the token (trailing punctuation tolerated,
-        # mirroring prefix_topk); strip it BEFORE the alnum squeeze so
-        # "term~1" never collapses to the unrelated stem "term1"
-        .withColumn("is_fuzzy", F.col("tok").rlike(r"~[0-9]?[^a-z0-9]*$"))
-        .withColumn(
-            "dist",
-            F.least(
-                F.coalesce(
-                    F.nullif(
-                        F.regexp_extract("tok", r"~([0-9])[^a-z0-9]*$", 1), F.lit("")
-                    ).cast("int"),
-                    F.lit(1),
-                ),
-                F.lit(2),
-            ),
-        )
-        .withColumn(
-            "stem",
-            F.regexp_replace(
-                F.regexp_replace("tok", r"~[0-9]?[^a-z0-9]*$", ""), "[^a-z0-9]", ""
-            ),
-        )
-        .select("query_id", "tok", "stem", "is_fuzzy", "dist")
-        .distinct()
-    )
-    d = segment.dictionary.select("term", "idf")
-    exact = _plain_terms(toks, "is_fuzzy", d)
-    fz = toks.filter(F.col("is_fuzzy") & (F.length("stem") > 0)).select(
-        "query_id", F.col("stem").alias("s"), "dist"
-    )
-    expanded = d.join(
-        F.broadcast(fz),
-        (F.abs(F.length("term") - F.length("s")) <= F.col("dist"))
-        & (F.levenshtein(F.col("term"), F.col("s")) <= F.col("dist")),
-    ).select("query_id", "term", "idf")
-    qt = exact.unionByName(expanded).distinct().withColumn(
-        "term_bucket", term_bucket_col(segment.term_buckets)
-    )
-    return _topk_scan_from_qt(segment, qt.toPandas(), k, k1, b, avgdl, _lm)
+    """Top-k BM25 with Lucene fuzzy terms (``spakr~`` or ``spakr~2``; N
+    capped at 2, default 1): each expands to every dictionary term within
+    plain Levenshtein distance N (the stem itself at distance 0), through
+    :func:`_rewrite_topk`. Lucene walks its term FST with a Levenshtein
+    automaton; here the expansion is one length-band-pruned columnar pass
+    over the corpus-bounded vocabulary."""
+    return _rewrite_topk(queries, segment, "fuzzy", k, cfg, doc_mask)
 
 
 def mlt_topk(
@@ -910,9 +829,10 @@ def mlt_topk(
     the index — postings are term-major, so reading a doc's vector from
     blocks would scan every term, while ``docs.filter(doc_id IN seeds)``
     is a predicate-pushdown point lookup (Lucene reads its stored
-    per-doc term vectors to the same end). Seed stats are seed-sized,
-    idf comes from the broadcast dictionary, and the expanded
-    (query_id, term) set drives the shared block-pruned MaxScore scan.
+    per-doc term vectors to the same end). The seed-sized (seed, term, tf)
+    rows are collected, their idf resolved by the term-pruned
+    :func:`_idf_lookup` (no dictionary join), and the (query_id, term) set
+    drives the shared block-pruned MaxScore scan.
     """
     from pyspark.sql.window import Window
 
@@ -931,18 +851,16 @@ def mlt_topk(
         seeds.select("query_id", F.explode(tokens_col("text")).alias("term"))
         .groupBy("query_id", "term")
         .agg(F.count("*").cast("double").alias("tf"))
+        .toPandas()
     )
-    w = stf.join(
-        F.broadcast(segment.dictionary.select("term", "idf")), "term"
-    ).withColumn("weight", F.col("tf") * F.col("idf"))
-    sel = Window.partitionBy("query_id").orderBy(F.desc("weight"), F.asc("term"))
+    w = stf.merge(_idf_lookup(segment, sorted(set(stf["term"]))).toPandas(), on="term")
     qt = (
-        w.withColumn("rn", F.row_number().over(sel))
-        .filter(F.col("rn") <= int(max_terms))
-        .select("query_id", "term", "idf")
-        .withColumn("term_bucket", term_bucket_col(segment.term_buckets))
+        w.assign(weight=w["tf"] * w["idf"])
+        .sort_values(["query_id", "weight", "term"], ascending=[True, False, True])
+        .groupby("query_id")
+        .head(int(max_terms))
     )
-    res = _topk_scan_from_qt(segment, qt.toPandas(), k + 1, k1, b, avgdl, _lm)
+    res = _topk_scan_from_qt(segment, qt, k + 1, k1, b, avgdl, _lm)
     rerank = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (
         res.filter(F.col("doc_id") != F.col("query_id"))  # k+1 absorbs the self-hit
@@ -1056,54 +974,10 @@ def regex_topk(
     cfg: EngineConfig = DEFAULT,
     doc_mask: "np.ndarray | None" = None,
 ) -> DataFrame:
-    """Top-k BM25 with Lucene RegexpQuery terms: a whitespace token wrapped
-    in slashes (``/sc.n/``) expands to every dictionary term whose ENTIRE
-    text matches the pattern (anchored ``^pat$`` — Lucene regexp semantics);
-    plain tokens behave exactly as in ``bm25_topk_indexed``. Same scoring
-    multi-term rewrite as :func:`prefix_topk` / :func:`fuzzy_topk`: each
-    expansion scores with its own idf, deduped per query.
-
-    Scale shape: fully declarative — the tiny pattern set broadcasts
-    against ONE dictionary pass (a broadcast nested-loop join evaluating
-    regexp_like per (term, pattern)); postings are never touched by
-    expansion, and the expanded set drives the shared block-pruned
-    MaxScore scan. Lucene compiles the regex to an automaton and
-    intersects it with the term FST — the O(vocabulary) columnar scan is
-    the Spark-native equivalent over a corpus-bounded vocabulary.
-    """
-    from ivfadc_spark.operators.deletes import combine_masks, live_mask
-
-    k = k or cfg.top_k
-    k1, b = float(cfg.k1), float(cfg.b)
-    avgdl = float(segment.meta["avgdl"])
-    _lm = combine_masks(live_mask(segment), doc_mask)
-
-    toks = (
-        queries.select(
-            "query_id",
-            F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("tok"),
-        )
-        .withColumn(
-            "is_re", F.col("tok").rlike("^/.+/$")
-        )
-        .withColumn(
-            "pat",
-            F.concat(
-                F.lit("^"),
-                F.expr("substring(tok, 2, length(tok) - 2)"),
-                F.lit("$"),
-            ),
-        )
-        .select("query_id", "tok", "is_re", "pat")
-        .distinct()
-    )
-    d = segment.dictionary.select("term", "idf")
-    exact = _plain_terms(toks, "is_re", d)
-    pats = toks.filter("is_re").select("query_id", "pat")
-    expanded = d.join(
-        F.broadcast(pats), F.regexp_like(F.col("term"), F.col("pat"))
-    ).select("query_id", "term", "idf")
-    qt = exact.unionByName(expanded).distinct().withColumn(
-        "term_bucket", term_bucket_col(segment.term_buckets)
-    )
-    return _topk_scan_from_qt(segment, qt.toPandas(), k, k1, b, avgdl, _lm)
+    """Top-k BM25 with Lucene RegexpQuery terms: a slash-wrapped token
+    (``/sc.n/``, optionally signed) expands to every dictionary term whose
+    ENTIRE text matches the pattern (anchored ``^pat$`` — Lucene regexp
+    semantics), through :func:`_rewrite_topk`. Lucene intersects the
+    regex automaton with its term FST; here the expansion is one columnar
+    pass over the corpus-bounded vocabulary."""
+    return _rewrite_topk(queries, segment, "regex", k, cfg, doc_mask)

@@ -14,7 +14,9 @@ The indexed BM25 path is pinned the same way: a 1-query call on a reused
 dictionary and scans in one stage with no exchange; a batch still
 hash-partitions its blocks by query. Opening a ``Segment`` or a
 ``SegmentSet`` runs no job at all, and a merge carries its first member's
-files instead of reading them.
+files instead of reading them. A multi-term rewrite with only plain tokens
+reads the dictionary through the term-pruned idf lookup alone, and
+``search_topk`` filters a batch's phrases with one ``phrase_topk`` call.
 """
 
 import itertools
@@ -315,3 +317,106 @@ def test_positional_term_buckets_run_no_job(spark, tmp_path):
     rows = phrase_topk(q, seg, k=1000, cfg=cfg).collect()
     assert want
     assert {r.doc_id: r.n_occ for r in rows} == want
+
+
+# ---- multi-term rewrites and the query parser ------------------------------
+
+
+def _sql_plans(spark, fn):
+    """(fn(), physical plan descriptions of the SQL executions ``fn`` ran)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    n0 = store.executionsList().size()
+    out = fn()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    ex = store.executionsList()
+    return out, [ex.apply(i).physicalPlanDescription() for i in range(n0, ex.size())]
+
+
+@pytest.mark.parametrize("rewrite", ["prefix_topk", "fuzzy_topk", "regex_topk"])
+def test_rewrite_plain_tokens_are_term_pruned(spark, bm25_seg, rewrite):
+    """A rewrite whose query holds only plain tokens reads the dictionary
+    only through the term-pruned idf lookup (``In(term`` pushed down, no
+    dictionary join) and runs at most one job more than
+    bm25_topk_indexed on the same query."""
+    from ivfadc_spark.operators import wand
+
+    seg, cfg = bm25_seg
+    texts = ["term000 headterm term017"]
+    q = spark.createDataFrame(
+        pd.DataFrame({"query_id": [0], "text": texts}), schema="query_id long, text string"
+    )
+    want, want_jobs, _ = _run_in_group(spark, lambda: _topk(spark, seg, cfg, texts).collect())
+
+    def call():
+        return _sql_plans(spark, lambda: getattr(wand, rewrite)(q, seg, k=5, cfg=cfg).collect())
+
+    (got, plans), jobs, stages = _run_in_group(spark, call)
+    assert got == want and got
+    assert len(jobs) <= len(want_jobs) + 1, stages
+    # a plan's node details are blank-line separated; dictionary scans are
+    # the ones reading idf
+    dict_scans = [
+        node
+        for plan in plans
+        for node in plan.split("\n\n")
+        if "Scan parquet" in node and "idf:double" in node
+    ]
+    assert dict_scans, plans
+    for node in dict_scans:
+        assert "In(term, [" in node.split("PushedFilters:")[1].splitlines()[0], node
+    assert not [p for p in plans if "NestedLoopJoin" in p], plans
+
+
+@pytest.fixture(scope="module")
+def pos_seg(spark, tmp_path_factory):
+    from ivfadc_spark.config import EngineConfig
+    from ivfadc_spark.plans.build_index import build_index
+    from ivfadc_spark.sources.transcripts import synth_transcripts
+
+    cfg = EngineConfig(block_size=16, with_positions=1)
+    out = str(tmp_path_factory.mktemp("plan_pos"))
+    return build_index(spark, synth_transcripts(spark, n_conversations=40), out, cfg=cfg), cfg
+
+
+def test_search_phrases_filter_in_one_call(spark, pos_seg):
+    """Every MUST / MUST_NOT phrase of a batch filters through ONE
+    phrase_topk call: the rows equal the per-clause filtering, and a batch
+    with three filtering phrases runs fewer jobs than the 34 that one query
+    with two phrase clauses ran when each clause made its own call."""
+    from ivfadc_spark.operators.positions import phrase_topk
+    from ivfadc_spark.operators.queryparse import search_topk
+
+    seg, cfg = pos_seg
+
+    def q(rows):
+        return spark.createDataFrame(
+            pd.DataFrame(rows, columns=["query_id", "text"]), schema="query_id long, text string"
+        )
+
+    def members(text):
+        return {r.doc_id for r in phrase_topk(q([(0, text)]), seg, k=1 << 30, cfg=cfg).collect()}
+
+    a, b = "term000 headterm", "term001 term000"
+    ma, mb = members(a), members(b)
+    assert ma - mb and ma & mb and mb
+
+    texts = [(0, f'+"{a}" -"{b}" term003'), (1, f'+"{b}" headterm')]
+    got, jobs, stages = _run_in_group(
+        spark,
+        lambda: search_topk(q(texts), seg, k=1 << 20, cfg=cfg)
+        .orderBy("query_id", "rank")
+        .collect(),
+    )
+    assert len(jobs) < 34, stages
+
+    # per clause: the same queries with the phrases as SHOULD clauses (a
+    # NOT phrase's terms never score), filtered by each phrase's members
+    base = (
+        search_topk(q([(0, f'"{a}" term003'), (1, f'"{b}" headterm')]), seg, k=1 << 20, cfg=cfg)
+        .orderBy("query_id", "rank")
+        .collect()
+    )
+    keep = {0: lambda d: d in ma and d not in mb, 1: lambda d: d in mb}
+    want = [(r.query_id, r.doc_id, r.score) for r in base if keep[r.query_id](r.doc_id)]
+    assert {w[0] for w in want} == {0, 1}
+    assert [(r.query_id, r.doc_id, r.score) for r in got] == want

@@ -9,7 +9,14 @@ import pandas as pd
 import pytest
 
 from ivfadc_spark.config import EngineConfig
-from ivfadc_spark.operators.queryparse import MUST, NOT, SHOULD, parse_query, search_topk
+from ivfadc_spark.operators.queryparse import (
+    MUST,
+    NOT,
+    SHOULD,
+    parse_query,
+    parse_token,
+    search_topk,
+)
 from ivfadc_spark.plans.build_index import build_index
 from ivfadc_spark.sources.transcripts import synth_transcripts
 
@@ -79,14 +86,62 @@ def test_search_equals_boolean_path(spark, seg):
     np.testing.assert_allclose(got["score"], want["score"], rtol=1e-12)
 
 
-def test_search_equals_prefix_path(spark, seg):
-    from ivfadc_spark.operators.wand import prefix_topk
+@pytest.mark.parametrize(
+    "rewrite, texts",
+    [
+        ("prefix_topk", ["term00* headterm", "term01* term003 term00*"]),
+        ("fuzzy_topk", ["term001~ headterm", "term012~2 term003"]),
+        ("regex_topk", ["/term00./ headterm", "/term0[12]./ term003"]),
+    ],
+    ids=["prefix_topk", "fuzzy_topk", "regex_topk"],
+)
+def test_search_equals_prefix_path(spark, seg, rewrite, texts):
+    """Each multi-term rewrite equals search_topk on all-SHOULD queries of
+    its own kind mixed with plain tokens: one grammar, one expansion."""
+    from ivfadc_spark.operators import wand
 
-    qdf = _qdf(spark, [(0, "term00* headterm")])
-    got = search_topk(qdf, seg, k=10, cfg=CFG).orderBy("rank").toPandas()
-    want = prefix_topk(qdf, seg, k=10, cfg=CFG).orderBy("rank").toPandas()
+    qdf = _qdf(spark, list(enumerate(texts)))
+    got = search_topk(qdf, seg, k=10, cfg=CFG).orderBy("query_id", "rank").toPandas()
+    want = getattr(wand, rewrite)(qdf, seg, k=10, cfg=CFG).orderBy("query_id", "rank").toPandas()
+    assert set(want["query_id"]) == {0, 1}
+    assert list(got["query_id"]) == list(want["query_id"])
     assert list(got["doc_id"]) == list(want["doc_id"])
     np.testing.assert_allclose(got["score"], want["score"], rtol=1e-12)
+
+
+def test_parse_token_signs_and_precedence():
+    assert parse_token("+/sc.n/") == {"op": MUST, "kind": "regex", "p0": "sc.n", "p1": 0}
+    assert parse_token("-quer*") == {"op": NOT, "kind": "prefix", "p0": "quer", "p1": 0}
+    assert parse_token("+tabl~2,") == {"op": MUST, "kind": "fuzzy", "p0": "tabl", "p1": 2}
+    assert parse_token("-spark") == {"op": NOT, "kind": "exact", "p0": "spark", "p1": 0}
+    # regex > prefix > fuzzy > exact
+    assert parse_token("/ab*~/")["kind"] == "regex"
+    assert parse_token("ab*~") == {"op": SHOULD, "kind": "prefix", "p0": "ab", "p1": 0}
+    assert parse_token("ab~*")["kind"] == "prefix"
+    assert parse_token("a~b") == {"op": SHOULD, "kind": "exact", "p0": "ab", "p1": 0}
+    # a bare sign is no clause; a marker with no stem keeps its kind, empty
+    assert parse_token("+") is None and parse_token("-") is None
+    assert parse_token("*") == {"op": SHOULD, "kind": "prefix", "p0": "", "p1": 0}
+    assert parse_query("* ~ -") == []
+
+
+def test_rewrites_follow_the_one_grammar(spark, seg):
+    """A signed slash token is a regex in regex_topk; ``ab*~`` is a prefix
+    token, so fuzzy_topk keeps it as plain text for the analyzer."""
+    from ivfadc_spark.operators.wand import bm25_topk_indexed, fuzzy_topk, regex_topk
+
+    def rows(df):
+        return df.orderBy("query_id", "rank").toPandas()[["query_id", "doc_id", "score"]]
+
+    signed = rows(regex_topk(_qdf(spark, [(0, "+/term00./")]), seg, k=10, cfg=CFG))
+    assert len(signed) > 0
+    pd.testing.assert_frame_equal(
+        signed, rows(regex_topk(_qdf(spark, [(0, "/term00./")]), seg, k=10, cfg=CFG))
+    )
+    got = rows(fuzzy_topk(_qdf(spark, [(0, "term00*~ headterm")]), seg, k=10, cfg=CFG))
+    want = rows(bm25_topk_indexed(_qdf(spark, [(0, "term00 headterm")]), seg, k=10, cfg=CFG))
+    assert len(want) > 0
+    pd.testing.assert_frame_equal(got, want)
 
 
 def test_phrase_must_filters_and_scores(spark, seg):
