@@ -8,7 +8,8 @@ re-expressed as a dataclass with CLI/JSON loading. Knob mapping:
 - ``nsq``/``nsqbits`` (code budget)  -> ``block_size`` posting-block budget
 - ``ma`` (multi-assignment)          -> query terms (data-driven)
 - ``num_ret``                        -> ``top_k``
-- ``nt`` (threads)                   -> spark.sql.shuffle.partitions / master
+- ``nt`` (threads)                   -> ``session.get_spark(master=,
+  shuffle_partitions=)``, not a config field
 """
 
 from __future__ import annotations
@@ -24,10 +25,6 @@ class EngineConfig:
     k1: float = 1.2
     b: float = 0.75
     top_k: int = 10  # reference default num_ret (/root/reference/config.h:91,98)
-
-    # tokenizer: lowercase, split on non-[a-z0-9] runs, drop empties.
-    # Must stay expressible in both Spark SQL and DuckDB SQL (oracle parity).
-    token_pattern: str = "[^a-z0-9]+"
 
     # analyzer options (the Lucene StopFilter / LengthFilter analog),
     # applied AFTER tokenization and BEFORE any counting — so dl, tf, df,
@@ -65,13 +62,12 @@ class EngineConfig:
     encode_chunk_tokens: int = 1 << 19
 
     # fused positional postings: when 1, stage 01 ALSO emits positional
-    # twin rows (block_id = -10 - block_id, token offsets varint-encoded in
+    # twin rows (postings.twin_block_id, token offsets varint-encoded in
     # the v3-unused dls column) from the SAME tokenize pass — phrase search
     # without a second corpus pass. 0 (default) leaves the build untouched.
     with_positions: int = 0
 
     # layout
-    shuffle_partitions: int = 32
     term_buckets: int = 64  # postings dataset partition key = hash(term) % buckets
 
     extra: dict = field(default_factory=dict)
@@ -92,11 +88,14 @@ class EngineConfig:
 
     @classmethod
     def from_json(cls, s: str) -> "EngineConfig":
+        """Inverse of :meth:`to_json`. Keys that are not fields (e.g. ones a
+        segment's meta.json recorded before a field was removed) go to
+        ``extra``."""
         raw = json.loads(s)
-        known = {f.name for f in fields(cls)}
+        known = {f.name for f in fields(cls)} - {"extra"}
         kw = {k: v for k, v in raw.items() if k in known}
-        kw.setdefault("extra", {k: v for k, v in raw.items() if k not in known})
-        return cls(**kw)
+        extra = {k: v for k, v in raw.items() if k not in known and k != "extra"}
+        return cls(**kw, extra={**(raw.get("extra") or {}), **extra})
 
     @classmethod
     def from_params(cls, text: str) -> "EngineConfig":

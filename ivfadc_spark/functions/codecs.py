@@ -159,9 +159,23 @@ def delta_encode(sorted_ids: np.ndarray) -> bytes:
     return varint_encode(d)
 
 
+def delta_decode_runs(buf, counts) -> np.ndarray:
+    """Absolute int64 values of concatenated delta-varint runs whose first
+    value is absolute (``counts[i]`` values in run i) — one segmented
+    cumsum reset at every run start. A posting block is one run; a
+    positional twin row holds one run per posting (tf offsets each)."""
+    counts = np.asarray(counts, dtype=np.int64)
+    c = np.cumsum(varint_decode(buf, int(counts.sum())).astype(np.int64))
+    if c.size == 0:
+        return c
+    starts = np.cumsum(counts) - counts
+    base = np.where(starts > 0, c[starts - 1], 0)
+    return c - np.repeat(base, counts)
+
+
 def delta_decode(buf: bytes, expected: int | None = None) -> np.ndarray:
-    """Inverse of :func:`delta_encode` — returns int64 docIDs."""
-    d = varint_decode(buf, expected)
-    if d.size == 0:
-        return np.zeros(0, dtype=np.int64)
-    return np.cumsum(d.astype(np.int64))
+    """Inverse of :func:`delta_encode` — returns int64 docIDs; the one-run
+    case of :func:`delta_decode_runs`."""
+    if expected is None:
+        expected = int(np.count_nonzero(np.frombuffer(buf, dtype=np.uint8) < 0x80))
+    return delta_decode_runs(buf, [expected])

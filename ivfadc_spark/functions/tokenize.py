@@ -15,9 +15,10 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ivfadc_spark.config import DEFAULT
-
-TOKEN_PATTERN = DEFAULT.token_pattern
+# the one tokenizer of builds and queries: lowercase, split on runs of
+# non-[a-z0-9], drop empties. Must stay expressible in both Spark SQL and
+# DuckDB SQL (oracle parity).
+TOKEN_PATTERN = "[^a-z0-9]+"
 
 
 def tokens_col(

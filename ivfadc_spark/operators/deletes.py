@@ -43,10 +43,20 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ivfadc_spark.functions.codecs import varint_decode, varint_encode
+from ivfadc_spark.functions.codecs import delta_decode, delta_encode, varint_decode, varint_encode
+from ivfadc_spark.operators.postings import decode_blocks, is_sentinel, is_twin
 from ivfadc_spark.operators.segments import Segment, SegmentSet, _idf_col, read_dataset
 
 TOMBSTONES = "tombstones"
+
+
+def _doc_id_frame(spark: SparkSession, ids) -> DataFrame:
+    """A small driver-side (doc_id long) frame. Built from pandas, it goes to
+    the JVM through Arrow as one local relation; a list of tuples would
+    run Python worker tasks to unpickle its rows."""
+    return spark.createDataFrame(
+        pd.DataFrame({"doc_id": np.asarray(ids, dtype=np.int64)}), "doc_id long"
+    )
 
 
 def delete_docs(segment: Segment, doc_ids: "Iterable[int] | DataFrame") -> int:
@@ -58,7 +68,7 @@ def delete_docs(segment: Segment, doc_ids: "Iterable[int] | DataFrame") -> int:
     if isinstance(doc_ids, DataFrame):
         df = doc_ids.select(F.col("doc_id").cast("long"))
     else:
-        df = spark.createDataFrame([(int(x),) for x in doc_ids], "doc_id long")
+        df = _doc_id_frame(spark, [int(x) for x in doc_ids])
     path = os.path.join(segment.path, TOMBSTONES)
     n = df.count()
     df.write.mode("append").parquet(path)
@@ -151,52 +161,34 @@ def compact_segment(
     def rewrite(batches):
         dd = bc_dead.value
         for pdf in batches:
-            if not len(pdf):
-                continue
             out_rows = []
             for row in pdf.itertuples(index=False):
                 n = int(row.n)
-                ids = np.cumsum(varint_decode(bytes(row.doc_ids), n).astype(np.int64))
+                ids = delta_decode(row.doc_ids, n)
                 lv = ~np.isin(ids, dd)
                 if not lv.any():
                     continue  # block fully deleted
-                has_tfs = len(row.tfs) > 0
-                tfs = (
-                    varint_decode(bytes(row.tfs), n).astype(np.int64)
-                    if has_tfs
-                    else np.zeros(n, dtype=np.int64)
-                )
-                has_dls = len(row.dls) > 0
-                if has_dls and int(row.block_id) <= -10:
-                    # positional twin: dls = per-posting runs of tf offsets
-                    # (each run independently delta'd) — keep live runs whole
-                    offs = varint_decode(bytes(row.dls), int(tfs.sum())).astype(np.int64)
-                    run_starts = np.cumsum(tfs) - tfs
-                    kept = [
-                        offs[s : s + t]
-                        for s, t, alive in zip(run_starts, tfs, lv)
-                        if alive
-                    ]
-                    new_dls = varint_encode(
-                        np.concatenate(kept).astype(np.uint64)
-                        if kept
-                        else np.empty(0, dtype=np.uint64)
-                    )
-                elif has_dls:
-                    dls = varint_decode(bytes(row.dls), n).astype(np.int64)
-                    live_dls = dls[lv]
-                    new_dls = varint_encode(live_dls.astype(np.uint64))
-                else:
-                    new_dls = b""
                 live_ids = ids[lv]
-                live_tfs = tfs[lv]
-                new_ids = varint_encode(
-                    np.diff(live_ids, prepend=0).astype(np.uint64)
-                )
-                new_tfs = (
-                    varint_encode(live_tfs.astype(np.uint64)) if has_tfs else b""
-                )
-                d = {
+                if is_sentinel(row.block_id):
+                    # doc-stat row: drop the deleted docs' dl entries and keep
+                    # its stat columns truthful (max_tf = live positive-dl
+                    # doc count, sum_tf = live token total — the stage-01
+                    # convention)
+                    live_dls = varint_decode(row.dls, n)[lv]
+                    new_tfs, new_dls = b"", varint_encode(live_dls)
+                    max_tf, sum_tf = int((live_dls > 0).sum()), int(live_dls.sum())
+                else:
+                    tfs = varint_decode(row.tfs, n).astype(np.int64)
+                    live_tfs = tfs[lv]
+                    new_tfs, new_dls = varint_encode(live_tfs.astype(np.uint64)), b""
+                    max_tf, sum_tf = int(live_tfs.max()), int(live_tfs.sum())
+                    if is_twin(row.block_id):
+                        # dls = one offset run per posting (each delta'd on
+                        # its own) — keep the live postings' runs whole
+                        offs = varint_decode(row.dls, int(tfs.sum()))
+                        new_dls = varint_encode(offs[np.repeat(lv, tfs)])
+                new_ids = delta_encode(live_ids)
+                out_rows.append({
                     "term": row.term,
                     "salt": row.salt,
                     "block_id": row.block_id,
@@ -206,23 +198,16 @@ def compact_segment(
                     "doc_ids": new_ids,
                     "tfs": new_tfs,
                     "dls": new_dls,
+                    "max_tf": max_tf,
                     # a deleted doc can carry the block min dl, so the kept
                     # min_dl is only a LOWER bound of the live minimum — the
                     # block max-score bound stays a certified UPPER bound
                     # (impact decreases in dl), the one property scans use
-                    "max_tf": int(live_tfs.max()) if has_tfs else int(row.max_tf),
                     "min_dl": int(row.min_dl),
-                    "sum_tf": int(live_tfs.sum()),
+                    "sum_tf": sum_tf,
                     "bytes": len(new_ids) + len(new_tfs) + len(new_dls),
                     "term_bucket": row.term_bucket,
-                }
-                if int(row.block_id) == -1:
-                    # sentinel doc-stat row: keep its stat columns truthful
-                    # after compaction (max_tf = live positive-dl doc count,
-                    # sum_tf = live token total — the stage-01 convention)
-                    d["max_tf"] = int((live_dls > 0).sum())
-                    d["sum_tf"] = int(live_dls.sum())
-                out_rows.append(d)
+                })
             if out_rows:
                 yield pd.DataFrame(out_rows)[cols]
 
@@ -232,18 +217,11 @@ def compact_segment(
 
     # dictionary: a doc holds ONE posting per term across salts, so the
     # survivor posting count IS the live df; cf = summed live tf
-    from ivfadc_spark.operators.postings import decode_blocks
-
-    written = read_dataset(spark, out_path, "blocks")
-    live_posts = decode_blocks(
-        written.filter(F.col("term").isNotNull() & (F.col("block_id") >= 0))
-    )
+    live_posts = decode_blocks(read_dataset(spark, out_path, "blocks"))
     live_dl = segment.doc_lengths
     dm = segment.doc_map
     if dead.size:
-        dead_df = F.broadcast(
-            spark.createDataFrame([(int(x),) for x in dead], "doc_id long")
-        )
+        dead_df = F.broadcast(_doc_id_frame(spark, dead))
         live_dl = live_dl.join(dead_df, "doc_id", "left_anti")
         dm = dm.join(dead_df, "doc_id", "left_anti")
     st = live_dl.agg(F.count("*").alias("n"), F.avg("dl").alias("avgdl")).collect()[0]

@@ -47,6 +47,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ivfadc_spark.operators.postings import binary_buffers, is_posting
+
 FINDINGS_SCHEMA = "check string, key string, detail string"
 
 
@@ -74,22 +76,15 @@ def _block_findings(blocks: DataFrame) -> DataFrame:
         for rb in batches:
             if rb.num_rows == 0:
                 continue
-            tbl = pa.Table.from_batches([rb])
-            n = tbl.column("n").to_numpy(zero_copy_only=False).astype(np.int64)
-            terms = tbl.column("term").to_pylist()
-            salts = tbl.column("salt").to_numpy(zero_copy_only=False)
-            bids = tbl.column("block_id").to_numpy(zero_copy_only=False)
+            n = rb.column("n").to_numpy(zero_copy_only=False).astype(np.int64)
+            terms = rb.column("term").to_pylist()
+            salts = rb.column("salt").to_numpy(zero_copy_only=False)
+            bids = rb.column("block_id").to_numpy(zero_copy_only=False)
             keys = [f"{t}/s{s}/b{b}" for t, s, b in zip(terms, salts, bids)]
 
             def buf_and_lens(col):
-                a = tbl.column(col).combine_chunks()
-                offs = np.frombuffer(a.buffers()[1], dtype=np.int32)
-                lo = offs[a.offset : a.offset + len(a)].astype(np.int64)
-                hi = offs[a.offset + 1 : a.offset + len(a) + 1].astype(np.int64)
-                whole = np.frombuffer(a.buffers()[2], dtype=np.uint8)[
-                    int(lo[0]) if len(lo) else 0 : int(hi[-1]) if len(hi) else 0
-                ]
-                return whole, lo - (lo[0] if len(lo) else 0), hi - lo
+                buf, offs = binary_buffers(rb.column(col))
+                return np.frombuffer(buf, dtype=np.uint8), offs[:-1], np.diff(offs)
 
             d_buf, d_off, d_len = buf_and_lens("doc_ids")
             t_buf, t_off, t_len = buf_and_lens("tfs")
@@ -128,7 +123,7 @@ def _block_findings(blocks: DataFrame) -> DataFrame:
                     [f"{l_len[i]} dl stream bytes, want 0" for i in idx],
                 )
 
-            stated = tbl.column("bytes").to_numpy(zero_copy_only=False).astype(np.int64)
+            stated = rb.column("bytes").to_numpy(zero_copy_only=False).astype(np.int64)
             actual = d_len + t_len + l_len
             bad = stated != actual
             if bad.any():
@@ -144,8 +139,8 @@ def _block_findings(blocks: DataFrame) -> DataFrame:
             total = int(n.sum())
             if total == 0:
                 continue
-            deltas = varint_decode(d_buf.tobytes(), total).astype(np.int64)
-            tfs = varint_decode(t_buf.tobytes(), total).astype(np.int64)
+            deltas = varint_decode(d_buf, total).astype(np.int64)
+            tfs = varint_decode(t_buf, total).astype(np.int64)
             starts = np.cumsum(n) - n
             ends = np.cumsum(n) - 1
             # strictly increasing docIDs: every non-leading delta >= 1
@@ -163,8 +158,8 @@ def _block_findings(blocks: DataFrame) -> DataFrame:
             base = np.where(starts > 0, c[starts - 1], 0)
             first = c[starts] - base
             last = c[ends] - base
-            f_meta = tbl.column("first_doc").to_numpy(zero_copy_only=False).astype(np.int64)
-            l_meta = tbl.column("last_doc").to_numpy(zero_copy_only=False).astype(np.int64)
+            f_meta = rb.column("first_doc").to_numpy(zero_copy_only=False).astype(np.int64)
+            l_meta = rb.column("last_doc").to_numpy(zero_copy_only=False).astype(np.int64)
             for name, got, want in (("first_doc", first, f_meta), ("last_doc", last, l_meta)):
                 bad = got != want
                 if bad.any():
@@ -176,8 +171,8 @@ def _block_findings(blocks: DataFrame) -> DataFrame:
                     )
             mx = np.maximum.reduceat(tfs, starts)
             sm = np.add.reduceat(tfs, starts)
-            mx_meta = tbl.column("max_tf").to_numpy(zero_copy_only=False).astype(np.int64)
-            sm_meta = tbl.column("sum_tf").to_numpy(zero_copy_only=False).astype(np.int64)
+            mx_meta = rb.column("max_tf").to_numpy(zero_copy_only=False).astype(np.int64)
+            sm_meta = rb.column("sum_tf").to_numpy(zero_copy_only=False).astype(np.int64)
             for name, got, want in (("max_tf", mx, mx_meta), ("sum_tf", sm, sm_meta)):
                 bad = got != want
                 if bad.any():
@@ -188,17 +183,13 @@ def _block_findings(blocks: DataFrame) -> DataFrame:
                         [f"payload {got[i]} != meta {want[i]}" for i in idx],
                     )
 
-    return blocks.filter(
-        F.col("term").isNotNull() & (F.col("block_id") >= 0)
-    ).mapInArrow(kernel, FINDINGS_SCHEMA)
+    return blocks.filter(is_posting()).mapInArrow(kernel, FINDINGS_SCHEMA)
 
 
 def _list_findings(blocks: DataFrame) -> DataFrame:
     """Per (term, salt) cross-block checks — METADATA columns only, so the
     window shuffle never moves payload bytes."""
-    meta = blocks.filter(
-        F.col("term").isNotNull() & (F.col("block_id") >= 0)
-    ).select(
+    meta = blocks.filter(is_posting()).select(
         "term", "salt", "block_id", "first_doc", "last_doc"
     )
     w = Window.partitionBy("term", "salt").orderBy("block_id")

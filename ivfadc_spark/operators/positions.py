@@ -4,9 +4,9 @@ span-first and highlighting.
 The reference stores no positions (its queries are bag-of-cells,
 /root/reference/SearchEngine.cpp:112-212); phrase/proximity search is the
 biggest user-facing gap of that design. A ``with_positions=1`` build writes
-each posting's sorted token offsets as a positional TWIN row (block_id <=
--10) beside the posting blocks, in the same ``blocks/`` dataset and
-term_bucket layout, from the same tokenize pass. That is the one positions
+each posting's sorted token offsets as a positional TWIN row
+(``postings.is_twin``) beside the posting blocks, in the same ``blocks/``
+dataset and term_bucket layout, from the same tokenize pass. That is the one positions
 layout: ``merge_segments``, ``compact_segment`` and ``SegmentSet`` carry the
 twin rows with the blocks, and a segment built without them must be rebuilt
 with ``with_positions=1`` to answer positional queries.
@@ -60,12 +60,10 @@ def _positions(segment: Segment | SegmentSet, terms: list[str]) -> DataFrame:
                 f"segment {s.path} has no positional rows — rebuild it with "
                 "with_positions=1 for phrase, proximity and highlight search"
             )
-        twin = s.raw_blocks.filter(
-            (F.col("block_id") <= -10)
-            & F.col("term_bucket").isin(buckets)
-            & F.col("term").isin(terms)
+        probed = s.raw_blocks.filter(
+            F.col("term_bucket").isin(buckets) & F.col("term").isin(terms)
         )
-        rows = decode_position_rows(twin).select("term", "doc_id", "positions")
+        rows = decode_position_rows(probed).select("term", "doc_id", "positions")
         return _shift_doc_ids(rows, offset)
 
     if isinstance(segment, SegmentSet):
@@ -102,27 +100,23 @@ def phrase_topk(
     # phrase terms with their in-phrase offsets (duplicates kept: "a b a")
     qt = queries.select(
         "query_id", F.posexplode(tokens_col("text")).alias("j", "term")
-    )
-    qt_rows = qt.collect()  # queries x phrase length — tiny
-    if not qt_rows:
+    ).toPandas()  # queries x phrase length — tiny
+    if qt.empty:
         return spark.createDataFrame([], PHRASE_RESULT_SCHEMA)
-    terms = sorted({r["term"] for r in qt_rows})
-    need = {}
-    for r in qt_rows:
-        need.setdefault(r["query_id"], []).append((r["j"], r["term"]))
-    n_distinct = {q: len({t for _, t in js}) for q, js in need.items()}
+    terms = sorted(set(qt["term"]))
+    by_query = qt.groupby("query_id")["term"]
 
     positions = _positions(segment, terms)
 
-    qt_df = F.broadcast(spark.createDataFrame(qt_rows))
+    # small driver-side frames go through Arrow from pandas: one local
+    # relation each, no Python worker tasks
+    qt_df = F.broadcast(spark.createDataFrame(qt, "query_id long, j int, term string"))
     cand = positions.join(qt_df, "term")
     # conjunctive prefilter: keep (query, doc) pairs holding every DISTINCT
     # phrase term — pure Catalyst, prunes the Python verify step
-    nd = F.broadcast(
-        spark.createDataFrame(
-            [(q, n) for q, n in n_distinct.items()], "query_id long, n_need long"
-        )
-    )
+    nd = F.broadcast(spark.createDataFrame(
+        by_query.nunique().rename("n_need").reset_index(), "query_id long, n_need long"
+    ))
     have = (
         cand.groupBy("query_id", "doc_id")
         .agg(F.countDistinct("term").alias("n_have"))
@@ -135,7 +129,7 @@ def phrase_topk(
     par = spark.sparkContext.defaultParallelism
 
     # phrase length per query (duplicate terms kept: every (j, term) slot)
-    qlen = {q: len(js) for q, js in need.items()}
+    qlen = {int(q): int(n) for q, n in by_query.size().items()}
 
     def verify(batches):
         # ONE flattened pass, no per-(query, doc) Python: an occurrence of
@@ -231,14 +225,13 @@ def highlight_topk(
     )
     qt = queries.select(
         "query_id", F.explode(F.array_distinct(tokens_col("text"))).alias("term")
-    )
-    qt_rows = qt.collect()  # query metadata only — the documented broker
-    terms = sorted({r["term"] for r in qt_rows})
+    ).toPandas()  # query metadata only — the documented broker
+    terms = sorted(set(qt["term"]))
     if not terms:
         return spark.createDataFrame([], HIGHLIGHT_RESULT_SCHEMA)
     positions = _positions(segment, terms)
 
-    qt_df = F.broadcast(spark.createDataFrame(qt_rows))
+    qt_df = F.broadcast(spark.createDataFrame(qt, "query_id long, term string"))
     return (
         positions.join(qt_df, "term")
         .join(F.broadcast(top), ["query_id", "doc_id"])
@@ -294,7 +287,11 @@ def span_first_topk(
     positions = _positions(segment, terms)
 
     pairs = spark.createDataFrame(
-        [(r["query_id"], r["toks"][0]) for r in qrows], "query_id long, term string"
+        pd.DataFrame({
+            "query_id": [r["query_id"] for r in qrows],
+            "term": [r["toks"][0] for r in qrows],
+        }),
+        "query_id long, term string",
     )
     # positions are stored ascending -> element 1 is the first occurrence;
     # the window filter is a codegen'd higher-order expression
@@ -359,7 +356,11 @@ def near_topk(
     positions = _positions(segment, terms)
 
     pairs = spark.createDataFrame(
-        [(r["query_id"], r["toks"][0], r["toks"][1]) for r in qrows],
+        pd.DataFrame({
+            "query_id": [r["query_id"] for r in qrows],
+            "t0": [r["toks"][0] for r in qrows],
+            "t1": [r["toks"][1] for r in qrows],
+        }),
         "query_id long, t0 string, t1 string",
     )
     p0 = positions.join(

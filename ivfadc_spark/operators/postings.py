@@ -27,6 +27,27 @@ statistics at all.
 
 Format v3 (the only format): posting blocks carry NO per-posting dl stream;
 dl lives once per doc in the sentinel rows / doc_lens sidecar.
+
+This module is the one reader of the block-row format (with
+:mod:`ivfadc_spark.functions.codecs` for the raw varint codec). The
+``blocks`` dataset holds three row kinds, told apart by ``block_id`` alone
+and only through the predicates below:
+
+- POSTING rows (:func:`is_posting`, block_id 0..k-1 within a (term, salt)
+  list): a block of docID-sorted postings, one delta-varint run of doc ids
+  (first value absolute) plus a varint tf stream;
+- SENTINEL rows (:func:`is_sentinel`, term NULL, block_id
+  :data:`SENTINEL_BLOCK_ID`): one per encode chunk, the chunk's
+  (doc_id -> dl) table in partition term_bucket = -1;
+- positional TWIN rows (:func:`is_twin`, block_id :func:`twin_block_id` of
+  their posting block, ``with_positions=1`` builds only): the posting
+  block's doc_ids / tfs plus one delta-varint run of token offsets per
+  posting in the dls column.
+
+Readers decode whole Arrow batches in place: :func:`binary_buffers` hands
+out a binary column's contiguous bytes, and
+:func:`~ivfadc_spark.functions.codecs.delta_decode_runs` turns concatenated
+runs into absolute values in one pass.
 """
 
 from __future__ import annotations
@@ -36,12 +57,21 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ivfadc_spark.config import DEFAULT, EngineConfig
+from ivfadc_spark.functions.codecs import (
+    delta_decode_runs,
+    delta_encode,
+    varint_decode,
+    varint_encode,
+    varint_encode_with_lengths,
+    varint_lengths,
+)
 
 BLOCKS_SCHEMA = (
     "term string, salt int, block_id int, n int, first_doc long, last_doc long, "
     "doc_ids binary, tfs binary, dls binary, max_tf long, min_dl long, "
     "sum_tf long, bytes long"
 )
+_BLOCK_COLUMNS = [c.split()[0] for c in BLOCKS_SCHEMA.split(", ")]
 # Block upper bounds are avgdl-FREE: per block we store (max_tf, min_dl);
 # the query side computes ub = idf * impact(max_tf, min_dl, avgdl) — a valid
 # bound for ANY avgdl since impact is increasing in tf and decreasing in dl.
@@ -49,13 +79,54 @@ BLOCKS_SCHEMA = (
 # lets the whole build run in one pass, and makes bounds survive merges that
 # change avgdl.
 #
-# SENTINEL rows (term = NULL, block_id = -1) carry the per-chunk doc-length
-# sidecar: doc_ids = the chunk's doc ids (delta varint), dls = per-doc token
-# counts, n = docs in chunk; max_tf = the chunk's POSITIVE-dl doc count and
-# sum_tf = its token total (plain columns, so stage 01's write observation
-# yields n_docs/avgdl with zero extra jobs). They live in partition
-# term_bucket = -1, are excluded from Segment.blocks, and give stage 02 the
-# (doc_id, dl) table without any extra corpus pass.
+# SENTINEL rows carry the per-chunk doc-length sidecar: doc_ids = the
+# chunk's doc ids (delta varint), dls = per-doc token counts, n = docs in
+# chunk; max_tf = the chunk's POSITIVE-dl doc count and sum_tf = its token
+# total (plain columns, so stage 01's write observation yields n_docs/avgdl
+# with zero extra jobs). They are excluded from Segment.blocks and give
+# stage 02 the (doc_id, dl) table without any extra corpus pass.
+SENTINEL_BLOCK_ID = -1
+
+
+def twin_block_id(block_id):
+    """block_id of the positional twin row of posting block ``block_id``."""
+    return -10 - block_id
+
+
+def _block_id(block_id):
+    return F.col("block_id") if block_id is None else block_id
+
+
+def is_posting(block_id=None):
+    """Posting-block rows. Each row-kind predicate takes a block_id Column,
+    numpy array or int (None: the ``block_id`` column)."""
+    return _block_id(block_id) >= 0
+
+
+def is_sentinel(block_id=None):
+    """Sentinel doc-stats rows (one per encode chunk, term NULL)."""
+    return _block_id(block_id) == SENTINEL_BLOCK_ID
+
+
+def is_twin(block_id=None):
+    """Positional twin rows."""
+    return _block_id(block_id) <= twin_block_id(0)
+
+
+def binary_buffers(arr) -> tuple[memoryview, np.ndarray]:
+    """(data, offsets) of an Arrow BinaryArray, with no copy: ``data`` is
+    the in-order concatenation of the values (the array's data buffer, cut
+    to the array's own slice) and ``offsets`` the len+1 int64 value
+    boundaries into it."""
+    n = len(arr)
+    if n == 0:
+        return memoryview(b""), np.zeros(1, dtype=np.int64)
+    offs = np.frombuffer(arr.buffers()[1], dtype=np.int32)[arr.offset : arr.offset + n + 1]
+    offs = offs.astype(np.int64)
+    lo, hi = int(offs[0]), int(offs[-1])
+    data = arr.buffers()[2]
+    return memoryview(data if data is not None else b"")[lo:hi], offs - lo
+
 
 # combiner salt layout: salt = source_partition_id * SALT_CHUNK_SPAN + chunk.
 # salt // SALT_CHUNK_SPAN therefore recovers the PARTITION-level doc shard —
@@ -99,12 +170,10 @@ def _encode_sorted(vocab, codes, ids, tfs, dls, salts, bsz, positions=None):
 
     ``positions``: optional (stream, per_posting_nbytes) pair of the
     delta-varint token-offset streams (fused positional build). Each block
-    then gets a TWIN row (block_id = -10 - block_id) sharing its doc_ids /
+    then gets a TWIN row (:func:`twin_block_id`) sharing its doc_ids /
     tfs slices, with the positions slice in the dls column — same
-    term_bucket layout, pruned out of every scoring path by block_id."""
+    term_bucket layout, pruned out of every scoring path by :func:`is_posting`."""
     import pyarrow as pa
-
-    from ivfadc_spark.functions.codecs import varint_encode_with_lengths
 
     m = ids.size
     # group starts: term or salt changes
@@ -186,14 +255,10 @@ def _encode_sorted(vocab, codes, ids, tfs, dls, salts, bsz, positions=None):
             pa.array(min_dl[a:z].astype(np.int64)),
             pa.array(sum_tf[a:z].astype(np.int64)),
         ]
-        names = [
-            "term", "salt", "block_id", "n", "first_doc", "last_doc",
-            "doc_ids", "tfs", "dls", "max_tf", "min_dl", "sum_tf", "bytes",
-        ]
         yield pa.RecordBatch.from_arrays(
             shared + [enc["doc_ids"], enc["tfs"], enc["dls"]] + stats_cols
             + [pa.array(tot_bytes[a:z], type=pa.int64())],
-            names=names,
+            names=_BLOCK_COLUMNS,
         )
         if positions is not None:
             plo_c, phi_c = int(pos_lo[a]), int(pos_hi[z - 1])
@@ -206,11 +271,11 @@ def _encode_sorted(vocab, codes, ids, tfs, dls, salts, bsz, positions=None):
                  pa.py_buffer(memoryview(pstream)[plo_c:phi_c])],
             )
             twin = list(shared)
-            twin[2] = pa.array((-10 - block_id[a:z]).astype(np.int32))
+            twin[2] = pa.array(twin_block_id(block_id[a:z]).astype(np.int32))
             yield pa.RecordBatch.from_arrays(
                 twin + [enc["doc_ids"], enc["tfs"], penc] + stats_cols
                 + [pa.array(pos_hi[a:z] - pos_lo[a:z], type=pa.int64())],
-                names=names,
+                names=_BLOCK_COLUMNS,
             )
 
 
@@ -237,7 +302,6 @@ def build_blocks_inplace(
     exactly the (term, doc) order the block encoder needs.
     """
     bsz = int(cfg.block_size)
-    pattern = cfg.token_pattern
     stop, min_len = cfg.stop_set(), int(cfg.min_token_len)
     chunk_tokens = int(cfg.encode_chunk_tokens)
     want_pos = bool(int(getattr(cfg, "with_positions", 0) or 0))
@@ -286,15 +350,13 @@ def build_blocks_inplace(
             # total, so corpus stats ride the stage-01 write as a plain
             # column aggregate — no decode pass needed before the stage-02
             # dictionary job can start
-            from ivfadc_spark.functions.codecs import delta_encode, varint_encode
-
             dstream = delta_encode(doc_ids)
             lstream = varint_encode(dl_by_row.astype(np.uint64))
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array([None], type=pa.string()),
                     pa.array([salt_val], type=pa.int32()),
-                    pa.array([-1], type=pa.int32()),
+                    pa.array([SENTINEL_BLOCK_ID], type=pa.int32()),
                     pa.array([row_base], type=pa.int32()),
                     pa.array([int(doc_ids[0])], type=pa.int64()),
                     pa.array([int(doc_ids[-1])], type=pa.int64()),
@@ -306,10 +368,7 @@ def build_blocks_inplace(
                     pa.array([int(dl_by_row.sum())], type=pa.int64()),
                     pa.array([len(dstream) + len(lstream)], type=pa.int64()),
                 ],
-                names=[
-                    "term", "salt", "block_id", "n", "first_doc", "last_doc",
-                    "doc_ids", "tfs", "dls", "max_tf", "min_dl", "sum_tf", "bytes",
-                ],
+                names=_BLOCK_COLUMNS,
             )
             if len(flat_all) == 0:
                 return
@@ -363,8 +422,6 @@ def build_blocks_inplace(
                 pdelta[0] = np.uint64(pos_sorted[0])
                 pdelta[1:] = (pos_sorted[1:] - pos_sorted[:-1]).astype(np.uint64)
                 pdelta[pstarts] = pos_sorted[pstarts].astype(np.uint64)
-                from ivfadc_spark.functions.codecs import varint_encode_with_lengths
-
                 pstream, pnb = varint_encode_with_lengths(pdelta)
                 per_posting_nb = np.add.reduceat(pnb, pstarts)
                 positions = (pstream, per_posting_nb)
@@ -387,7 +444,7 @@ def build_blocks_inplace(
             if state["pid"] is None:
                 state["pid"] = int(tbl.column("_pid")[0].as_py())
             flat, par = filter_tokens(
-                *arrow_flat_tokens(tbl.column("text"), pattern), stop, min_len
+                *arrow_flat_tokens(tbl.column("text")), stop, min_len
             )
             state["flats"].append(flat)
             state["pars"].append(par + state["rows"])
@@ -401,23 +458,38 @@ def build_blocks_inplace(
     return docs.mapInArrow(encode, BLOCKS_SCHEMA)
 
 
-def decode_blocks(blocks: DataFrame) -> DataFrame:
-    """Inverse of the block encoders: blocks -> (term, doc_id, tf, dl) rows.
+def _decode_batch(rb, col: str):
+    """(counts, absolute doc ids, varint values of ``col``) of one Arrow
+    batch of block rows, decoded in place — the block-stream reader of
+    every decoder below (a row's doc_ids stream is one delta run)."""
+    counts = rb.column("n").to_numpy(zero_copy_only=False).astype(np.int64)
+    ids = delta_decode_runs(binary_buffers(rb.column("doc_ids"))[0], counts)
+    vals = varint_decode(binary_buffers(rb.column(col))[0], ids.size).astype(np.int64)
+    return counts, ids, vals
 
-    Used by round-trip tests, the conjunctive query path and compaction.
-    Whole-batch vectorized (the wand.py trick): varint
-    streams are self-delimiting, so ALL blocks of a batch decode in a few
-    codec calls; absolute docIDs come from a segmented cumsum reset at
-    block starts; the term column expands by repeat on the ARROW array
-    (no Python string objects).
+
+def _repeat_terms(rb, counts: np.ndarray):
+    """The batch's term column with row i repeated ``counts[i]`` times."""
+    import pyarrow as pa
+
+    return rb.column("term").take(pa.array(np.repeat(np.arange(counts.size), counts)))
+
+
+def decode_blocks(blocks: DataFrame) -> DataFrame:
+    """Inverse of the block encoders: posting rows -> (term, doc_id, tf, dl).
+
+    Takes any blocks frame and keeps its posting rows (:func:`is_posting`).
+    Callers: ``facet_candidates``, ``search_topk``, ``compact_segment``,
+    ``jobs/query.py``, the ``bm25_conjunctive_indexed`` contract entry and
+    the round-trip tests. Whole-batch vectorized:
+    varint streams are self-delimiting, so ALL blocks of a batch decode in
+    two codec calls read in place from the Arrow buffers; the term column
+    expands by repeat on the ARROW array (no Python string objects).
 
     Format v3 blocks carry no per-posting dl stream (dl lives once per doc
     in the sentinel / doc_lens sidecar): rows decode with ``dl`` NULL —
     join :attr:`Segment.doc_lengths` if dl is needed.
     """
-    from ivfadc_spark.functions.codecs import varint_decode
-
-    blocks = blocks.filter(F.col("term").isNotNull())  # skip doc-stat sentinels
 
     def decode(batches):
         from ivfadc_spark.functions.arrow_pool import use_scalable_pool
@@ -426,43 +498,22 @@ def decode_blocks(blocks: DataFrame) -> DataFrame:
         import pyarrow as pa
 
         for rb in batches:
-            if rb.num_rows == 0:
+            counts, ids, tfs = _decode_batch(rb, "tfs")
+            if not ids.size:
                 continue
-            tbl = pa.Table.from_batches([rb])
-            counts = tbl.column("n").to_numpy(zero_copy_only=False).astype(np.int64)
-            total = int(counts.sum())
-            if total == 0:
-                continue
-
-            def cat(col):
-                # a BinaryArray's data buffer IS the in-order concatenation
-                # of its values — slice it once, zero per-block objects
-                a = tbl.column(col).combine_chunks()
-                offs = np.frombuffer(a.buffers()[1], dtype=np.int32)
-                lo = int(offs[a.offset])
-                hi = int(offs[a.offset + len(a)])
-                return memoryview(a.buffers()[2])[lo:hi]
-
-            deltas = varint_decode(cat("doc_ids"), total).astype(np.int64)
-            tfs = varint_decode(cat("tfs"), total).astype(np.int64)
-            bstarts = np.cumsum(counts) - counts
-            c = np.cumsum(deltas)
-            base = np.where(bstarts > 0, c[bstarts - 1], 0)
-            ids = c - np.repeat(base, counts)
-            term_rep = tbl.column("term").combine_chunks().take(
-                pa.array(np.repeat(np.arange(counts.size), counts))
-            )
             yield pa.RecordBatch.from_arrays(
                 [
-                    term_rep,
+                    _repeat_terms(rb, counts),
                     pa.array(ids, type=pa.int64()),
                     pa.array(tfs),
-                    pa.nulls(total, pa.int64()),
+                    pa.nulls(ids.size, pa.int64()),
                 ],
                 names=["term", "doc_id", "tf", "dl"],
             )
 
-    return blocks.mapInArrow(decode, "term string, doc_id long, tf long, dl long")
+    return blocks.filter(is_posting()).mapInArrow(
+        decode, "term string, doc_id long, tf long, dl long"
+    )
 
 
 def block_metrics(blocks: DataFrame) -> DataFrame:
@@ -473,9 +524,7 @@ def block_metrics(blocks: DataFrame) -> DataFrame:
     ``cf`` is the collection frequency — which is what lets the build derive
     the dictionary FROM the encoded blocks instead of a separate tf pre-pass
     (:func:`ivfadc_spark.operators.stats.dictionary_from_metrics`)."""
-    return blocks.filter(
-        F.col("term").isNotNull() & (F.col("block_id") >= 0)
-    ).groupBy("term").agg(
+    return blocks.filter(is_posting()).groupBy("term").agg(
         F.sum("n").alias("postings"),
         F.sum("bytes").alias("bytes"),
         F.countDistinct("salt").alias("n_salts"),
@@ -485,55 +534,28 @@ def block_metrics(blocks: DataFrame) -> DataFrame:
     )
 
 
-def decode_position_rows(pos_rows: DataFrame) -> DataFrame:
+def decode_position_rows(blocks: DataFrame) -> DataFrame:
     """(term, doc_id, positions array<long>) from the fused positional TWIN
-    rows (block_id <= -10) the in-place encoder emits when
-    cfg.with_positions is set — phrase search input recovered without a
-    second corpus tokenize. Each twin row shares its block's doc_ids/tfs
-    streams; the dls column holds the per-posting delta-varint token
-    offsets (absolute first value per posting). A doc appears in exactly
-    one chunk, so each decoded posting carries the doc's COMPLETE offset
-    list for that term."""
-    from ivfadc_spark.functions.codecs import varint_decode
+    rows (:func:`is_twin`) of ``blocks`` — the ones the in-place encoder
+    emits when cfg.with_positions is set — phrase search input recovered
+    without a second corpus tokenize. Each twin row shares its block's
+    doc_ids/tfs streams; the dls column holds one delta-varint run of token
+    offsets per posting. A doc appears in exactly one chunk, so each
+    decoded posting carries the doc's COMPLETE offset list for that term."""
 
     def gen(batches):
         import pyarrow as pa
 
         for rb in batches:
-            if rb.num_rows == 0:
+            counts, ids, tf = _decode_batch(rb, "tfs")
+            if not ids.size:
                 continue
-            tbl = pa.Table.from_batches([rb])
-            counts = tbl.column("n").to_numpy(zero_copy_only=False).astype(np.int64)
-            total = int(counts.sum())
-            if total == 0:
-                continue
-            ids_d = varint_decode(
-                b"".join(bytes(x) for x in tbl.column("doc_ids").to_pylist()), total
-            ).astype(np.int64)
-            c = np.cumsum(ids_d)
-            rstarts = np.cumsum(counts) - counts
-            base = np.where(rstarts > 0, c[rstarts - 1], 0)
-            ids = c - np.repeat(base, counts)
-            tf = varint_decode(
-                b"".join(bytes(x) for x in tbl.column("tfs").to_pylist()), total
-            ).astype(np.int64)
-            npos = int(tf.sum())
-            pdelta = varint_decode(
-                b"".join(bytes(x) for x in tbl.column("dls").to_pylist()), npos
-            ).astype(np.int64)
-            pc_ = np.cumsum(pdelta)
-            pstarts = np.cumsum(tf) - tf
-            pbase = np.where(pstarts > 0, pc_[pstarts - 1], 0)
-            pos = pc_ - np.repeat(pbase, tf)
-            offsets = np.empty(total + 1, dtype=np.int32)
-            offsets[:-1] = pstarts
-            offsets[-1] = npos
-            term_rep = tbl.column("term").combine_chunks().take(
-                pa.array(np.repeat(np.arange(counts.size), counts))
-            )
+            pos = delta_decode_runs(binary_buffers(rb.column("dls"))[0], tf)
+            offsets = np.zeros(ids.size + 1, dtype=np.int32)
+            np.cumsum(tf, out=offsets[1:])
             yield pa.RecordBatch.from_arrays(
                 [
-                    term_rep,
+                    _repeat_terms(rb, counts),
                     pa.array(ids, type=pa.int64()),
                     pa.ListArray.from_arrays(
                         pa.array(offsets, type=pa.int32()),
@@ -543,18 +565,16 @@ def decode_position_rows(pos_rows: DataFrame) -> DataFrame:
                 names=["term", "doc_id", "positions"],
             )
 
-    return pos_rows.select("term", "n", "doc_ids", "tfs", "dls").mapInArrow(
+    return blocks.filter(is_twin()).select("term", "n", "doc_ids", "tfs", "dls").mapInArrow(
         gen, "term string, doc_id long, positions array<long>"
     )
 
 
 def decode_doc_stats(raw_blocks: DataFrame) -> DataFrame:
-    """(doc_id, dl) from the SENTINEL doc-stats rows (term IS NULL) the
-    in-place encoder emits per chunk — the doc-length sidecar, recovered
-    without tokenizing the corpus again. Zero-token docs are included."""
-    from ivfadc_spark.functions.codecs import varint_decode
-
-    sent = raw_blocks.filter(F.col("term").isNull()).select("n", "doc_ids", "dls")
+    """(doc_id, dl) from the SENTINEL doc-stats rows (:func:`is_sentinel`)
+    the in-place encoder emits per chunk — the doc-length sidecar,
+    recovered without tokenizing the corpus again. Zero-token docs are
+    included."""
 
     def gen(batches):
         from ivfadc_spark.functions.arrow_pool import use_scalable_pool
@@ -563,27 +583,17 @@ def decode_doc_stats(raw_blocks: DataFrame) -> DataFrame:
         import pyarrow as pa
 
         for rb in batches:
-            if rb.num_rows == 0:
+            _, ids, dls = _decode_batch(rb, "dls")
+            if not ids.size:
                 continue
-            tbl = pa.Table.from_batches([rb])
-            counts = tbl.column("n").to_numpy(zero_copy_only=False).astype(np.int64)
-            total = int(counts.sum())
-            if total == 0:
-                continue
-            dbuf = b"".join(bytes(x) for x in tbl.column("doc_ids").to_pylist())
-            lbuf = b"".join(bytes(x) for x in tbl.column("dls").to_pylist())
-            deltas = varint_decode(dbuf, total).astype(np.int64)
-            dls = varint_decode(lbuf, total).astype(np.int64)
-            c = np.cumsum(deltas)
-            starts = np.cumsum(counts) - counts
-            base = np.where(starts > 0, c[starts - 1], 0)
-            ids = c - np.repeat(base, counts)
             yield pa.RecordBatch.from_arrays(
                 [pa.array(ids, type=pa.int64()), pa.array(dls, type=pa.int64())],
                 names=["doc_id", "dl"],
             )
 
-    return sent.mapInArrow(gen, "doc_id long, dl long")
+    return raw_blocks.filter(is_sentinel()).select("n", "doc_ids", "dls").mapInArrow(
+        gen, "doc_id long, dl long"
+    )
 
 
 def remap_blocks(blocks: DataFrame, offset: int) -> DataFrame:
@@ -612,21 +622,17 @@ def remap_blocks(blocks: DataFrame, offset: int) -> DataFrame:
         use_scalable_pool()
         import pyarrow as pa
 
-        from ivfadc_spark.functions.codecs import (
-            varint_encode_with_lengths,
-            varint_lengths,
-        )
+        def i64(rb, name):
+            return rb.column(name).to_numpy(zero_copy_only=False).astype(np.int64)
 
         for rb in batches:
-            if rb.num_rows == 0:
+            n = rb.num_rows
+            if n == 0:
                 continue
-            tbl = pa.Table.from_batches([rb])
-            first = tbl.column("first_doc").to_numpy(zero_copy_only=False).astype(np.int64)
-            arr = tbl.column("doc_ids").combine_chunks()
-            offs = np.frombuffer(arr.buffers()[1], dtype=np.int32)
-            lo = offs[arr.offset : arr.offset + len(arr)].astype(np.int64)
-            hi = offs[arr.offset + 1 : arr.offset + len(arr) + 1].astype(np.int64)
-            data = np.frombuffer(arr.buffers()[2], dtype=np.uint8)
+            first = i64(rb, "first_doc")
+            buf, offs = binary_buffers(rb.column("doc_ids"))
+            lo, hi = offs[:-1], offs[1:]
+            data = np.frombuffer(buf, dtype=np.uint8)
             skip = varint_lengths(first.astype(np.uint64))  # old leading varint
             pstream_b, pnb = varint_encode_with_lengths((first + off).astype(np.uint64))
             pstream = np.frombuffer(pstream_b, dtype=np.uint8)
@@ -640,30 +646,18 @@ def remap_blocks(blocks: DataFrame, offset: int) -> DataFrame:
             out = np.empty(int(nends[-1]), dtype=np.uint8)
             out[_ranges(nlo, pnb)] = pstream[_ranges(pends - pnb, pnb)]
             out[_ranges(nlo + pnb, rest)] = data[_ranges(lo + skip, rest)]
-            offsets32 = np.empty(len(arr) + 1, dtype=np.int32)
+            offsets32 = np.empty(n + 1, dtype=np.int32)
             offsets32[:-1] = nlo
             offsets32[-1] = nends[-1]
-            new_doc_ids = pa.Array.from_buffers(
-                pa.binary(), len(arr),
-                [None, pa.py_buffer(offsets32.tobytes()), pa.py_buffer(out.tobytes())],
-            )
-            cols = []
-            for name in names:
-                if name == "doc_ids":
-                    cols.append(new_doc_ids)
-                elif name in ("first_doc", "last_doc"):
-                    cols.append(pa.array(
-                        tbl.column(name).to_numpy(zero_copy_only=False).astype(np.int64) + off,
-                        type=pa.int64(),
-                    ))
-                elif name == "bytes":
-                    cols.append(pa.array(
-                        tbl.column(name).to_numpy(zero_copy_only=False).astype(np.int64)
-                        + (pnb - skip),
-                        type=pa.int64(),
-                    ))
-                else:
-                    cols.append(tbl.column(name).combine_chunks())
+            shifted = {
+                "doc_ids": pa.Array.from_buffers(
+                    pa.binary(), n, [None, pa.py_buffer(offsets32), pa.py_buffer(out)]
+                ),
+                "first_doc": pa.array(first + off),
+                "last_doc": pa.array(i64(rb, "last_doc") + off),
+                "bytes": pa.array(i64(rb, "bytes") + (pnb - skip)),
+            }
+            cols = [shifted[c] if c in shifted else rb.column(c) for c in names]
             yield pa.RecordBatch.from_arrays(cols, names=names)
 
     return blocks.mapInArrow(gen, schema)

@@ -188,7 +188,6 @@ def facet_candidates(queries: DataFrame, segment) -> DataFrame:
     never read); tombstones drop via a broadcast anti-join."""
     from ivfadc_spark.operators.postings import decode_blocks
 
-    spark = segment.spark
     qt = query_terms(queries)
     blocks = segment.blocks.join(
         F.broadcast(qt.select("term").distinct()), "term", "leftsemi"
@@ -202,15 +201,13 @@ def facet_candidates(queries: DataFrame, segment) -> DataFrame:
     )
     import numpy as np
 
-    from ivfadc_spark.operators.deletes import live_mask
+    from ivfadc_spark.operators.deletes import _doc_id_frame, live_mask
 
     # live_mask handles Segment AND SegmentSet (member masks concatenate
     # at the federation's doc_base offsets)
     lm = live_mask(segment)
     if lm is not None and not lm.all():
-        dead_df = spark.createDataFrame(
-            [(int(x),) for x in np.flatnonzero(~lm)], "doc_id long"
-        )
+        dead_df = _doc_id_frame(segment.spark, np.flatnonzero(~lm))
         cand = cand.join(F.broadcast(dead_df), "doc_id", "left_anti")
     return cand
 

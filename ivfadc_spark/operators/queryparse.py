@@ -287,7 +287,11 @@ def search_topk(
             else:
                 n_must[qid] = n_must.get(qid, 0) + 1
     need = spark.createDataFrame(
-        [(int(q), n_must.get(q, 0), n_pmust.get(q, 0)) for q, _ in qrows],
+        pd.DataFrame({
+            "query_id": [int(q) for q, _ in qrows],
+            "n_must": [n_must.get(q, 0) for q, _ in qrows],
+            "n_pmust": [n_pmust.get(q, 0) for q, _ in qrows],
+        }),
         "query_id long, n_must long, n_pmust long",
     )
 

@@ -10,7 +10,7 @@ Ours: one segment = a parquet dataset directory::
 
     <path>/blocks/      posting blocks, partitioned by term_bucket; a
                         with_positions=1 build adds positional twin rows
-                        (block_id <= -10) under the same layout
+                        under the same layout (row kinds: postings.py)
     <path>/doc_map/     (doc_id, conv_id, turn_idx, role, tool) [nl analog]
     <path>/doc_lens/    (doc_id, dl) doc-length sidecar
     <path>/dict/        (term, df, cf, idf)                   [voc_sz analog]
@@ -66,7 +66,12 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ivfadc_spark.config import DEFAULT, EngineConfig
-from ivfadc_spark.operators.postings import BLOCKS_SCHEMA, SALT_CHUNK_SPAN, remap_blocks
+from ivfadc_spark.operators.postings import (
+    BLOCKS_SCHEMA,
+    SALT_CHUNK_SPAN,
+    is_posting,
+    remap_blocks,
+)
 
 FORMAT_VERSION = 3
 
@@ -209,15 +214,13 @@ class Segment:
     def blocks(self) -> DataFrame:
         """Posting blocks only (sentinel doc-stat rows and positional twin
         rows excluded)."""
-        return self.raw_blocks.filter(
-            F.col("term").isNotNull() & (F.col("block_id") >= 0)
-        )
+        return self.raw_blocks.filter(is_posting())
 
     @property
     def raw_blocks(self) -> DataFrame:
-        """Blocks INCLUDING the sentinel doc-stats rows (term IS NULL,
-        partition term_bucket=-1) — what merge/federation must carry. Read
-        once per Segment."""
+        """Blocks INCLUDING the sentinel doc-stats rows (partition
+        term_bucket=-1) and any positional twin rows — what merge and
+        federation must carry. Read once per Segment."""
         if not hasattr(self, "_raw_blocks"):
             self._raw_blocks = read_dataset(self.spark, self.path, "blocks")
         return self._raw_blocks
@@ -391,9 +394,7 @@ class SegmentSet:
 
     @property
     def blocks(self) -> DataFrame:
-        return self.raw_blocks.filter(
-            F.col("term").isNotNull() & (F.col("block_id") >= 0)
-        )
+        return self.raw_blocks.filter(is_posting())
 
     def _union(self, frame, start: int = 0) -> DataFrame | None:
         """Union of ``frame(segment, doc offset, salt offset)`` over the

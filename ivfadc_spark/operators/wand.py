@@ -37,7 +37,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ivfadc_spark.config import DEFAULT, EngineConfig
-from ivfadc_spark.functions.codecs import varint_decode
+from ivfadc_spark.functions.codecs import delta_decode_runs, varint_decode
+from ivfadc_spark.operators.postings import SALT_CHUNK_SPAN, _ranges, is_posting, is_sentinel
 from ivfadc_spark.operators.query import query_terms
 from ivfadc_spark.operators.queryparse import SHOULD, expand_terms, parse_token
 from ivfadc_spark.operators.segments import Segment, term_bucket_col
@@ -78,17 +79,11 @@ def _resolve_query_terms(queries: DataFrame, segment) -> pd.DataFrame:
 
 def _decode_block_rows(rows: pd.DataFrame, dl_arr: np.ndarray):
     """Decode ALL given block rows in two codec calls (varint streams are
-    self-delimiting and concatenable); absolute docIDs via segmented cumsum
-    reset at block starts. dl is GATHERED from the resident per-doc lookup
-    (format v3 blocks carry no dl stream). Returns (ids, tf, dl) arrays."""
-    counts = rows["n"].to_numpy(np.int64)
-    total = int(counts.sum())
-    deltas = varint_decode(b"".join(bytes(x) for x in rows["doc_ids"]), total).astype(np.int64)
-    tf = varint_decode(b"".join(bytes(x) for x in rows["tfs"]), total).astype(np.float64)
-    c = np.cumsum(deltas)
-    bstarts = np.cumsum(counts) - counts
-    base = np.where(bstarts > 0, c[bstarts - 1], 0)
-    ids = c - np.repeat(base, counts)
+    self-delimiting and concatenable; one delta run per block). dl is
+    GATHERED from the resident per-doc lookup (format v3 blocks carry no dl
+    stream). Returns (ids, tf, dl) arrays."""
+    ids = delta_decode_runs(b"".join(rows["doc_ids"]), rows["n"].to_numpy(np.int64))
+    tf = varint_decode(b"".join(rows["tfs"]), ids.size).astype(np.float64)
     dl = dl_arr[ids].astype(np.float64)
     return ids, tf, dl
 
@@ -245,15 +240,13 @@ def bm25_topk_batch(
     bq = spark.sparkContext.broadcast(qt_pdf)
     terms = sorted(set(qt_pdf["term"]))
 
-    # sentinel doc-stats rows (term NULL, block_id -1) ride along: they carry
-    # each chunk's (doc_id -> dl) table, which is where the scan takes dl
-    # from since format v3 dropped the per-posting dl stream. dl thus ships
-    # ONCE PER SHARD (bytes ~ docs/shard), not once per posting.
+    # sentinel doc-stats rows ride along: they carry each chunk's
+    # (doc_id -> dl) table, which is where the scan takes dl from since
+    # format v3 dropped the per-posting dl stream. dl thus ships ONCE PER
+    # SHARD (bytes ~ docs/shard), not once per posting. Positional twin
+    # rows must NOT enter the scoring scan.
     blocks = segment.raw_blocks.filter(
-        # sentinels (block_id -1) ride along; positional twin rows (<= -10)
-        # must NOT enter the scoring scan
-        (F.col("block_id") >= -1)
-        & (F.col("term").isNull() | F.col("term").isin(terms))
+        is_sentinel() | (is_posting() & F.col("term").isin(terms))
     ).select(
         "term", "salt", "block_id", "n", "doc_ids", "tfs", "dls",
         "max_tf", "min_dl",
@@ -267,8 +260,6 @@ def bm25_topk_batch(
     # range-partition on shard: hash repartition collides shard ids into
     # uneven tasks (~1/e of partitions empty, stragglers with 2-3 shards);
     # contiguous ranges give one-ish shard per task.
-    from ivfadc_spark.operators.postings import SALT_CHUNK_SPAN, _ranges
-
     par = spark.sparkContext.defaultParallelism
     # salt = pid * SALT_CHUNK_SPAN + chunk
     shard_col = (F.col("salt") / F.lit(SALT_CHUNK_SPAN)).cast("int")
@@ -308,7 +299,7 @@ def bm25_topk_batch(
             return
         whole = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
         qp = bq.value
-        is_sent = whole["block_id"].to_numpy() == -1
+        is_sent = is_sentinel(whole["block_id"].to_numpy())
         sent_by_shard = (
             dict(iter(whole[is_sent].groupby("shard", sort=False)))
             if is_sent.any()
@@ -317,8 +308,7 @@ def bm25_topk_batch(
         for _shard, sg in whole[~is_sent].groupby("shard", sort=False):
             # whole-shard vectorized decode: varint streams are
             # self-delimiting, so ALL blocks decode in two codec calls
-            # (per-block calls cost ~0.3ms each and dominate otherwise);
-            # docIDs then need a segmented cumsum reset at block starts.
+            # (per-block calls cost ~0.3ms each and dominate otherwise).
             t_start: dict = {}
             t_len: dict = {}
             t_maximp: dict = {}
@@ -326,9 +316,9 @@ def bm25_topk_batch(
             pos = 0
             for term, tg in sg.groupby("term", sort=False):
                 tg = tg.sort_values(["salt", "block_id"], kind="mergesort")
-                id_bufs.extend(bytes(x) for x in tg["doc_ids"])
-                tf_bufs.extend(bytes(x) for x in tg["tfs"])
-                counts_l.extend(int(x) for x in tg["n"])
+                id_bufs.extend(tg["doc_ids"])
+                tf_bufs.extend(tg["tfs"])
+                counts_l.extend(tg["n"])
                 tl = int(tg["n"].sum())
                 t_start[term] = pos
                 t_len[term] = tl
@@ -342,15 +332,8 @@ def bm25_topk_batch(
                 )
             if pos == 0:
                 continue
-            counts = np.asarray(counts_l, dtype=np.int64)
-            deltas = varint_decode(b"".join(id_bufs), pos).astype(np.int64)
+            all_ids = delta_decode_runs(b"".join(id_bufs), counts_l)
             tf = varint_decode(b"".join(tf_bufs), pos).astype(np.float64)
-            # segmented cumsum: absolute ids = cumsum(deltas) minus the
-            # running total at each block's start
-            c = np.cumsum(deltas)
-            bstarts = np.cumsum(counts) - counts
-            base = np.where(bstarts > 0, c[bstarts - 1], 0)
-            all_ids = c - np.repeat(base, counts)
             # per-doc norm from this shard's SENTINEL rows — each chunk's
             # (doc_id -> dl) table, decoded once per shard
             sent = sent_by_shard.get(_shard)
@@ -358,20 +341,10 @@ def bm25_topk_batch(
                 raise ValueError(
                     "bm25_topk_batch: shard has posting blocks but "
                     "no sentinel doc-stats rows — segment is corrupt or "
-                    "was filtered without term IS NULL"
+                    "was filtered without its sentinel rows"
                 )
-            s_counts = sent["n"].to_numpy(np.int64)
-            s_tot = int(s_counts.sum())
-            s_deltas = varint_decode(
-                b"".join(bytes(x) for x in sent["doc_ids"]), s_tot
-            ).astype(np.int64)
-            s_dl = varint_decode(
-                b"".join(bytes(x) for x in sent["dls"]), s_tot
-            ).astype(np.float64)
-            sc = np.cumsum(s_deltas)
-            s_starts = np.cumsum(s_counts) - s_counts
-            s_base = np.where(s_starts > 0, sc[s_starts - 1], 0)
-            s_ids = sc - np.repeat(s_base, s_counts)
+            s_ids = delta_decode_runs(b"".join(sent["doc_ids"]), sent["n"].to_numpy(np.int64))
+            s_dl = varint_decode(b"".join(sent["dls"]), s_ids.size).astype(np.float64)
             lo_id = int(s_ids.min())
             # NaN-initialized so a posting doc id NOT covered by the
             # sentinel table (corrupt / partially-filtered segment)

@@ -51,6 +51,7 @@ from ivfadc_spark.operators.postings import (
     block_metrics,
     build_blocks_inplace,
     decode_doc_stats,
+    is_sentinel,
 )
 from ivfadc_spark.operators.segments import (
     FORMAT_VERSION,
@@ -82,18 +83,6 @@ def _save_manifest(out: str, m: dict) -> None:
         json.dump(m, f, indent=2)
 
 
-def _skew_ratio(df: DataFrame) -> float:
-    """max/mean rows per partition of the final plan — straggler indicator."""
-    sizes = (
-        df.withColumn("_pid", F.spark_partition_id())
-        .groupBy("_pid")
-        .count()
-        .agg(F.max("count").alias("mx"), F.avg("count").alias("mean"))
-        .collect()[0]
-    )
-    return float(sizes["mx"] / sizes["mean"]) if sizes["mean"] else 1.0
-
-
 def _doc_map_fingerprint(dm: DataFrame):
     """(rows, order-independent hash) of (doc_id, conv_id, turn_idx) — cheap
     identity check between a recomputed id assignment and the checkpoint."""
@@ -111,7 +100,6 @@ def build_index(
     cfg: EngineConfig = DEFAULT,
     resume: bool = False,
     lineage: dict | None = None,
-    measure_skew: bool = False,
 ) -> Segment:
     """transcripts(conv_id, turn_idx, role, text, tool, ts) -> segment at ``out``."""
     m = _load_manifest(out) if resume else {"stages": {}}
@@ -130,7 +118,10 @@ def build_index(
     m["layout_version"] = LAYOUT_VERSION
 
     def stage(name: str):
-        return resume and done.get(name, {}).get("complete", False)
+        # stage 01 counts as done only with stage 00: the two run
+        # overlapped, so a resume redoes both unless both completed
+        need = ("00_doc_map", name) if name == "01_blocks" else (name,)
+        return resume and all(done.get(n, {}).get("complete", False) for n in need)
 
     def record(name: str, t0: float, **extra):
         done[name] = {"complete": True, "wall_s": round(time.time() - t0, 3), **extra}
@@ -191,38 +182,26 @@ def build_index(
             with_ids.select(*dm_cols)
             .observe(dm_obs, F.count(F.lit(1)).alias("rows"))
         )
-        if not stage("01_blocks"):
-            # OVERLAP stages 00 and 01: the two jobs run pruned executions
-            # of the same lazy id frame and write disjoint outputs, so
-            # nothing orders them. The doc_map write is JVM-bound (meta
-            # columns only — its shuffle never carries text); the combiner
-            # is python-worker-bound — under FAIR pools (session.py) they
-            # share the same cores productively instead of serializing.
-            # Stage 00 is recorded complete only after its write really
-            # finished; a crash mid-overlap records neither stage and
-            # resume redoes both.
-            from concurrent.futures import ThreadPoolExecutor
+        # OVERLAP stages 00 and 01 (01 never counts as done without 00):
+        # the two jobs run pruned executions of the same lazy id frame and
+        # write disjoint outputs, so nothing orders them. The doc_map write
+        # is JVM-bound (meta columns only — its shuffle never carries text);
+        # the combiner is python-worker-bound — under FAIR pools
+        # (session.py) they share the same cores productively instead of
+        # serializing. Stage 00 is recorded complete only after its write
+        # really finished; a crash mid-overlap records neither stage and
+        # resume redoes both.
+        from concurrent.futures import ThreadPoolExecutor
 
-            sc = spark.sparkContext
+        sc = spark.sparkContext
 
-            def _write_doc_map():
-                sc.setLocalProperty("spark.scheduler.pool", "build_docmap")
-                dm_df.write.mode("overwrite").parquet(p_docs)
-                return time.time()
-
-            dm_pool = ThreadPoolExecutor(max_workers=1)
-            dm_fut = dm_pool.submit(_write_doc_map)
-        else:
+        def _write_doc_map():
+            sc.setLocalProperty("spark.scheduler.pool", "build_docmap")
             dm_df.write.mode("overwrite").parquet(p_docs)
-            rows = int(dm_obs.get["rows"])
-            if rows != id_rows:
-                raise RuntimeError(
-                    f"doc_map wrote {rows} rows but bucket counts said {id_rows}"
-                )
-            record(
-                "00_doc_map", dm_t0, rows=rows, doc_space=rows,
-                assign_s=assign_s, **head_timings,
-            )
+            return time.time()
+
+        dm_pool = ThreadPoolExecutor(max_workers=1)
+        dm_fut = dm_pool.submit(_write_doc_map)
 
     if not stage("01_blocks"):
         t0 = time.time()
@@ -254,12 +233,8 @@ def build_index(
         sobs = Observation("corpus_stats")
         blocks = blocks.observe(
             sobs,
-            F.sum(
-                F.when(F.col("block_id") == -1, F.col("max_tf"))
-            ).alias("n_docs"),
-            F.sum(
-                F.when(F.col("block_id") == -1, F.col("sum_tf"))
-            ).alias("tokens"),
+            F.sum(F.when(is_sentinel(), F.col("max_tf"))).alias("n_docs"),
+            F.sum(F.when(is_sentinel(), F.col("sum_tf"))).alias("tokens"),
         )
         if dm_fut is not None:
             spark.sparkContext.setLocalProperty("spark.scheduler.pool", "build_blocks")
@@ -268,8 +243,8 @@ def build_index(
                 blocks.withColumn(
                     "term_bucket",
                     # xxhash64(NULL) is the seed hash, not NULL — route the
-                    # sentinel rows explicitly
-                    F.when(F.col("term").isNull(), F.lit(-1)).otherwise(
+                    # sentinel rows (term NULL) explicitly
+                    F.when(is_sentinel(), F.lit(-1)).otherwise(
                         term_bucket_col(cfg.term_buckets)
                     ),
                 )
@@ -333,8 +308,6 @@ def build_index(
             "avgdl": (float(sobs.get["tokens"]) / sn) if sn else 0.0,
             "n_shards": n_parts,
         }
-        if measure_skew:
-            extra["skew_ratio"] = _skew_ratio(read_dataset(spark, p_seg, "blocks"))
         record("01_blocks", t0, **extra)
     doc_space = done["00_doc_map"]["doc_space"]
 

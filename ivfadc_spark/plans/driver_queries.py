@@ -2218,10 +2218,6 @@ def q_knn_ivf_adc_persisted(spark, sf_dir):
 # ---------------------------------------------------------------- oracles
 
 
-def _sql_tokens(col="text"):
-    return duckdb_tokens_sql(col)
-
-
 ORACLES: dict[str, str] = {}
 
 ORACLES["fulltext_tf"] = f"""

@@ -9,7 +9,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from ivfadc_spark.config import DEFAULT
+from ivfadc_spark.functions.tokenize import TOKEN_PATTERN
 from ivfadc_spark.operators import stats as S
 from ivfadc_spark.operators.query import bm25_topk
 
@@ -27,7 +27,7 @@ def numpy_bm25_oracle(texts: dict[int, str], queries, k=10, k1=1.2, b=0.75):
     """Brute-force BM25 over every doc — the golden reference."""
     import re
 
-    pat = re.compile(DEFAULT.token_pattern)
+    pat = re.compile(TOKEN_PATTERN)
     toks = {d: [t for t in pat.split(s.lower()) if t] for d, s in texts.items()}
     n = len(toks)
     dl = {d: len(ts) for d, ts in toks.items()}
@@ -111,7 +111,7 @@ def _boolean_oracle(texts, queries, k=10, k1=1.2, b=0.75):
     score summed over matched positives."""
     import re
 
-    pat = re.compile(DEFAULT.token_pattern)
+    pat = re.compile(TOKEN_PATTERN)
     toks = {d: [t for t in pat.split(s.lower()) if t] for d, s in texts.items()}
     n = len(toks)
     dl = {d: len(ts) for d, ts in toks.items()}
@@ -232,7 +232,7 @@ def test_term_vectors_match_brute_counts(spark, docs_df):
     assert set(got["doc_id"]) <= {0, 7}
 
     import re
-    pat = re.compile(DEFAULT.token_pattern)
+    pat = re.compile(TOKEN_PATTERN)
     texts = {r.doc_id: r.text for r in docs_df.filter("doc_id in (0, 7)").collect()}
     for did in (0, 7):
         want = Counter(t for t in pat.split(texts[did].lower()) if t)

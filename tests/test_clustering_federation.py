@@ -559,6 +559,18 @@ def pos_halves(spark, tmp_path_factory):
     return whole, a, b
 
 
+def test_decode_blocks_reads_posting_rows_only(spark, pos_halves):
+    """decode_blocks keeps only posting rows: on a with_positions=1 segment
+    the raw blocks (sentinel and positional twin rows included) decode to
+    exactly the postings of Segment.blocks — no twin row decodes as a
+    second copy of its posting."""
+    whole, _, _ = pos_halves
+    raw = decode_blocks(whole.raw_blocks).orderBy("term", "doc_id").toPandas()
+    blk = decode_blocks(whole.blocks).orderBy("term", "doc_id").toPandas()
+    assert len(blk) > 0
+    pd.testing.assert_frame_equal(raw, blk)
+
+
 def _phrase_results(spark, segment):
     phrases = [(0, "headterm term000"), (1, "term001 term000"), (2, "nosuch phrase")]
     pqs = spark.createDataFrame(

@@ -13,6 +13,7 @@ from hypothesis import strategies as st
 
 from ivfadc_spark.functions.codecs import (
     delta_decode,
+    delta_decode_runs,
     delta_encode,
     varint_decode,
     varint_encode,
@@ -69,6 +70,50 @@ def test_stream_splitting_matches_lengths(vals, nsplits):
 def test_delta_roundtrip(ids):
     a = np.sort(np.asarray(ids, dtype=np.int64))
     assert (delta_decode(delta_encode(a), a.size) == a).all()
+
+
+# runs of strictly increasing ids; zero-length and one-value runs included
+runs = st.lists(
+    st.lists(st.integers(min_value=0, max_value=2**40), max_size=40, unique=True),
+    max_size=12,
+)
+
+
+@settings(max_examples=200, deadline=None)
+@given(runs)
+def test_delta_decode_runs_equals_per_run_decode(rs):
+    """One segmented decode of concatenated runs == the per-run
+    delta_decode results, concatenated — the block-stream invariant every
+    posting, sentinel and positions reader relies on."""
+    arrs = [np.sort(np.asarray(r, dtype=np.int64)) for r in rs]
+    counts = [a.size for a in arrs]
+    buf = b"".join(delta_encode(a) for a in arrs)
+    want = [delta_decode(delta_encode(a), a.size) for a in arrs]
+    got = delta_decode_runs(buf, counts)
+    assert got.dtype == np.int64
+    assert got.tolist() == (np.concatenate(want).tolist() if want else [])
+    for a in arrs:  # the one-run case, with and without a value count
+        assert delta_decode(delta_encode(a)).tolist() == a.tolist()
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    st.lists(st.binary(max_size=6), max_size=30),
+    st.integers(min_value=0, max_value=30),
+    st.integers(min_value=0, max_value=30),
+)
+def test_binary_buffers_on_sliced_array(vals, start, length):
+    """The zero-copy binary reader on a sliced Arrow array (non-zero
+    offset) returns exactly the slice's bytes and value lengths."""
+    import pyarrow as pa
+
+    from ivfadc_spark.operators.postings import binary_buffers
+
+    arr = pa.array(vals, type=pa.binary()).slice(start, length)
+    want = arr.to_pylist()
+    data, offs = binary_buffers(arr)
+    assert bytes(data) == b"".join(want)
+    assert offs[0] == 0 and np.diff(offs).tolist() == [len(v) for v in want]
 
 
 def test_delta_rejects_unsorted():

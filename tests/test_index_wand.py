@@ -169,6 +169,21 @@ def test_resume_refuses_df_salted_checkpoint(spark, corpus, tmp_path):
         build_index(spark, tx, str(tmp_path), cfg=CFG, resume=True)
 
 
+def test_config_from_json_moves_removed_fields_to_extra():
+    """A meta.json config recorded while EngineConfig still had
+    token_pattern and shuffle_partitions loads; both keys land in extra
+    and the config round-trips."""
+    import json
+
+    from ivfadc_spark.config import DEFAULT
+
+    old = {**json.loads(DEFAULT.to_json()), "token_pattern": "[^a-z0-9]+", "shuffle_partitions": 32}
+    cfg = EngineConfig.from_json(json.dumps(old))
+    assert cfg.extra == {"token_pattern": "[^a-z0-9]+", "shuffle_partitions": 32}
+    assert cfg == EngineConfig(extra=cfg.extra)
+    assert EngineConfig.from_json(cfg.to_json()) == cfg
+
+
 def test_doc_map_and_text_invariant(spark, corpus):
     """Per-turn text equality under stable (conv_id, turn_idx) ordering —
     the input_hint invariant."""

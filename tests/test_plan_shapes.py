@@ -15,8 +15,10 @@ dictionary and scans in one stage with no exchange; a batch still
 hash-partitions its blocks by query. Opening a ``Segment`` or a
 ``SegmentSet`` runs no job at all, and a merge carries its first member's
 files instead of reading them. A multi-term rewrite with only plain tokens
-reads the dictionary through the term-pruned idf lookup alone, and
-``search_topk`` filters a batch's phrases with one ``phrase_topk`` call.
+reads the dictionary through the term-pruned idf lookup alone,
+``search_topk`` filters a batch's phrases with one ``phrase_topk`` call, and
+the small frames the positional, parsed-query and facet operators build on
+the driver are local relations, not RDDs of pickled rows.
 """
 
 import itertools
@@ -420,3 +422,51 @@ def test_search_phrases_filter_in_one_call(spark, pos_seg):
     want = [(r.query_id, r.doc_id, r.score) for r in base if keep[r.query_id](r.doc_id)]
     assert {w[0] for w in want} == {0, 1}
     assert [(r.query_id, r.doc_id, r.score) for r in got] == want
+
+
+def test_small_driver_frames_are_local_relations(spark, tmp_path):
+    """The query-sized frames the positional, parsed-query and facet
+    operators build on the driver come from pandas: each executed plan
+    scans local relations, never ``Scan ExistingRDD`` (an RDD of pickled
+    rows, which runs Python worker tasks). facet_counts runs on a segment
+    with a tombstone, so its dead-doc frame is in the plan."""
+    from ivfadc_spark.config import EngineConfig
+    from ivfadc_spark.operators.deletes import delete_docs
+    from ivfadc_spark.operators.positions import (
+        highlight_topk,
+        near_topk,
+        phrase_topk,
+        span_first_topk,
+    )
+    from ivfadc_spark.operators.query import facet_counts
+    from ivfadc_spark.operators.queryparse import search_topk
+    from ivfadc_spark.plans.build_index import build_index
+    from ivfadc_spark.sources.transcripts import synth_transcripts
+
+    cfg = EngineConfig(block_size=16, with_positions=1)
+    tx = synth_transcripts(spark, n_conversations=10)
+    seg = build_index(spark, tx, str(tmp_path / "s"), cfg=cfg)
+
+    def q(*texts):
+        return spark.createDataFrame(
+            pd.DataFrame({"query_id": range(len(texts)), "text": list(texts)}),
+            schema="query_id long, text string",
+        )
+
+    def plan(df):
+        assert df.collect()  # the final plan exists only after an action
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    two = "term000 headterm"
+    plans = {
+        "phrase_topk": plan(phrase_topk(q(two), seg, k=5, cfg=cfg)),
+        "near_topk": plan(near_topk(q(two), seg, k=5, cfg=cfg)),
+        "span_first_topk": plan(span_first_topk(q("headterm"), seg, end=50, k=5, cfg=cfg)),
+        "highlight_topk": plan(highlight_topk(q(two), seg, k=5, cfg=cfg)),
+        "search_topk": plan(search_topk(q(f'+"{two}" term001'), seg, k=5, cfg=cfg)),
+    }
+    delete_docs(seg, [0])
+    plans["facet_counts"] = plan(facet_counts(q(two), seg))
+    assert "LeftAnti" in plans["facet_counts"]  # the dead-doc anti-join
+    bad = {name: p for name, p in plans.items() if "ExistingRDD" in p}
+    assert not bad, bad
