@@ -44,8 +44,10 @@ class EngineConfig:
     block_size: int = 128
 
     # doc-sharding: the id-assign step range-partitions the corpus into
-    # doc_shards partitions, each holding one CONTIGUOUS doc_id range, and
-    # the combiner encodes each partition in place. Every posting list is
+    # min(doc_shards, ceil(rows / build_index.SHARD_ROWS)) partitions —
+    # doc_shards is an UPPER BOUND, reached from SHARD_ROWS * doc_shards
+    # rows on — each holding one CONTIGUOUS doc_id range, and the combiner
+    # encodes each partition in place. Every posting list is
     # thereby split per partition (salt = pid * SALT_CHUNK_SPAN + chunk, so
     # salt // SALT_CHUNK_SPAN is the partition-level shard). The split is
     # uniform and per-doc consistent, so head-term skew (the reference's

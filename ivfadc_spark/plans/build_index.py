@@ -64,6 +64,23 @@ from ivfadc_spark.sources.transcripts import _tokens_for_partitions, plan_doc_id
 
 LAYOUT_VERSION = 3  # 3: doc_map carries the input's role/tool attributes
 
+# Rows per doc shard: a build of ``rows`` rows gets
+# ``min(cfg.doc_shards, ceil(rows / SHARD_ROWS))`` shards, so the layout
+# follows the data size, never the cluster size. Every shard is one encode
+# task with a fixed Python-worker cost, so a small build cut into
+# cfg.doc_shards slivers pays that cost per sliver for tens of rows each;
+# from SHARD_ROWS * cfg.doc_shards rows on (262,144 at the defaults) the
+# build keeps the full cfg.doc_shards layout.
+SHARD_ROWS = 8192
+
+
+def write_width(n_shards: int, term_buckets: int) -> int:
+    """Tasks of the term-bucket blocks write: two per doc shard plus one for
+    the sentinel bucket, at most one per bucket (``term_buckets + 1``,
+    sentinel bucket -1 included) — the index bytes a task writes follow the
+    rows, as the shards do."""
+    return min(int(term_buckets) + 1, 2 * int(n_shards) + 1)
+
 
 def _manifest_path(out: str) -> str:
     return os.path.join(out, "_manifest.json")
@@ -85,10 +102,12 @@ def _save_manifest(out: str, m: dict) -> None:
 
 def _doc_map_fingerprint(dm: DataFrame):
     """(rows, order-independent hash) of (doc_id, conv_id, turn_idx) — cheap
-    identity check between a recomputed id assignment and the checkpoint."""
+    identity check between a recomputed id assignment and the checkpoint.
+    The hashes are summed as decimals: a long sum of 64-bit hashes
+    overflows (an ANSI error) from a few rows on."""
     row = dm.agg(
         F.count("*").alias("rows"),
-        F.sum(F.xxhash64("doc_id", "conv_id", "turn_idx")).alias("h"),
+        F.sum(F.xxhash64("doc_id", "conv_id", "turn_idx").cast("decimal(38,0)")).alias("h"),
     ).collect()[0]
     return int(row["rows"]), int(row["h"] or 0)
 
@@ -138,13 +157,16 @@ def build_index(
     # under the declared schema whatever key types the input carried
     dm_cols = [F.col(c).cast(t) for c, t in dataset_fields("doc_map")]
 
-    # Partition count = cfg.doc_shards, NOT a multiple of the session's
-    # parallelism: the segment layout (and therefore the per-query work of
-    # the doc-sharded batch path) must not depend on how many executors
-    # happened to run the build — identical input must yield an identical
-    # index at any cluster size. doc ids themselves are partitioning-
-    # independent either way (global range order).
-    n_parts = int(cfg.doc_shards)
+    # Partition count = min(cfg.doc_shards, ceil(rows / SHARD_ROWS)), NOT a
+    # multiple of the session's parallelism: the segment layout (and
+    # therefore the per-query work of the doc-sharded batch path) must not
+    # depend on how many executors happened to run the build — identical
+    # input must yield an identical index at any cluster size. The id-assign
+    # head's exact bucket counts pick it (plan_doc_ids shard_rows=); doc ids
+    # themselves are partitioning-independent either way (global range
+    # order).
+    shard_cap = int(cfg.doc_shards)
+    n_shards = 0
     with_ids = None
     dm_fut = dm_pool = dm_obs = None
     dm_t0 = 0.0
@@ -166,8 +188,8 @@ def build_index(
         # span of the build (a serial head before any overlapped job
         # could start, BENCH/NARRATIVE.md); these pruned jobs are ~5%
         # of its wall.
-        with_ids, id_counts = plan_doc_ids(transcripts, n_parts)
-        id_rows = sum(id_counts)
+        with_ids, id_counts = plan_doc_ids(transcripts, shard_cap, shard_rows=SHARD_ROWS)
+        id_rows, n_shards = sum(id_counts), len(id_counts)
         head_timings = getattr(with_ids, "_ivfadc_timings", {})
         # serial head of the build: the sample + count jobs — recorded so
         # scaling runs attribute wall-time to it
@@ -209,7 +231,8 @@ def build_index(
             # resuming past a completed 00 in a fresh session: re-derive ids
             # and PROVE the recompute reproduces the checkpointed doc_map
             # (duplicate keys or a changed input layout could permute ties)
-            with_ids, _ = plan_doc_ids(transcripts, n_parts)
+            with_ids, id_counts = plan_doc_ids(transcripts, shard_cap, shard_rows=SHARD_ROWS)
+            n_shards = len(id_counts)
             got = _doc_map_fingerprint(with_ids.select(*dm_cols))
             want = _doc_map_fingerprint(read_dataset(spark, p_seg, "doc_map"))
             if got != want:
@@ -236,6 +259,9 @@ def build_index(
             F.sum(F.when(is_sentinel(), F.col("max_tf"))).alias("n_docs"),
             F.sum(F.when(is_sentinel(), F.col("sum_tf"))).alias("tokens"),
         )
+        n_buckets = int(cfg.term_buckets) + 1  # sentinel bucket -1 included
+        width = write_width(n_shards, cfg.term_buckets)
+        toks = _tokens_for_partitions(spark, width)
         if dm_fut is not None:
             spark.sparkContext.setLocalProperty("spark.scheduler.pool", "build_blocks")
         try:
@@ -258,22 +284,24 @@ def build_index(
                 # 1.2s — 8x). Earlier rounds profiled this shuffle as a
                 # loss; that was before the byte tokenizer made encode cheap
                 # and checksum sidecars were the hidden constant. Write
-                # parallelism = term_buckets — raise cfg.term_buckets with
-                # cluster size (it also sets scan-prune granularity),
-                # sentinel rows (bucket -1) are span-compressed and tiny.
+                # parallelism = write_width(n_shards), at most term_buckets+1
+                # (term_buckets also sets scan-prune granularity and is the
+                # merge/federation layout contract); sentinel rows (bucket
+                # -1) are span-compressed and tiny.
                 # EXACT placement (round-5): plain repartition("term_bucket")
                 # hash-collides the term_buckets+1 bucket values into
                 # shuffle_partitions slots — event-log profiling at 16 cores
                 # showed only 14 non-empty tasks for 65 buckets, with 2-3
                 # buckets stacked on hot tasks (a width + skew loss exactly
                 # where the write should be embarrassingly parallel). The
-                # murmur3 placement tokens (_tokens_for_partitions) give one
-                # task per bucket: uniform, term_buckets+1 wide.
+                # murmur3 placement tokens (_tokens_for_partitions) give
+                # each of the write_width tasks one contiguous bucket range
+                # (one bucket per task at full width); a bucket never spans
+                # two tasks, so every bucket directory still gets one file.
                 .repartition(
-                    int(cfg.term_buckets) + 1,
+                    width,
                     F.element_at(
-                        F.array(*[F.lit(t) for t in _tokens_for_partitions(
-                            spark, int(cfg.term_buckets) + 1)]),
+                        F.array(*[F.lit(toks[i * width // n_buckets]) for i in range(n_buckets)]),
                         F.col("term_bucket") + 2,
                     ),
                 )
@@ -300,13 +328,16 @@ def build_index(
             record(
                 "00_doc_map", dm_t0, rows=rows, doc_space=rows,
                 wall_s=round(t_dm - dm_t0, 3), overlapped=True, assign_s=assign_s,
-                **head_timings,
+                n_shards=n_shards, **head_timings,
             )
         sn = int(sobs.get["n_docs"] or 0)
         extra = {
             "n_docs": sn,
             "avgdl": (float(sobs.get["tokens"]) / sn) if sn else 0.0,
-            "n_shards": n_parts,
+            # the layout this build chose, and the blocks-write task count
+            # it implies (write_width)
+            "n_shards": n_shards,
+            "write_tasks": width,
         }
         record("01_blocks", t0, **extra)
     doc_space = done["00_doc_map"]["doc_space"]
@@ -408,7 +439,8 @@ def build_index(
             "n_docs": int(n_docs),
             "avgdl": float(avgdl),
             "doc_space": int(doc_space),
-            # doc-shard count = the number of id-assign partitions
+            # doc-shard count = the number of id-assign partitions, sized
+            # from the row count (SHARD_ROWS, capped at cfg.doc_shards)
             "n_shards": int(st1["n_shards"]),
             "doc_base": 0,
             "created_at": time.time(),

@@ -19,6 +19,8 @@ and bench — no external data.
 
 from __future__ import annotations
 
+import bisect
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -244,7 +246,40 @@ def check_rank_bits(counts: list[int]) -> None:
         )
 
 
-def plan_doc_ids(df: DataFrame, num_partitions: int) -> tuple[DataFrame, list[int]]:
+def shard_count(rows: int, cap: int, shard_rows: int) -> int:
+    """Doc shards for ``rows`` rows: one per ``shard_rows`` rows, at least
+    one, at most ``cap``."""
+    return max(1, min(int(cap), -(-int(rows) // int(shard_rows))))
+
+
+def merge_cuts(counts: list[int], n: int) -> list[int]:
+    """Cut the adjacent buckets ``counts`` into ``n`` groups of near-equal
+    rows: returns ``k_1 < ... < k_{n-1}`` in ``1..len(counts)-1``, group ``j``
+    being ``counts[k_j:k_{j+1}]`` (``k_0 = 0``, ``k_n = len(counts)``). Cut
+    ``k`` keeps the bound between buckets ``k-1`` and ``k``; every other
+    bound is dropped. Each cut goes to the prefix sum nearest ``j/n`` of the
+    rows, leaving at least one bucket for every later group."""
+    m, n = len(counts), int(n)
+    if not 1 <= n <= m:
+        raise ValueError(f"merge_cuts: cannot cut {m} buckets into {n} groups")
+    prefix = [0]
+    for c in counts:
+        prefix.append(prefix[-1] + int(c))
+    cuts, lo = [], 1
+    for j in range(1, n):
+        target = prefix[-1] * j / n
+        k = bisect.bisect_left(prefix, target, lo, m)
+        if k > lo and target - prefix[k - 1] <= prefix[k] - target:
+            k -= 1
+        k = min(max(k, lo), m - n + j)
+        cuts.append(k)
+        lo = k + 1
+    return cuts
+
+
+def plan_doc_ids(
+    df: DataFrame, num_partitions: int, shard_rows: int | None = None
+) -> tuple[DataFrame, list[int]]:
     """CACHELESS doc_id assignment: ``(with_ids, per-bucket counts)``.
 
     doc_id = dense 0-based global rank over ``(conv_id, turn_idx)``. A naive
@@ -260,11 +295,20 @@ def plan_doc_ids(df: DataFrame, num_partitions: int) -> tuple[DataFrame, list[in
     3. bucket -> partition placement goes through
        :func:`_tokens_for_partitions`, so partition ``p`` holds exactly the
        ``p``-th key range, sorted within the partition;
-    4. doc_id = partition offset + in-partition rank. The rank is the low 33
-       bits of ``monotonically_increasing_id()`` — a narrow, shuffle-free
-       projection (a ``row_number()`` window over the partition id would
-       hash-reshuffle and re-sort). A partition of 2^33 rows or more raises
+    4. doc_id = partition offset + in-partition rank. The offsets ride the
+       plan as one literal array indexed by the partition id (no join, so no
+       broadcast job per execution). The rank is the low 33 bits of
+       ``monotonically_increasing_id()`` — a narrow, shuffle-free projection
+       (a ``row_number()`` window over the partition id would hash-reshuffle
+       and re-sort). A partition of 2^33 rows or more raises
        (:func:`check_rank_bits`) before the id frame is built.
+
+    With ``shard_rows``, ``num_partitions`` is a CAP: steps 1-2 run at the
+    cap, and their exact counts choose ``n = shard_count(rows, cap,
+    shard_rows)`` partitions by merging adjacent buckets at their existing
+    bounds (:func:`merge_cuts`) — sizing costs no extra job. Without it the
+    frame has exactly ``num_partitions`` partitions. ``len(counts)`` is the
+    partition count either way.
 
     Boundary choice moves only partition SIZES, never ids, so ids do not
     depend on the partition count or the input layout (the property
@@ -290,7 +334,6 @@ def plan_doc_ids(df: DataFrame, num_partitions: int) -> tuple[DataFrame, list[in
     spark = df.sparkSession
     timings = {}
     if n <= 1:
-        shaped = df.coalesce(1)
         counts = [df.count()]
         bounds: list[str] = []
     else:
@@ -312,6 +355,20 @@ def plan_doc_ids(df: DataFrame, num_partitions: int) -> tuple[DataFrame, list[in
         timings["counts_s"] = round(_time.time() - _t1, 3)
         got = {int(r["_b"]): int(r["cnt"]) for r in cnt_rows}
         counts = [got.get(b, 0) for b in range(n)]
+    if shard_rows is not None:
+        want = shard_count(sum(counts), n, shard_rows)
+        if want < n:
+            # a row of one merged group lies between its first and last
+            # kept bound, so the merged tree sends it exactly where the
+            # summed exact counts say
+            cuts = merge_cuts(counts, want)
+            edges = [0, *cuts, n]
+            counts = [sum(counts[a:b]) for a, b in zip(edges, edges[1:])]
+            bounds = [bounds[k - 1] for k in cuts]
+            n = want
+    if n <= 1:
+        shaped = df.coalesce(1)
+    else:
         toks = _tokens_for_partitions(spark, n)
         token = _bucket_expr(bounds, leaves=toks)
         shaped = df.withColumn("_tok", token).repartition(n, "_tok").drop("_tok")
@@ -320,19 +377,13 @@ def plan_doc_ids(df: DataFrame, num_partitions: int) -> tuple[DataFrame, list[in
     for c in counts:
         offsets.append(acc)
         acc += c
-    off_df = spark.createDataFrame(
-        [(int(p), int(o)) for p, o in enumerate(offsets)], "_pid int, _off long"
+    part_off = F.element_at(
+        F.array(*[F.lit(o).cast("long") for o in offsets]),
+        F.spark_partition_id() + 1,
     )
-    out = (
-        shaped.sortWithinPartitions("conv_id", "turn_idx")
-        .withColumn("_pid", F.spark_partition_id())
-        .withColumn("_mid", F.monotonically_increasing_id())
-        .join(F.broadcast(off_df), "_pid")
-        .withColumn(
-            "doc_id",
-            (F.col("_off") + F.col("_mid").bitwiseAND(F.lit((1 << RANK_BITS) - 1))).cast("long"),
-        )
-        .drop("_pid", "_off", "_mid")
+    out = shaped.sortWithinPartitions("conv_id", "turn_idx").withColumn(
+        "doc_id",
+        part_off + F.monotonically_increasing_id().bitwiseAND(F.lit((1 << RANK_BITS) - 1)),
     )
     out._ivfadc_timings = timings  # head-phase walls, surfaced in the manifest
     return out, counts

@@ -23,6 +23,9 @@ from ivfadc_spark.sources.transcripts import synth_transcripts
 CFG = EngineConfig(block_size=16)
 POS_CFG = EngineConfig(block_size=16, with_positions=1)
 
+# tiny corpora still build cfg.doc_shards shards (conftest.full_shards)
+pytestmark = pytest.mark.usefixtures("full_shards")
+
 
 @pytest.fixture(scope="module")
 def vecs(spark):
@@ -108,6 +111,7 @@ def test_segment_set_equals_single_build(spark, tmp_path):
         spark, tx.filter("conv_id >= 'conv-000030'"), str(tmp_path / "b"), cfg=CFG
     )
     ss = SegmentSet(spark, [a.path, b.path])
+    assert min(s.meta["n_shards"] for s in (whole, a, b)) > 1
     assert ss.meta["n_docs"] == whole.meta["n_docs"]
     queries = spark.createDataFrame(
         pd.DataFrame(
@@ -556,6 +560,7 @@ def pos_halves(spark, tmp_path_factory):
     whole = build_index(spark, tx, str(out / "pw"), cfg=POS_CFG)
     a = build_index(spark, tx.filter("conv_id < 'conv-000020'"), str(out / "pa"), cfg=POS_CFG)
     b = build_index(spark, tx.filter("conv_id >= 'conv-000020'"), str(out / "pb"), cfg=POS_CFG)
+    assert min(s.meta["n_shards"] for s in (whole, a, b)) > 1
     return whole, a, b
 
 

@@ -36,6 +36,9 @@ QUERIES = [
 
 CFG = EngineConfig(block_size=16, doc_shards=8, with_positions=1)
 
+# tiny corpora still build cfg.doc_shards shards (conftest.full_shards)
+pytestmark = pytest.mark.usefixtures("full_shards")
+
 
 def _queries_df(spark):
     return spark.createDataFrame(
@@ -48,7 +51,9 @@ def _queries_df(spark):
 def seg(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("delseg"))
     tx = synth_transcripts(spark, n_conversations=60)
-    return build_index(spark, tx, out, cfg=CFG)
+    seg = build_index(spark, tx, out, cfg=CFG)
+    assert seg.meta["n_shards"] > 1
+    return seg
 
 
 def _brute(spark, seg, keep_pred=None, recompute_stats=False, k=10):

@@ -13,6 +13,8 @@ assignment, so they get their own tests:
   salt = partition ordinal * SALT_CHUNK_SPAN + chunk, requires it), and
   the returned bucket counts are the real partition sizes;
 - re-planning the same input reproduces the same ids (resume fingerprint);
+- a plan sized by ``shard_rows`` merges the cap's buckets into
+  ``shard_count`` partitions with the same properties;
 - a partition too large for the 33-bit in-partition rank raises instead of
   wrapping into duplicate ids.
 """
@@ -20,7 +22,12 @@ assignment, so they get their own tests:
 import pytest
 from pyspark.sql import functions as F
 
-from ivfadc_spark.sources.transcripts import check_rank_bits, plan_doc_ids, synth_transcripts
+from ivfadc_spark.sources.transcripts import (
+    check_rank_bits,
+    plan_doc_ids,
+    shard_count,
+    synth_transcripts,
+)
 
 
 @pytest.fixture(scope="module")
@@ -63,6 +70,30 @@ def test_partition_ranges_contiguous(spark, tx):
     # counts returned to the planner are the real partition sizes
     by_pid = dict(zip(spans["_p"], spans["c"]))
     assert [by_pid.get(p, 0) for p in range(5)] == counts
+
+
+@pytest.mark.parametrize("shard_rows", [1, 150, 10**6])
+def test_sized_plan_merges_buckets(spark, tx, shard_rows):
+    """With ``shard_rows`` the partition count is sized from the head's
+    exact counts (one partition, a merge of the cap's buckets, or the cap);
+    the returned counts are the real partition sizes and the ids are still
+    the global rank."""
+    rows = tx.count()
+    ids, counts = plan_doc_ids(tx, 32, shard_rows=shard_rows)
+    assert len(counts) == shard_count(rows, 32, shard_rows)
+    assert sum(counts) == rows
+    got = (
+        ids.withColumn("_p", F.spark_partition_id())
+        .select("_p", "conv_id", "turn_idx", "doc_id")
+        .toPandas()
+    )
+    sizes = got.groupby("_p").size()
+    assert [int(sizes.get(p, 0)) for p in range(len(counts))] == counts
+    got = got.sort_values("doc_id").reset_index(drop=True)
+    want = _global_rank(tx)
+    assert list(got["doc_id"]) == list(range(rows))
+    assert list(got["conv_id"]) == list(want["conv_id"])
+    assert list(got["turn_idx"]) == list(want["turn_idx"])
 
 
 def test_replan_reproduces_ids(spark, tx):

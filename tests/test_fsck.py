@@ -17,12 +17,17 @@ from ivfadc_spark.sources.transcripts import synth_transcripts
 
 CFG = EngineConfig(block_size=16, doc_shards=8)
 
+# tiny corpora still build cfg.doc_shards shards (conftest.full_shards)
+pytestmark = pytest.mark.usefixtures("full_shards")
+
 
 @pytest.fixture(scope="module")
 def seg(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("fsckseg"))
     tx = synth_transcripts(spark, n_conversations=40)
-    return build_index(spark, tx, out, cfg=CFG)
+    seg = build_index(spark, tx, out, cfg=CFG)
+    assert seg.meta["n_shards"] > 1
+    return seg
 
 
 def _corrupt_copy(spark, seg, tmp_path, mutate):

@@ -28,12 +28,16 @@ QUERIES = [
 # tiny blocks so multi-block posting lists occur on the fixture
 CFG = EngineConfig(block_size=16)
 
+# tiny corpora still build cfg.doc_shards shards (conftest.full_shards)
+pytestmark = pytest.mark.usefixtures("full_shards")
+
 
 @pytest.fixture(scope="module")
 def corpus(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("idx"))
     tx = synth_transcripts(spark, n_conversations=80)
     seg = build_index(spark, tx, out, cfg=CFG)
+    assert seg.meta["n_shards"] > 1
     return tx, seg, out
 
 
@@ -225,6 +229,7 @@ def test_batch_path_over_merged_and_federated(spark, corpus, tmp_path):
     assert list(got_m["doc_id"]) == list(want["doc_id"])
 
     ss = SegmentSet(spark, [seg_a.path, seg_b.path])
+    assert min(seg_a.meta["n_shards"], seg_b.meta["n_shards"]) > 1
     assert ss.meta["n_shards"] == (
         int(seg_a.meta["n_shards"]) + int(seg_b.meta["n_shards"])
     )

@@ -470,3 +470,27 @@ def test_small_driver_frames_are_local_relations(spark, tmp_path):
     assert "LeftAnti" in plans["facet_counts"]  # the dead-doc anti-join
     bad = {name: p for name, p in plans.items() if "ExistingRDD" in p}
     assert not bad, bad
+
+
+@pytest.mark.parametrize("n", [1, 5])
+def test_doc_id_offsets_ride_the_plan(spark, n):
+    """The id frame adds each partition's offset from a literal array
+    indexed by the partition id: its executed plan has no broadcast and no
+    ``Scan ExistingRDD`` (a joined offsets table ran one extra broadcast job
+    of Python worker tasks per execution), no job beyond the read (one, plus
+    the shuffle map stage's own job under AQE when ``n > 1``), and the ids
+    stay the global ``(conv_id, turn_idx)`` rank."""
+    from ivfadc_spark.sources.transcripts import plan_doc_ids, synth_transcripts
+
+    tx = synth_transcripts(spark, n_conversations=30)
+    ids, counts = plan_doc_ids(tx, n)
+    assert len(counts) == n
+    got, jobs, stages = _run_in_group(
+        spark, lambda: ids.select("conv_id", "turn_idx", "doc_id").toPandas()
+    )
+    plan = ids._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastExchange" not in plan, plan
+    assert "ExistingRDD" not in plan, plan
+    assert len(jobs) == (1 if n == 1 else 2), stages
+    want = got.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
+    assert list(want["doc_id"]) == list(range(len(got)))

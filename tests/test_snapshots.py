@@ -14,6 +14,9 @@ from ivfadc_spark.streaming.ingest import open_as_of, snapshots
 
 CFG = EngineConfig(block_size=16, doc_shards=4)
 
+# tiny corpora still build cfg.doc_shards shards (conftest.full_shards)
+pytestmark = pytest.mark.usefixtures("full_shards")
+
 
 @pytest.fixture(scope="module")
 def lsm_dir(spark, tmp_path_factory):
@@ -24,7 +27,8 @@ def lsm_dir(spark, tmp_path_factory):
         delta = tx.filter(
             F.col("conv_id").substr(-6, 6).cast("int").between(e * 8, e * 8 + 7)
         )
-        build_index(spark, delta, os.path.join(base, f"seg_{e:06d}"), cfg=CFG)
+        seg = build_index(spark, delta, os.path.join(base, f"seg_{e:06d}"), cfg=CFG)
+        assert seg.meta["n_shards"] > 1
     tx.unpersist()
     return base
 
