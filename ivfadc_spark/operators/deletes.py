@@ -111,6 +111,18 @@ def live_mask(segment: "Segment | SegmentSet") -> "np.ndarray | None":
     return m
 
 
+def drop_deleted(df: DataFrame, segment: "Segment | SegmentSet") -> DataFrame:
+    """``df`` without the rows of tombstoned docs: one broadcast anti-join of
+    its ``doc_id`` column (in the segment's id space; a SegmentSet's is the
+    federated one, as :func:`live_mask` lays it out) against the dead ids.
+    ``df`` itself when nothing is deleted."""
+    lm = live_mask(segment)
+    if lm is None or lm.all():
+        return df
+    dead = _doc_id_frame(segment.spark, np.flatnonzero(~lm))
+    return df.join(F.broadcast(dead), "doc_id", "left_anti")
+
+
 def attribute_mask(segment: "Segment | SegmentSet", predicate) -> np.ndarray:
     """doc_space-sized keep-mask from a doc_map attribute predicate — the
     query-time ``WHERE role = ...`` of attribute-scoped search. ``predicate``

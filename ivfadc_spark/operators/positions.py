@@ -40,7 +40,9 @@ def _positions(segment: Segment | SegmentSet, terms: list[str]) -> DataFrame:
     """(term, doc_id, positions) of ``terms`` from the fused positional twin
     rows of a Segment or a SegmentSet; a set's doc ids are shifted into the
     union's space by each member's doc offset, as federation does for
-    posting blocks. Raises when a segment has no twin rows."""
+    posting blocks. Tombstoned docs are dropped here, once for every
+    positional operator. Raises when a segment has no twin rows."""
+    from ivfadc_spark.operators.deletes import drop_deleted
     from ivfadc_spark.operators.postings import decode_position_rows
 
     # bucket ids of the probed terms: xxhash64 is a JVM expression, so it is
@@ -66,9 +68,8 @@ def _positions(segment: Segment | SegmentSet, terms: list[str]) -> DataFrame:
         rows = decode_position_rows(probed).select("term", "doc_id", "positions")
         return _shift_doc_ids(rows, offset)
 
-    if isinstance(segment, SegmentSet):
-        return segment._union(member)
-    return member(segment, 0)
+    rows = segment._union(member) if isinstance(segment, SegmentSet) else member(segment, 0)
+    return drop_deleted(rows, segment)
 
 
 def phrase_topk(

@@ -479,9 +479,10 @@ def decode_blocks(blocks: DataFrame) -> DataFrame:
     """Inverse of the block encoders: posting rows -> (term, doc_id, tf, dl).
 
     Takes any blocks frame and keeps its posting rows (:func:`is_posting`).
-    Callers: ``facet_candidates``, ``search_topk``, ``compact_segment``,
-    ``jobs/query.py``, the ``bm25_conjunctive_indexed`` contract entry and
-    the round-trip tests. Whole-batch vectorized:
+    Callers: ``facet_candidates``, ``compact_segment``, the
+    ``bm25_conjunctive_indexed`` contract entry and the round-trip tests
+    (the top-k paths read blocks through ``wand``'s scan). Whole-batch
+    vectorized:
     varint streams are self-delimiting, so ALL blocks of a batch decode in
     two codec calls read in place from the Arrow buffers; the term column
     expands by repeat on the ARROW array (no Python string objects).

@@ -199,17 +199,9 @@ def facet_candidates(queries: DataFrame, segment) -> DataFrame:
         .select("query_id", "doc_id")
         .distinct()
     )
-    import numpy as np
+    from ivfadc_spark.operators.deletes import drop_deleted
 
-    from ivfadc_spark.operators.deletes import _doc_id_frame, live_mask
-
-    # live_mask handles Segment AND SegmentSet (member masks concatenate
-    # at the federation's doc_base offsets)
-    lm = live_mask(segment)
-    if lm is not None and not lm.all():
-        dead_df = _doc_id_frame(segment.spark, np.flatnonzero(~lm))
-        cand = cand.join(F.broadcast(dead_df), "doc_id", "left_anti")
-    return cand
+    return drop_deleted(cand, segment)
 
 
 def facet_stats(

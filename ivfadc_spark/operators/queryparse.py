@@ -32,11 +32,15 @@ their own oracles):
 Scale shape: parsing is driver-side over the tiny query set (the
 documented broker pattern); expansions are ONE dictionary pass
 (:func:`expand_terms`, pushed-down pre-filter when no clause is fuzzy or
-regex); candidate postings come from a term-pruned blocks decode (only
-expanded terms' blocks are read); phrase membership is one
-``phrase_topk`` call per batch; filtering joins touch only the candidate
-set. The reference has none of this (bag-of-cells OR
-queries, /root/reference/SearchEngine.cpp:112-212).
+regex), collected with the query; phrase membership is one
+``phrase_topk`` call per batch, collected as sorted doc ids per clause.
+Scoring and filtering are the shared block-pruned MaxScore scan of every
+indexed top-k path (``wand._topk_scan_from_qt``): each query's task reads
+its expanded terms' blocks, builds the query's keep-mask from its clauses
+(live docs, every MUST satisfied, no MUST_NOT match) and scans the scoring
+terms under it, so a filtered doc never enters the accumulator. The
+reference has none of this: its queries are bag-of-cells ORs
+(``SearchEngine.cpp:112-212``).
 """
 
 from __future__ import annotations
@@ -45,6 +49,7 @@ import functools
 import operator
 import re
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -179,151 +184,81 @@ def search_topk(
     k: int | None = None,
     cfg: EngineConfig = DEFAULT,
 ) -> DataFrame:
-    """Run parsed queries end-to-end: expansions -> candidate decode ->
-    must/not/phrase filtering -> BM25 top-k. See the module docstring for
-    the exact semantics."""
-    from pyspark.sql.window import Window
-
-    from ivfadc_spark.operators.postings import decode_blocks
-    from ivfadc_spark.operators.query import bm25_partial_score
+    """Run parsed queries end-to-end through the shared MaxScore scan
+    (:func:`wand._topk_scan_from_qt`): the clauses become each query's
+    scoring terms and a :class:`wand.ClauseFilter`. See the module
+    docstring for the exact semantics; tombstoned docs never surface."""
+    from ivfadc_spark.operators.deletes import live_mask
+    from ivfadc_spark.operators.wand import ClauseFilter, _no_results, _topk_scan_from_qt
 
     k = k or cfg.top_k
     spark = segment.spark
-    qrows = [(r["query_id"], r["text"]) for r in queries.collect()]  # broker
-    clause_rows = parse_queries(qrows)
-    if not clause_rows:
-        return spark.createDataFrame(
-            [], "query_id long, rank int, doc_id long, score double"
-        )
-
-    # --- expansions of the term clauses, plus the constituent terms of
+    clause_rows = parse_queries(
+        [(r["query_id"], r["text"]) for r in queries.collect()]  # broker
+    )
+    # expansions of the term clauses, plus the constituent terms of
     # positive phrases as clause -1 / SHOULD: they score like any positive
-    # term (phrase membership is filtered separately below)
-    phrase_rows = [r for r in clause_rows if r[3] == "phrase"]
-    exp_all = expand_terms(
-        segment,
-        [r for r in clause_rows if r[3] != "phrase"]
-        + [
-            (qid, -1, SHOULD, "exact", t, 0)
-            for qid, cid, op, kind, p0, p1 in phrase_rows
-            if op != NOT
-            for t in p0.split()
-        ],
-    ).select("query_id", "clause_id", "op", "term", "idf")
-    exp = exp_all.filter(F.col("clause_id") >= 0)
+    # term (phrase membership filters through the phrase doc ids below)
+    term_rows = [r for r in clause_rows if r[3] != "phrase"] + [
+        (qid, -1, SHOULD, "exact", t, 0)
+        for qid, cid, op, kind, p0, p1 in clause_rows
+        if kind == "phrase" and op != NOT
+        for t in p0.split()
+    ]
+    if not term_rows:
+        return _no_results(spark)
+    exp = expand_terms(segment, term_rows).toPandas()
+    terms_of = {key: frozenset(g) for key, g in exp.groupby(["query_id", "clause_id"])["term"]}
+    score_of = {q: frozenset(g) for q, g in exp[exp["op"] != NOT].groupby("query_id")["term"]}
+    not_of = {q: frozenset(g) for q, g in exp[exp["op"] == NOT].groupby("query_id")["term"]}
 
-    # --- candidate postings: ONLY expanded terms' blocks are decoded
-    probe_terms = exp_all.select("term").distinct()
-    tf = (
-        decode_blocks(
-            segment.blocks.join(F.broadcast(probe_terms), "term", "leftsemi")
-        )
-        .select("term", "doc_id", "tf")
-    )
+    # a query runs when it has a scoring term and no MUST term clause with
+    # an empty expansion (unmatchable: the query returns nothing)
+    clauses_of: dict[int, list] = {}
+    for r in clause_rows:
+        clauses_of.setdefault(int(r[0]), []).append(r)
+    clauses_of = {
+        q: cs
+        for q, cs in clauses_of.items()
+        if q in score_of
+        and all((q, c[1]) in terms_of for c in cs if c[2] == MUST and c[3] != "phrase")
+    }
 
-    # --- scoring: distinct positive terms per query (a term scores once)
-    score_terms = (
-        exp_all.filter(F.col("op") != NOT)
-        .select("query_id", "term", "idf")
-        .distinct()
-    )
-    avgdl = float(segment.meta["avgdl"])
-    cand = (
-        tf.join(F.broadcast(score_terms), "term")
-        .join(segment.doc_lengths, "doc_id")
-        .withColumn("avgdl", F.lit(avgdl))
-    )
-    scored = (
-        cand.withColumn("partial", bm25_partial_score(cfg))
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("partial").alias("score"))
-    )
-
-    # --- MUST satisfaction over term clauses: a doc satisfies clause c
-    # when it matches ANY expansion of c; count distinct satisfied musts
-    must_exp = exp.filter(F.col("op") == MUST).select("query_id", "clause_id", "term")
-    have_must = (
-        tf.join(F.broadcast(must_exp), "term")
-        .groupBy("query_id", "doc_id")
-        .agg(F.countDistinct("clause_id").alias("n_must_have"))
-    )
-
-    # --- phrase membership (exact adjacency, the phrase_topk kernel): ONE
-    # call over every MUST / MUST_NOT phrase of the batch, keyed by clause
-    # index; SHOULD phrases score via their terms and never filter
-    filt = [r for r in phrase_rows if r[2] != SHOULD]
+    # phrase membership (exact adjacency, the phrase_topk kernel): ONE call
+    # over every MUST / MUST_NOT phrase of those queries, keyed by clause
+    # index; SHOULD phrases score through their terms and never filter
+    filt = [c for cs in clauses_of.values() for c in cs if c[3] == "phrase" and c[2] != SHOULD]
+    docs_of = {}
     if filt:
         from ivfadc_spark.operators.positions import phrase_topk
 
         pq = spark.createDataFrame(
-            pd.DataFrame({"query_id": range(len(filt)), "text": [r[4] for r in filt]}),
+            pd.DataFrame({"query_id": range(len(filt)), "text": [c[4] for c in filt]}),
             schema="query_id long, text string",
         )
-        # clause index -> (query_id, clause_id, op): a literal map, no join
-        clause_of = F.create_map(*[
-            x
-            for i, (qid, cid, op, *_) in enumerate(filt)
-            for x in (
-                F.lit(i),
-                F.struct(
-                    F.lit(int(qid)).cast("long").alias("query_id"),
-                    F.lit(cid).alias("clause_id"),
-                    F.lit(op).alias("op"),
-                ),
-            )
-        ])
-        ph_hits = phrase_topk(pq, segment, k=1 << 30, cfg=cfg).select(
-            "doc_id", clause_of[F.col("query_id").cast("int")].alias("c")
-        ).select("c.*", "doc_id")
+        hits = phrase_topk(pq, segment, k=1 << 30, cfg=cfg).select("query_id", "doc_id")
+        by_index = {
+            i: np.sort(g.to_numpy(np.int64))
+            for i, g in hits.toPandas().groupby("query_id")["doc_id"]
+        }
+        none = np.empty(0, dtype=np.int64)
+        docs_of = {(c[0], c[1]): by_index.get(i, none) for i, c in enumerate(filt)}
 
-    # must totals per query: EVERY must clause counts, even ones with an
-    # empty expansion (unmatchable -> the query returns nothing)
-    n_must = {}
-    n_pmust = {}
-    for qid, cid, op, kind, p0, p1 in clause_rows:
-        if op == MUST:
-            if kind == "phrase":
-                n_pmust[qid] = n_pmust.get(qid, 0) + 1
-            else:
-                n_must[qid] = n_must.get(qid, 0) + 1
-    need = spark.createDataFrame(
-        pd.DataFrame({
-            "query_id": [int(q) for q, _ in qrows],
-            "n_must": [n_must.get(q, 0) for q, _ in qrows],
-            "n_pmust": [n_pmust.get(q, 0) for q, _ in qrows],
-        }),
-        "query_id long, n_must long, n_pmust long",
-    )
+    def clause_docs(q, cs, op):
+        return tuple(docs_of[(q, c[1])] for c in cs if c[3] == "phrase" and c[2] == op)
 
-    out = scored.join(F.broadcast(need), "query_id")
-    out = out.join(have_must, ["query_id", "doc_id"], "left").fillna(
-        0, subset=["n_must_have"]
-    )
-    if n_pmust:
-        pm = ph_hits.filter(F.col("op") == MUST).groupBy("query_id", "doc_id").agg(
-            F.countDistinct("clause_id").alias("n_pmust_have")
+    filters = {
+        q: ClauseFilter(
+            score=score_of[q],
+            must=tuple(terms_of[(q, c[1])] for c in cs if c[2] == MUST and c[3] != "phrase"),
+            must_docs=clause_docs(q, cs, MUST),
+            not_terms=not_of.get(q, frozenset()),
+            not_docs=clause_docs(q, cs, NOT),
         )
-        out = out.join(pm, ["query_id", "doc_id"], "left").fillna(
-            0, subset=["n_pmust_have"]
-        )
-    else:
-        out = out.withColumn("n_pmust_have", F.lit(0))
-    out = out.filter(
-        (F.col("n_must_have") == F.col("n_must"))
-        & (F.col("n_pmust_have") == F.col("n_pmust"))
-    )
-
-    # --- exclusions: any NOT term expansion or NOT phrase occurrence
-    not_exp = exp.filter(F.col("op") == NOT).select("query_id", "term")
-    excl = tf.join(F.broadcast(not_exp), "term").select("query_id", "doc_id").distinct()
-    if any(r[2] == NOT for r in filt):
-        ph_not = ph_hits.filter(F.col("op") == NOT).select("query_id", "doc_id")
-        excl = excl.unionByName(ph_not).distinct()
-    out = out.join(excl, ["query_id", "doc_id"], "left_anti")
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        out.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "score")
+        for q, cs in clauses_of.items()
+    }
+    qt = exp[exp["query_id"].isin(list(filters))].drop_duplicates(["query_id", "term"])
+    avgdl = float(segment.meta["avgdl"])
+    return _topk_scan_from_qt(
+        segment, qt, k, float(cfg.k1), float(cfg.b), avgdl, live_mask(segment), filters
     )

@@ -31,6 +31,8 @@ one term are independent cursors (scores additive over disjoint doc sets).
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -86,6 +88,41 @@ def _decode_block_rows(rows: pd.DataFrame, dl_arr: np.ndarray):
     tf = varint_decode(b"".join(rows["tfs"]), ids.size).astype(np.float64)
     dl = dl_arr[ids].astype(np.float64)
     return ids, tf, dl
+
+
+class ClauseFilter(NamedTuple):
+    """One query's doc filter in the shared scan: a doc stays a candidate
+    when it is live, holds some term of every ``must`` set and appears in
+    every ``must_docs`` array, and holds no ``not_terms`` term and no
+    ``not_docs`` id. Only ``score`` terms score; the query's other probed
+    terms are read for the filter alone."""
+
+    score: frozenset
+    must: tuple = ()
+    must_docs: tuple = ()
+    not_terms: frozenset = frozenset()
+    not_docs: tuple = ()
+
+
+def _filter_query(pdf: pd.DataFrame, f: ClauseFilter, live: "np.ndarray | None", n: int):
+    """(scoring rows, keep-mask) of one query's block rows under ``f``. A
+    filtered doc never enters the accumulator, so θ and every MaxScore
+    bound of :func:`_scan_one_query` stay exact over the kept docs."""
+    keep = np.ones(n, dtype=bool) if live is None else live.copy()
+    ids_of = {
+        t: delta_decode_runs(b"".join(rows["doc_ids"]), rows["n"].to_numpy(np.int64))
+        for t, rows in pdf.groupby("term", sort=False)
+        if t in f.not_terms or any(t in m for m in f.must)
+    }
+    none = np.empty(0, dtype=np.int64)
+    musts = [np.concatenate([none] + [ids_of[t] for t in m if t in ids_of]) for m in f.must]
+    for docs in musts + list(f.must_docs):
+        hit = keep[docs]
+        keep[:] = False
+        keep[docs] = hit
+    for docs in [ids_of[t] for t in f.not_terms if t in ids_of] + list(f.not_docs):
+        keep[docs] = False
+    return pdf[pdf["term"].isin(f.score)], keep
 
 
 def _scan_one_query(
@@ -656,13 +693,18 @@ def _topk_scan_from_qt(
     b: float,
     avgdl: float,
     _lm: "np.ndarray | None",
+    filters: "dict[int, ClauseFilter] | None" = None,
 ) -> DataFrame:
     """Shared pruned-scan core of the indexed top-k paths: takes resolved
     (query_id, term, idf, term_bucket) rows on the driver (however the
     caller produced them — exact dictionary lookup, prefix expansion, ...)
     and runs the block-pruned MaxScore scan. The scan reads only the
     probed terms' blocks: term_bucket partition prune + term row-group
-    min/max prune (O1 inverted-file pruning)."""
+    min/max prune (O1 inverted-file pruning).
+
+    ``filters`` (query_id -> :class:`ClauseFilter`, every query of ``qt``)
+    narrows each query's candidates in its task before the scan: parsed
+    boolean clauses, More-Like-This's seed exclusion."""
     spark = segment.spark
     if qt.empty:
         return _no_results(spark)
@@ -701,8 +743,11 @@ def _topk_scan_from_qt(
             whole = whole.assign(query_id=qid, idf=whole["term"].map(idf_of))
         dl_arr = bdl.value
         lv = bmask.value if bmask is not None else None
-        for _, g in whole.groupby("query_id", sort=False):
-            yield _scan_one_query(g, k, k1, b, avgdl, dl_arr, live=lv)
+        for q, g in whole.groupby("query_id", sort=False):
+            live = lv
+            if filters is not None:
+                g, live = _filter_query(g, filters[q], lv, dl_arr.size)
+            yield _scan_one_query(g, k, k1, b, avgdl, dl_arr, live=live)
 
     return cand.mapInPandas(scan, RESULT_SCHEMA)
 
@@ -805,10 +850,9 @@ def mlt_topk(
     per-doc term vectors to the same end). The seed-sized (seed, term, tf)
     rows are collected, their idf resolved by the term-pruned
     :func:`_idf_lookup` (no dictionary join), and the (query_id, term) set
-    drives the shared block-pruned MaxScore scan.
+    drives the shared block-pruned MaxScore scan, whose per-query filter
+    drops the seed.
     """
-    from pyspark.sql.window import Window
-
     from ivfadc_spark.functions.tokenize import tokens_col
     from ivfadc_spark.operators.deletes import combine_masks, live_mask
 
@@ -833,14 +877,11 @@ def mlt_topk(
         .groupby("query_id")
         .head(int(max_terms))
     )
-    res = _topk_scan_from_qt(segment, qt, k + 1, k1, b, avgdl, _lm)
-    rerank = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        res.filter(F.col("doc_id") != F.col("query_id"))  # k+1 absorbs the self-hit
-        .withColumn("rank", F.row_number().over(rerank).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    filters = {
+        int(s): ClauseFilter(score=frozenset(g), not_docs=(np.array([s], dtype=np.int64),))
+        for s, g in qt.groupby("query_id")["term"]
+    }
+    return _topk_scan_from_qt(segment, qt, k, k1, b, avgdl, _lm, filters)
 
 
 def suggest_terms(

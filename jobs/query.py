@@ -10,9 +10,12 @@ Mode-3 analog (/root/reference/main.cpp:93-121).
 import _bootstrap  # noqa: F401
 import argparse
 import os
+import re
 
 import pandas as pd
 
+from ivfadc_spark.functions.tokenize import TOKEN_PATTERN
+from ivfadc_spark.operators.queryparse import search_topk
 from ivfadc_spark.operators.segments import Segment
 from ivfadc_spark.operators.wand import bm25_topk_indexed
 from ivfadc_spark.session import get_spark
@@ -36,31 +39,17 @@ def main() -> None:
     if os.path.exists(os.path.join(args.index, "segment", "meta.json")):
         seg_path = os.path.join(args.index, "segment")
     seg = Segment(spark, seg_path)
+    texts, kernel = args.query, bm25_topk_indexed
+    if args.mode == "and":
+        # every analyzed query term is a MUST clause of the parsed-query
+        # scan; an OOV term can never match, so its query returns no rows
+        texts = [" ".join("+" + t for t in re.split(TOKEN_PATTERN, q.lower()) if t) for q in texts]
+        kernel = search_topk
     queries = spark.createDataFrame(
-        pd.DataFrame({"query_id": range(len(args.query)), "text": args.query}),
+        pd.DataFrame({"query_id": range(len(texts)), "text": texts}),
         schema="query_id long, text string",
     )
-    if args.mode == "and":
-        from pyspark.sql import functions as F
-
-        from ivfadc_spark.operators.postings import decode_blocks
-        from ivfadc_spark.operators.query import bm25_topk_conjunctive, query_terms
-
-        terms = [r["term"] for r in query_terms(queries).distinct().collect()]
-        # term-pruned decode for tf; dl comes from the doc-length sidecar
-        # — no distinct() over postings
-        dec = decode_blocks(seg.blocks.filter(F.col("term").isin(terms)))
-        dl = seg.doc_lengths
-        out = bm25_topk_conjunctive(
-            queries,
-            dec.select("term", "doc_id", "tf"),
-            seg.dictionary,
-            dl,
-            seg.meta["avgdl"],
-            k=args.k,
-        )
-    else:
-        out = bm25_topk_indexed(queries, seg, k=args.k)
+    out = kernel(queries, seg, k=args.k)
     res = out.join(seg.doc_map, "doc_id")
     res = res.select("query_id", "rank", "doc_id", "score", "conv_id", "turn_idx")
     if args.out:

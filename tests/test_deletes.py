@@ -20,7 +20,7 @@ from ivfadc_spark.operators.deletes import (
 )
 from ivfadc_spark.operators.postings import decode_blocks
 from ivfadc_spark.operators.query import bm25_topk
-from ivfadc_spark.operators.segments import Segment, merge_segments
+from ivfadc_spark.operators.segments import Segment, SegmentSet, merge_segments
 from ivfadc_spark.operators.wand import bm25_topk_batch, bm25_topk_indexed
 from ivfadc_spark.plans.build_index import build_index
 from ivfadc_spark.sources.transcripts import synth_transcripts
@@ -223,3 +223,57 @@ def test_merge_carries_tombstones(spark, tmp_path):
         got = kernel(q, merged, k=k, cfg=CFG).toPandas()
         assert len(got[got["query_id"] == 1]) > 0
         assert dead not in set(got["doc_id"]), kernel.__name__
+
+
+@pytest.mark.parametrize("federated", [False, True], ids=["segment", "segment_set"])
+def test_parsed_and_phrase_queries_skip_tombstones(spark, tmp_path, federated):
+    """search_topk and phrase_topk never return a tombstoned doc, on one
+    segment and on a two-member SegmentSet (each member's tombstones in its
+    own id space, shifted by its doc offset): with k above the match count,
+    each result after the deletes is the result before minus the dead ids."""
+    from ivfadc_spark.operators.positions import phrase_topk
+    from ivfadc_spark.operators.queryparse import search_topk
+
+    tx = synth_transcripts(spark, n_conversations=30)
+    if federated:
+        half = F.col("conv_id") < "conv-000015"
+        members = [
+            build_index(spark, tx.filter(half), str(tmp_path / "a"), cfg=CFG),
+            build_index(spark, tx.filter(~half), str(tmp_path / "b"), cfg=CFG),
+        ]
+        seg = SegmentSet(spark, [m.path for m in members])
+    else:
+        members = [build_index(spark, tx, str(tmp_path / "s"), cfg=CFG)]
+        seg = members[0]
+
+    def q(*texts):
+        return spark.createDataFrame(
+            pd.DataFrame({"query_id": range(len(texts)), "text": list(texts)}),
+            schema="query_id long, text string",
+        )
+
+    calls = {
+        "search_topk": lambda: search_topk(
+            q('+"term000 headterm" term001', "term001 -term017"), seg, k=1 << 20, cfg=CFG
+        ),
+        "phrase_topk": lambda: phrase_topk(q("term000 headterm"), seg, k=1 << 20, cfg=CFG),
+    }
+
+    def run():
+        return {
+            name: {(r.query_id, r.doc_id) for r in fn().collect()} for name, fn in calls.items()
+        }
+
+    before = run()
+    dead = set()
+    for hits in before.values():
+        dead |= set(sorted({d for _, d in hits})[::2])
+    offset = 0
+    for m in members:
+        local = [d - offset for d in sorted(dead) if offset <= d < offset + m.doc_space]
+        if local:
+            delete_docs(m, local)
+        offset += m.doc_space
+    want = {name: {(qid, d) for qid, d in hits if d not in dead} for name, hits in before.items()}
+    assert all(want.values())
+    assert run() == want

@@ -16,7 +16,8 @@ hash-partitions its blocks by query. Opening a ``Segment`` or a
 ``SegmentSet`` runs no job at all, and a merge carries its first member's
 files instead of reading them. A multi-term rewrite with only plain tokens
 reads the dictionary through the term-pruned idf lookup alone,
-``search_topk`` filters a batch's phrases with one ``phrase_topk`` call, and
+``search_topk`` scores through the indexed kernel's scan and filters a
+batch's phrases with one ``phrase_topk`` call, and
 the small frames the positional, parsed-query and facet operators build on
 the driver are local relations, not RDDs of pickled rows.
 """
@@ -367,6 +368,33 @@ def test_rewrite_plain_tokens_are_term_pruned(spark, bm25_seg, rewrite):
     for node in dict_scans:
         assert "In(term, [" in node.split("PushedFilters:")[1].splitlines()[0], node
     assert not [p for p in plans if "NestedLoopJoin" in p], plans
+
+
+def test_search_runs_the_shared_scan(spark, bm25_seg):
+    """A 1-query search_topk with MUST, prefix and MUST_NOT clauses but no
+    phrase scores through the indexed kernel's scan: at most one job more
+    than bm25_topk_indexed, and no Window or SortMergeJoin in its executed
+    plan (no Catalyst scoring, MUST counting or exclusion join)."""
+    from ivfadc_spark.operators.queryparse import search_topk
+
+    seg, cfg = bm25_seg
+    q = spark.createDataFrame(
+        pd.DataFrame({"query_id": [0], "text": ["+headterm term00* -term017"]}),
+        schema="query_id long, text string",
+    )
+    _, want_jobs, _ = _run_in_group(
+        spark, lambda: _topk(spark, seg, cfg, ["term000 headterm term017"]).collect()
+    )
+
+    def call():
+        df = search_topk(q, seg, k=5, cfg=cfg)
+        return df, df.collect()
+
+    (df, rows), jobs, stages = _run_in_group(spark, call)
+    assert rows
+    assert len(jobs) <= len(want_jobs) + 1, stages
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in plan and "SortMergeJoin" not in plan, plan
 
 
 @pytest.fixture(scope="module")
