@@ -45,7 +45,13 @@ from pyspark.sql import functions as F
 
 from ivfadc_spark.functions.codecs import delta_decode, delta_encode, varint_decode, varint_encode
 from ivfadc_spark.operators.postings import decode_blocks, is_sentinel, is_twin
-from ivfadc_spark.operators.segments import Segment, SegmentSet, _idf_col, read_dataset
+from ivfadc_spark.operators.segments import (
+    Segment,
+    SegmentSet,
+    _idf_col,
+    read_dataset,
+    write_dictionary,
+)
 
 TOMBSTONES = "tombstones"
 
@@ -238,12 +244,11 @@ def compact_segment(
         dm = dm.join(dead_df, "doc_id", "left_anti")
     st = live_dl.agg(F.count("*").alias("n"), F.avg("dl").alias("avgdl")).collect()[0]
     n_docs, avgdl = int(st["n"]), float(st["avgdl"])
-    (
+    write_dictionary(
         live_posts.groupBy("term")
         .agg(F.count("*").cast("long").alias("df"), F.sum("tf").cast("long").alias("cf"))
-        .withColumn("idf", _idf_col(n_docs))
-        .write.mode("overwrite")
-        .parquet(os.path.join(out_path, "dict"))
+        .withColumn("idf", _idf_col(n_docs)),
+        out_path,
     )
     live_dl.write.mode("overwrite").parquet(os.path.join(out_path, "doc_lens"))
     dm.write.mode("overwrite").parquet(os.path.join(out_path, "doc_map"))

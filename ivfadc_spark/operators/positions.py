@@ -30,7 +30,7 @@ from ivfadc_spark.operators.segments import (
     Segment,
     SegmentSet,
     _shift_doc_ids,
-    term_bucket_col,
+    term_buckets,
 )
 
 PHRASE_RESULT_SCHEMA = "query_id long, rank int, doc_id long, n_occ long"
@@ -45,16 +45,7 @@ def _positions(segment: Segment | SegmentSet, terms: list[str]) -> DataFrame:
     from ivfadc_spark.operators.deletes import drop_deleted
     from ivfadc_spark.operators.postings import decode_position_rows
 
-    # bucket ids of the probed terms: xxhash64 is a JVM expression, so it is
-    # evaluated over an inline table, which Spark folds into a local relation
-    # (no job); the terms ride as parameters, never in the SQL text
-    values = ",".join(["(?)"] * len(terms))
-    buckets = sorted({
-        r[0]
-        for r in segment.spark.sql(f"SELECT col1 AS term FROM VALUES {values}", args=terms)
-        .select(term_bucket_col(segment.term_buckets))
-        .collect()
-    })
+    buckets = sorted(set(term_buckets(segment, terms).values()))  # no job
 
     def member(s: Segment, offset: int, _salt_offset: int = 0) -> DataFrame:
         if not int(s.meta["config"].get("with_positions") or 0):

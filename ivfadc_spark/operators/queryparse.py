@@ -30,9 +30,10 @@ their own oracles):
    (:mod:`positions` twin rows, required only when phrases occur).
 
 Scale shape: parsing is driver-side over the tiny query set (the
-documented broker pattern); expansions are ONE dictionary pass
-(:func:`expand_terms`, pushed-down pre-filter when no clause is fuzzy or
-regex), collected with the query; phrase membership is one
+documented broker pattern); exact terms resolve on the driver, and the
+multi-term clauses expand in ONE dictionary pass (:func:`expand_terms`,
+pushed-down pre-filter when no clause is fuzzy or regex), collected with
+the query; phrase membership is one
 ``phrase_topk`` call per batch, collected as sorted doc ids per clause.
 Scoring and filtering are the shared block-pruned MaxScore scan of every
 indexed top-k path (``wand._topk_scan_from_qt``): each query's task reads
@@ -129,53 +130,69 @@ def parse_queries(rows: list[tuple[int, str]]) -> list[tuple[int, int, int, str,
     return out
 
 
-def expand_terms(segment, clauses: list[tuple]) -> DataFrame:
-    """(query_id, clause_id, op, term, idf, term_bucket): every dictionary
-    term that each (query_id, clause_id, op, kind, p0, p1) exact / prefix /
-    fuzzy / regex clause matches, as :func:`parse_queries` rows — the one
-    multi-term expansion of the engine (Lucene's rewrite: a multi-term
-    clause stands for ANY of its expansions).
+def expand_terms(segment, clauses: list[tuple]) -> pd.DataFrame:
+    """(query_id, clause_id, op, term, idf, term_bucket) rows on the driver:
+    every dictionary term that each (query_id, clause_id, op, kind, p0, p1)
+    exact / prefix / fuzzy / regex clause matches, as :func:`parse_queries`
+    rows — the one multi-term expansion of the engine (Lucene's rewrite: a
+    multi-term clause stands for ANY of its expansions).
 
-    ONE dictionary pass against the broadcast clause rows. When every clause
-    is exact or prefix, the pass is pre-filtered by ``term IN (...) OR
-    startswith(...)``, which pushes down to the dictionary parquet scan
-    (In / StringStartsWith: row-group pruning on the term-sorted
-    dictionary); a fuzzy or regex clause has no such bound, so its pass
-    reads the whole dictionary. Postings are never touched."""
-    from ivfadc_spark.operators.segments import term_bucket_col
+    Exact clauses are looked up by ``segment.term_stats`` and
+    :func:`segments.term_buckets` (no job). The multi-term clauses take ONE
+    dictionary pass, one job: each dictionary row keeps the indexes of the
+    clauses it matches, tested against the clauses as one literal array
+    (no join, so no broadcast job). When every such clause is a prefix,
+    the pass is pre-filtered by ``startswith(...)``, which pushes down to
+    the dictionary parquet scan (StringStartsWith: row-group pruning on
+    the term-sorted dictionary files); a fuzzy or regex clause has no such
+    bound, so its pass reads the whole dictionary. Postings are never
+    touched."""
+    from ivfadc_spark.operators.segments import term_bucket_col, term_buckets
 
-    d = segment.dictionary
-    if {c[3] for c in clauses} <= {"exact", "prefix"}:
-        exact = sorted({c[4] for c in clauses if c[3] == "exact"})
-        prefixes = sorted({c[4] for c in clauses if c[3] == "prefix"})
-        preds = [F.col("term").isin(exact)] if exact else []
-        preds += [F.col("term").startswith(p) for p in prefixes]
-        d = d.filter(functools.reduce(operator.or_, preds, F.lit(False)))
-    # a pandas frame goes to the JVM through Arrow in one partition; a list
-    # of tuples would run Python worker tasks to unpickle its rows
-    cl = segment.spark.createDataFrame(
-        pd.DataFrame(list(clauses), columns=["query_id", "clause_id", "op", "kind", "p0", "p1"]),
-        schema="query_id long, clause_id int, op int, kind string, p0 string, p1 int",
-    )
-    cond = (
-        ((F.col("kind") == "exact") & (F.col("term") == F.col("p0")))
-        | ((F.col("kind") == "prefix") & F.col("term").startswith(F.col("p0")))
-        | (
-            (F.col("kind") == "fuzzy")
-            & (F.abs(F.length("term") - F.length("p0")) <= F.col("p1"))
-            & (F.levenshtein(F.col("term"), F.col("p0")) <= F.col("p1"))
-        )
-        | (
-            (F.col("kind") == "regex")
-            & F.regexp_like(
-                F.col("term"), F.concat(F.lit("^"), F.col("p0"), F.lit("$"))
+    rows = []
+    exact = [c for c in clauses if c[3] == "exact"]
+    if exact:
+        stats = segment.term_stats([c[4] for c in exact])
+        idf_of = dict(zip(stats["term"], stats["idf"]))
+        bucket_of = term_buckets(segment, idf_of)
+        rows += [(q, cid, op, t, idf_of[t], bucket_of[t]) for q, cid, op, _, t, _ in exact if t in idf_of]
+    multi = [c for c in clauses if c[3] != "exact"]
+    if multi:
+        d = segment.dictionary
+        if {c[3] for c in multi} == {"prefix"}:
+            prefixes = sorted({c[4] for c in multi})
+            d = d.filter(functools.reduce(operator.or_, [F.col("term").startswith(p) for p in prefixes]))
+        lits = F.array(*[
+            F.struct(F.lit(i).alias("i"), F.lit(kind).alias("kind"), F.lit(p0).alias("p0"),
+                     F.lit(int(p1)).alias("p1"))
+            for i, (_, _, _, kind, p0, p1) in enumerate(multi)
+        ])
+        term = F.col("term")
+
+        def matches(c):
+            return (
+                ((c["kind"] == "prefix") & term.startswith(c["p0"]))
+                | (
+                    (c["kind"] == "fuzzy")
+                    & (F.abs(F.length(term) - F.length(c["p0"])) <= c["p1"])
+                    & (F.levenshtein(term, c["p0"]) <= c["p1"])
+                )
+                | ((c["kind"] == "regex") & F.regexp_like(term, F.concat(F.lit("^"), c["p0"], F.lit("$"))))
             )
+
+        hits = F.transform(F.filter(lits, matches), lambda c: c["i"])
+        found = (
+            d.select("term", "idf", term_bucket_col(segment.term_buckets).alias("term_bucket"),
+                     hits.alias("hits"))
+            .filter(F.size("hits") > 0)
+            .collect()
         )
-    )
-    return d.join(F.broadcast(cl), cond).select(
-        "query_id", "clause_id", "op", "term", "idf",
-        term_bucket_col(segment.term_buckets).alias("term_bucket"),
-    )
+        rows += [
+            (multi[i][0], multi[i][1], multi[i][2], r["term"], r["idf"], r["term_bucket"])
+            for r in found
+            for i in r["hits"]
+        ]
+    return pd.DataFrame(rows, columns=["query_id", "clause_id", "op", "term", "idf", "term_bucket"])
 
 
 def search_topk(
@@ -207,7 +224,7 @@ def search_topk(
     ]
     if not term_rows:
         return _no_results(spark)
-    exp = expand_terms(segment, term_rows).toPandas()
+    exp = expand_terms(segment, term_rows)
     terms_of = {key: frozenset(g) for key, g in exp.groupby(["query_id", "clause_id"])["term"]}
     score_of = {q: frozenset(g) for q, g in exp[exp["op"] != NOT].groupby("query_id")["term"]}
     not_of = {q: frozenset(g) for q, g in exp[exp["op"] == NOT].groupby("query_id")["term"]}

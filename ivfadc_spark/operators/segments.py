@@ -13,7 +13,8 @@ Ours: one segment = a parquet dataset directory::
                         under the same layout (row kinds: postings.py)
     <path>/doc_map/     (doc_id, conv_id, turn_idx, role, tool) [nl analog]
     <path>/doc_lens/    (doc_id, dl) doc-length sidecar
-    <path>/dict/        (term, df, cf, idf)                   [voc_sz analog]
+    <path>/dict/        (term, df, cf, idf), rows sorted by term within
+                        each file (:func:`write_dictionary`)    [voc_sz analog]
     <path>/metrics/     per-term build metrics
     <path>/tombstones/  (doc_id) deleted docs (deletes.delete_docs); the one
                         dataset a segment may lack
@@ -32,6 +33,14 @@ a missing column or a different type instead of reading nulls. Readers take
 the layout from the segment, never from the caller's config: a term's
 partition is :func:`term_bucket_col` of the segment's own ``term_buckets``,
 which ``meta.json`` must record.
+
+A query resolves its terms' (df, cf, idf) on the driver with no Spark job:
+``Segment.term_stats`` reads the ``dict/`` files through one pyarrow dataset
+opened per segment, with a ``term in`` filter that each file's sorted
+row-group term statistics bound; ``SegmentSet.term_stats`` sums its
+members' df and cf and evaluates :func:`_idf_col` over a pandas-built local
+frame, which Spark folds without a job, so its idf is bit-equal to
+``SegmentSet.dictionary``'s.
 
 docIDs are data-derived within a segment (dense rank over the segment's own
 rows); cross-segment remap adds each segment's ``doc_base`` offset — the
@@ -98,10 +107,25 @@ _ARROW_TYPES = {
 }
 
 
-def term_bucket_col(n_buckets: int) -> Column:
+def term_bucket_col(n_buckets: int, term: Column | str = "term") -> Column:
     """The term -> term_bucket partition of a segment with ``n_buckets``
-    term buckets, as the build writes it and every reader probes it."""
-    return F.pmod(F.xxhash64("term"), F.lit(int(n_buckets))).cast("int")
+    term buckets, as the build writes it and every reader probes it;
+    ``term`` is the term column (a lambda variable inside ``transform``)."""
+    t = F.col(term) if isinstance(term, str) else term
+    return F.pmod(F.xxhash64(t), F.lit(int(n_buckets))).cast("int")
+
+
+def term_buckets(segment, terms) -> dict[str, int]:
+    """term -> term_bucket of ``terms`` in ``segment``'s layout, by
+    :func:`term_bucket_col` (xxhash64 is a JVM expression) over a
+    pandas-built local relation, which Spark folds: no job."""
+    import pandas as pd
+
+    terms = sorted(set(terms))
+    if not terms:
+        return {}
+    probe = segment.spark.createDataFrame(pd.DataFrame({"term": terms}), schema="term string")
+    return dict(probe.select("term", term_bucket_col(segment.term_buckets)).collect())
 
 
 def dataset_fields(name: str) -> list[tuple[str, str]]:
@@ -157,6 +181,35 @@ def _idf_col(n_docs: int):
     return F.log(
         (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
     )
+
+
+# the columns of a posting block the indexed scan reads (wand._scan_one_query)
+# plus the partition column its term_bucket prune filters on
+SCAN_COLUMNS = (
+    "term", "n", "doc_ids", "tfs", "max_tf", "min_dl", "first_doc", "last_doc", "term_bucket",
+)
+
+
+def write_dictionary(dictionary: DataFrame, seg_path: str) -> None:
+    """Write ``<seg_path>/dict`` from a (term, df, cf, idf) frame, rows
+    sorted by term within each file: the sort runs inside the write tasks
+    (no job, no file added), and each row group's term min/max then bounds
+    a ``term in`` lookup (:meth:`Segment.term_stats`)."""
+    cols = [F.col(c).cast(t) for c, t in dataset_fields("dict")]
+    (
+        dictionary.select(*cols)
+        .sortWithinPartitions("term")
+        .write.mode("overwrite")
+        .parquet(os.path.join(seg_path, "dict"))
+    )
+
+
+def _stats_frame(rows) -> "pd.DataFrame":
+    """(term, df, cf, idf) pandas frame of ``rows``, sorted by term."""
+    import pandas as pd
+
+    cols = [c for c, _ in dataset_fields("dict")]
+    return pd.DataFrame(rows, columns=cols).sort_values("term", ignore_index=True)
 
 
 class Segment:
@@ -240,6 +293,31 @@ class Segment:
         if not hasattr(self, "_dictionary"):
             self._dictionary = read_dataset(self.spark, self.path, "dict")
         return self._dictionary
+
+    def term_stats(self, terms) -> "pd.DataFrame":
+        """(term, df, cf, idf) of the in-vocabulary ``terms``, read on the
+        driver with no Spark job: one pyarrow ``term in`` scan of the
+        ``dict/`` files, through a dataset opened once per Segment."""
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+
+        if not hasattr(self, "_dict_files"):
+            schema = pa.schema(
+                [(c, pa.type_for_alias(_ARROW_TYPES[t])) for c, t in dataset_fields("dict")]
+            )
+            self._dict_files = ds.dataset(
+                os.path.join(self.path, "dict"), schema=schema, format="parquet"
+            )
+        found = self._dict_files.to_table(filter=ds.field("term").isin(sorted(set(terms))))
+        return _stats_frame(found.to_pandas())
+
+    @property
+    def scan_blocks(self) -> DataFrame:
+        """Posting blocks with the columns the indexed scan reads
+        (:data:`SCAN_COLUMNS`), planned once per Segment."""
+        if not hasattr(self, "_scan_blocks"):
+            self._scan_blocks = self.blocks.select(*SCAN_COLUMNS)
+        return self._scan_blocks
 
     @property
     def metrics(self) -> DataFrame:
@@ -433,6 +511,33 @@ class SegmentSet:
             .withColumn("idf", _idf_col(self.meta["n_docs"]))
         )
 
+    def term_stats(self, terms) -> "pd.DataFrame":
+        """(term, df, cf, idf) of the terms in the union's vocabulary, with
+        no Spark job: the members' df and cf summed on the driver, idf
+        evaluated by :func:`_idf_col` over a pandas-built local frame (Spark
+        folds it), so it is bit-equal to :attr:`dictionary`'s."""
+        import pandas as pd
+
+        terms = sorted(set(terms))
+        parts = [s.term_stats(terms)[["term", "df", "cf"]] for s in self.segments]
+        summed = pd.concat(parts).groupby("term", as_index=False)[["df", "cf"]].sum()
+        if summed.empty:
+            return _stats_frame([])
+        rows = (
+            self.spark.createDataFrame(summed, schema="term string, df long, cf long")
+            .select("term", "df", "cf", _idf_col(self.meta["n_docs"]).alias("idf"))
+            .collect()
+        )
+        return _stats_frame(rows)
+
+    @property
+    def scan_blocks(self) -> DataFrame:
+        """Posting blocks with the columns the indexed scan reads, planned
+        once per SegmentSet."""
+        if not hasattr(self, "_scan_blocks"):
+            self._scan_blocks = self.blocks.select(*SCAN_COLUMNS)
+        return self._scan_blocks
+
     @property
     def metrics(self) -> DataFrame:
         out = None
@@ -528,7 +633,7 @@ def merge_segments(
     dead = ss._union(_member_tombstones)
     if dead is not None:
         dead.write.mode("append").parquet(os.path.join(out_path, "tombstones"))
-    ss.dictionary.write.mode("overwrite").parquet(os.path.join(out_path, "dict"))
+    write_dictionary(ss.dictionary, out_path)
     ss.metrics.write.mode("overwrite").parquet(os.path.join(out_path, "metrics"))
     meta = {
         "n_docs": ss.meta["n_docs"],

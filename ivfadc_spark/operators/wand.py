@@ -40,15 +40,14 @@ from pyspark.sql import functions as F
 
 from ivfadc_spark.config import DEFAULT, EngineConfig
 from ivfadc_spark.functions.codecs import delta_decode_runs, varint_decode
+from ivfadc_spark.functions.tokenize import tokens_col
 from ivfadc_spark.operators.postings import SALT_CHUNK_SPAN, _ranges, is_posting, is_sentinel
-from ivfadc_spark.operators.query import query_terms
+from ivfadc_spark.operators.query import query_terms  # noqa: F401  (re-exported)
 from ivfadc_spark.operators.queryparse import SHOULD, expand_terms, parse_token
 from ivfadc_spark.operators.segments import Segment, term_bucket_col
 
 RESULT_SCHEMA = "query_id long, rank int, doc_id long, score double"
-
-# block columns the indexed scan kernel reads (_scan_one_query)
-_SCAN_COLS = ("term", "n", "doc_ids", "tfs", "max_tf", "min_dl", "first_doc", "last_doc")
+_QT_COLUMNS = ["query_id", "term", "idf", "term_bucket"]
 
 
 def _no_results(spark) -> DataFrame:
@@ -57,26 +56,28 @@ def _no_results(spark) -> DataFrame:
     return spark.createDataFrame([], RESULT_SCHEMA).limit(0)
 
 
-def _idf_lookup(segment, terms: list[str]) -> DataFrame:
-    """(term, idf, term_bucket) of the in-vocabulary ``terms``: a
-    TERM-PRUNED dictionary scan — ``term IN (...)`` pushes down to the dict
-    parquet (row-group stats / dictionary pages), so only matching slices
-    are read and nothing vocabulary-sized is collected or broadcast."""
-    return segment.dictionary.filter(F.col("term").isin(terms)).select(
-        "term", "idf", term_bucket_col(segment.term_buckets).alias("term_bucket")
-    )
-
-
 def _resolve_query_terms(queries: DataFrame, segment) -> pd.DataFrame:
     """(query_id, term, idf, term_bucket) rows of ``queries`` on the driver,
-    OOV terms dropped — the idf resolver of both top-k kernels. Two jobs:
-    the QUERY-sized term frame is collected (the broker role: n_queries x
-    terms rows, bounded by the batch), then one :func:`_idf_lookup`."""
-    qt = query_terms(queries).toPandas()
+    OOV terms dropped — the idf resolver of both top-k kernels and the
+    rewrites. Each query's distinct terms and their buckets come from one
+    projection (no explode): over a pandas-built query frame, a local
+    relation, Spark folds it and the collect runs no job; a table-backed
+    frame runs one. idf comes from ``segment.term_stats``, read on the
+    driver with no job."""
+    terms = F.array_distinct(tokens_col("text"))
+    rows = queries.select(
+        "query_id",
+        terms.alias("terms"),
+        F.transform(terms, lambda t: term_bucket_col(segment.term_buckets, t)).alias("buckets"),
+    ).collect()
+    qt = pd.DataFrame(
+        [(r[0], t, bk) for r in rows for t, bk in zip(r[1] or (), r[2] or ())],
+        columns=["query_id", "term", "term_bucket"],
+    )
     if qt.empty:
-        return qt
-    found = _idf_lookup(segment, sorted(set(qt["term"]))).toPandas()
-    return qt.merge(found, on="term")  # drops OOV
+        return pd.DataFrame(columns=_QT_COLUMNS)
+    found = segment.term_stats(qt["term"])[["term", "idf"]]
+    return qt.merge(found, on="term")[_QT_COLUMNS]  # drops OOV
 
 
 def _decode_block_rows(rows: pd.DataFrame, dl_arr: np.ndarray):
@@ -268,8 +269,8 @@ def bm25_topk_batch(
     _lm = combine_masks(live_mask(segment), doc_mask)
     bmask = spark.sparkContext.broadcast(_lm) if _lm is not None else None
 
-    # query prep: the shared term-pruned idf resolver (the driver holds the
-    # batch's query terms, never the vocabulary)
+    # query prep: the shared idf resolver (the driver holds the batch's
+    # query terms, never the vocabulary)
     qt_pdf = _resolve_query_terms(queries, segment)
     if qt_pdf.empty:
         return _no_results(spark)
@@ -663,13 +664,15 @@ def bm25_topk_indexed(
     """Top-k BM25 from a compressed segment, rank-identical to the
     DataFrame path. queries: (query_id, text).
 
-    The low-latency path: the query terms are collected and their idf and
-    term_bucket resolved by one term-pruned dictionary lookup (no
-    dictionary broadcast), then only the probed terms' blocks are read
-    (term_bucket partition prune + term row-group prune). A 1-query call
-    runs three Spark jobs on a reused ``Segment`` — term collect, idf
-    lookup, and one scan stage with no exchange; a batch hash-partitions
-    its blocks by query.
+    The low-latency path: each query's distinct terms and their
+    term_buckets are collected by one projection and their idf read on the
+    driver (``segment.term_stats``, no dictionary broadcast), then only the
+    probed terms' blocks are read (term_bucket partition prune + term
+    row-group prune). A 1-query call on a reused ``Segment`` with a
+    pandas-built query frame runs ONE Spark job, the scan, in one stage
+    with no exchange (the projection over a local relation folds; a
+    table-backed frame adds its collect job); a batch hash-partitions its
+    blocks by query.
 
     ``doc_mask``: optional doc_space-sized boolean keep-mask (attribute
     scoping, boolean NOT, ...). Tombstones recorded by ``delete_docs`` are
@@ -708,10 +711,10 @@ def _topk_scan_from_qt(
     spark = segment.spark
     if qt.empty:
         return _no_results(spark)
-    blocks = segment.blocks.filter(
+    blocks = segment.scan_blocks.filter(
         F.col("term_bucket").isin(sorted({int(x) for x in qt["term_bucket"]}))
         & F.col("term").isin(sorted(set(qt["term"])))
-    ).select(*_SCAN_COLS)
+    )
     n_queries = int(qt["query_id"].nunique())
     qid = int(qt["query_id"].iloc[0])
     if n_queries == 1:
@@ -766,10 +769,13 @@ def _rewrite_topk(
     :func:`queryparse.parse_token`. Tokens of ``kind`` expand through
     :func:`queryparse.expand_terms`; every other token is plain text,
     analyzed and idf-resolved exactly as in :func:`bm25_topk_indexed`
-    (term-pruned lookup, no dictionary join). Every expanded term scores
-    with its OWN idf, deduped per query, so a term never counts twice even
-    when several tokens match it; the (query_id, term) set then drives the
-    shared block-pruned MaxScore scan."""
+    (``segment.term_stats`` on the driver, no job, no dictionary join).
+    Every expanded term scores with its OWN idf, deduped per query, so a
+    term never counts twice even when several tokens match it; the
+    (query_id, term) set then drives the shared block-pruned MaxScore
+    scan. Over a pandas-built query frame a call runs two jobs, the
+    expansion's dictionary pass and the scan; one when no token is of
+    ``kind``."""
     from ivfadc_spark.operators.deletes import combine_masks, live_mask
 
     k = k or cfg.top_k
@@ -789,8 +795,7 @@ def _rewrite_topk(
         )
         parts.append(_resolve_query_terms(plain_df, segment))
     if clauses:
-        exp = expand_terms(segment, clauses).select("query_id", "term", "idf", "term_bucket")
-        parts.append(exp.toPandas())
+        parts.append(expand_terms(segment, clauses)[_QT_COLUMNS])
     parts = [p for p in parts if len(p)]
     qt = pd.concat(parts).drop_duplicates(["query_id", "term"]) if parts else pd.DataFrame()
     avgdl = float(segment.meta["avgdl"])
@@ -847,13 +852,12 @@ def mlt_topk(
     the index — postings are term-major, so reading a doc's vector from
     blocks would scan every term, while ``docs.filter(doc_id IN seeds)``
     is a predicate-pushdown point lookup (Lucene reads its stored
-    per-doc term vectors to the same end). The seed-sized (seed, term, tf)
-    rows are collected, their idf resolved by the term-pruned
-    :func:`_idf_lookup` (no dictionary join), and the (query_id, term) set
-    drives the shared block-pruned MaxScore scan, whose per-query filter
-    drops the seed.
+    per-doc term vectors to the same end). The seed-sized (seed, term, tf,
+    term_bucket) rows are collected in one job, their idf read on the
+    driver by ``segment.term_stats`` (no job, no dictionary join), and the
+    (query_id, term) set drives the shared block-pruned MaxScore scan,
+    whose per-query filter drops the seed.
     """
-    from ivfadc_spark.functions.tokenize import tokens_col
     from ivfadc_spark.operators.deletes import combine_masks, live_mask
 
     k = k or cfg.top_k
@@ -868,9 +872,10 @@ def mlt_topk(
         seeds.select("query_id", F.explode(tokens_col("text")).alias("term"))
         .groupBy("query_id", "term")
         .agg(F.count("*").cast("double").alias("tf"))
+        .withColumn("term_bucket", term_bucket_col(segment.term_buckets))
         .toPandas()
     )
-    w = stf.merge(_idf_lookup(segment, sorted(set(stf["term"]))).toPandas(), on="term")
+    w = stf.merge(segment.term_stats(stf["term"])[["term", "idf"]], on="term")
     qt = (
         w.assign(weight=w["tf"] * w["idf"])
         .sort_values(["query_id", "weight", "term"], ascending=[True, False, True])
@@ -906,8 +911,6 @@ def suggest_terms(
     never touched.
     """
     from pyspark.sql.window import Window
-
-    from ivfadc_spark.functions.tokenize import tokens_col
 
     toks = (
         queries.select(

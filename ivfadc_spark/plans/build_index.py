@@ -19,6 +19,7 @@ and no dictionary pre-pass)::
                  (overlapped with 00's write: both read pruned executions
                  of the same lazy id frame)
     02_dict      dictionary DERIVED from block metrics         [voc_sz analog]
+                 (sorted by term within each file, write_dictionary)
                  + doc_lens decoded from the sentinel rows
                  -> segment/dict + segment/metrics + segment/doc_lens
                     + meta.json
@@ -59,6 +60,7 @@ from ivfadc_spark.operators.segments import (
     dataset_fields,
     read_dataset,
     term_bucket_col,
+    write_dictionary,
 )
 from ivfadc_spark.sources.transcripts import _tokens_for_partitions, plan_doc_ids
 
@@ -151,7 +153,6 @@ def build_index(
     p_seg = os.path.join(out, "segment")
     p_docs = os.path.join(p_seg, "doc_map")
     p_blocks = os.path.join(p_seg, "blocks")
-    p_dict = os.path.join(p_seg, "dict")
     p_metrics = os.path.join(p_seg, "metrics")
     # doc_map in its declared types, so every written doc_map reads back
     # under the declared schema whatever key types the input carried
@@ -398,9 +399,10 @@ def build_index(
             spark.sparkContext.setLocalProperty(
                 "spark.scheduler.pool", "build_dict"
             )
-            S.dictionary_from_metrics(
-                metrics_cached.select("term", "postings", "cf"), n_docs
-            ).write.mode("overwrite").parquet(p_dict)
+            write_dictionary(
+                S.dictionary_from_metrics(metrics_cached.select("term", "postings", "cf"), n_docs),
+                p_seg,
+            )
 
         with ThreadPoolExecutor(max_workers=2) as pool:
             lens_fut = pool.submit(_write_lens)

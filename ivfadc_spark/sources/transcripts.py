@@ -187,16 +187,27 @@ def _tokens_for_partitions(spark: SparkSession, n: int) -> list[int]:
 _TOKEN_CACHE: dict[int, list[int]] = {}
 
 
+# keys sampled per range partition by the id-assign head (_range_bounds):
+# an input of at most SAMPLE_KEYS_PER_BOUND * n rows (64,000 at n = 32)
+# gets exact bounds
+SAMPLE_KEYS_PER_BOUND = 2000
+
+
 def _range_bounds(df: DataFrame, n: int) -> list[tuple]:
-    """Driver-side range boundaries for ``n`` partitions from a seeded sample
-    of the two pruned KEY columns (never the full row — Spark's own range
-    exchange samples the entire child plan, text included)."""
-    kp = df.select("conv_id", "turn_idx").sample(False, 0.01, seed=42).toPandas()
-    sampled = list(zip(kp["conv_id"].tolist(), kp["turn_idx"].tolist()))
-    if len(sampled) < 20 * n:
-        # tiny input (test-scale): exact keys, still pruned
-        kp = df.select("conv_id", "turn_idx").toPandas()
-        sampled = list(zip(kp["conv_id"].tolist(), kp["turn_idx"].tolist()))
+    """Driver-side range boundaries for ``n`` partitions from ONE job: a
+    seeded fixed-size random sample of the two pruned KEY columns (never
+    the full row — Spark's own range exchange samples the entire child
+    plan, text included). ``orderBy(rand).limit(m)`` plans as
+    TakeOrderedAndProject: no task returns more than ``m`` keys and the
+    driver keeps ``m`` at any input size; an input of at most ``m`` rows
+    gives every key, so its bounds are exact."""
+    m = SAMPLE_KEYS_PER_BOUND * n
+    # inline(array(struct)) re-emits each key row unchanged; as a generator
+    # it hides a local relation's row count from the optimizer, which would
+    # otherwise drop the non-binding limit and plan a global sort (a range
+    # sampling job, a shuffle and a result job instead of one job)
+    keys = df.select(F.inline(F.array(F.struct("conv_id", "turn_idx"))))
+    sampled = [(r[0], r[1]) for r in keys.orderBy(F.rand(42)).limit(m).collect()]
     sampled.sort(key=lambda kv: (kv[0], kv[1] if kv[1] is not None else -1))
     if not sampled:
         return []
@@ -286,9 +297,9 @@ def plan_doc_ids(
     ``row_number() OVER (ORDER BY ...)`` is a single-partition sort — a
     non-starter at 10^12 turns — so this is a distributed dense rank:
 
-    1. range boundaries from a seeded sample of the two pruned KEY columns
-       (Spark's own range exchange samples the whole child plan, text
-       included), cut at conversation starts;
+    1. range boundaries from one seeded fixed-size sample of the two pruned
+       KEY columns (Spark's own range exchange samples the whole child plan,
+       text included), cut at conversation starts;
     2. an EXACT pruned-column row count per range bucket gives each
        partition's prefix-sum offset — two cheap key-only jobs, no
        materialized cache;

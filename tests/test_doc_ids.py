@@ -13,16 +13,23 @@ assignment, so they get their own tests:
   salt = partition ordinal * SALT_CHUNK_SPAN + chunk, requires it), and
   the returned bucket counts are the real partition sizes;
 - re-planning the same input reproduces the same ids (resume fingerprint);
+- the range bounds come from ONE key-sample job at any input size, exact
+  (every key) on an input of at most the sample size;
 - a plan sized by ``shard_rows`` merges the cap's buckets into
   ``shard_count`` partitions with the same properties;
 - a partition too large for the 33-bit in-partition rank raises instead of
   wrapping into duplicate ids.
 """
 
+import itertools
+
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from ivfadc_spark.sources import transcripts
 from ivfadc_spark.sources.transcripts import (
+    _range_bounds,
     check_rank_bits,
     plan_doc_ids,
     shard_count,
@@ -100,6 +107,46 @@ def test_replan_reproduces_ids(spark, tx):
     a = plan_doc_ids(tx, 8)[0].select("doc_id", "conv_id").orderBy("doc_id").toPandas()
     b = plan_doc_ids(tx, 8)[0].select("doc_id", "conv_id").orderBy("doc_id").toPandas()
     assert a.equals(b)
+
+
+_groups = itertools.count()
+
+
+def _jobs_of(spark, fn):
+    """(fn(), number of Spark jobs it ran)."""
+    sc = spark.sparkContext
+    group = f"doc-ids-{next(_groups)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_head_samples_keys_in_one_job(spark, monkeypatch):
+    """The id-assign head's range bounds cost one job over an unshuffled
+    input: exact quantiles of every key on a small input, whether it is an
+    RDD-backed frame or a pandas-built local relation (whose known row
+    count must not turn the non-binding limit into a global sort), and a
+    fixed-size sample when the input is larger than the sample. The whole
+    head is that job plus the exact per-bucket count (its map and result
+    jobs)."""
+    tx = synth_transcripts(spark, n_conversations=120)
+    keys = sorted((r[0], r[1]) for r in tx.select("conv_id", "turn_idx").collect())
+    local = spark.createDataFrame(pd.DataFrame(keys, columns=["conv_id", "turn_idx"]))
+    for df in (tx, local):
+        got, jobs = _jobs_of(spark, lambda: _range_bounds(df, 5))
+        assert jobs == 1
+        assert got == [keys[i * len(keys) // 5] for i in range(1, 5)]
+    monkeypatch.setattr(transcripts, "SAMPLE_KEYS_PER_BOUND", 3)
+    got, jobs = _jobs_of(spark, lambda: _range_bounds(tx, 5))
+    assert jobs == 1
+    assert len(got) == 4 and got == sorted(got) and set(got) <= set(keys)
+    monkeypatch.undo()
+    _, jobs = _jobs_of(spark, lambda: plan_doc_ids(tx, 5))
+    assert jobs <= 3
 
 
 def test_rank_guard_refuses_wrapping_partition():

@@ -562,24 +562,6 @@ def test_filter_tokens_matches_tokens_col(spark):
     assert got == want
 
 
-def test_idf_lookup_is_term_pruned(spark, corpus):
-    """Both top-k kernels resolve idf through ONE term-pruned dictionary
-    scan (no vocabulary-sized driver frame, no dictionary broadcast): the
-    term IN filter must push down to the dict parquet scan, and OOV terms
-    must drop out."""
-    from ivfadc_spark.operators.wand import _idf_lookup
-
-    tx, seg, out = corpus
-    lookup = _idf_lookup(seg, ["headterm", "no-such-term", "term000"])
-    plan = lookup._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters: [In(term" in plan, plan
-    assert "Exchange" not in plan, plan
-    got = lookup.toPandas().set_index("term")
-    want = seg.dictionary.toPandas().set_index("term")
-    assert sorted(got.index) == ["headterm", "term000"]
-    assert (got["idf"] == want.loc[got.index, "idf"]).all()
-
-
 @pytest.mark.parametrize("rewrite", ["prefix_topk", "fuzzy_topk", "regex_topk"])
 def test_rewrite_plain_tokens_analyze_like_indexed(spark, corpus, rewrite):
     """A multi-term rewrite's unmarked tokens go through the query analyzer

@@ -10,13 +10,15 @@ or window into the assignment path, the plan string grows an Exchange
 and these fail.
 
 The indexed BM25 path is pinned the same way: a 1-query call on a reused
-``Segment`` runs at most 4 Spark jobs, re-reads no dataset, broadcasts no
-dictionary and scans in one stage with no exchange; a batch still
-hash-partitions its blocks by query. Opening a ``Segment`` or a
-``SegmentSet`` runs no job at all, and a merge carries its first member's
-files instead of reading them. A multi-term rewrite with only plain tokens
-reads the dictionary through the term-pruned idf lookup alone,
-``search_topk`` scores through the indexed kernel's scan and filters a
+``Segment`` runs ONE Spark job for a pandas-built query frame (two for a
+table-backed one), re-reads no dataset, broadcasts no dictionary and scans
+in one stage with no exchange; a batch still hash-partitions its blocks by
+query. Opening a ``Segment`` or a ``SegmentSet`` runs no job at all, nor
+does a term lookup on either, and a merge carries its first member's files
+instead of reading them. Build, merge and compaction write each dictionary
+file sorted by term. A multi-term rewrite with only plain tokens runs no
+Spark dictionary scan, ``search_topk`` scores through the indexed kernel's
+scan and filters a
 batch's phrases with one ``phrase_topk`` call, and
 the small frames the positional, parsed-query and facet operators build on
 the driver are local relations, not RDDs of pickled rows.
@@ -128,8 +130,11 @@ def _run_in_group(spark, fn):
     sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events land async
     st = sc.statusTracker()
     jobs = sorted(st.getJobIdsForGroup(group))
-    stages = [st.getStageInfo(s).name for j in jobs for s in st.getJobInfo(j).stageIds]
-    return out, jobs, stages
+    # a job lists the shuffle stages it reuses as skipped stages; once the
+    # status store holds spark.ui.retainedStages stages it evicts skipped
+    # (never completed) stages first, so their info may be gone
+    infos = [st.getStageInfo(s) for j in jobs for s in st.getJobInfo(j).stageIds]
+    return out, jobs, [i.name for i in infos if i is not None]
 
 
 @pytest.fixture(scope="module")
@@ -154,10 +159,14 @@ def _topk(spark, seg, cfg, texts):
     return bm25_topk_indexed(q, seg, k=5, cfg=cfg)
 
 
-def test_indexed_one_query_floor(spark, bm25_seg):
-    """One query on a reused Segment: <= 4 jobs, no dataset re-read, and
-    an executed plan with no Exchange — neither a shuffle nor a broadcast
-    of the dictionary."""
+def test_indexed_one_query_floor(spark, bm25_seg, tmp_path):
+    """One query on a reused Segment: ONE job for a pandas-built query
+    frame (the term projection folds over the local relation and idf is
+    read on the driver), two for a table-backed frame (its term collect);
+    no dataset re-read, and an executed plan with no Exchange — neither a
+    shuffle nor a broadcast of the dictionary."""
+    from ivfadc_spark.operators.wand import bm25_topk_indexed
+
     seg, cfg = bm25_seg
     _topk(spark, seg, cfg, ["term001 headterm"]).collect()  # opens the segment
 
@@ -167,11 +176,23 @@ def test_indexed_one_query_floor(spark, bm25_seg):
 
     (df, rows), jobs, stages = _run_in_group(spark, call)
     assert rows
-    assert len(jobs) <= 4, stages
+    assert len(jobs) == 1, stages
     assert not [n for n in stages if n.startswith("parquet at")], stages
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
     assert os.path.join(seg.path, "dict") not in plan, plan
+
+    path = str(tmp_path / "queries")
+    spark.createDataFrame(
+        pd.DataFrame({"query_id": [0], "text": ["term000 headterm term017"]}),
+        schema="query_id long, text string",
+    ).write.parquet(path)
+    table = spark.read.schema("query_id long, text string").parquet(path)
+    got, jobs, stages = _run_in_group(
+        spark, lambda: bm25_topk_indexed(table, seg, k=5, cfg=cfg).collect()
+    )
+    assert got == rows
+    assert len(jobs) <= 2, stages
 
 
 def test_indexed_batch_partitions_by_query(spark, bm25_seg):
@@ -183,13 +204,14 @@ def test_indexed_batch_partitions_by_query(spark, bm25_seg):
 
 
 def test_indexed_all_oov_runs_no_scan(spark, bm25_seg):
-    """An all-OOV query costs the term collect and the idf lookup only."""
+    """An all-OOV query runs no job: its terms fold on the driver, the
+    lookup finds none of them, and no scan is planned."""
     seg, cfg = bm25_seg
     rows, jobs, stages = _run_in_group(
         spark, lambda: _topk(spark, seg, cfg, ["no-such-term zzzq"]).collect()
     )
     assert rows == []
-    assert len(jobs) <= 2, stages
+    assert jobs == [], stages
 
 
 def test_segment_opens_once(spark, bm25_seg):
@@ -223,10 +245,8 @@ def two_segs(spark, tmp_path_factory):
 
 def test_segment_open_runs_no_job(spark, bm25_seg, two_segs):
     """Declared schemas and driver-side listing: opening a fresh Segment or
-    SegmentSet and touching its datasets runs no ``parquet at`` listing or
-    schema-inference job; only the idf lookup itself runs."""
+    SegmentSet, touching its datasets and looking terms up runs no job."""
     from ivfadc_spark.operators.segments import Segment, SegmentSet
-    from ivfadc_spark.operators.wand import _idf_lookup
 
     seg, cfg = bm25_seg
     a, b, _ = two_segs
@@ -235,11 +255,64 @@ def test_segment_open_runs_no_job(spark, bm25_seg, two_segs):
         ss = SegmentSet(spark, [a.path, b.path])
         for s in (Segment(spark, seg.path), ss):
             s.raw_blocks, s.dictionary, s.doc_lengths
-        return _idf_lookup(ss, ["term000", "headterm", "no-such-term"]).collect()
+        return ss.term_stats(["term000", "headterm", "no-such-term"])
 
-    rows, jobs, stages = _run_in_group(spark, open_fresh)
-    assert {r["term"] for r in rows} == {"term000", "headterm"}
-    assert not [n for n in stages if n.startswith("parquet at")], stages
+    found, jobs, stages = _run_in_group(spark, open_fresh)
+    assert list(found["term"]) == ["headterm", "term000"]
+    assert jobs == [], stages
+
+
+def test_term_stats_run_no_job(spark, bm25_seg, two_segs):
+    """``term_stats`` of a Segment (a pyarrow read of its dict files) and of
+    a SegmentSet (summed df, idf folded over a local frame) run no Spark
+    job, drop out-of-vocabulary terms and return the dictionary's rows
+    bit for bit; a set's idf is the union's, not a member's."""
+    from ivfadc_spark.operators.segments import SegmentSet
+
+    seg, _ = bm25_seg
+    a, b, _ = two_segs
+    ss = SegmentSet(spark, [a.path, b.path])
+    terms = ["term000", "headterm", "term017", "no-such-term", "zzzq"]
+    for s in (seg, ss):
+        s.term_stats(terms)  # opens the segment's dictionary files
+        got, jobs, stages = _run_in_group(spark, lambda: s.term_stats(terms))
+        assert jobs == [], stages
+        want = (
+            s.dictionary.filter(F.col("term").isin(terms))
+            .toPandas()
+            .sort_values("term", ignore_index=True)
+        )
+        assert list(got.columns) == ["term", "df", "cf", "idf"]
+        assert list(got["term"]) == ["headterm", "term000", "term017"]
+        assert got["df"].tolist() == want["df"].tolist()
+        assert got["cf"].tolist() == want["cf"].tolist()
+        assert got["idf"].tolist() == want["idf"].tolist()  # exact, not close
+    member = a.term_stats(terms).set_index("term")["idf"]
+    assert (ss.term_stats(terms).set_index("term")["idf"] != member).all()
+    assert ss.term_stats(["no-such-term"]).empty
+
+
+def test_dictionary_files_sorted_by_term(spark, two_segs, tmp_path):
+    """Build, merge and compaction write every dict/ file sorted by term,
+    so each row group's term min/max bounds a lookup."""
+    import pyarrow.parquet as pq
+
+    from ivfadc_spark.operators.deletes import compact_segment, delete_docs
+    from ivfadc_spark.operators.segments import Segment, merge_segments
+
+    a, b, cfg = two_segs
+    merged = merge_segments(spark, [a.path, b.path], str(tmp_path / "m"), cfg=cfg)
+    copy = merge_segments(spark, [b.path], str(tmp_path / "b_copy"), cfg=cfg)
+    delete_docs(copy, [0, 3])
+    compacted = compact_segment(spark, Segment(spark, copy.path), str(tmp_path / "c"))
+    for s in (a, merged, compacted):
+        d = os.path.join(s.path, "dict")
+        files = [f for f in sorted(os.listdir(d)) if not f.startswith(("_", "."))]
+        assert files, s.path
+        for f in files:
+            terms = pq.read_table(os.path.join(d, f), columns=["term"])["term"].to_pylist()
+            assert terms == sorted(terms), (s.path, f)
+        assert sum(pq.read_metadata(os.path.join(d, f)).num_rows for f in files) > 1
 
 
 def test_merge_carries_first_member(spark, two_segs, tmp_path):
@@ -337,10 +410,10 @@ def _sql_plans(spark, fn):
 
 @pytest.mark.parametrize("rewrite", ["prefix_topk", "fuzzy_topk", "regex_topk"])
 def test_rewrite_plain_tokens_are_term_pruned(spark, bm25_seg, rewrite):
-    """A rewrite whose query holds only plain tokens reads the dictionary
-    only through the term-pruned idf lookup (``In(term`` pushed down, no
-    dictionary join) and runs at most one job more than
-    bm25_topk_indexed on the same query."""
+    """A rewrite whose query holds only plain tokens resolves them as
+    bm25_topk_indexed does: no Spark job reads the dictionary (the lookup
+    runs on the driver), there is no dictionary join, and the call runs no
+    more jobs than bm25_topk_indexed on the same query."""
     from ivfadc_spark.operators import wand
 
     seg, cfg = bm25_seg
@@ -355,7 +428,7 @@ def test_rewrite_plain_tokens_are_term_pruned(spark, bm25_seg, rewrite):
 
     (got, plans), jobs, stages = _run_in_group(spark, call)
     assert got == want and got
-    assert len(jobs) <= len(want_jobs) + 1, stages
+    assert len(jobs) <= len(want_jobs), stages
     # a plan's node details are blank-line separated; dictionary scans are
     # the ones reading idf
     dict_scans = [
@@ -364,9 +437,7 @@ def test_rewrite_plain_tokens_are_term_pruned(spark, bm25_seg, rewrite):
         for node in plan.split("\n\n")
         if "Scan parquet" in node and "idf:double" in node
     ]
-    assert dict_scans, plans
-    for node in dict_scans:
-        assert "In(term, [" in node.split("PushedFilters:")[1].splitlines()[0], node
+    assert not dict_scans, dict_scans
     assert not [p for p in plans if "NestedLoopJoin" in p], plans
 
 
