@@ -107,12 +107,10 @@ _ARROW_TYPES = {
 }
 
 
-def term_bucket_col(n_buckets: int, term: Column | str = "term") -> Column:
+def term_bucket_col(n_buckets: int) -> Column:
     """The term -> term_bucket partition of a segment with ``n_buckets``
-    term buckets, as the build writes it and every reader probes it;
-    ``term`` is the term column (a lambda variable inside ``transform``)."""
-    t = F.col(term) if isinstance(term, str) else term
-    return F.pmod(F.xxhash64(t), F.lit(int(n_buckets))).cast("int")
+    term buckets, as the build writes it and every reader probes it."""
+    return F.pmod(F.xxhash64("term"), F.lit(int(n_buckets))).cast("int")
 
 
 def term_buckets(segment, terms) -> dict[str, int]:
@@ -314,7 +312,8 @@ class Segment:
     @property
     def scan_blocks(self) -> DataFrame:
         """Posting blocks with the columns the indexed scan reads
-        (:data:`SCAN_COLUMNS`), planned once per Segment."""
+        (:data:`SCAN_COLUMNS`), planned once per Segment or SegmentSet
+        (which shares this property)."""
         if not hasattr(self, "_scan_blocks"):
             self._scan_blocks = self.blocks.select(*SCAN_COLUMNS)
         return self._scan_blocks
@@ -530,13 +529,7 @@ class SegmentSet:
         )
         return _stats_frame(rows)
 
-    @property
-    def scan_blocks(self) -> DataFrame:
-        """Posting blocks with the columns the indexed scan reads, planned
-        once per SegmentSet."""
-        if not hasattr(self, "_scan_blocks"):
-            self._scan_blocks = self.blocks.select(*SCAN_COLUMNS)
-        return self._scan_blocks
+    scan_blocks = Segment.scan_blocks
 
     @property
     def metrics(self) -> DataFrame:

@@ -44,7 +44,7 @@ from ivfadc_spark.functions.tokenize import tokens_col
 from ivfadc_spark.operators.postings import SALT_CHUNK_SPAN, _ranges, is_posting, is_sentinel
 from ivfadc_spark.operators.query import query_terms  # noqa: F401  (re-exported)
 from ivfadc_spark.operators.queryparse import SHOULD, expand_terms, parse_token
-from ivfadc_spark.operators.segments import Segment, term_bucket_col
+from ivfadc_spark.operators.segments import Segment, term_buckets
 
 RESULT_SCHEMA = "query_id long, rank int, doc_id long, score double"
 _QT_COLUMNS = ["query_id", "term", "idf", "term_bucket"]
@@ -59,25 +59,21 @@ def _no_results(spark) -> DataFrame:
 def _resolve_query_terms(queries: DataFrame, segment) -> pd.DataFrame:
     """(query_id, term, idf, term_bucket) rows of ``queries`` on the driver,
     OOV terms dropped — the idf resolver of both top-k kernels and the
-    rewrites. Each query's distinct terms and their buckets come from one
-    projection (no explode): over a pandas-built query frame, a local
-    relation, Spark folds it and the collect runs no job; a table-backed
-    frame runs one. idf comes from ``segment.term_stats``, read on the
-    driver with no job."""
-    terms = F.array_distinct(tokens_col("text"))
-    rows = queries.select(
-        "query_id",
-        terms.alias("terms"),
-        F.transform(terms, lambda t: term_bucket_col(segment.term_buckets, t)).alias("buckets"),
-    ).collect()
+    rewrites. Each query's distinct terms come from one projection (no
+    explode): over a pandas-built query frame, a local relation, Spark
+    folds it and the collect runs no job; a table-backed frame runs one.
+    idf comes from ``segment.term_stats`` and buckets from
+    :func:`segments.term_buckets`, both on the driver with no job."""
+    rows = queries.select("query_id", F.array_distinct(tokens_col("text"))).collect()
     qt = pd.DataFrame(
-        [(r[0], t, bk) for r in rows for t, bk in zip(r[1] or (), r[2] or ())],
-        columns=["query_id", "term", "term_bucket"],
+        [(r[0], t) for r in rows for t in r[1] or ()], columns=["query_id", "term"]
     )
     if qt.empty:
         return pd.DataFrame(columns=_QT_COLUMNS)
-    found = segment.term_stats(qt["term"])[["term", "idf"]]
-    return qt.merge(found, on="term")[_QT_COLUMNS]  # drops OOV
+    found = segment.term_stats(qt["term"])[["term", "idf"]]  # drops OOV
+    qt = qt.merge(found, on="term")
+    qt["term_bucket"] = qt["term"].map(term_buckets(segment, found["term"]))
+    return qt[_QT_COLUMNS]
 
 
 def _decode_block_rows(rows: pd.DataFrame, dl_arr: np.ndarray):
@@ -664,15 +660,15 @@ def bm25_topk_indexed(
     """Top-k BM25 from a compressed segment, rank-identical to the
     DataFrame path. queries: (query_id, text).
 
-    The low-latency path: each query's distinct terms and their
-    term_buckets are collected by one projection and their idf read on the
-    driver (``segment.term_stats``, no dictionary broadcast), then only the
-    probed terms' blocks are read (term_bucket partition prune + term
-    row-group prune). A 1-query call on a reused ``Segment`` with a
-    pandas-built query frame runs ONE Spark job, the scan, in one stage
-    with no exchange (the projection over a local relation folds; a
-    table-backed frame adds its collect job); a batch hash-partitions its
-    blocks by query.
+    The low-latency path: each query's distinct terms are collected by
+    one projection, their idf and term buckets read on the driver
+    (``segment.term_stats``, :func:`segments.term_buckets`; no dictionary
+    broadcast), then only the probed terms' blocks are read (term_bucket
+    partition prune + term row-group prune). A 1-query call on a reused
+    ``Segment`` with a pandas-built query frame runs ONE Spark job, the
+    scan, in one stage with no exchange (the projection over a local
+    relation folds; a table-backed frame adds its collect job); a batch
+    hash-partitions its blocks by query.
 
     ``doc_mask``: optional doc_space-sized boolean keep-mask (attribute
     scoping, boolean NOT, ...). Tombstones recorded by ``delete_docs`` are
@@ -852,11 +848,12 @@ def mlt_topk(
     the index — postings are term-major, so reading a doc's vector from
     blocks would scan every term, while ``docs.filter(doc_id IN seeds)``
     is a predicate-pushdown point lookup (Lucene reads its stored
-    per-doc term vectors to the same end). The seed-sized (seed, term, tf,
-    term_bucket) rows are collected in one job, their idf read on the
-    driver by ``segment.term_stats`` (no job, no dictionary join), and the
-    (query_id, term) set drives the shared block-pruned MaxScore scan,
-    whose per-query filter drops the seed.
+    per-doc term vectors to the same end). The seed-sized (seed, term, tf)
+    rows are collected in one job, their idf and term buckets read on the
+    driver by ``segment.term_stats`` and :func:`segments.term_buckets` (no
+    job, no dictionary join), and the (query_id, term) set drives the
+    shared block-pruned MaxScore scan, whose per-query filter drops the
+    seed.
     """
     from ivfadc_spark.operators.deletes import combine_masks, live_mask
 
@@ -872,10 +869,11 @@ def mlt_topk(
         seeds.select("query_id", F.explode(tokens_col("text")).alias("term"))
         .groupBy("query_id", "term")
         .agg(F.count("*").cast("double").alias("tf"))
-        .withColumn("term_bucket", term_bucket_col(segment.term_buckets))
         .toPandas()
     )
-    w = stf.merge(segment.term_stats(stf["term"])[["term", "idf"]], on="term")
+    found = segment.term_stats(stf["term"])[["term", "idf"]]
+    w = stf.merge(found, on="term")
+    w["term_bucket"] = w["term"].map(term_buckets(segment, found["term"]))
     qt = (
         w.assign(weight=w["tf"] * w["idf"])
         .sort_values(["query_id", "weight", "term"], ascending=[True, False, True])

@@ -188,26 +188,52 @@ _TOKEN_CACHE: dict[int, list[int]] = {}
 
 
 # keys sampled per range partition by the id-assign head (_range_bounds):
-# an input of at most SAMPLE_KEYS_PER_BOUND * n rows (64,000 at n = 32)
-# gets exact bounds
+# an input whose partitions each hold at most SAMPLE_KEYS_PER_BOUND * n /
+# partitions rows (64,000 rows in all at n = 32) gets exact bounds
 SAMPLE_KEYS_PER_BOUND = 2000
+# floor on the keys the head takes from one input partition: the sample is
+# the keys below the lowest partition cut, and with only a few keys a
+# partition (m / P once P nears m) that lowest cut, and the sample with it,
+# falls far below its mean
+MIN_KEYS_PER_PARTITION = 64
+
+
+def _partition_samples(df: DataFrame, per_part: int) -> pd.DataFrame:
+    """(conv_id, turn_idx, u, r) rows from ONE shuffle-free job: the
+    ``per_part + 1`` keys of each input partition with the lowest
+    seeded ``u = rand(42)``, ``r`` their rank in it. The sort runs within
+    each partition and ``r`` is the low bits of ``monotonically_increasing_id``
+    taken after it, so no task returns more than ``per_part + 1`` rows."""
+    rank = F.monotonically_increasing_id().bitwiseAND(F.lit((1 << RANK_BITS) - 1))
+    return (
+        df.select("conv_id", "turn_idx", F.rand(42).alias("u"))
+        .sortWithinPartitions("u")
+        .select("conv_id", "turn_idx", "u", rank.alias("r"))
+        .filter(F.col("r") <= per_part)
+        .toPandas()
+    )
 
 
 def _range_bounds(df: DataFrame, n: int) -> list[tuple]:
-    """Driver-side range boundaries for ``n`` partitions from ONE job: a
-    seeded fixed-size random sample of the two pruned KEY columns (never
-    the full row — Spark's own range exchange samples the entire child
-    plan, text included). ``orderBy(rand).limit(m)`` plans as
-    TakeOrderedAndProject: no task returns more than ``m`` keys and the
-    driver keeps ``m`` at any input size; an input of at most ``m`` rows
-    gives every key, so its bounds are exact."""
-    m = SAMPLE_KEYS_PER_BOUND * n
-    # inline(array(struct)) re-emits each key row unchanged; as a generator
-    # it hides a local relation's row count from the optimizer, which would
-    # otherwise drop the non-binding limit and plan a global sort (a range
-    # sampling job, a shuffle and a result job instead of one job)
-    keys = df.select(F.inline(F.array(F.struct("conv_id", "turn_idx"))))
-    sampled = [(r[0], r[1]) for r in keys.orderBy(F.rand(42)).limit(m).collect()]
+    """Driver-side range boundaries for ``n`` partitions from ONE job over
+    the two pruned KEY columns (never the full row — Spark's own range
+    exchange samples the entire child plan, text included).
+
+    Each of the input's P partitions returns its ``k + 1`` lowest-``rand``
+    keys, ``k = max(ceil(m / P), MIN_KEYS_PER_PARTITION)`` with ``m =
+    SAMPLE_KEYS_PER_BOUND * n``, so the driver receives at most
+    ``P * (k + 1)`` keys at any input size. A partition that returned
+    ``k + 1`` keys is cut at its largest ``rand``; the sample is every key
+    below the lowest cut. Every partition returned all its keys below that
+    cut, so the sample is uniform over the whole input (about ``m`` keys
+    when the partitions are even in size), and an input whose partitions
+    hold at most ``k`` rows each gives every key: exact bounds."""
+    parts = max(df.rdd.getNumPartitions(), 1)  # no job on a shuffle-free input
+    k = max(-(-SAMPLE_KEYS_PER_BOUND * n // parts), MIN_KEYS_PER_PARTITION)
+    kp = _partition_samples(df, k)
+    u = kp["u"].to_numpy()
+    kp = kp[u < u[kp["r"].to_numpy() == k].min(initial=np.inf)]
+    sampled = list(zip(kp["conv_id"].tolist(), kp["turn_idx"].tolist()))
     sampled.sort(key=lambda kv: (kv[0], kv[1] if kv[1] is not None else -1))
     if not sampled:
         return []
@@ -297,9 +323,10 @@ def plan_doc_ids(
     ``row_number() OVER (ORDER BY ...)`` is a single-partition sort — a
     non-starter at 10^12 turns — so this is a distributed dense rank:
 
-    1. range boundaries from one seeded fixed-size sample of the two pruned
-       KEY columns (Spark's own range exchange samples the whole child plan,
-       text included), cut at conversation starts;
+    1. range boundaries from one seeded, per-partition-bounded sample of
+       the two pruned KEY columns (:func:`_range_bounds`; Spark's own range
+       exchange samples the whole child plan, text included), cut at
+       conversation starts;
     2. an EXACT pruned-column row count per range bucket gives each
        partition's prefix-sum offset — two cheap key-only jobs, no
        materialized cache;

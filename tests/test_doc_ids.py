@@ -13,8 +13,9 @@ assignment, so they get their own tests:
   salt = partition ordinal * SALT_CHUNK_SPAN + chunk, requires it), and
   the returned bucket counts are the real partition sizes;
 - re-planning the same input reproduces the same ids (resume fingerprint);
-- the range bounds come from ONE key-sample job at any input size, exact
-  (every key) on an input of at most the sample size;
+- the range bounds come from ONE key-sample job that returns a bounded
+  number of keys from each input partition, exact (every key) on an input
+  of at most the sample size;
 - a plan sized by ``shard_rows`` merges the cap's buckets into
   ``shard_count`` partitions with the same properties;
 - a partition too large for the 33-bit in-partition rank raises instead of
@@ -128,11 +129,11 @@ def _jobs_of(spark, fn):
 def test_head_samples_keys_in_one_job(spark, monkeypatch):
     """The id-assign head's range bounds cost one job over an unshuffled
     input: exact quantiles of every key on a small input, whether it is an
-    RDD-backed frame or a pandas-built local relation (whose known row
-    count must not turn the non-binding limit into a global sort), and a
-    fixed-size sample when the input is larger than the sample. The whole
-    head is that job plus the exact per-bucket count (its map and result
-    jobs)."""
+    RDD-backed frame or a pandas-built local relation. On a larger input the
+    job returns at most ``k + 1`` keys from each of its P partitions, ``k =
+    ceil(m / P)``, never every partition's share of the whole input. The
+    whole head is that job plus the exact per-bucket count (its map and
+    result jobs)."""
     tx = synth_transcripts(spark, n_conversations=120)
     keys = sorted((r[0], r[1]) for r in tx.select("conv_id", "turn_idx").collect())
     local = spark.createDataFrame(pd.DataFrame(keys, columns=["conv_id", "turn_idx"]))
@@ -140,9 +141,22 @@ def test_head_samples_keys_in_one_job(spark, monkeypatch):
         got, jobs = _jobs_of(spark, lambda: _range_bounds(df, 5))
         assert jobs == 1
         assert got == [keys[i * len(keys) // 5] for i in range(1, 5)]
-    monkeypatch.setattr(transcripts, "SAMPLE_KEYS_PER_BOUND", 3)
-    got, jobs = _jobs_of(spark, lambda: _range_bounds(tx, 5))
+
+    collected = []
+
+    def spy(df, per_part):
+        rows = sample(df, per_part)
+        collected.append((per_part, len(rows)))
+        return rows
+
+    sample = transcripts._partition_samples
+    monkeypatch.setattr(transcripts, "_partition_samples", spy)
+    monkeypatch.setattr(transcripts, "SAMPLE_KEYS_PER_BOUND", 6)
+    monkeypatch.setattr(transcripts, "MIN_KEYS_PER_PARTITION", 1)
+    six = spark.createDataFrame(spark.sparkContext.parallelize(keys, 6), "conv_id string, turn_idx int")
+    got, jobs = _jobs_of(spark, lambda: _range_bounds(six, 5))
     assert jobs == 1
+    assert collected == [(5, 6 * 6)]  # k = ceil(6 * 5 / 6): 6 partitions * (k + 1) keys
     assert len(got) == 4 and got == sorted(got) and set(got) <= set(keys)
     monkeypatch.undo()
     _, jobs = _jobs_of(spark, lambda: plan_doc_ids(tx, 5))
