@@ -30,6 +30,7 @@ from ivfadc_spark.operators.segments import (
     Segment,
     SegmentSet,
     _shift_doc_ids,
+    in_list,
     term_buckets,
 )
 
@@ -53,9 +54,7 @@ def _positions(segment: Segment | SegmentSet, terms: list[str]) -> DataFrame:
                 f"segment {s.path} has no positional rows — rebuild it with "
                 "with_positions=1 for phrase, proximity and highlight search"
             )
-        probed = s.raw_blocks.filter(
-            F.col("term_bucket").isin(buckets) & F.col("term").isin(terms)
-        )
+        probed = s.raw_blocks.filter(in_list("term_bucket", buckets) & in_list("term", terms))
         rows = decode_position_rows(probed).select("term", "doc_id", "positions")
         return _shift_doc_ids(rows, offset)
 

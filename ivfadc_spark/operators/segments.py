@@ -40,7 +40,11 @@ opened per segment, with a ``term in`` filter that each file's sorted
 row-group term statistics bound; ``SegmentSet.term_stats`` sums its
 members' df and cf and evaluates :func:`_idf_col` over a pandas-built local
 frame, which Spark folds without a job, so its idf is bit-equal to
-``SegmentSet.dictionary``'s.
+``SegmentSet.dictionary``'s. The per-doc dl table of the indexed scan
+(``dl_broadcast``) is read the same way, from the ``doc_lens/`` files, and
+a scan's ``term_bucket IN (...) AND term IN (...)`` probe is one SQL
+expression (:func:`in_list`), so a call's plan building does not grow with
+the number of probed terms.
 
 docIDs are data-derived within a segment (dense rank over the segment's own
 rows); cross-segment remap adds each segment's ``doc_base`` offset — the
@@ -67,7 +71,9 @@ Two ways to see many segments as one corpus:
 from __future__ import annotations
 
 import json
+import operator
 import os
+import re
 import shutil
 import time
 
@@ -107,10 +113,11 @@ _ARROW_TYPES = {
 }
 
 
-def term_bucket_col(n_buckets: int) -> Column:
+def term_bucket_col(n_buckets: int, term: Column | str = "term") -> Column:
     """The term -> term_bucket partition of a segment with ``n_buckets``
-    term buckets, as the build writes it and every reader probes it."""
-    return F.pmod(F.xxhash64("term"), F.lit(int(n_buckets))).cast("int")
+    term buckets, as the build writes it and every reader probes it, of the
+    ``term`` column (or of any string Column, e.g. a lambda variable)."""
+    return F.pmod(F.xxhash64(term), F.lit(int(n_buckets))).cast("int")
 
 
 def term_buckets(segment, terms) -> dict[str, int]:
@@ -124,6 +131,35 @@ def term_buckets(segment, terms) -> dict[str, int]:
         return {}
     probe = segment.spark.createDataFrame(pd.DataFrame({"term": terms}), schema="term string")
     return dict(probe.select("term", term_bucket_col(segment.term_buckets)).collect())
+
+
+# what a plain '...' SQL literal cannot carry as is: quotes, backslash
+# escapes, ${var} substitution
+_UNQUOTABLE = re.compile(r"['\\$]")
+
+
+def _sql_literal(v) -> str:
+    if isinstance(v, str):
+        if _UNQUOTABLE.search(v):
+            raise ValueError(f"in_list: {v!r} holds ', \\ or $; values are terms")
+        return "'" + v + "'"
+    return str(operator.index(v))  # raises on a float instead of truncating
+
+
+def in_list(column: str, values) -> Column:
+    """``column IN (values)`` built as ONE SQL expression: a fixed number
+    of py4j calls whatever the list length, where ``Column.isin`` makes a
+    literal Column and a list append per value. Catalyst sees the same
+    ``In`` (``InSet`` above 10 values), so partition pruning and parquet
+    pushdown (``PushedFilters: [In(...)]``) are unchanged. ``values`` are
+    ints (buckets, doc ids) or terms — the tokenizer's ``[a-z0-9]+``
+    runs, as ``tokens_col`` splits them and the dictionary stores them —
+    so strings are quoted as they are; one holding ``'``, ``\\`` or ``$``
+    raises."""
+    values = list(values)
+    if not values:
+        return F.lit(False)
+    return F.expr(f"`{column}` IN ({', '.join(map(_sql_literal, values))})")
 
 
 def dataset_fields(name: str) -> list[tuple[str, str]]:
@@ -173,6 +209,21 @@ def read_dataset(spark: SparkSession, seg_path: str, name: str) -> DataFrame:
     job, and the footer is checked against the declaration first."""
     check_dataset(seg_path, name)
     return spark.read.schema(DATASETS[name]).parquet(os.path.join(seg_path, name))
+
+
+def arrow_dataset(seg_path: str, name: str) -> "ds.Dataset":
+    """A segment dataset as a pyarrow dataset on the driver, with its
+    declared schema after the footer check (:func:`check_dataset`): the
+    driver-side twin of :func:`read_dataset`, for reads that run no Spark
+    job."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+
+    check_dataset(seg_path, name)
+    schema = pa.schema(
+        [(c, pa.type_for_alias(_ARROW_TYPES[t])) for c, t in dataset_fields(name)]
+    )
+    return ds.dataset(os.path.join(seg_path, name), schema=schema, format="parquet")
 
 
 def _idf_col(n_docs: int):
@@ -296,16 +347,10 @@ class Segment:
         """(term, df, cf, idf) of the in-vocabulary ``terms``, read on the
         driver with no Spark job: one pyarrow ``term in`` scan of the
         ``dict/`` files, through a dataset opened once per Segment."""
-        import pyarrow as pa
         import pyarrow.dataset as ds
 
         if not hasattr(self, "_dict_files"):
-            schema = pa.schema(
-                [(c, pa.type_for_alias(_ARROW_TYPES[t])) for c, t in dataset_fields("dict")]
-            )
-            self._dict_files = ds.dataset(
-                os.path.join(self.path, "dict"), schema=schema, format="parquet"
-            )
+            self._dict_files = arrow_dataset(self.path, "dict")
         found = self._dict_files.to_table(filter=ds.field("term").isin(sorted(set(terms))))
         return _stats_frame(found.to_pandas())
 
@@ -335,23 +380,30 @@ class Segment:
         resident per-doc-norm table the reference loads at index open
         (/root/reference/SearchEngine.cpp:359-391). Since format v3 drops
         the per-posting dl stream, the low-latency indexed scan gathers dl
-        from this lookup. Memory bound: 4 bytes/doc per executor — fine to
-        billions of docs; beyond that use the doc-sharded batch path, whose
-        dl travels shard-aligned in the sentinel sidecar instead."""
+        from this lookup. Built once per Segment or SegmentSet (which
+        shares this property) on the driver with no Spark job
+        (:func:`_dl_array`). Memory bound: 4 bytes/doc on the driver and per
+        executor — fine to billions of docs; beyond that use the doc-sharded
+        batch path, whose dl travels shard-aligned in the sentinel sidecar
+        instead."""
         if not hasattr(self, "_dl_bc"):
             self._dl_bc = self.spark.sparkContext.broadcast(_dl_array(self))
         return self._dl_bc
 
 
 def _dl_array(seg) -> "np.ndarray":
-    """Dense dl lookup for a Segment/SegmentSet via one Arrow collect."""
+    """Dense doc_id -> dl int32 lookup of a Segment or SegmentSet, read on
+    the driver with no Spark job: each member's ``doc_lens/`` files
+    through pyarrow (:func:`arrow_dataset`), ids shifted by the member's
+    doc offset — the same array as a collect of ``seg.doc_lengths``."""
     import numpy as np
 
-    tbl = seg.doc_lengths.toArrow()
-    ids = tbl.column("doc_id").to_numpy(zero_copy_only=False).astype(np.int64)
-    dls = tbl.column("dl").to_numpy(zero_copy_only=False).astype(np.int64)
+    members = zip(seg.segments, seg.offsets) if isinstance(seg, SegmentSet) else [(seg, 0)]
     arr = np.zeros(int(seg.doc_space), dtype=np.int32)
-    arr[ids] = dls  # zero-token / postings-absent docs stay dl=0
+    for s, off in members:
+        tbl = arrow_dataset(s.path, "doc_lens").to_table()
+        ids = tbl.column("doc_id").to_numpy().astype(np.int64) + off
+        arr[ids] = tbl.column("dl").to_numpy()  # zero-token docs stay dl=0
     return arr
 
 
@@ -554,11 +606,7 @@ class SegmentSet:
     def term_buckets(self) -> int:
         return int(self.meta["config"]["term_buckets"])
 
-    @property
-    def dl_broadcast(self):
-        if not hasattr(self, "_dl_bc"):
-            self._dl_bc = self.spark.sparkContext.broadcast(_dl_array(self))
-        return self._dl_bc
+    dl_broadcast = Segment.dl_broadcast
 
 
 def _link_files(src: str, dst: str) -> None:

@@ -44,7 +44,7 @@ from ivfadc_spark.functions.tokenize import tokens_col
 from ivfadc_spark.operators.postings import SALT_CHUNK_SPAN, _ranges, is_posting, is_sentinel
 from ivfadc_spark.operators.query import query_terms  # noqa: F401  (re-exported)
 from ivfadc_spark.operators.queryparse import SHOULD, expand_terms, parse_token
-from ivfadc_spark.operators.segments import Segment, term_buckets
+from ivfadc_spark.operators.segments import Segment, in_list, term_bucket_col, term_buckets
 
 RESULT_SCHEMA = "query_id long, rank int, doc_id long, score double"
 _QT_COLUMNS = ["query_id", "term", "idf", "term_bucket"]
@@ -59,21 +59,25 @@ def _no_results(spark) -> DataFrame:
 def _resolve_query_terms(queries: DataFrame, segment) -> pd.DataFrame:
     """(query_id, term, idf, term_bucket) rows of ``queries`` on the driver,
     OOV terms dropped — the idf resolver of both top-k kernels and the
-    rewrites. Each query's distinct terms come from one projection (no
-    explode): over a pandas-built query frame, a local relation, Spark
-    folds it and the collect runs no job; a table-backed frame runs one.
-    idf comes from ``segment.term_stats`` and buckets from
-    :func:`segments.term_buckets`, both on the driver with no job."""
-    rows = queries.select("query_id", F.array_distinct(tokens_col("text"))).collect()
+    rewrites. Each query's distinct terms and their term buckets
+    (:func:`segments.term_bucket_col`, the build's rule) come from ONE
+    projection with no explode: over a pandas-built query frame, a local
+    relation, Spark folds it and the collect runs no job; a table-backed
+    frame runs one. idf comes from ``segment.term_stats`` on the driver
+    with no job."""
+    terms = F.array_distinct(tokens_col("text"))
+    n = segment.term_buckets
+    rows = queries.select(
+        "query_id", terms, F.transform(terms, lambda t: term_bucket_col(n, t))
+    ).collect()
     qt = pd.DataFrame(
-        [(r[0], t) for r in rows for t in r[1] or ()], columns=["query_id", "term"]
+        [(r[0], t, bk) for r in rows for t, bk in zip(r[1] or (), r[2] or ())],
+        columns=["query_id", "term", "term_bucket"],
     )
     if qt.empty:
         return pd.DataFrame(columns=_QT_COLUMNS)
     found = segment.term_stats(qt["term"])[["term", "idf"]]  # drops OOV
-    qt = qt.merge(found, on="term")
-    qt["term_bucket"] = qt["term"].map(term_buckets(segment, found["term"]))
-    return qt[_QT_COLUMNS]
+    return qt.merge(found, on="term")[_QT_COLUMNS]
 
 
 def _decode_block_rows(rows: pd.DataFrame, dl_arr: np.ndarray):
@@ -280,7 +284,7 @@ def bm25_topk_batch(
     # SHARD (bytes ~ docs/shard), not once per posting. Positional twin
     # rows must NOT enter the scoring scan.
     blocks = segment.raw_blocks.filter(
-        is_sentinel() | (is_posting() & F.col("term").isin(terms))
+        is_sentinel() | (is_posting() & in_list("term", terms))
     ).select(
         "term", "salt", "block_id", "n", "doc_ids", "tfs", "dls",
         "max_tf", "min_dl",
@@ -660,11 +664,11 @@ def bm25_topk_indexed(
     """Top-k BM25 from a compressed segment, rank-identical to the
     DataFrame path. queries: (query_id, text).
 
-    The low-latency path: each query's distinct terms are collected by
-    one projection, their idf and term buckets read on the driver
-    (``segment.term_stats``, :func:`segments.term_buckets`; no dictionary
-    broadcast), then only the probed terms' blocks are read (term_bucket
-    partition prune + term row-group prune). A 1-query call on a reused
+    The low-latency path: each query's distinct terms and their term
+    buckets are collected by one projection, their idf read on the driver
+    (``segment.term_stats``; no dictionary broadcast), then only the probed
+    terms' blocks are read (term_bucket partition prune + term row-group
+    prune). A 1-query call on a reused
     ``Segment`` with a pandas-built query frame runs ONE Spark job, the
     scan, in one stage with no exchange (the projection over a local
     relation folds; a table-backed frame adds its collect job); a batch
@@ -699,7 +703,10 @@ def _topk_scan_from_qt(
     caller produced them — exact dictionary lookup, prefix expansion, ...)
     and runs the block-pruned MaxScore scan. The scan reads only the
     probed terms' blocks: term_bucket partition prune + term row-group
-    min/max prune (O1 inverted-file pruning).
+    min/max prune (O1 inverted-file pruning). Both IN lists are SQL
+    expressions (:func:`segments.in_list`), so planning the scan costs a
+    fixed number of py4j calls however many terms and buckets a batch
+    probes.
 
     ``filters`` (query_id -> :class:`ClauseFilter`, every query of ``qt``)
     narrows each query's candidates in its task before the scan: parsed
@@ -708,8 +715,8 @@ def _topk_scan_from_qt(
     if qt.empty:
         return _no_results(spark)
     blocks = segment.scan_blocks.filter(
-        F.col("term_bucket").isin(sorted({int(x) for x in qt["term_bucket"]}))
-        & F.col("term").isin(sorted(set(qt["term"])))
+        in_list("term_bucket", sorted({int(x) for x in qt["term_bucket"]}))
+        & in_list("term", sorted(set(qt["term"])))
     )
     n_queries = int(qt["query_id"].nunique())
     qid = int(qt["query_id"].iloc[0])
@@ -862,9 +869,9 @@ def mlt_topk(
     avgdl = float(segment.meta["avgdl"])
     _lm = combine_masks(live_mask(segment), doc_mask)
 
-    seeds = docs.filter(
-        F.col("doc_id").isin([int(x) for x in seed_ids])
-    ).select(F.col("doc_id").alias("query_id"), "text")
+    seeds = docs.filter(in_list("doc_id", [int(x) for x in seed_ids])).select(
+        F.col("doc_id").alias("query_id"), "text"
+    )
     stf = (
         seeds.select("query_id", F.explode(tokens_col("text")).alias("term"))
         .groupBy("query_id", "term")

@@ -131,10 +131,12 @@ def build_index(
             f"{m.get('layout_version', 1)}, engine writes {LAYOUT_VERSION}; rebuild"
         )
     st1 = done.get("01_blocks", {})
-    if st1.get("complete") and not (st1.get("n_shards", 0) > 0 and "n_docs" in st1):
+    if st1.get("complete") and not (
+        st1.get("n_shards", 0) > 0 and "n_docs" in st1 and "n_sentinel_rows" in st1
+    ):
         raise ValueError(
             f"cannot resume: stage 01_blocks at {out} predates the doc-sharded "
-            "combiner layout (no n_shards / n_docs); rebuild"
+            "combiner layout (no n_shards / n_docs / n_sentinel_rows); rebuild"
         )
     m["layout_version"] = LAYOUT_VERSION
 
@@ -259,6 +261,7 @@ def build_index(
             sobs,
             F.sum(F.when(is_sentinel(), F.col("max_tf"))).alias("n_docs"),
             F.sum(F.when(is_sentinel(), F.col("sum_tf"))).alias("tokens"),
+            F.sum(is_sentinel().cast("long")).alias("sentinels"),
         )
         n_buckets = int(cfg.term_buckets) + 1  # sentinel bucket -1 included
         width = write_width(n_shards, cfg.term_buckets)
@@ -339,6 +342,9 @@ def build_index(
             # it implies (write_width)
             "n_shards": n_shards,
             "write_tasks": width,
+            # one sentinel row per encode chunk: stage 02 splits its
+            # doc_lens decode over at most this many tasks
+            "n_sentinel_rows": int(sobs.get["sentinels"] or 0),
         }
         record("01_blocks", t0, **extra)
     doc_space = done["00_doc_map"]["doc_space"]
@@ -362,15 +368,19 @@ def build_index(
         #     scan is ONE task — repartition the still-encoded rows
         #     (tiny: ~3 span-compressed bytes/doc) across the cluster so
         #     decode + write parallelize (each sentinel row is a
-        #     self-contained chunk; decode is row-independent);
+        #     self-contained chunk; decode is row-independent), into at
+        #     most one task per sentinel row (stage 01 counts them): a
+        #     small build's few rows would leave most of
+        #     defaultParallelism tasks empty;
         # (b) run the doc_lens job CONCURRENTLY with the metrics scan
         #     below (separate thread; they read disjoint partitions) —
         #     stage 02 was the build's worst-scaling stage precisely
         #     because it serialized three small jobs that each
         #     underfill a big cluster.
         obs = Observation("doc_lens")
+        st1 = done["01_blocks"]
         sent = raw.filter(F.col("term_bucket") == -1).repartition(
-            spark.sparkContext.defaultParallelism
+            max(1, min(spark.sparkContext.defaultParallelism, int(st1["n_sentinel_rows"])))
         )
         lens_out = decode_doc_stats(sent).observe(
             obs,
@@ -379,7 +389,6 @@ def build_index(
         )
         # n_docs/avgdl arrive from stage 01's write observation over the
         # sentinel stat columns
-        st1 = done["01_blocks"]
         n_docs, avgdl = int(st1["n_docs"]), float(st1["avgdl"])
         from concurrent.futures import ThreadPoolExecutor
 

@@ -933,11 +933,12 @@ def q_bm25_conjunctive_indexed(spark, sf_dir):
     decode for tf, doc-length sidecar from doc_map — no full-corpus pass."""
     from ivfadc_spark.operators.postings import decode_blocks
     from ivfadc_spark.operators.query import bm25_topk_conjunctive, query_terms
+    from ivfadc_spark.operators.segments import in_list
 
     seg = _get_segment(spark, sf_dir, _ENGINE_CFG)
     queries = _queries_df(spark)
     terms = [r["term"] for r in query_terms(queries).select("term").distinct().collect()]
-    dec = decode_blocks(seg.blocks.filter(F.col("term").isin(terms)))
+    dec = decode_blocks(seg.blocks.filter(in_list("term", terms)))
     res = bm25_topk_conjunctive(
         queries,
         dec.select("term", "doc_id", "tf"),

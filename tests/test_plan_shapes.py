@@ -14,14 +14,15 @@ The indexed BM25 path is pinned the same way: a 1-query call on a reused
 table-backed one), re-reads no dataset, broadcasts no dictionary and scans
 in one stage with no exchange; a batch still hash-partitions its blocks by
 query. Opening a ``Segment`` or a ``SegmentSet`` runs no job at all, nor
-does a term lookup on either, and a merge carries its first member's files
-instead of reading them. Build, merge and compaction write each dictionary
-file sorted by term. A multi-term rewrite with only plain tokens runs no
-Spark dictionary scan, ``search_topk`` scores through the indexed kernel's
-scan and filters a
-batch's phrases with one ``phrase_topk`` call, and
-the small frames the positional, parsed-query and facet operators build on
-the driver are local relations, not RDDs of pickled rows.
+does a term lookup on either or a read of its dl table, and a merge
+carries its first member's files instead of reading them. A scan's IN
+lists are SQL expressions with the executed plan of ``Column.isin``.
+Build, merge and compaction write each dictionary file sorted by term. A
+multi-term rewrite with only plain tokens runs no Spark dictionary scan,
+``search_topk`` scores through the indexed kernel's scan and filters a
+batch's phrases with one ``phrase_topk`` call, and the small frames the
+positional, parsed-query and facet operators build on the driver are
+local relations, not RDDs of pickled rows.
 """
 
 import itertools
@@ -290,6 +291,116 @@ def test_term_stats_run_no_job(spark, bm25_seg, two_segs):
     member = a.term_stats(terms).set_index("term")["idf"]
     assert (ss.term_stats(terms).set_index("term")["idf"] != member).all()
     assert ss.term_stats(["no-such-term"]).empty
+
+
+def test_dl_table_reads_no_job(spark, bm25_seg, two_segs, tmp_path):
+    """``dl_broadcast`` reads each member's doc_lens/ files on the driver:
+    no Spark job, and the array of a collect of ``doc_lengths`` bit for
+    bit, for a Segment, a 2-member SegmentSet, a merged segment and a
+    compacted segment with tombstones."""
+    import numpy as np
+
+    from ivfadc_spark.operators.deletes import compact_segment, delete_docs
+    from ivfadc_spark.operators.segments import Segment, SegmentSet, merge_segments
+
+    seg, cfg = bm25_seg
+    a, b, _ = two_segs
+    merged = merge_segments(spark, [a.path, b.path], str(tmp_path / "m"), cfg=cfg)
+    copy = merge_segments(spark, [b.path, a.path], str(tmp_path / "ba"), cfg=cfg)
+    delete_docs(copy, [0, 3, copy.doc_space - 1])
+    compacted = compact_segment(spark, Segment(spark, copy.path), str(tmp_path / "c"))
+    opened = {
+        "segment": lambda: Segment(spark, seg.path),
+        "set": lambda: SegmentSet(spark, [a.path, b.path]),
+        "merged": lambda: Segment(spark, merged.path),
+        "compacted": lambda: Segment(spark, compacted.path),
+    }
+    for name, fresh in opened.items():
+        s = fresh()
+        got, jobs, stages = _run_in_group(spark, lambda: s.dl_broadcast.value)
+        assert jobs == [], (name, stages)
+        tbl = s.doc_lengths.toArrow()
+        want = np.zeros(s.doc_space, dtype=np.int32)
+        want[tbl.column("doc_id").to_numpy()] = tbl.column("dl").to_numpy()
+        assert got.dtype == np.int32 and got.tobytes() == want.tobytes(), name
+    dead = Segment(spark, compacted.path).dl_broadcast.value
+    assert dead[[0, 3, copy.doc_space - 1]].tolist() == [0, 0, 0]
+    assert (Segment(spark, copy.path).dl_broadcast.value[[0, 3]] > 0).all()
+
+
+def test_fresh_segment_batch_call_jobs(spark, bm25_seg):
+    """The first 2-query call on a freshly opened Segment runs the jobs of a
+    warm call and no more: its dl table is read on the driver (the
+    collect of doc_lengths was one more job, 4 against 3)."""
+    from ivfadc_spark.operators.segments import Segment
+
+    seg, cfg = bm25_seg
+    fresh = Segment(spark, seg.path)
+    texts = ["term000 headterm", "term017 term003"]
+    first, jobs, stages = _run_in_group(spark, lambda: _topk(spark, fresh, cfg, texts).collect())
+    warm, warm_jobs, _ = _run_in_group(spark, lambda: _topk(spark, fresh, cfg, texts).collect())
+    assert first == warm and first
+    assert len(jobs) == len(warm_jobs) <= 3, stages
+
+
+def test_in_list_matches_isin(spark):
+    """``in_list`` keeps the rows of ``Column.isin`` for 1 and 500 terms
+    and for int columns, and refuses a string its plain SQL literal cannot
+    carry (a quote, a backslash, a ``${...}`` variable); query terms are
+    tokenizer terms and hold none of them."""
+    from ivfadc_spark.operators.segments import in_list
+
+    vals = [f"v{i:03d}" for i in range(500)]
+    df = spark.createDataFrame(
+        pd.DataFrame({"s": vals + ["v999", "it", "back"], "i": range(len(vals) + 3)}),
+        schema="s string, i long",
+    )
+    cases = [("s", ["v007"]), ("s", vals), ("i", [7]), ("i", list(range(0, 1000, 2)))]
+    for col, values in cases:
+        got = sorted(df.filter(in_list(col, values)).collect())
+        assert got == sorted(df.filter(F.col(col).isin(values)).collect()), values[:3]
+        assert got, values[:3]
+    assert df.filter(in_list("s", [])).collect() == []
+    for bad in ["it's", "back\\slash", "${spark.app.name}"]:
+        with pytest.raises(ValueError, match="values are terms"):
+            in_list("s", ["v001", bad])
+
+
+def test_batch_probe_plan_unchanged(spark, bm25_seg):
+    """A batch of 300 query terms (the whole 209-term vocabulary plus OOV
+    terms) probes through SQL IN lists with the executed scan plan of
+    ``Column.isin``: the term_bucket partition filter and the pushed-down
+    ``In(term`` filter."""
+    from ivfadc_spark.operators.segments import in_list
+    from ivfadc_spark.operators.wand import _resolve_query_terms
+
+    seg, cfg = bm25_seg
+    vocab = sorted(r[0] for r in seg.dictionary.select("term").collect())
+    terms = vocab + [f"oov{i:03d}" for i in range(300 - len(vocab))]
+    assert len(terms) == 300
+    texts = [" ".join(terms[i::4]) for i in range(4)]
+    df = _topk(spark, seg, cfg, texts)
+    assert df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"PartitionFilters: \[term_bucket#\d+ INSET ", plan), plan
+    assert re.search(r"PushedFilters: \[[^\]]*In\(term, \[", plan), plan
+
+    q = spark.createDataFrame(
+        pd.DataFrame({"query_id": range(4), "text": texts}), schema="query_id long, text string"
+    )
+    qt = _resolve_query_terms(q, seg)
+    assert sorted(set(qt["term"])) == vocab
+    buckets, probed = sorted(set(qt["term_bucket"])), sorted(set(qt["term"]))
+    new = seg.scan_blocks.filter(in_list("term_bucket", buckets) & in_list("term", probed))
+    old = seg.scan_blocks.filter(
+        F.col("term_bucket").isin(buckets) & F.col("term").isin(probed)
+    )
+
+    def shape(d):
+        return re.sub(r"#\d+", "", d._jdf.queryExecution().executedPlan().toString())
+
+    assert shape(new) == shape(old)
+    assert sorted(new.collect()) == sorted(old.collect())
 
 
 def test_dictionary_files_sorted_by_term(spark, two_segs, tmp_path):

@@ -18,6 +18,7 @@ import pandas as pd
 import pytest
 
 from ivfadc_spark.config import EngineConfig
+from ivfadc_spark.operators.postings import is_sentinel
 from ivfadc_spark.plans import build_index as B
 from ivfadc_spark.sources.transcripts import merge_cuts, shard_count, synth_transcripts
 
@@ -135,6 +136,12 @@ def test_small_build_is_one_shard(spark, tx, builds):
     assert st["00_doc_map"]["n_shards"] == st["01_blocks"]["n_shards"] == 1
     assert st["01_blocks"]["write_tasks"] == B.write_width(1, CFG.term_buckets)
     assert _manifest(full)["01_blocks"]["write_tasks"] == CFG.term_buckets + 1
+    # stage 01 counts its sentinel rows (one per encode chunk), the width
+    # stage 02 splits its doc_lens decode over
+    for seg in builds:
+        n = seg.raw_blocks.filter(is_sentinel()).count()
+        assert n >= 1
+        assert _manifest(seg)["01_blocks"]["n_sentinel_rows"] == n
     # ids are the global (conv_id, turn_idx) rank
     dm = one.doc_map.select("doc_id", "conv_id", "turn_idx").toPandas()
     dm = dm.sort_values("doc_id").reset_index(drop=True)
